@@ -61,9 +61,11 @@ object Bench {
     // itself is unchanged: same queries, same noop-sink action, same
     // per-query wall clock, fixtures still built once per JVM before
     // timing. Declared in OPTIMIZATION_r17.md with before/after totals.
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case e: Throwable =>
+        System.err.println(s"[warm] $name failed: ${e.getMessage}")
+      }
     }
     // Fixture builds localCheckpoint intermediate frames and the warm
     // pass leaves shuffle/broadcast blocks; both linger in the

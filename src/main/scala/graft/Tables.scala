@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-  import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+  import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
   /** The driver testdata stores timestamps as Parquet TIMESTAMP(NANOS),
     * which Spark's vectorized reader rejects outright. We read them as
@@ -22,6 +22,12 @@ object Tables {
     "orders"   -> Seq("o_orderdate"),
     "lineitem" -> Seq("l_shipdate"))
 
+  /** Each path's footer schema, inferred once per JVM: inference runs a
+    * Spark job, and gates read their tables every time they are built.
+    * The files under a path do not change while a JVM reads them. */
+  private val footerSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Session-level (not static) confs: set lazily so the driver's own
     // SparkSession works too, whatever configs it was built with. UTC is
@@ -29,7 +35,10 @@ object Tables {
     // a non-UTC session would shift every date-extraction result.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = spark.read
+      .schema(footerSchemas.computeIfAbsent(path, p => spark.read.parquet(p).schema))
+      .parquet(path)
     val deNanoed = nanosTimestampCols.getOrElse(name, Nil)
       .filter(c => raw.schema.fieldNames.contains(c) && raw.schema(c).dataType == LongType)
       .foldLeft(raw)((df, c) => df.withColumn(c, timestamp_micros(expr(s"`$c` div 1000"))))

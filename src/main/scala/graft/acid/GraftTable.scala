@@ -82,7 +82,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     extends org.apache.spark.internal.Logging {
 
   private[acid] def partitionColName: Option[String] = partitionCol
-  import GraftTable.{BloomBits, BloomK, bloomPositions}
+  import GraftTable.{BloomBits, BloomK, FileEntry}
 
   /** A write violated a table constraint; nothing was committed. */
   final class ConstraintViolationException(msg: String)
@@ -159,159 +159,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       try out.write(v.toString.getBytes(UTF_8)) finally out.close()
     } catch { case _: java.io.IOException => () /* accelerator only */ }
 
-  /** One manifest line: a data file plus optional per-file metadata —
-    * `s=lo,hi` (stats window, drives [[snapshotRange]] data skipping),
-    * `p=lo,hi` (partition window, drives partition-scoped rewrites),
-    * `b=<base64>` (legacy inline 8192-bit bloom; new commits write
-    * `bf=<version>` pointing at the `v<version>.blooms` SIDECAR instead,
-    * keeping the hot manifest line KB-free — pruning paths load sidecars
-    * lazily), `w:<col>=lo,hi` per-indexed-column numeric windows,
-    * `sw:<col>=<b64lo>,<b64hi>` truncated STRING windows (lo is a prefix
-    * lower bound, hi a rounded-up upper bound — string predicates prune
-    * on them), `dv=<version>` a deletion-vector reference into the
-    * `v<version>.dvs` sidecar with `dn=<count>` deleted positions,
-    * `n=<rows>` the file's physical row count, and `nv:<col>=<b64>` a
-    * compact per-file HLL sketch of the column's distinct values
-    * (ADVISORY planner statistics — mergeable across any pruned file
-    * subset into that subset's NDV estimate; a reader ignoring the tag
-    * loses nothing but CBO precision, so it is NOT `require=` gated).
-    * Tab-separated tagged fields; order-insensitive on parse. */
-  private[graft] case class FileEntry(path: String,
-                                      stats: Option[(Long, Long)],
-                                      part: Option[(Long, Long)] = None,
-                                      bloom: Option[Array[Long]] = None,
-                                      windows: Map[String, (Long, Long)] = Map.empty,
-                                      rows: Option[Long] = None,
-                                      bloomRef: Option[Long] = None,
-                                      strWindows: Map[String, (String, String)] = Map.empty,
-                                      dvRef: Option[Long] = None,
-                                      dvCount: Long = 0L,
-                                      // `z=<b64(cols)>` LAYOUT TAG: the file was
-                                      // written by an OPTIMIZE ZORDER over these
-                                      // columns — the incremental pass's
-                                      // clustered-ness witness
-                                      zTag: Option[String] = None,
-                                      // per-column HLL sketches over THIS
-                                      // file's values (datasketches binary,
-                                      // ~200 B at lgK=8) — union across any
-                                      // pruned subset = that subset's NDV
-                                      ndv: Map[String, Array[Byte]] = Map.empty,
-                                      // `tw:<col>=<k><lo>,<hi>` TIME
-                                      // windows for indexed TIMESTAMP and
-                                      // DATE columns, SELF-DESCRIBING:
-                                      // k='u' epoch micros (catalyst's
-                                      // internal timestamp coding, exact),
-                                      // k='d' epoch days. ADVISORY like
-                                      // nv:: a reader that drops the tag
-                                      // loses time-predicate pruning and
-                                      // plan-time ts stats, never
-                                      // correctness — so NOT require=
-                                      // gated. A separate tag (not w:)
-                                      // because pre-round-11 writers coded
-                                      // ts windows in cast-to-long
-                                      // SECONDS; reusing w: would make
-                                      // micros bounds mis-skip against
-                                      // legacy seconds windows.
-                                      timeWindows: Map[String, (Char, Long, Long)] = Map.empty,
-                                      // set ONLY by writeData on a bloom built
-                                      // this commit (hashed scheme) — a carried
-                                      // LEGACY inline bloom (raw-long scheme)
-                                      // must stay inline, or its probe scheme
-                                      // would silently flip. Never serialized.
-                                      bloomFresh: Boolean = false,
-                                      // `.nvs` sidecar version holding this
-                                      // file's NDV sketches (`nvf=` tag): the
-                                      // heavy advisory payload lives OUT of
-                                      // the resident entry list and loads per
-                                      // use — the resident footprint stays
-                                      // O(paths+windows) at 10⁶ files.
-                                      // Advisory like nv:: a reader dropping
-                                      // the tag loses CBO NDV, never rows.
-                                      nvRef: Option[Long] = None,
-                                      // set ONLY by writeData/clone on
-                                      // sketches built/re-keyed this commit —
-                                      // commit() moves them to the `.nvs`
-                                      // sidecar. Carried LEGACY inline nv:
-                                      // payloads stay inline (migrating them
-                                      // would churn line identity and make
-                                      // the next CDC batch net a full-table
-                                      // read). Never serialized.
-                                      ndvFresh: Boolean = false,
-                                      // `fz=<bytes>` the file's EXACT byte
-                                      // length, captured from the write's
-                                      // own listing: scan planning then
-                                      // serves FileStatus straight from
-                                      // the log ([[GraftLogFileIndex]]) —
-                                      // zero per-file filesystem stats.
-                                      // Advisory: absent (pre-r17 lines)
-                                      // falls back to the listing read
-                                      // path, never wrong rows.
-                                      bytes: Option[Long] = None) {
-    /** Rows surviving the deletion vector — what a reader sees. */
-    def liveRows: Option[Long] = rows.map(_ - dvCount)
-    def line: String =
-      (path +: (stats.map { case (lo, hi) => s"s=$lo,$hi" }.toSeq ++
-                part.map { case (lo, hi) => s"p=$lo,$hi" }.toSeq ++
-                bloom.map(b => s"b=${GraftTable.encodeBloom(b)}").toSeq ++
-                bloomRef.map(v => s"bf=$v").toSeq ++
-                nvRef.map(v => s"nvf=$v").toSeq ++
-                dvRef.map(v => s"dv=$v").toSeq ++
-                (if (dvCount > 0L) Seq(s"dn=$dvCount") else Nil) ++
-                zTag.map(v => s"z=$v").toSeq ++
-                rows.map(n => s"n=$n").toSeq ++
-                bytes.map(n => s"fz=$n").toSeq ++
-                windows.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-                  s"w:$c=$lo,$hi" } ++
-                strWindows.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-                  s"sw:$c=${GraftTable.b64(lo)},${GraftTable.b64(hi)}" } ++
-                timeWindows.toSeq.sortBy(_._1).map { case (c, (k, lo, hi)) =>
-                  s"tw:$c=$k$lo,$hi" } ++
-                ndv.toSeq.sortBy(_._1).map { case (c, sk) =>
-                  s"nv:$c=${GraftTable.b64bytes(sk)}" }))
-        .mkString("\t")
-  }
-
-  private def parseRange(v: String): (Long, Long) = {
-    val Array(lo, hi) = v.split(',')
-    (lo.toLong, hi.toLong)
-  }
-
-  private def parseStrRange(v: String): (String, String) = {
-    val Array(lo, hi) = v.split(',')
-    (GraftTable.unb64(lo), GraftTable.unb64(hi))
-  }
-
-  private def parseEntry(line: String): FileEntry = line.split('\t') match {
-    // legacy untagged form from pre-partition manifests: path\tlo\thi
-    case Array(p, lo, hi) if !lo.contains('=') =>
-      FileEntry(p, Some((lo.toLong, hi.toLong)))
-    case fields =>
-      val tags = fields.tail.flatMap(_.split("=", 2) match {
-        case Array(k, v) => Some(k -> v)
-        case _           => None
-      }).toMap
-      FileEntry(fields.head, tags.get("s").map(parseRange),
-        tags.get("p").map(parseRange),
-        tags.get("b").map(GraftTable.decodeBloom),
-        tags.collect { case (k, v) if k.startsWith("w:") =>
-          k.drop(2) -> parseRange(v) },
-        tags.get("n").flatMap(_.toLongOption),
-        tags.get("bf").flatMap(_.toLongOption),
-        tags.collect { case (k, v) if k.startsWith("sw:") =>
-          k.drop(3) -> parseStrRange(v) },
-        tags.get("dv").flatMap(_.toLongOption),
-        tags.get("dn").flatMap(_.toLongOption).getOrElse(0L),
-        tags.get("z"),
-        tags.collect { case (k, v) if k.startsWith("nv:") =>
-          k.drop(3) -> GraftTable.unb64bytes(v) },
-        tags.collect { case (k, v) if k.startsWith("tw:") &&
-            v.nonEmpty && (v.head == 'u' || v.head == 'd') =>
-          val (lo, hi) = parseRange(v.tail)
-          k.drop(3) -> ((v.head, lo, hi)) },
-        nvRef = tags.get("nvf").flatMap(_.toLongOption),
-        bytes = tags.get("fz").flatMap(_.toLongOption))
-  }
-
   /** Active file entries (path + optional stats) of version `v`.
     * Version 0 is the empty pre-first-commit state — no manifest, no
     * files — so `changeFeed(0, v)` (and the streaming source's first
@@ -342,45 +189,13 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       case null =>
       case ls   => return ls
     }
-    // a legacy manifest already rejected by this handle: re-check the
-    // (cheap) corroboration once and fail IMMEDIATELY instead of
-    // re-paying the stability spin on every read
-    if (legacyRejected.contains(v)) {
-      if (legacyAccepted(v)) legacyRejected.remove(v)
-      else throw legacyRejection(v)
-    }
     var attempt = 0
-    var prev: Option[List[String]] = None
     while (true) {
-      val lines = readLines(manifestPath(v))
-      lines match {
+      readLines(manifestPath(v)) match {
         case Some(ls) if ls.lastOption.contains(CommitMarker) =>
           checkRequiredFeatures(ls, s"manifest v$v")
           cachePut(manifestCache, v, ls); return ls
-        // LEGACY fallback: manifests written before the terminator existed
-        // never carry `# ok`. A well-formed header (`# op=...`) with no
-        // format-version tag, stable across two reads, is accepted as
-        // complete ONLY with corroboration ([[legacyAccepted]]) — a bare
-        // stable read would also accept a legacy-era TORN commit (crash
-        // after the header flushed) as a silently-smaller table.
-        // Uncorroborated, it fails HERE (cached, so later reads fail fast)
-        // instead of spinning out the full torn-commit budget: a legacy
-        // manifest will never grow a terminator, so waiting longer proves
-        // nothing. A torn NEW commit (header carries kind=) still takes
-        // the full 200-attempt spin below — its writer may be mid-write.
-        case Some(ls) if attempt >= 20 && prev.contains(ls) &&
-            ls.headOption.exists(h => h.startsWith("# op=") &&
-              !h.contains(" kind=")) && ls.length > 1 =>
-          if (legacyAccepted(v)) {
-            logWarning(s"accepting terminator-less legacy manifest v$v at " +
-              s"$root (corroborated); rewrite it with a fresh commit to " +
-              "silence this")
-            cachePut(manifestCache, v, ls); return ls
-          }
-          legacyRejected.add(v)
-          throw legacyRejection(v)
         case _ =>
-          prev = lines
           attempt += 1
           if (attempt >= 200) throw new IllegalStateException(
             s"manifest v$v at $root is incomplete after ${attempt} reads " +
@@ -391,18 +206,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     Nil // unreachable
   }
 
-  // versions this handle has rejected as uncorroborated legacy manifests
-  // — re-probed cheaply (one exists + one conf read) instead of re-spun
-  private val legacyRejected =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-
-  private def legacyRejection(v: Long) = new IllegalStateException(
-    s"manifest v$v at $root is terminator-less (legacy format) with no " +
-      "later commit corroborating it — it may be a torn legacy-era " +
-      "write. For a read-only legacy table, opt in with " +
-      "spark.graft.acid.allowLegacyManifests=true, or rewrite the table " +
-      "with a fresh commit to migrate it")
-
   private val CommitMarker = "# ok"
 
   /** PROTOCOL FEATURE GATING (the Delta readerFeatures pattern): a commit
@@ -412,9 +215,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * rows), so an older engine silently dropping an unknown tag would
     * return WRONG DATA (resurrected rows), not degraded performance.
     * Enforced per log artifact (each manifest/checkpoint gates its own
-    * body), so a resolution chain is checked exactly where it parses.
-    * Legacy pre-header manifests predate every gated feature and are
-    * naturally exempt. */
+    * body), so a resolution chain is checked exactly where it parses. */
   private def checkRequiredFeatures(ls: List[String], what: String): Unit =
     ls.headOption.filter(_.startsWith("#")).foreach { h =>
       h.drop(1).trim.split("\\s+").foreach(_.split("=", 2) match {
@@ -438,19 +239,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         (if (e.strWindows.nonEmpty) Seq("sw") else Nil) ++
         e.zTag.map(_ => "z")
     }).toSeq.distinct.sorted
-
-  /** Corroboration for a terminator-less (legacy-format) manifest: a
-    * LATER manifest exists — commits were built on top of it, so it was
-    * complete when written — or the session explicitly opted
-    * pre-terminator tables in (`spark.graft.acid.allowLegacyManifests`
-    * for a read-only legacy table with no newer commits). Without
-    * either, the read keeps spinning into the loud torn-commit error:
-    * a legacy-era crash mid-write must surface, never silently shrink
-    * the table. */
-  private def legacyAccepted(v: Long): Boolean =
-    fs.exists(manifestPath(v + 1)) ||
-      spark.conf.getOption("spark.graft.acid.allowLegacyManifests")
-        .exists(_.equalsIgnoreCase("true"))
 
   // Per-handle caches over IMMUTABLE log artifacts (a published version's
   // manifest/checkpoint/sidecar never changes), bounded so a long-lived
@@ -579,10 +367,10 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * (the Delta/Iceberg checkpoint pattern): a version materializes from
     * the nearest FULL statement of the table at or below it — a
     * `.checkpoint` sidecar (written every [[checkpointInterval]] commits
-    * and by [[vacuum]]), a `kind=full` manifest, or a legacy full-list
-    * manifest — plus the replay of the delta manifests above it. Commit
-    * cost is therefore O(changed files), not O(active files), and the
-    * walk is bounded by the checkpoint cadence. */
+    * and by [[vacuum]]) or a `kind=full` manifest — plus the replay of
+    * the delta manifests above it. Commit cost is therefore O(changed
+    * files), not O(active files), and the walk is bounded by the
+    * checkpoint cadence. */
   private[graft] def entries(v: Long): Seq[FileEntry] = {
     if (v == 0L) return Nil
     entriesCache.get(v) match {
@@ -622,7 +410,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
               } else {
                 baseEntries = lines
                   .filter(l => l.nonEmpty && !l.startsWith("#"))
-                  .map(parseEntry)
+                  .map(FileEntry.parse)
                 resolved = true
               }
             }
@@ -634,7 +422,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     var acc = baseEntries
     deltas.foreach { lines =>
       val removes = lines.collect { case l if l.startsWith("-\t") => l.drop(2) }.toSet
-      val adds = lines.collect { case l if l.startsWith("+\t") => parseEntry(l.drop(2)) }
+      val adds = lines.collect { case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
       acc = acc.filterNot(e => removes.contains(e.path)) ++ adds
     }
     fullResolutions.incrementAndGet()
@@ -647,7 +435,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     if (!lines.lastOption.contains(CommitMarker)) None // crash mid-write
     else {
       checkRequiredFeatures(lines, s"checkpoint v$v")
-      Some(lines.filter(l => l.nonEmpty && !l.startsWith("#")).map(parseEntry))
+      Some(lines.filter(l => l.nonEmpty && !l.startsWith("#")).map(FileEntry.parse))
     }
   }
 
@@ -655,11 +443,10 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     GraftTable.CpRow(e.path,
       e.stats.map(_._1), e.stats.map(_._2),
       e.part.map(_._1), e.part.map(_._2),
-      e.bloom.map(GraftTable.longsToBytes),
       e.bloomRef, e.dvRef, e.dvCount, e.rows, e.zTag,
       e.windows, e.strWindows,
       e.timeWindows.map { case (c, (k, lo, hi)) => c -> ((k.toString, lo, hi)) },
-      e.ndv, Some(ord), e.nvRef, e.bytes)
+      Some(ord), e.nvRef, e.bytes)
 
   private def cpToEntry(r: GraftTable.CpRow): FileEntry =
     FileEntry(r.path,
@@ -667,12 +454,26 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         case (Some(a), Some(b)) => Some((a, b)); case _ => None },
       part = (r.pLo, r.pHi) match {
         case (Some(a), Some(b)) => Some((a, b)); case _ => None },
-      bloom = r.bloom.map(GraftTable.bytesToLongs),
       windows = r.w, rows = r.n, bloomRef = r.bf, strWindows = r.sw,
-      dvRef = r.dv, dvCount = r.dn, zTag = r.z, ndv = r.nv,
+      dvRef = r.dv, dvCount = r.dn, zTag = r.z,
       timeWindows = r.tw.map { case (c, (k, lo, hi)) =>
         c -> ((k.head, lo, hi)) },
       nvRef = r.nvf, bytes = r.fz)
+
+  /** Checkpoint `v`'s rows as entries in commit/write order — the `ord`
+    * column every parquet checkpoint writer records, so both checkpoint
+    * forms and the delta replay agree on entry order. */
+  private def cpOrdered(rows: Array[GraftTable.CpRow], v: Long): Seq[FileEntry] =
+    rows.sortBy(_.ord.getOrElse(throw retiredFormat(
+      s"parquet checkpoint v$v", "has rows without the ord column")))
+      .map(cpToEntry).toSeq
+
+  /** The error for a log artifact in a format generation no writer of
+    * this engine produces: read with today's meaning, it could skip
+    * wrong files or misstate the deletion-vector debt, so it is refused. */
+  private def retiredFormat(what: String, why: String) =
+    new IllegalStateException(s"$what at $root $why: a retired log " +
+      "format this engine no longer reads")
 
   /** The `.pcp` meta of version `v`, VALIDATED: the declared entry count
     * iff the meta is complete (terminator marker present) and every
@@ -726,17 +527,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           s"says $nf entries, scan found ${rows.length}; falling back " +
           "to the manifest chain")
         None
-      } else {
-        // commit/write order when the checkpoint recorded it (the `ord`
-        // column — so both checkpoint forms and the delta replay agree
-        // on entry order); legacy ord-less checkpoints fall back to the
-        // path total order (paths are unique per version)
-        val ordered =
-          if (rows.nonEmpty && rows.forall(_.ord.isDefined))
-            rows.sortBy(_.ord.get)
-          else rows.sortBy(_.path)
-        Some(ordered.map(cpToEntry).toSeq)
-      }
+      } else Some(cpOrdered(rows, v))
     }
 
   /** The parquet checkpoint of version `v` as a RAW DataFrame (None when
@@ -926,7 +717,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         // time windows render with their unit kind (u micros / d days)
         e.windows.map { case (c, (lo, hi)) => c -> s"$lo..$hi" } ++
           e.timeWindows.map { case (c, (k, lo, hi)) => c -> s"$k:$lo..$hi" },
-        e.bloom.isDefined || e.bloomRef.isDefined,
+        e.bloomRef.isDefined,
         e.dvRef, e.zTag.isDefined,
         ndvOf(e).flatMap { case (c, sk) =>
           GraftTable.ndvEstimate(Seq(sk)).map(c -> _) })
@@ -950,50 +741,35 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   private[graft] def activeFiles(v: Long): Seq[String] = entries(v).map(_.path)
 
   private def sidecarMap(cache: java.util.Map[Long, Map[String, Array[Long]]],
-                         path: Long => Path, v: Long): Map[String, Array[Long]] = {
+                         path: Long => Path, v: Long,
+                         check: List[String] => Unit = _ => ())
+      : Map[String, Array[Long]] = {
     val hit = cache.get(v)
     if (hit != null) hit
-    else { val m = readSidecar(path(v)); cachePut(cache, v, m); m }
-  }
-
-  /** Bloom BUILD-SCHEME versions, per entry:
-    *  - [[GraftTable.BloomInlineRaw]]: legacy inline `b=` bloom — bits are
-    *    raw-long `pmod(xxhash64(col, i), bits)` positions;
-    *  - [[GraftTable.BloomHashedLegacy]]: hashed `bf=` sidecar written
-    *    BEFORE the integral-widening fix (no `scheme=` header) — an
-    *    Int/Short/Byte bloom column's bits came from catalyst's hashInt,
-    *    which FALSE-NEGATIVES against the long-hashing driver probe;
-    *  - [[GraftTable.BloomHashedWidened]]: hashed sidecar carrying the
-    *    `# scheme=long` header — integral columns pre-widened to long at
-    *    build, full build/probe parity. */
-  private val bloomSchemeTags = bounded[java.lang.Boolean]()
-  private def bloomSidecarWidened(v: Long): Boolean = {
-    val hit = bloomSchemeTags.get(v)
-    if (hit != null) hit.booleanValue()
     else {
-      val w = readLines(bloomSidecarPath(v)).getOrElse(Nil)
-        .headOption.exists(l => l.startsWith("#") && l.contains("scheme=long"))
-      cachePut(bloomSchemeTags, v, java.lang.Boolean.valueOf(w)); w
+      val lines = readLines(path(v)).getOrElse(Nil)
+      check(lines)
+      val m = sidecarPayload(lines); cachePut(cache, v, m); m
     }
   }
 
-  /** `e`'s bloom words plus their build scheme (see [[bloomSchemeTags]]). */
-  private def bloomOf(e: FileEntry): Option[(Int, Array[Long])] =
-    e.bloom.map((GraftTable.BloomInlineRaw, _)).orElse(e.bloomRef.flatMap { v =>
-      val scheme = if (bloomSidecarWidened(v)) GraftTable.BloomHashedWidened
-                   else GraftTable.BloomHashedLegacy
-      sidecarMap(bloomSidecars, bloomSidecarPath, v).get(e.path).map((scheme, _))
-    })
+  /** The header every `.blooms` sidecar carries: integral bloom columns
+    * pre-widen to long before xxhash64 ([[profileFiles]]), so the bits
+    * match the long-hashing driver probe. */
+  private val BloomScheme = "# scheme=long"
 
-  /** Is the bloom column DECLARED LongType? The one case where a
-    * pre-widening hashed bloom stays probe-compatible (the widening cast
-    * long -> long is the identity, so its bits already match the
-    * long-hashing probe). An undeclared schema is conservatively
-    * not-long: legacy-scheme blooms then never skip. */
-  private lazy val bloomColDeclaredLong: Boolean =
-    bloomCol.exists(c => tableSchema.exists(_.fields.exists(f =>
-      f.name.equalsIgnoreCase(c) &&
-        f.dataType == org.apache.spark.sql.types.LongType)))
+  /** `e`'s bloom words, from the `.blooms` sidecar its `bf=` names. A
+    * sidecar without the [[BloomScheme]] header hashed Int/Short/Byte
+    * columns with catalyst's hashInt, whose bits FALSE-NEGATIVE against
+    * the probe (files skipped = rows missing): it is refused, never
+    * probed. */
+  private def bloomOf(e: FileEntry): Option[Array[Long]] =
+    e.bloomRef.flatMap { v =>
+      sidecarMap(bloomSidecars, bloomSidecarPath, v, lines =>
+        if (lines.headOption.exists(_ != BloomScheme))
+          throw retiredFormat(s"bloom sidecar v$v", s"has no `$BloomScheme` header")
+      ).get(e.path)
+    }
 
   private def dvPositions(e: FileEntry): Array[Long] =
     e.dvRef.map { v =>
@@ -1236,7 +1012,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           ndv = pf.ndv,
           timeWindows = pf.time.collect {
             case (tag, kw) if tag.startsWith("w:") => tag.drop(2) -> kw },
-          bloomFresh = blooms.contains(n), ndvFresh = pf.ndv.nonEmpty,
           bytes = Some(st.getLen))
       }
   }
@@ -1456,7 +1231,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         strWindows = pf.str.collect { case (tag, win) if tag.startsWith("w:") =>
           tag.drop(2) -> win },
         ndv = pf.ndv,
-        bloomFresh = blooms.contains(n), ndvFresh = pf.ndv.nonEmpty,
         bytes = sizeOf.get(n))
     }
     commit(1L, entries, op = "convert", schema = Some(df.schema))
@@ -1490,18 +1264,17 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     finally out.close()
   }
 
-  private def readSidecar(p: Path): Map[String, Array[Long]] =
-    readLines(p).getOrElse(Nil)
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
+  private def sidecarPayload(lines: List[String]): Map[String, Array[Long]] =
+    lines.filter(l => l.nonEmpty && !l.startsWith("#"))
       .flatMap(_.split('\t') match {
         case Array(path, b64) => Some(path -> GraftTable.decodeBloom(b64))
         case _ => None
       }).toMap
 
-  /** The `.nvs` NDV sidecar: one line per file — `path` followed by the
-    * same `nv:<col>=<b64 sketch>` tags the manifest line format uses
-    * inline. Keeps the ~200 B/column HLL payloads off the resident entry
-    * list: entries carry an `nvf=` ref and [[ndvOf]] loads per use. */
+  /** The `.nvs` NDV sidecar: one line per file — `path` followed by
+    * tab-separated `nv:<col>=<b64 sketch>` tags. Keeps the ~200 B/column
+    * HLL payloads off the resident entry list: entries carry an `nvf=`
+    * ref and [[ndvOf]] loads per use. */
   private def writeNdvSidecar(p: Path,
       payload: Seq[(String, Map[String, Array[Byte]])]): Unit = {
     val out = fs.create(p, false)
@@ -1532,15 +1305,36 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     }
   }
 
-  /** `e`'s per-column NDV sketches — inline when carried (legacy), from
-    * the referenced `.nvs` sidecar otherwise (bounded LRU, loaded per
-    * use — never resident in the entry list). A missing sidecar serves
-    * EMPTY: the sketches are advisory (CBO stats), so degradation is
-    * weaker plans, never wrong rows. */
+  /** `e`'s per-column NDV sketches from the referenced `.nvs` sidecar
+    * (bounded LRU, loaded per use — never resident in the entry list).
+    * A missing sidecar serves EMPTY: the sketches are advisory (CBO
+    * stats), so degradation is weaker plans, never wrong rows. */
   private[acid] def ndvOf(e: FileEntry): Map[String, Array[Byte]] =
-    if (e.ndv.nonEmpty) e.ndv
-    else e.nvRef.map(v => ndvSidecarMap(v).getOrElse(e.path, Map.empty))
+    e.nvRef.map(v => ndvSidecarMap(v).getOrElse(e.path, Map.empty))
       .getOrElse(Map.empty)
+
+  /** Move the bloom and NDV payloads built by the commit in flight
+    * (`bloom`/`ndv` set on the entry) into version `v`'s `.blooms` /
+    * `.nvs` sidecars; the entries then carry `bf=`/`nvf=` refs, keeping
+    * manifest lines and the RESIDENT entry list (every checkpoint line
+    * too) free of payload bytes at 10⁶ files — the sketches load per
+    * use ([[ndvOf]]), the blooms per probe ([[bloomOf]]). */
+  private def moveToSidecars(v: Long, files: Seq[FileEntry]): Seq[FileEntry] = {
+    val bloomed = files.filter(_.bloom.isDefined)
+    if (bloomed.nonEmpty)
+      writeSidecar(bloomSidecarPath(v), bloomed.map(e => e.path -> e.bloom.get),
+        header = Seq(BloomScheme))
+    val sketched = files.filter(_.ndv.nonEmpty)
+    if (sketched.nonEmpty)
+      writeNdvSidecar(ndvSidecarPath(v),
+        sketched.sortBy(_.path).map(e => e.path -> e.ndv))
+    if (bloomed.isEmpty && sketched.isEmpty) files
+    else files.map(e =>
+      if (e.bloom.isEmpty && e.ndv.isEmpty) e
+      else e.copy(bloom = None, ndv = Map.empty,
+        bloomRef = if (e.bloom.isDefined) Some(v) else e.bloomRef,
+        nvRef = if (e.ndv.nonEmpty) Some(v) else e.nvRef))
+  }
 
   /** Publish `files` as version `v` via exclusive manifest create — the
     * ONE atomicity point in the format. The header line records the
@@ -1617,48 +1411,15 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // sidecars are exclusively ours, and the manifest reads as in-flight
     // until the terminator lands in the single content write below.
     try {
-      // 1. blooms built THIS commit move to the bloom sidecar (carried
-      // legacy inline blooms stay inline — their probe scheme differs)
-      val fresh = files.filter(e =>
-        e.bloomFresh && e.bloom.isDefined && e.bloomRef.isEmpty)
-      val bloomed =
-        if (fresh.isEmpty) files
-        else {
-          // `scheme=long` versions the build: integral columns pre-widen
-          // to long before xxhash64 ([[profileFiles]]); a header-less
-          // sidecar is treated as the pre-widening build on probe
-          writeSidecar(bloomSidecarPath(v), fresh.map(e => e.path -> e.bloom.get),
-            header = Seq("# scheme=long"))
-          val freshPaths = fresh.map(_.path).toSet
-          files.map(e => if (freshPaths.contains(e.path) && e.bloomFresh)
-            e.copy(bloom = None, bloomRef = Some(v), bloomFresh = false) else e)
-        }
-      // 1b. NDV sketches built THIS commit move to the `.nvs` sidecar —
-      // entries carry the `nvf=` ref and the ~200 B/column payloads load
-      // per use ([[ndvOf]]), keeping the RESIDENT entry list (and every
-      // manifest/checkpoint line) free of sketch bytes at 10⁶ files.
-      // Carried legacy inline nv: payloads stay inline: migrating them
-      // would churn entry-line identity (a full-table remove+add delta)
-      // and make the next CDC batch read the whole table to net zero.
-      val freshNdv = bloomed.filter(e =>
-        e.ndvFresh && e.ndv.nonEmpty && e.nvRef.isEmpty)
-      val ndved =
-        if (freshNdv.isEmpty) bloomed
-        else {
-          writeNdvSidecar(ndvSidecarPath(v),
-            freshNdv.sortBy(_.path).map(e => e.path -> e.ndv))
-          val ps = freshNdv.map(_.path).toSet
-          bloomed.map(e => if (ps.contains(e.path) && e.ndvFresh)
-            e.copy(ndv = Map.empty, nvRef = Some(v), ndvFresh = false)
-          else e)
-        }
+      // 1. blooms and NDV sketches built THIS commit move to sidecars
+      val moved = moveToSidecars(v, files)
       // 2. this commit's deletion vectors go to the dv sidecar; touched
       // entries re-reference it (full merged position set per file)
       val finalFiles =
-        if (dvs.isEmpty) ndved
+        if (dvs.isEmpty) moved
         else {
           writeSidecar(dvSidecarPath(v), dvs.toSeq.sortBy(_._1))
-          ndved.map(e => dvs.get(e.path).fold(e)(pos =>
+          moved.map(e => dvs.get(e.path).fold(e)(pos =>
             e.copy(dvRef = Some(v), dvCount = pos.length.toLong)))
         }
       // 3. delta vs full body
@@ -1701,9 +1462,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       val dvsvFinal = finalFiles.flatMap(_.dvRef).distinct.sorted
       val dvnFinal = finalFiles.map(_.dvCount).sum
       val txnsAll = txnsAsOf(v - 1) ++ txn
-      // dvn= is stated even at 0: its PRESENCE is what lets the
-      // auto-purge decision stay a header read (absent = legacy chain,
-      // fall back to the list once)
+      // dvn= is stated even at 0: every header states it, so the
+      // auto-purge decision and the delta arithmetic stay header reads
       val cfg = (Seq(s"kind=$kind", s"nf=${finalFiles.size}") ++ nr ++
         (if (dvsvFinal.isEmpty) Nil
          else Seq(s"dvsv=${dvsvFinal.mkString(",")}")) ++
@@ -1797,8 +1557,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * MERGE INTO all publish their own adds/removes through the
     * `pending` marker below — leaving on [[commit]] only the commits
     * whose statement is inherently the whole table: full-semantics
-    * rewrites (where the full manifest is already O(written)), mapping
-    * changes, and legacy-chain DV upgrades. */
+    * rewrites (where the full manifest is already O(written)) and
+    * mapping changes. */
   private[graft] def commitDelta(v: Long, adds: Seq[FileEntry],
                                  removes: Seq[FileEntry],
                                  op: String = "commit",
@@ -1830,9 +1590,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
                                  // (it never drops a dereferenced
                                  // version) — without this the sidecar
                                  // bound would never reset delta-first.
-                                 // Also upgrades a legacy chain (the
-                                 // caller proves the exact figures by
-                                 // holding the complete dv set).
                                  dvRestate: Option[(Seq[Long], Long)] = None)
       : Long = {
     fs.mkdirs(logDir)
@@ -1849,10 +1606,11 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // meta's completeness gate into a permanent fallback). The ts
     // monotone clamp still reads the raw parent (aborted commits carry
     // valid monotone stamps).
-    val prevMeta = {
+    val (prevMeta, prevDvn) = {
       var b = v - 1
       while (b >= 1L && pendingAborted(b)) b -= 1
-      if (b >= 1L) headerMeta(b) else Map.empty[String, String]
+      if (b < 1L) (Map.empty[String, String], 0L)
+      else { val m = headerMeta(b); (m, statedDvn(b, m)) }
     }
     val prevTsMeta =
       if (v > 1L) headerMeta(v - 1) else Map.empty[String, String]
@@ -1868,31 +1626,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           s"lost the commit race for version $v at $root; rebase and retry")
       }
     try {
-      // fresh blooms / NDV sketches migrate to their v-numbered sidecars
-      // exactly like [[commit]] step 1/1b — only the ADDS can carry them
-      val fresh = adds.filter(e =>
-        e.bloomFresh && e.bloom.isDefined && e.bloomRef.isEmpty)
-      val bloomed =
-        if (fresh.isEmpty) adds
-        else {
-          writeSidecar(bloomSidecarPath(v), fresh.map(e => e.path -> e.bloom.get),
-            header = Seq("# scheme=long"))
-          val freshPaths = fresh.map(_.path).toSet
-          adds.map(e => if (freshPaths.contains(e.path) && e.bloomFresh)
-            e.copy(bloom = None, bloomRef = Some(v), bloomFresh = false) else e)
-        }
-      val freshNdv = bloomed.filter(e =>
-        e.ndvFresh && e.ndv.nonEmpty && e.nvRef.isEmpty)
-      val finalAdds =
-        if (freshNdv.isEmpty) bloomed
-        else {
-          writeNdvSidecar(ndvSidecarPath(v),
-            freshNdv.sortBy(_.path).map(e => e.path -> e.ndv))
-          val ps = freshNdv.map(_.path).toSet
-          bloomed.map(e => if (ps.contains(e.path) && e.ndvFresh)
-            e.copy(ndv = Map.empty, nvRef = Some(v), ndvFresh = false)
-          else e)
-        }
+      // fresh blooms / NDV sketches move to their v-numbered sidecars
+      // exactly like [[commit]] step 1 — only the ADDS can carry them
+      val finalAdds = moveToSidecars(v, adds)
       // this commit's deletion vectors land in the v-numbered sidecar
       // exactly like [[commit]] step 2 — the retagged adds already
       // reference it
@@ -1921,25 +1657,17 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       // listed until the next full [[commit]] restates it exactly; only
       // ever causes an earlier coalescing fallback, never a wrong
       // read), `dvn=` the exact total masked rows (adds minus removes).
-      // Stated ONLY while the chain has stated them since birth (v1
-      // states dvn=0 on either commit path): a LEGACY parent without
-      // dvn would seed the arithmetic at 0 and permanently UNDERSTATE
-      // the mask debt — consumers treat absence as "unknown, fall
-      // back to the list", and the next full [[commit]] restates
-      // exactly, upgrading the chain (r16 review fix).
-      val dvKnown = v == 1L || prevMeta.contains("dvn") || dvRestate.isDefined
       val dvsvAll = dvRestate.map(_._1.distinct.sorted).getOrElse(
         (prevMeta.get("dvsv").toSeq.flatMap(_.split(","))
           .flatMap(_.toLongOption) ++ finalAdds.flatMap(_.dvRef))
           .distinct.sorted)
-      val dvn = dvRestate.map(_._2).getOrElse(
-        prevMeta.get("dvn").flatMap(_.toLongOption).getOrElse(0L) +
-          finalAdds.map(_.dvCount).sum - removes.map(_.dvCount).sum)
+      val dvn = dvRestate.map(_._2).getOrElse(prevDvn +
+        finalAdds.map(_.dvCount).sum - removes.map(_.dvCount).sum)
       val txnsAll = txnsAsOf(v - 1) ++ txn
       val cfg = (Seq("kind=delta", s"nf=$nf") ++ nr ++
-        (if (!dvKnown || dvsvAll.isEmpty) Nil
+        (if (dvsvAll.isEmpty) Nil
          else Seq(s"dvsv=${dvsvAll.mkString(",")}")) ++
-        (if (dvKnown) Seq(s"dvn=$dvn") else Nil) ++
+        Seq(s"dvn=$dvn") ++
         pending.map(p => s"pending=$p").toSeq ++
         (if (req.isEmpty) Nil else Seq(s"require=${req.mkString(",")}")) ++
         txn.map { case (id, e) => s"txn=$id:$e" }.toSeq ++
@@ -2112,16 +1840,16 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
             // its +/- paths as touched is merely conservative
             touched ++= lines.collect {
               case l if l.startsWith("-\t") => l.drop(2)
-              case l if l.startsWith("+\t") => parseEntry(l.drop(2)).path
+              case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)).path
             }
             base -= 1
           } else if (lines.headOption.exists(_.contains(" kind=delta"))) {
             touched ++= lines.collect {
               case l if l.startsWith("-\t") => l.drop(2)
-              case l if l.startsWith("+\t") => parseEntry(l.drop(2)).path
+              case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)).path
             }
             base -= 1
-          } else incremental = false // full/legacy manifest
+          } else incremental = false // full manifest
         }
       }
       import spark.implicits._
@@ -2149,8 +1877,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
             else spark.read.schema(GraftTable.cpSchema)
               .parquet(dirtyPrevPaths: _*)
               .select(col("path"), col("ord")).collect()
-              .flatMap(r => if (r.isNullAt(1)) None
-                else Some(r.getString(0) -> r.getLong(1))).toMap
+              .map(r => r.getString(0) -> r.getLong(1)).toMap
           var next = pcpMetaKv(pv)("maxord").toLong
           val dirtyRows = files.iterator
             .filter(e => dirty.contains(shardOf(e.path, k)))
@@ -2240,7 +1967,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           chain = (lines.collect { case l if l.startsWith("-\t") => l.drop(2) },
             lines.collect { case l if l.startsWith("+\t") => l.drop(2) }) :: chain
           base -= 1
-        } else return false // full/legacy manifest: no incremental base
+        } else return false // full manifest: no incremental base
       }
     }
     val pv = prevCp.get
@@ -2248,7 +1975,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // ---- dirty shards from every touched path in the chain
     val dirty: Set[Int] = chain.iterator.flatMap { case (rm, addLines) =>
       rm.iterator.map(shardOf(_, k)) ++
-        addLines.iterator.map(l => shardOf(parseEntry(l).path, k))
+        addLines.iterator.map(l => shardOf(FileEntry.parse(l).path, k))
     }.toSet
     val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
     val outRoot = new Path(sidecarsRoot, uuid)
@@ -2260,14 +1987,14 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     if (dirtyPrevPaths.nonEmpty)
       spark.read.schema(GraftTable.cpSchema).parquet(dirtyPrevPaths: _*)
         .as[GraftTable.CpRow].collect()
-        .sortBy(_.ord.getOrElse(Long.MaxValue))
+        .sortBy(_.ord.get)
         .foreach(r => state.put(r.path, r))
     // ---- ascending replay: removes drop, adds mint fresh ords
     var next = pcpMetaKv(pv)("maxord").toLong
     chain.foreach { case (rm, addLines) =>
       rm.foreach(state.remove)
       addLines.foreach { l =>
-        val e = parseEntry(l)
+        val e = FileEntry.parse(l)
         if (dirty.contains(shardOf(e.path, k))) {
           next += 1
           state.put(e.path, entryToCp(e, next))
@@ -2288,7 +2015,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     val refs = (prevRefs -- dirty) ++ presentShards().iterator.map(s =>
       s -> s"sidecars/$uuid/shard=$s").toMap
     // require: union of the prior gate and the replayed adds' features
-    val addFeatures = requiredFeatures(chain.flatMap(_._2).map(parseEntry))
+    val addFeatures = requiredFeatures(chain.flatMap(_._2).map(FileEntry.parse))
     val prevReq = pcpMetaKv(pv).get("require")
       .map(_.split(',').toSeq).getOrElse(Nil)
     val req = (prevReq ++ addFeatures ++ Seq("pcp", "pcps"))
@@ -2909,9 +2636,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
 
   /** Cumulative (writerId -> newest committed epoch) map as of version
     * `v`: read from the version's carried `txns=` header (ONE manifest
-    * read), or seeded by a one-time walk over older headers for tables
-    * whose manifests predate the carried map — the next commit then
-    * carries the full map forward for good. */
+    * read). Every commit restates the map once any writer has stamped a
+    * `txn=`, so a header without it means no writer has. */
   private def txnsAsOf(v: Long): Map[String, Long] =
     if (v <= 0L) Map.empty
     // an ABORTED multi-table participant's header carries its txn stamp,
@@ -2919,22 +2645,11 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // (a replayed batch would be dropped = data loss) — fall through to
     // the version below it
     else if (pendingAborted(v)) txnsAsOf(v - 1)
-    else headerMeta(v).get("txns") match {
-      case Some(enc) =>
-        enc.split(',').flatMap(_.split(":", 2) match {
-          case Array(id, e) => e.toLongOption.map(GraftTable.unb64(id) -> _)
-          case _ => None
-        }).toMap
-      case None =>
-        // legacy upgrade path: ascending fold keeps each writer's newest
-        versions.filter(_ <= v).foldLeft(Map.empty[String, Long]) { (acc, ver) =>
-          headerMeta(ver).get("txn").filter(_ => !pendingAborted(ver))
-            .flatMap(_.split(":", 2) match {
-              case Array(id, e) => e.toLongOption.map(id -> _)
-              case _ => None
-            }).fold(acc)(acc + _)
-        }
-    }
+    else headerMeta(v).get("txns").fold(Map.empty[String, Long])(
+      _.split(',').flatMap(_.split(":", 2) match {
+        case Array(id, e) => e.toLongOption.map(GraftTable.unb64(id) -> _)
+        case _ => None
+      }).toMap)
 
   /** Is version `v` an ABORTED multi-table-txn participant? Resolves the
     * shared marker ([[decidePending]]); false for ordinary commits. */
@@ -3025,8 +2740,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   /** The newest epoch `writerId` has committed — the restart question a
     * streaming sink asks before applying a replayed batch. O(1) on the
     * hot path: answered from the LATEST manifest header's carried
-    * `txns=` map ([[txnsAsOf]]); only a table whose newest manifest
-    * predates the carried map pays the legacy header walk. */
+    * `txns=` map ([[txnsAsOf]]). */
   def lastTxn(writerId: String): Option[Long] =
     latestVersion.flatMap(lv => txnsAsOf(lv).get(writerId))
 
@@ -3115,7 +2829,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
                       s"scoped $op at $root: a concurrent commit rewrote " +
                         "consumed files; rebase and retry")
                 } else if (l.startsWith("+\t")) {
-                  val e = parseEntry(l.drop(2))
+                  val e = FileEntry.parse(l.drop(2))
                   if (!prevLines.contains(e.line) && affected(e))
                     throw new ConcurrentCommitException(
                       s"scoped $op at $root: a concurrent commit added rows " +
@@ -3911,38 +3625,22 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   private def testBit(arr: Array[Long], pos: Int): Boolean =
     (arr(pos / 64) & (1L << (pos % 64))) != 0L
 
-  /** May `e`'s bloom contain the point? Dispatches on the entry's bloom
-    * scheme: sidecar blooms probe with the xxhash64 pre-hash of the value
-    * ([[GraftTable.bloomPositionsHashed]] — build/probe parity with the
-    * Spark-side `pmod(xxhash64(xxhash64(col), i), bits)`); legacy inline
-    * blooms probe with the raw long positions, and cannot serve string
-    * probes (never skip). A file with no bloom is never skipped. */
+  /** May `e`'s bloom contain the point? Blooms probe with the xxhash64
+    * pre-hash of the value ([[GraftTable.bloomPositionsHashed]] —
+    * build/probe parity with the Spark-side
+    * `pmod(xxhash64(xxhash64(col), i), bits)`); the bit count is the
+    * stored array's (self-describing geometry). A file with no bloom is
+    * never skipped. */
   private def bloomMayContainLong(e: FileEntry, ps: Seq[Long]): Boolean =
-    bloomOf(e).forall { case (scheme, arr) =>
-      // a PRE-WIDENING hashed sidecar over anything but a provably-long
-      // column may carry hashInt-derived bits that false-negative against
-      // the long-hashing probe — never skip on it (a bloom may only ever
-      // prune provably-absent values); new commits rebuild scheme-tagged
-      if (scheme == GraftTable.BloomHashedLegacy && !bloomColDeclaredLong) true
-      else ps.exists { p =>
-        val bits = arr.length * 64L // self-describing geometry
-        val pos =
-          if (scheme != GraftTable.BloomInlineRaw)
-            GraftTable.bloomPositionsHashed(GraftTable.hashLongValue(p), bits)
-          else bloomPositions(p, bits)
-        pos.forall(testBit(arr, _))
-      }
-    }
+    bloomMayContain(e, ps.map(GraftTable.hashLongValue))
 
   private def bloomMayContainStr(e: FileEntry, ps: Seq[String]): Boolean =
-    bloomOf(e).forall { case (scheme, arr) =>
-      // strings hash identically under both hashed schemes (no widening
-      // cast is involved); inline raw blooms cannot serve strings
-      scheme == GraftTable.BloomInlineRaw || ps.exists(s =>
-        GraftTable.bloomPositionsHashed(GraftTable.hashStringValue(s),
-            arr.length * 64L)
-          .forall(testBit(arr, _)))
-    }
+    bloomMayContain(e, ps.map(GraftTable.hashStringValue))
+
+  private def bloomMayContain(e: FileEntry, hashes: Seq[Long]): Boolean =
+    bloomOf(e).forall(arr => hashes.exists(h =>
+      GraftTable.bloomPositionsHashed(h, arr.length * 64L)
+        .forall(testBit(arr, _))))
 
   /** Entries [[snapshotWhere]] would read for `predicate`: every provable
     * constraint checked against every manifest index carrying that column
@@ -4028,21 +3726,23 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * driver path's result exactly. Driver memory then scales with the
     * SURVIVOR count, not the table's file count. */
   private def distributedPruneCandidates(v: Long,
-      bounds: Seq[ColBound]): Option[Seq[FileEntry]] = {
-    val (scan, _, removed, added) = checkpointChainScan(v).getOrElse(return None)
-    val cond = boundsToCheckpointFilter(bounds)
-    import spark.implicits._
-    val survivorRows = scan.filter(cond).as[GraftTable.CpRow].collect()
-    // deterministic entry order, matching [[parquetCheckpointEntries]]:
-    // commit/write order via the ord column, path order for legacy
-    // ord-less checkpoints (the delta adds then append in replay order)
-    val survivors = (if (survivorRows.forall(_.ord.isDefined))
-      survivorRows.sortBy(_.ord.get)
-    else survivorRows.sortBy(_.path)).map(cpToEntry)
-    Some(survivors.filterNot(e =>
-      removed.contains(e.path) || added.contains(e.path)).toSeq ++
-      added.values.toSeq)
-  }
+      bounds: Seq[ColBound]): Option[Seq[FileEntry]] =
+    chainSurvivors(v, boundsToCheckpointFilter(bounds))
+
+  /** Version `v`'s entries whose parquet-checkpoint row passes `cond`
+    * (collected survivors-only), overlaid with the delta chain above
+    * the checkpoint — net removes drop, net adds append unfiltered (the
+    * caller's driver pass re-tests them). Deterministic entry order,
+    * matching [[parquetCheckpointEntries]]: checkpoint rows in `ord`
+    * order, then the delta adds in replay order. None = no distributed
+    * base ([[checkpointChainScan]]). */
+  private def chainSurvivors(v: Long, cond: Column): Option[Seq[FileEntry]] =
+    checkpointChainScan(v).map { case (scan, cpV, removed, added) =>
+      import spark.implicits._
+      cpOrdered(scan.filter(cond).as[GraftTable.CpRow].collect(), cpV)
+        .filterNot(e => removed.contains(e.path) || added.contains(e.path)) ++
+        added.values.toSeq
+    }
 
   /** Scoped-rewrite candidates for partition cover `vals`: every entry
     * of version `v` whose partition window may hold a touched value —
@@ -4056,21 +3756,10 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * driver memory instead of O(table) — the staging path of the scoped
     * atomic MERGE INTO participant (r16 directive #5). */
   private[graft] def touchedEntries(v: Long, vals: Seq[Long]): Seq[FileEntry] = {
-    val coarse: Option[Seq[FileEntry]] = checkpointChainScan(v).map {
-      case (scan, _, removed, added) =>
-        import spark.implicits._
-        val hit = vals.map(x => lit(x) >= col("pLo") && lit(x) <= col("pHi"))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val survivorRows =
-          scan.filter(coalesce(hit, lit(true))).as[GraftTable.CpRow].collect()
-        val survivors = (if (survivorRows.forall(_.ord.isDefined))
-          survivorRows.sortBy(_.ord.get)
-        else survivorRows.sortBy(_.path)).map(cpToEntry)
-        survivors.filterNot(e =>
-          removed.contains(e.path) || added.contains(e.path)).toSeq ++
-          added.values.toSeq
-    }
-    coarse.getOrElse(entries(v)).filter(touches(_, vals))
+    val hit = vals.map(x => lit(x) >= col("pLo") && lit(x) <= col("pHi"))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    chainSurvivors(v, coalesce(hit, lit(true))).getOrElse(entries(v))
+      .filter(touches(_, vals))
   }
 
   /** Every active entry of version `v` carrying a deletion-vector ref —
@@ -4080,19 +3769,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * [[dvPurgeRows]] auto-purge, so this collects O(masked files) on a
     * table of any size. */
   private def dvEntries(v: Long): Seq[FileEntry] = {
-    val coarse: Option[Seq[FileEntry]] = checkpointChainScan(v).map {
-      case (scan, _, removed, added) =>
-        import spark.implicits._
-        val rows = scan.filter(col("dv").isNotNull)
-          .as[GraftTable.CpRow].collect()
-        val survivors = (if (rows.forall(_.ord.isDefined))
-          rows.sortBy(_.ord.get)
-        else rows.sortBy(_.path)).map(cpToEntry)
-        survivors.filterNot(e =>
-          removed.contains(e.path) || added.contains(e.path)).toSeq ++
-          added.values.toSeq
-    }
-    coarse.getOrElse(entries(v)).filter(_.dvRef.isDefined)
+    chainSurvivors(v, col("dv").isNotNull).getOrElse(entries(v))
+      .filter(_.dvRef.isDefined)
   }
 
   /** The shared base of the distributed planning paths: resolve version
@@ -4134,7 +3812,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       lines.collect { case l if l.startsWith("-\t") => l.drop(2) }.foreach { p =>
         if (added.contains(p)) added -= p else removed += p
       }
-      lines.collect { case l if l.startsWith("+\t") => parseEntry(l.drop(2)) }
+      lines.collect { case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
         .foreach(e => added += e.path -> e)
     }
     val prunePaths = pcpDataPaths(found) match {
@@ -4185,12 +3863,13 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       case hit if hit != null => return Some(hit)
       case _ => ()
     }
-    val (scan, _, removed, added) = checkpointChainScan(v).getOrElse(return None)
+    val (scan, cpV, removed, added) = checkpointChainScan(v).getOrElse(return None)
     val slim =
       scan.select(col("path"), col("dv"), col("ord"), col("fz")).collect()
-    val ordered =
-      if (slim.forall(!_.isNullAt(2))) slim.sortBy(_.getLong(2))
-      else slim.sortBy(_.getString(0))
+    val ordered = slim.sortBy(r =>
+      if (r.isNullAt(2)) throw retiredFormat(s"parquet checkpoint v$cpV",
+        "has rows without the ord column")
+      else r.getLong(2))
     val base = ordered.iterator.map { r =>
       FileEntry(r.getString(0),
         stats = None,
@@ -4410,9 +4089,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   }
 
   /** [[snapshotPoint]] for a STRING key — the content-hash `doc_id`
-    * lookup every LLM text pipeline runs. Hashed sidecar blooms prune
-    * files driver-side; legacy inline blooms cannot serve strings and
-    * never skip. */
+    * lookup every LLM text pipeline runs. Sidecar blooms prune files
+    * driver-side. */
   def snapshotPointStr(value: String, version: Option[Long] = None): DataFrame = {
     val c = bloomCol.getOrElse(
       throw new IllegalStateException("snapshotPointStr needs a bloomCol-enabled table"))
@@ -4498,6 +4176,14 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           df => df.filter(!coalesce(predicate, lit(false))))
       })
 
+  /** The exact masked-row total `dvn=` that every manifest header
+    * states (the delta-first DV path's and the auto-purge decision's
+    * input). A header without it predates that bookkeeping: read as 0,
+    * the debt would be permanently understated — it is refused. */
+  private def statedDvn(v: Long, meta: Map[String, String]): Long =
+    meta.get("dvn").flatMap(_.toLongOption).getOrElse(
+      throw retiredFormat(s"manifest v$v", "states no dvn= header"))
+
   /** Bound the accumulated merge-on-read debt (the auto-purge analogue
     * of the production formats): when a DV commit pushes the table's
     * TOTAL masked rows past [[dvPurgeRows]], materialize them —
@@ -4510,11 +4196,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // the purge DECISION reads the header-maintained masked-rows total
     // (`dvn=`, exact by arithmetic) — one header read per DV commit,
     // never an entry-list materialization; the reorg itself (rare, past
-    // the debt bound) resolves the list anyway. Headerless legacy
-    // chains fall back to the list once.
-    val masked = headerMeta(v).get("dvn").flatMap(_.toLongOption)
-      .getOrElse(entries(v).map(_.dvCount).sum)
-    if (masked <= dvPurgeRows) v
+    // the debt bound) resolves the list anyway.
+    if (statedDvn(v, headerMeta(v)) <= dvPurgeRows) v
     else try reorg() catch { case _: ConcurrentCommitException => v }
   }
 
@@ -4608,10 +4291,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * re-masked entries re-tag as remove+add over the same path — with
     * NO entry-list materialization (the 100 TB merge-on-read DML
     * path: the hottest mutation commits O(matched files), r15 verdict
-    * item #2). Past the bound, fall back to the classic full path:
-    * [[coalesceDvs]] folds every still-referenced mask into THIS
-    * commit's sidecar (exact coalescing needs the full list) and
-    * [[commit]] restates `dvsv=` exactly, resetting the bound. */
+    * item #2). Past the bound, still delta-first: every still-referenced
+    * mask folds into THIS commit's sidecar and the header restates
+    * (`dvsv=`, `dvn=`) exactly, resetting the bound. */
   private def commitDvMasks(v: Long, lv: Long, cands: Seq[FileEntry],
                             payload: Map[String, Array[Long]],
                             dead: Set[String], newFiles: Seq[FileEntry],
@@ -4626,20 +4308,15 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     val live = payload -- dead
     val refsAfter =
       (priorRefs ++ (if (live.nonEmpty) Seq(v) else Nil)).distinct
-    // a LEGACY chain (no dvn= stated) has UNKNOWN mask-bookkeeping
-    // inputs — absent-as-empty would skip coalescing on a table that
-    // may already reference many sidecars. One classic commit restates
-    // both fields exactly and upgrades the chain (r16 review fix).
-    if (parentMeta.contains("dvn") &&
-        refsAfter.size <= GraftTable.MaxDvSidecars) {
+    if (refsAfter.size <= GraftTable.MaxDvSidecars) {
       val touched = cands.filter(e =>
         payload.contains(e.path) || dead.contains(e.path))
       val retagged = touched.filterNot(e => dead.contains(e.path)).map(e =>
         e.copy(dvRef = Some(v), dvCount = payload(e.path).length.toLong))
       commitDelta(v, retagged ++ newFiles, touched, op = op,
         dvs = live, extraMeta = extra, pending = pending)
-    } else if (parentMeta.contains("dvn")) {
-      // BOUND CROSSING on a known chain (r16 stretch directive #8):
+    } else {
+      // BOUND CROSSING (r16 stretch directive #8):
       // stay delta-first — fold EVERY still-referenced mask into THIS
       // commit's sidecar (the mask-merge REORG inlined into a commit
       // already being made). The dv-carrying working set resolves
@@ -4663,14 +4340,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         pending = pending,
         dvRestate = Some((if (allPayload.nonEmpty) Seq(v) else Nil,
           dvnExact)))
-    } else {
-      // LEGACY chain (no dvn= since birth): the mask bookkeeping inputs
-      // are unknown, so one classic commit restates everything exactly
-      // and upgrades the chain
-      val prev = entries(lv)
-      commit(v, prev.filterNot(e => dead.contains(e.path)) ++ newFiles,
-        op = op, dvs = coalesceDvs(prev, live, dead), extraMeta = extra,
-        pending = pending)
     }
   }
 
@@ -5065,9 +4734,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * table whose scattered deletes accumulate sidecars resets the
     * [[GraftTable.MaxDvSidecars]] bound at KB-scale metadata cost. The
     * working set resolves survivors-only ([[dvEntries]]); the commit is
-    * a delta; a legacy chain (no `dvn=` since birth) UPGRADES here —
-    * this op holds the complete dv picture, so the exact restatement is
-    * proven. A table with no DVs commits a metadata-only no-op. */
+    * a delta. A table with no DVs commits a metadata-only no-op. */
   def reorgCompactDvs(): Long = {
     val lv = latestVersion.getOrElse(
       throw new IllegalStateException(s"no commits in table at $root"))
@@ -5255,7 +4922,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         if (!lines.headOption.exists(_.contains(" kind=delta"))) return None
         if (lines.exists(_.startsWith("-\t"))) return None
         val adds = lines.collect {
-          case l if l.startsWith("+\t") => parseEntry(l.drop(2)) }
+          case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
         if (adds.exists(e => e.dvRef.isDefined || e.dvCount > 0L)) return None
         if (adds.isEmpty) Some(empty)
         else Some(readEntriesAs(adds, target, Some(cmapOf(v)))
@@ -5500,8 +5167,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * (aborted participants contribute nothing), the range's entry diff
     * is exactly those added entries — no endpoint entry-list
     * resolution, O(chain) driver work per micro-batch instead of two
-    * O(table) materializations. None = the range has removes, a full
-    * manifest, or a legacy form: caller pays the ordinary diff. */
+    * O(table) materializations. None = the range has removes or a full
+    * manifest: caller pays the ordinary diff. */
   private[acid] def appendOnlyAdds(fromV: Long,
                                    toV: Long): Option[Seq[FileEntry]] = {
     val out = Seq.newBuilder[FileEntry]
@@ -5512,7 +5179,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         if (!lines.headOption.exists(_.contains(" kind=delta"))) return None
         if (lines.exists(_.startsWith("-\t"))) return None
         out ++= lines.collect {
-          case l if l.startsWith("+\t") => parseEntry(l.drop(2)) }
+          case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
       }
       v += 1
     }
@@ -5786,10 +5453,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       partitionCol = partitionCol, bloomCol = bloomCol,
       constraints = constraints, indexCols = indexCols)
     // destination entries already synced from this source (incremental
-    // re-clone), keyed by (absolute) path → (serialized line, dvCount,
-    // rows) — FileEntry is instance-scoped, so the carry crosses handles
-    // in line form. Empty for a fresh destination.
-    val destCarry: Map[String, (String, Long, Option[Long])] =
+    // re-clone), keyed by (absolute) path. Empty for a fresh destination.
+    val destCarry: Map[String, FileEntry] =
       dest.latestVersion match {
         case None => Map.empty
         case Some(dv) =>
@@ -5800,77 +5465,41 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
               s"a clone of $root (src=${srcTag.getOrElse("none")}); " +
               "incremental re-clone only syncs a prior clone of the same " +
               "source")
-          dest.entries(dv).map(e => e.path -> ((e.line, e.dvCount, e.rows)))
-            .toMap
+          dest.entries(dv).map(e => e.path -> e).toMap
       }
     def absolutize(p: String): String = new Path(rootPath, p).toString
     val src = entries(v)
-    // INCREMENTAL split: an already-synced entry carries the dest's line
+    // INCREMENTAL split: an already-synced entry carries the dest's entry
     // VERBATIM when its content state matches — paths are immutable and
     // DV position sets only ever grow, so (path, rows, dvCount) identity
     // is sound. Everything else (new files, re-masked files) processes
     // through the full re-keying below: O(delta), not O(table).
     val (carriedSrc, freshSrc) = src.partition { e =>
-      destCarry.get(absolutize(e.path)).exists { case (_, dn, rows) =>
-        dn == e.dvCount && rows == e.rows }
+      destCarry.get(absolutize(e.path)).exists(d =>
+        d.dvCount == e.dvCount && d.rows == e.rows)
     }
-    val carriedLines = carriedSrc.map(e =>
-      (destCarry(absolutize(e.path))._1, false, false))
     // deletion vectors: positions re-key by the clone's (absolute) entry
     // paths into the clone's own per-commit sidecar. Driver-side load is
     // O(masked positions) — metadata-scale, bounded by the source's
     // dvPurgeRows auto-purge, same order as reorg planning.
     val dvPayload = freshSrc.filter(_.dvRef.isDefined)
       .map(e => absolutize(e.path) -> dvPositions(e)).toMap
-    val files = freshSrc.map { e =>
-      // sidecar blooms of the WIDENED scheme re-mark as fresh so commit()
-      // writes them into the clone's v1.blooms (scheme-tagged) under the
-      // new path key; legacy inline blooms (raw-long probe scheme) must
-      // stay inline, and PRE-WIDENING hashed sidecar blooms are dropped —
-      // re-tagging their hashInt-era bits as scheme=long would fake
-      // build/probe parity and silently mis-skip (the clone just never
-      // skips on those files until a rewrite rebuilds them). FileEntry is
-      // instance-scoped: hand the entry to the dest handle through its
-      // serialized manifest-line form.
-      val sidecarBloom = e.bloomRef.flatMap(_ => bloomOf(e)).collect {
-        case (s, words) if s == GraftTable.BloomHashedWidened => words
-      }
-      // NDV sketches re-key like widened blooms: the source's sidecar
-      // payload inlines into the crossing line and commitCloned re-marks
-      // it fresh, so the clone's commit re-sidecars it under ITS v1 —
-      // a carried nvf= ref would dangle against the clone's own log
-      val nv = ndvOf(e)
-      val line = e.copy(path = absolutize(e.path),
-        bloom = sidecarBloom.orElse(e.bloom),
-        bloomRef = None, dvRef = None, dvCount = 0L,
-        ndv = nv, nvRef = None).line
-      (line, sidecarBloom.isDefined, nv.nonEmpty && e.nvRef.isDefined)
-    }
-    dest.commitCloned(carriedLines ++ files, schemaOf(v), dvPayload,
-      Seq(s"src=${GraftTable.b64(s"$root@$v")}"),
-      cmap = cmapOf(v), cmdrop = droppedPhysOf(v))
+    // blooms and NDV sketches load from the source's sidecars onto the
+    // entry, so the dest's commit writes them into ITS v-numbered
+    // sidecars under the new path key — a carried bf=/nvf= ref would
+    // dangle against the clone's own log
+    val files = freshSrc.map(e => e.copy(path = absolutize(e.path),
+      bloom = bloomOf(e), bloomRef = None, dvRef = None, dvCount = 0L,
+      ndv = ndvOf(e), nvRef = None))
+    // the source's column mapping + tombstones carry into the clone (its
+    // files are the source's physical files); an incremental re-clone
+    // publishes the synced state as the dest's NEXT version
+    dest.commit(dest.nextVersion,
+      carriedSrc.map(e => destCarry(absolutize(e.path))) ++ files,
+      op = "clone", schema = schemaOf(v), dvs = dvPayload,
+      extraMeta = Seq(s"src=${GraftTable.b64(s"$root@$v")}"),
+      cmapOverride = Some(cmapOf(v)), cmdropOverride = Some(droppedPhysOf(v)))
     dest
-  }
-
-  /** [[cloneTo]]'s landing half, running on the DESTINATION handle (the
-    * entries cross instances in serialized manifest-line form — FileEntry
-    * is instance-scoped): parse, re-mark carried sidecar blooms fresh,
-    * publish as this table's v1. */
-  private def commitCloned(lines: Seq[(String, Boolean, Boolean)],
-                           schema: Option[StructType],
-                           dvs: Map[String, Array[Long]],
-                           extraMeta: Seq[String],
-                           cmap: Map[String, String] = Map.empty,
-                           cmdrop: Set[String] = Set.empty): Long = {
-    val files = lines.map { case (l, freshBloom, freshNdv) =>
-      parseEntry(l).copy(bloomFresh = freshBloom, ndvFresh = freshNdv)
-    }
-    // the source's column mapping + tombstones carry into the clone
-    // (its files are the source's physical files); an incremental
-    // re-clone publishes the synced state as the dest's NEXT version
-    commit(nextVersion, files, op = "clone", schema = schema, dvs = dvs,
-      extraMeta = extraMeta, cmapOverride = Some(cmap),
-      cmdropOverride = Some(cmdrop))
   }
 
   /** Time-based retention (the production "vacuum older than 7 days"):
@@ -6173,6 +5802,107 @@ object GraftTable {
   private[graft] val SupportedFeatures: Set[String] =
     Set("dv", "bf", "sw", "z", "cm", "pcp", "pcps")
 
+  /** One manifest line: a data file plus its per-file metadata, as
+    * tab-separated tagged fields (order-insensitive on parse):
+    *  - `s=lo,hi` stats window (drives [[GraftTable.snapshotRange]] data
+    *    skipping), `p=lo,hi` partition window (drives partition-scoped
+    *    rewrites), `w:<col>=lo,hi` per-indexed-column numeric windows;
+    *  - `sw:<col>=<b64lo>,<b64hi>` truncated STRING windows (lo a prefix
+    *    lower bound, hi a rounded-up upper bound — string predicates
+    *    prune on them);
+    *  - `tw:<col>=<k><lo>,<hi>` TIME windows for indexed TIMESTAMP and
+    *    DATE columns, self-describing: k='u' epoch micros (catalyst's
+    *    internal timestamp coding, exact), k='d' epoch days — a tag
+    *    apart from `w:`, whose cast-to-long coding of a timestamp is in
+    *    seconds;
+    *  - `bf=<version>` the file's bloom in the `v<version>.blooms`
+    *    sidecar, `nvf=<version>` its per-column HLL sketches in the
+    *    `v<version>.nvs` sidecar (ADVISORY planner statistics — a reader
+    *    ignoring the tag loses nothing but CBO precision);
+    *  - `dv=<version>` a deletion-vector reference into the
+    *    `v<version>.dvs` sidecar with `dn=<count>` deleted positions;
+    *  - `n=<rows>` physical row count, `fz=<bytes>` exact byte length
+    *    (scan planning serves FileStatus from the log,
+    *    [[GraftLogFileIndex]]), `z=<b64(cols)>` the OPTIMIZE ZORDER
+    *    layout tag.
+    * Tags that change what a reader returns (`dv`, `bf`, `sw`, `z`) are
+    * `require=` gated in the header; the rest are advisory, and a field
+    * this parser does not know is ignored.
+    *
+    * Independent of any table handle: an entry crosses handles as is
+    * ([[GraftTable.cloneTo]]). `bloom` and `ndv` hold payloads built by
+    * the commit in flight — [[GraftTable.commit]] moves them to the
+    * commit's sidecars and they are never serialized. */
+  private[graft] case class FileEntry(path: String,
+                                      stats: Option[(Long, Long)],
+                                      part: Option[(Long, Long)] = None,
+                                      bloom: Option[Array[Long]] = None,
+                                      windows: Map[String, (Long, Long)] = Map.empty,
+                                      rows: Option[Long] = None,
+                                      bloomRef: Option[Long] = None,
+                                      strWindows: Map[String, (String, String)] = Map.empty,
+                                      dvRef: Option[Long] = None,
+                                      dvCount: Long = 0L,
+                                      zTag: Option[String] = None,
+                                      ndv: Map[String, Array[Byte]] = Map.empty,
+                                      timeWindows: Map[String, (Char, Long, Long)] = Map.empty,
+                                      nvRef: Option[Long] = None,
+                                      bytes: Option[Long] = None) {
+    /** Rows surviving the deletion vector — what a reader sees. */
+    def liveRows: Option[Long] = rows.map(_ - dvCount)
+    def line: String =
+      (path +: (stats.map { case (lo, hi) => s"s=$lo,$hi" }.toSeq ++
+                part.map { case (lo, hi) => s"p=$lo,$hi" }.toSeq ++
+                bloomRef.map(v => s"bf=$v").toSeq ++
+                nvRef.map(v => s"nvf=$v").toSeq ++
+                dvRef.map(v => s"dv=$v").toSeq ++
+                (if (dvCount > 0L) Seq(s"dn=$dvCount") else Nil) ++
+                zTag.map(v => s"z=$v").toSeq ++
+                rows.map(n => s"n=$n").toSeq ++
+                bytes.map(n => s"fz=$n").toSeq ++
+                windows.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
+                  s"w:$c=$lo,$hi" } ++
+                strWindows.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
+                  s"sw:$c=${b64(lo)},${b64(hi)}" } ++
+                timeWindows.toSeq.sortBy(_._1).map { case (c, (k, lo, hi)) =>
+                  s"tw:$c=$k$lo,$hi" }))
+        .mkString("\t")
+  }
+
+  private[graft] object FileEntry {
+    private def range(v: String): (Long, Long) = {
+      val Array(lo, hi) = v.split(',')
+      (lo.toLong, hi.toLong)
+    }
+
+    /** Parse one [[FileEntry.line]]. */
+    def parse(line: String): FileEntry = {
+      val fields = line.split('\t')
+      val tags = fields.tail.flatMap(_.split("=", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _           => None
+      }).toMap
+      FileEntry(fields.head, tags.get("s").map(range),
+        tags.get("p").map(range),
+        windows = tags.collect { case (k, v) if k.startsWith("w:") =>
+          k.drop(2) -> range(v) },
+        rows = tags.get("n").flatMap(_.toLongOption),
+        bloomRef = tags.get("bf").flatMap(_.toLongOption),
+        strWindows = tags.collect { case (k, v) if k.startsWith("sw:") =>
+          val Array(lo, hi) = v.split(',')
+          k.drop(3) -> ((unb64(lo), unb64(hi))) },
+        dvRef = tags.get("dv").flatMap(_.toLongOption),
+        dvCount = tags.get("dn").flatMap(_.toLongOption).getOrElse(0L),
+        zTag = tags.get("z"),
+        timeWindows = tags.collect { case (k, v) if k.startsWith("tw:") &&
+            v.nonEmpty && (v.head == 'u' || v.head == 'd') =>
+          val (lo, hi) = range(v.tail)
+          k.drop(3) -> ((v.head, lo, hi)) },
+        nvRef = tags.get("nvf").flatMap(_.toLongOption),
+        bytes = tags.get("fz").flatMap(_.toLongOption))
+    }
+  }
+
   /** One PARQUET-CHECKPOINT row — the columnar twin of a manifest entry
     * line (round-trips losslessly through the handle's entryToCp /
     * cpToEntry; ParquetCheckpointSpec pins line-for-line equality). At
@@ -6181,22 +5911,19 @@ object GraftTable {
     * this form reads as an ordinary distributed, column-prunable parquet
     * scan (the public Delta parquet-checkpoint design): a metadata-only
     * consumer projects just the columns it needs (e.g. `path`,`n`,`dn`
-    * for a COUNT serve) and never materializes the heavy advisory blobs
-    * (`nv` HLL sketches, legacy inline blooms). */
+    * for a COUNT serve). Bloom and NDV payloads live in their sidecars,
+    * referenced by `bf`/`nvf` like the text form. */
   private[graft] case class CpRow(
       path: String,
       sLo: Option[Long], sHi: Option[Long],
       pLo: Option[Long], pHi: Option[Long],
-      bloom: Option[Array[Byte]],
       bf: Option[Long], dv: Option[Long], dn: Long, n: Option[Long],
       z: Option[String],
       w: Map[String, (Long, Long)],
       sw: Map[String, (String, String)],
       tw: Map[String, (String, Long, Long)],
-      nv: Map[String, Array[Byte]],
       // commit/write ordinal: restores the text-checkpoint/delta-replay
-      // entry order on resolution (None for pre-r13 checkpoints, which
-      // fall back to the path total order)
+      // entry order on resolution
       ord: Option[Long] = None,
       // `.nvs` sidecar ref (r14): resident entries carry the ref, the
       // sketch bytes load per use; None/null on older checkpoints
@@ -6208,18 +5935,6 @@ object GraftTable {
 
   private[graft] val cpSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[CpRow].schema
-
-  private[acid] def longsToBytes(ws: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(ws.length * 8)
-    bb.asLongBuffer().put(ws)
-    bb.array()
-  }
-
-  private[acid] def bytesToLongs(bs: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bs.length / 8)
-    java.nio.ByteBuffer.wrap(bs).asLongBuffer().get(out)
-    out
-  }
 
   /** One Z-ORDER dimension as a long-coded column, type-dispatched:
     * strings through the order-preserving 8-byte prefix code, TIMESTAMP
@@ -6323,7 +6038,7 @@ object GraftTable {
     // a directory name "older" than its committing version is expected,
     // not a bug to fix with a rewrite. Orphaned only if the whole txn
     // aborts, then vacuum reclaims.
-    private lazy val written: Seq[table.FileEntry] = {
+    private lazy val written: Seq[FileEntry] = {
       val (data, _) = table.conformForWrite(df, mergeSchema = false)
       table.writeData(table.clusterByPartition(data), table.nextVersion)
     }
@@ -6840,12 +6555,6 @@ object GraftTable {
     }
   }
 
-  /** Bloom build-scheme versions — see the handle-side scaladoc at
-    * `bloomSchemeTags`. */
-  private[graft] val BloomInlineRaw = 0
-  private[graft] val BloomHashedLegacy = 1
-  private[graft] val BloomHashedWidened = 2
-
   /** Bloom geometry. Bit count is ROW-ADAPTIVE per file (self-describing
     * — the probe derives it from the stored word-array length, so mixed
     * sizes coexist in one table with no version bump): ~8 bits per row
@@ -6853,11 +6562,10 @@ object GraftTable {
     * fixed 8192 bits SATURATED (FPR → 1, zero skipping) past a few
     * thousand rows — the difference between point lookups that prune at
     * 100 TB file sizes and blooms that silently stop working. Floor
-    * 8192 bits keeps small files at the legacy geometry; cap 2^23 bits
+    * 8192 bits keeps small files at the original fixed geometry; cap 2^23 bits
     * (1 MiB of words) bounds the sidecar at ~1M rows/file — larger
     * files degrade FPR gracefully instead of exploding metadata. */
   private[graft] val BloomBits = 8192
-  private[graft] val BloomWords = BloomBits / 64
   private[graft] val BloomK = 4
   private[graft] val BloomBitsPerRow = 8L
   private[graft] val BloomBitsCap = 1L << 23
@@ -6868,21 +6576,6 @@ object GraftTable {
     val want = math.max(BloomBits.toLong,
       math.min(BloomBitsCap, rows * BloomBitsPerRow))
     ((want + 63L) / 64L) * 64L
-  }
-
-  /** The K bit positions of `value` — the driver-side probe twin of the
-    * LEGACY Spark-side `pmod(xxhash64(col, lit(i)), bits)` build: the
-    * catalyst XXH64 statics ARE that expression's implementation (seed
-    * 42, children folded left-to-right), so build/probe parity holds by
-    * construction. `bits` comes from the stored array's length — the
-    * bloom is self-describing. */
-  private[graft] def bloomPositions(value: Long,
-                                    bits: Long = BloomBits.toLong): Seq[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    (0 until BloomK).map { i =>
-      val h = XXH64.hashLong(i.toLong, XXH64.hashLong(value, 42L))
-      java.lang.Math.floorMod(h, bits).toInt
-    }
   }
 
   /** The K bit positions of a PRE-HASHED value — twin of the hashed-

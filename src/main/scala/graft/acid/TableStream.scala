@@ -491,13 +491,13 @@ class GraftTableStreamSource(sqlContext: SQLContext, table: GraftTable,
         def emptyDf: DataFrame = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
         def nettedSides: (DataFrame, DataFrame) = {
-          val fromEs: Seq[table.FileEntry] = table.entries(fromV)
-          val toEs: Seq[table.FileEntry] = table.entries(toV)
+          val fromEs: Seq[GraftTable.FileEntry] = table.entries(fromV)
+          val toEs: Seq[GraftTable.FileEntry] = table.entries(toV)
           val fromLines = fromEs.map(_.line).toSet
           val toLines = toEs.map(_.line).toSet
           val added = toEs.filterNot(e => fromLines.contains(e.line))
           val removed = fromEs.filterNot(e => toLines.contains(e.line))
-          def side(es: Seq[table.FileEntry], mapV: Long): Option[DataFrame] =
+          def side(es: Seq[GraftTable.FileEntry], mapV: Long): Option[DataFrame] =
             if (es.isEmpty) None
             else Some(table.readEntriesAs(es, dataSchema,
               Some(table.cmapOf(mapV))))
@@ -532,8 +532,8 @@ class GraftTableStreamSource(sqlContext: SQLContext, table: GraftTable,
       val (added, removed) = table.appendOnlyAdds(fromV, toV) match {
         case Some(adds) => (adds.sortBy(_.path), Nil)
         case None =>
-          val fromEs: Seq[table.FileEntry] = table.entries(fromV)
-          val toEs: Seq[table.FileEntry] = table.entries(toV)
+          val fromEs: Seq[GraftTable.FileEntry] = table.entries(fromV)
+          val toEs: Seq[GraftTable.FileEntry] = table.entries(toV)
           val fromLines = fromEs.map(_.line).toSet
           val toLines = toEs.map(_.line).toSet
           (toEs.filterNot(e => fromLines.contains(e.line)).sortBy(_.path),
@@ -546,7 +546,7 @@ class GraftTableStreamSource(sqlContext: SQLContext, table: GraftTable,
       // own versions — added entries exist under toV's mapping, removed
       // entries under fromV's — so batch content depends only on
       // (fromV, toV), never on when the batch is read
-      def readSide(es: Seq[table.FileEntry], mapV: Long): Option[DataFrame] =
+      def readSide(es: Seq[GraftTable.FileEntry], mapV: Long): Option[DataFrame] =
         if (es.isEmpty) None
         else Some(table.readEntriesAs(es, dataSchema, Some(table.cmapOf(mapV))))
       val parts =

@@ -229,45 +229,6 @@ class DvDeltaCommitSpec extends SparkSpec {
     }
   }
 
-  test("a legacy chain (no dvn= stated) routes DV DML to the classic path") {
-    val root = graft.TempDirs.create("graft_dvdelta_legacy")
-    val t0 = new GraftTable(spark, root, statsCol = Some("k"))
-    t0.append((1L to 400L).map(i => (i, i * 1.0)).toDF("k", "v")
-      .repartitionByRange(4, col("k")))
-    // simulate a pre-bookkeeping (pre-r16) chain: strip the dvn=/dvsv=
-    // tokens from v1's header — the delta arithmetic must NOT seed at 0
-    // on such a parent (it would permanently understate the mask debt);
-    // one classic commit restates both exactly and upgrades the chain
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val mp = new org.apache.hadoop.fs.Path(
-      s"$root/_log/v${"%020d".format(1L)}.manifest")
-    val txt = scala.io.Source.fromInputStream(fs.open(mp)).mkString
-    val stripped = txt.split("\n").map(l =>
-      if (l.startsWith("#") && l.contains(" op="))
-        l.replaceAll(" dvn=\\d+", "").replaceAll(" dvsv=[\\d,]+", "")
-      else l).mkString("\n")
-    assert(stripped != txt, "the seed header must have carried dvn=")
-    fs.delete(mp, false)
-    val out = fs.create(mp, true)
-    try out.write(stripped.getBytes("UTF-8")) finally out.close()
-    // a FRESH handle (no stale caches) deletes through the legacy chain
-    val t = GraftTable.load(spark, root)
-    assert(!t.headerMeta(1L).contains("dvn"))
-    t.delete(col("k") === 7L)                                    // v2
-    // the classic path restated the bookkeeping exactly — the chain is
-    // upgraded and the debt is never understated
-    assert(t.headerMeta(2L).get("dvn").contains("1"),
-      s"classic restatement: ${t.headerMeta(2L).get("dvn")}")
-    assert(t.headerMeta(2L).get("dvsv").contains("2"))
-    assert(t.snapshot().count() == 399L)
-    // ...and the NEXT DV delete rides the delta-first path again
-    t.delete(col("k") === 9L)                                    // v3
-    assert(t.headerMeta(3L).get("kind").contains("delta"))
-    assert(t.headerMeta(3L).get("dvn").contains("2"))
-    assert(t.snapshot().count() == 398L)
-  }
-
   test("nf/nr/dvn arithmetic equals recomputation across a mixed DV history") {
     val t = freshTable("graft_dvdelta_arith")
     t.delete(col("k") % 50L === 0L)                              // v2: 8 rows

@@ -5,16 +5,17 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Format-compatibility safety rails around the commit log:
+/** Format safety rails around the commit log. The reader reads the one
+  * format generation its writer writes:
   *
-  *  - bloom sidecar SCHEME versioning: sidecars written before the
-  *    integral-widening fix (no `# scheme=long` header) carry
-  *    hashInt-derived bits for Int/Short/Byte bloom columns, which
-  *    false-negative against the long-hashing probe — they must NEVER
-  *    skip unless the column is provably long;
-  *  - legacy terminator-less manifests: uncorroborated ones fail loudly
-  *    AND fast (the rejection is cached — no 200-attempt spin per read),
-  *    with the `allowLegacyManifests` opt-in spelled out.
+  *  - every manifest ends in the `# ok` terminator, every bloom sidecar
+  *    carries the `# scheme=long` header (integral columns pre-widened
+  *    to long, matching the long-hashing probe), every manifest header
+  *    states `dvn=`;
+  *  - a log artifact missing one of those is refused loudly, naming the
+  *    table — read with today's meaning it could skip files that hold
+  *    matching rows or understate the deletion-vector debt;
+  *  - `require=` feature gates and the live-DV-sidecar bound hold.
   */
 class FormatSafetySpec extends SparkSpec {
   import spark.implicits._
@@ -50,46 +51,55 @@ class FormatSafetySpec extends SparkSpec {
     val all = t.activeFiles(t.latestVersion.get).size
     // fresh sidecars carry `# scheme=long`: the probe prunes
     assert(t.filesForPoint(300L).size < all, "scheme-tagged bloom should prune")
-    // simulate a pre-fix table: same bits, header stripped
+    assert(t.snapshotPoint(300L).count() == 1L)
+    // a pre-fix table (same bits, header stripped) is refused, never
+    // probed: its hashInt-era bits could skip the file holding the row
     stripBloomSchemes(root)
     val t2 = new GraftTable(spark, root, bloomCol = Some("id"))
-    assert(t2.filesForPoint(300L).size == all,
-      "an unversioned hashed bloom over a non-long column must never skip")
-    // reads stay exact either way
-    assert(t2.snapshotPoint(300L).count() == 1L)
+    val e = intercept[IllegalStateException](t2.filesForPoint(300L))
+    assert(e.getMessage.contains(root), e.getMessage)
   }
 
-  test("unversioned hashed blooms still prune when the column is DECLARED long") {
-    val root = graft.TempDirs.create("graft_bloomscheme_long")
-    val t = new GraftTable(spark, root, bloomCol = Some("id"))
-    (0 until 3).foreach { s =>
-      // mergeSchema declares the schema — the probe can then PROVE the
-      // bloom column long, where pre- and post-widening builds agree
-      t.append((0 until 900).collect {
-        case i if i % 3 == s => (i.toLong, s"v$i")
-      }.toDF("id", "name"), mergeSchema = true)
+  private def rewriteManifest(root: String, v: Long)(f: String => String): Unit = {
+    val mp = new Path(s"$root/_log/v${"%020d".format(v)}.manifest")
+    val txt = manifestText(root, v)
+    fs(root).delete(mp, false)
+    val out = fs(root).create(mp, false)
+    try out.write(f(txt).getBytes(UTF_8)) finally out.close()
+  }
+
+  test("log shapes no writer produces are refused loudly, naming the table") {
+    // each case: build a table, rewrite one artifact into a retired
+    // shape, then run the operation that would read it with today's
+    // meaning — a fresh handle, so no cache hides the rewrite
+    val cases: Seq[(String, String => Unit, GraftTable => Any)] = Seq(
+      // v1 without the `# ok` terminator (and without kind=), with v2
+      // committed on top: only a torn write looks like this
+      ("terminator-less manifest", root => rewriteManifest(root, 1L)(txt =>
+        txt.linesIterator.filterNot(_ == "# ok")
+          .map(_.replace(" kind=delta", "").replaceFirst("^\\+\t", ""))
+          .mkString("\n")),
+        t => t.snapshot().count()),
+      // a bloom sidecar without `# scheme=long`: hashInt-era bits
+      ("header-less bloom sidecar", root => stripBloomSchemes(root),
+        t => t.snapshotPoint(7L).count()),
+      // a manifest header without dvn=: the delta-first DV arithmetic
+      // would seed the masked-row debt at 0
+      ("dvn-less DV header", root => rewriteManifest(root, 2L)(txt =>
+        txt.linesIterator.map(l =>
+          if (l.startsWith("# op=")) l.replaceAll(" dvn=\\d+", "")
+            .replaceAll(" dvsv=[\\d,]+", "")
+          else l).mkString("\n")),
+        t => t.delete(col("id") === 7L)))
+    cases.foreach { case (shape, retire, op) =>
+      val root = graft.TempDirs.create("graft_retired")
+      val t = new GraftTable(spark, root, bloomCol = Some("id"))
+      t.append((1 until 100).map(i => (i, s"v$i")).toDF("id", "name"))
+      t.append((100 until 200).map(i => (i, s"v$i")).toDF("id", "name"))
+      retire(root)
+      val e = intercept[IllegalStateException](op(GraftTable.load(spark, root)))
+      assert(e.getMessage.contains(root), s"$shape: ${e.getMessage}")
     }
-    stripBloomSchemes(root)
-    val t2 = new GraftTable(spark, root, bloomCol = Some("id"))
-    assert(t2.tableSchema.isDefined)
-    val all = t2.activeFiles(t2.latestVersion.get).size
-    assert(t2.filesForPoint(300L).size < all,
-      "a declared-long column's unversioned bloom is probe-compatible")
-    assert(t2.snapshotPoint(300L).count() == 1L)
-  }
-
-  test("a clone drops pre-widening blooms instead of re-tagging them") {
-    val root = graft.TempDirs.create("graft_bloomscheme_clone_src")
-    val t = new GraftTable(spark, root, bloomCol = Some("id"))
-    t.append((0 until 300).map(i => (i, s"v$i")).toDF("id", "name"))
-    stripBloomSchemes(root)
-    val src = new GraftTable(spark, root, bloomCol = Some("id"))
-    val dest = src.cloneTo(graft.TempDirs.create("graft_bloomscheme_clone_dst"))
-    // the clone must not claim scheme=long bits it cannot prove: its
-    // entries carry NO bloom (never skip) rather than a mis-tagged one
-    val all = dest.activeFiles(dest.latestVersion.get).size
-    assert(dest.filesForPoint(5L).size == all)
-    assert(dest.snapshotPoint(5L).count() == 1L)
   }
 
   private def manifestText(root: String, v: Long): String = {
@@ -152,40 +162,6 @@ class FormatSafetySpec extends SparkSpec {
       (0L until 500L).sum - (1L to 50L).map(_ * 7L).sum)
     // a fresh handle resolves the coalesced masks from disk alone
     assert(GraftTable.load(spark, root).snapshot().count() == 450L)
-  }
-
-  test("uncorroborated legacy manifest fails loudly, fast on re-read, and honors the opt-in") {
-    val root = graft.TempDirs.create("graft_legacy_fastfail")
-    val t = new GraftTable(spark, root)
-    t.append(Seq((1L, "a")).toDF("k", "v"))
-    // rewrite v1's manifest as a LEGACY shape: `# op=` header, no kind=,
-    // no terminator, no later manifest to corroborate it
-    val f = fs(root)
-    val mp = new Path(s"$root/_log/v${"%020d".format(1)}.manifest")
-    val in = f.open(mp)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    val body = lines.filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map(l => if (l.startsWith("+\t")) l.drop(2) else l)
-    val out = f.create(mp, true)
-    try out.write((s"# op=append" +: body).mkString("\n").getBytes(UTF_8))
-    finally out.close()
-
-    spark.conf.unset("spark.graft.acid.allowLegacyManifests")
-    val t2 = new GraftTable(spark, root)
-    val e1 = intercept[IllegalStateException](t2.snapshot().count())
-    assert(e1.getMessage.contains("allowLegacyManifests"))
-    // the rejection is cached: the second read fails in microseconds,
-    // not another 20-attempt stability spin
-    val start = System.nanoTime()
-    intercept[IllegalStateException](t2.snapshot().count())
-    assert((System.nanoTime() - start) < 80L * 1000 * 1000,
-      "re-read of a rejected legacy manifest must fail fast, not re-spin")
-    // the documented opt-in unblocks the same handle
-    spark.conf.set("spark.graft.acid.allowLegacyManifests", "true")
-    try assert(t2.snapshot().count() == 1L)
-    finally spark.conf.unset("spark.graft.acid.allowLegacyManifests")
   }
 
   test("incremental re-clone syncs only the delta; foreign destinations refuse") {

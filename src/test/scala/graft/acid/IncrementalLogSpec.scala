@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** The incremental commit log: commits are O(changed files) DELTAS, not
   * full active-file lists; periodic checkpoints bound the replay chain;
-  * vacuum keeps retained versions resolvable after their chain below is
-  * dropped; and legacy full-list manifests (pre-delta format, no
-  * terminator) stay readable. */
+  * and vacuum keeps retained versions resolvable after their chain below
+  * is dropped. */
 class IncrementalLogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -113,72 +112,5 @@ class IncrementalLogSpec extends SparkSpec {
     val t2 = GraftTable.load(spark, t.root)
     t2.append(rows(1, 999))
     assert(t2.latestVersion.contains(6L))
-  }
-
-  test("a carried legacy inline bloom keeps its raw-long scheme across new commits") {
-    val t = new GraftTable(spark, graft.TempDirs.create("graft_inclog_lb"),
-      bloomCol = Some("id"))
-    t.append((1L to 100L).map(i => (i, s"v$i")).toDF("id", "name").coalesce(1))
-    val f = fs(t.root)
-    val p = new Path(t.root, f"_log/v${1L}%020d.manifest")
-    // rewrite v1 as a LEGACY manifest: the bloom INLINE (b=) built with
-    // the raw-long scheme, as pre-sidecar code wrote it
-    val words = new Array[Long](GraftTable.BloomWords)
-    (1L to 100L).foreach(v => GraftTable.bloomPositions(v).foreach(pos =>
-      words(pos / 64) |= 1L << (pos % 64)))
-    val lines = scala.io.Source.fromInputStream(f.open(p)).getLines().toList
-    val legacy = lines.map { l =>
-      if (l.startsWith("+\t"))
-        l.drop(2).split('\t').filterNot(_.startsWith("bf="))
-          .mkString("\t") + s"\tb=${GraftTable.encodeBloom(words)}"
-      else l.replace(" kind=delta", "").replace(" kind=full", "")
-    }.filterNot(_.startsWith("-\t"))
-    f.delete(p, false)
-    val out = f.create(p, false)
-    out.write(legacy.mkString("\n").getBytes("UTF-8")); out.close()
-    f.delete(new Path(t.root, f"_log/v${1L}%020d.blooms"), false)
-    // a NEW commit carries the legacy entry: the inline bloom must stay
-    // inline (a sidecar migration would silently flip its probe scheme)
-    val t2 = GraftTable.load(spark, t.root)
-    t2.append(Seq((200L, "x")).toDF("id", "name").coalesce(1))
-    val carried = t2.entries(2L).filter(_.rows.contains(100L))
-    assert(carried.nonEmpty && carried.forall(e =>
-      e.bloom.isDefined && e.bloomRef.isEmpty),
-      s"legacy inline bloom must not migrate: ${carried.map(_.line)}")
-    // and the raw-long probe still answers through it
-    assert(t2.snapshotPoint(50L).count() == 1)
-    assert(t2.snapshotPoint(77L).count() == 1)
-  }
-
-  test("legacy manifests without the terminator line need corroboration") {
-    val t = new GraftTable(spark, graft.TempDirs.create("graft_inclog"))
-    t.append(rows(4).coalesce(1))
-    t.append(rows(4, 100).coalesce(1))
-    // rewrite v1 as a pre-delta-format manifest: full list, # op header,
-    // no kind= tag, NO `# ok` terminator — what prior code versions wrote
-    val p = new Path(t.root, f"_log/v${1L}%020d.manifest")
-    val f = fs(t.root)
-    val lines = scala.io.Source.fromInputStream(f.open(p)).getLines().toList
-    // legacy body lines are PLAIN entry lines: strip delta +/- prefixes
-    val legacy = lines.filterNot(l => l == "# ok" || l.startsWith("-\t"))
-      .map(_.replace(" kind=full", "").replace(" kind=delta", "")
-        .replaceFirst("^\\+\\t", ""))
-    f.delete(p, false)
-    val out = f.create(p, false)
-    out.write(legacy.mkString("\n").getBytes("UTF-8")); out.close()
-    // CORROBORATED (a later manifest was built on top of it): readable
-    val fresh = GraftTable.load(spark, t.root)
-    assert(fresh.snapshot(Some(1L)).count() == 4,
-      "a corroborated legacy manifest must read, not spin out")
-    // UNCORROBORATED (it is the newest version): indistinguishable from a
-    // legacy-era torn commit — must fail LOUDLY, not read a smaller table
-    f.delete(new Path(t.root, f"_log/v${2L}%020d.manifest"), false)
-    f.delete(new Path(t.root, "_log/_latest"), false)
-    assertThrows[IllegalStateException](
-      GraftTable.load(spark, t.root).snapshot(Some(1L)).count())
-    // ... unless the session explicitly opts pre-terminator tables in
-    spark.conf.set("spark.graft.acid.allowLegacyManifests", "true")
-    try assert(GraftTable.load(spark, t.root).snapshot(Some(1L)).count() == 4)
-    finally spark.conf.unset("spark.graft.acid.allowLegacyManifests")
   }
 }

@@ -60,19 +60,6 @@ class NdvSidecarSpec extends SparkSpec {
     }
   }
 
-  test("carried LEGACY inline nv: payloads stay inline (no line-identity churn)") {
-    val root = graft.TempDirs.create("graft_nvs_legacy")
-    val t = new GraftTable(spark, root)
-    val legacy = t.FileEntry("data/c1-fake/part-000000.parquet",
-      stats = Some((1L, 9L)), rows = Some(9L),
-      ndv = Map("id" -> Array[Byte](1, 2, 3)))
-    t.commit(1L, Seq(legacy), op = "append")
-    t.commit(2L, t.entries(1L), op = "touch")
-    val line = t.entries(2L).head.line
-    assert(line.contains("nv:id=") && !line.contains("nvf="),
-      s"a carried inline sketch must not migrate (line churn): $line")
-  }
-
   test("clone re-keys the NDV sidecar into the clone's own v1") {
     val t = freshTable(graft.TempDirs.create("graft_nvs_cl_src"))
     val destRoot = graft.TempDirs.create("graft_nvs_cl_dst")

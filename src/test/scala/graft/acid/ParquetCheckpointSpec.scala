@@ -15,15 +15,16 @@ class ParquetCheckpointSpec extends SparkSpec {
   private val MinFilesKey = "spark.graft.acid.parquetCheckpointMinFiles"
 
   /** A synthetic entry exercising EVERY tag family the manifest line
-    * format carries — stats, partition window, inline bloom, sidecar
-    * bloom ref, dv ref+count, layout tag, row count, long / string /
-    * time (micros + days) windows, ndv sketches — so line-for-line
+    * format carries — stats, partition window, sidecar bloom and ndv
+    * refs, dv ref+count, layout tag, row count, byte length, long /
+    * string / time (micros + days) windows — so line-for-line
     * equality below proves the columnar codec lossless. */
-  private def mkEntry(t: GraftTable, i: Int): t.FileEntry = t.FileEntry(
+  private def mkEntry(t: GraftTable, i: Int): GraftTable.FileEntry = GraftTable.FileEntry(
     path = f"data/c1-fake/part-$i%06d.parquet",
     stats = Some((i.toLong, i + 10L)),
     part = if (i % 3 == 0) Some((i.toLong % 7, i.toLong % 7)) else None,
-    bloom = if (i % 5 == 0) Some(Array(0x0123456789abcdefL ^ i, -1L ^ i)) else None,
+    nvRef = if (i % 5 == 0) Some(1L) else None,
+    bytes = Some(1000L + i),
     windows = Map("k" -> ((i.toLong, i + 100L))),
     rows = Some(100L + i),
     bloomRef = if (i % 4 == 0) Some(1L) else None,
@@ -31,7 +32,6 @@ class ParquetCheckpointSpec extends SparkSpec {
     dvRef = if (i % 6 == 0) Some(1L) else None,
     dvCount = if (i % 6 == 0) 2L else 0L,
     zTag = if (i % 2 == 0) Some("a2s") else None,
-    ndv = Map("k" -> Array[Byte](1, 2, (i % 127).toByte)),
     timeWindows = Map("ts" -> (('u', 1000L * i, 2000L * i)),
       "d" -> (('d', 10L + i, 20L + i))))
 
@@ -91,7 +91,7 @@ class ParquetCheckpointSpec extends SparkSpec {
       val t = new GraftTable(spark, root, checkpointInterval = 1)
       // lean entries at this scale (stats + rows), the realistic shape
       val entries = (0 until 100000).map { i =>
-        t.FileEntry(f"data/c1-fake/part-$i%06d.parquet",
+        GraftTable.FileEntry(f"data/c1-fake/part-$i%06d.parquet",
           stats = Some((i.toLong, i + 10L)), rows = Some(10L + (i % 5)))
       }
       t.commit(1L, entries, op = "append")
@@ -204,7 +204,7 @@ class ParquetCheckpointSpec extends SparkSpec {
       // checkpointed as parquet (interval=1, past the 500 threshold)
       val t = new GraftTable(spark, root, statsCol = Some("k"),
         checkpointInterval = 1)
-      val es = (0 until 2000).map(i => t.FileEntry(
+      val es = (0 until 2000).map(i => GraftTable.FileEntry(
         f"data/c1-fake/part-$i%06d.parquet",
         stats = Some((i * 10L, i * 10L + 9L)), rows = Some(10L)))
       t.commit(1L, es, op = "append")
@@ -214,7 +214,7 @@ class ParquetCheckpointSpec extends SparkSpec {
         checkpointInterval = 10)
       val base = t2.entries(1L)
       val rm = base.find(_.stats.contains((50L, 59L))).get
-      val add = t2.FileEntry("data/c2-fake/part-added.parquet",
+      val add = GraftTable.FileEntry("data/c2-fake/part-added.parquet",
         stats = Some((55L, 58L)), rows = Some(4L))
       t2.commit(2L, base.filterNot(_.path == rm.path) :+ add, op = "append")
       // COLD handle (empty caches — the distributed path's precondition)
@@ -248,7 +248,7 @@ class ParquetCheckpointSpec extends SparkSpec {
       val root = graft.TempDirs.create("graft_pcp_prune_dmg")
       val t = new GraftTable(spark, root, statsCol = Some("k"),
         checkpointInterval = 1)
-      val es = (0 until 2000).map(i => t.FileEntry(
+      val es = (0 until 2000).map(i => GraftTable.FileEntry(
         f"data/c1-fake/part-$i%06d.parquet",
         stats = Some((i * 10L, i * 10L + 9L)), rows = Some(10L)))
       t.commit(1L, es, op = "append")

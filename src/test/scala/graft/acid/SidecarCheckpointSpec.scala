@@ -30,7 +30,7 @@ class SidecarCheckpointSpec extends SparkSpec {
   /** Synthetic entry covering the tag families the line format carries
     * (ParquetCheckpointSpec proves the columnar codec lossless; here the
     * entries just need distinct, stable lines). */
-  private def mkEntry(t: GraftTable, i: Int): t.FileEntry = t.FileEntry(
+  private def mkEntry(t: GraftTable, i: Int): GraftTable.FileEntry = GraftTable.FileEntry(
     path = f"data/c1-fake/part-$i%06d.parquet",
     stats = Some((i.toLong, i + 10L)),
     windows = Map("k" -> ((i.toLong, i + 100L))),
@@ -111,13 +111,14 @@ class SidecarCheckpointSpec extends SparkSpec {
       val root = graft.TempDirs.create("graft_scp_codec")
       val t = new GraftTable(spark, root, checkpointInterval = 1)
       // the FULL tag surface (ParquetCheckpointSpec's shape): stats,
-      // partition window, inline + sidecar blooms, dv refs, layout tag,
-      // ndv payloads, long/string/time windows
-      def full(i: Int): t.FileEntry = t.FileEntry(
+      // partition window, sidecar bloom and ndv refs, byte length, dv
+      // refs, layout tag, long/string/time windows
+      def full(i: Int): GraftTable.FileEntry = GraftTable.FileEntry(
         path = f"data/c1-fake/part-$i%06d.parquet",
         stats = Some((i.toLong, i + 10L)),
         part = if (i % 3 == 0) Some((i.toLong % 7, i.toLong % 7)) else None,
-        bloom = if (i % 5 == 0) Some(Array(0x0123456789abcdefL ^ i, -1L ^ i)) else None,
+        nvRef = if (i % 5 == 0) Some(1L) else None,
+        bytes = Some(1000L + i),
         windows = Map("k" -> ((i.toLong, i + 100L))),
         rows = Some(100L + i),
         bloomRef = if (i % 4 == 0) Some(1L) else None,
@@ -125,7 +126,6 @@ class SidecarCheckpointSpec extends SparkSpec {
         dvRef = if (i % 6 == 0) Some(1L) else None,
         dvCount = if (i % 6 == 0) 2L else 0L,
         zTag = if (i % 2 == 0) Some("a2s") else None,
-        ndv = Map("k" -> Array[Byte](1, 2, (i % 127).toByte)),
         timeWindows = Map("ts" -> (('u', 1000L * i, 2000L * i)),
           "d" -> (('d', 10L + i, 20L + i))))
       val es = (0 until 120).map(full)

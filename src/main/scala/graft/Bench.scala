@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at the sf dir in
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -12,29 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // STATIC conf, must be set at session creation: the generated-class
-      // cache defaults to 100 entries, but this suite compiles ~1500
-      // whole-stage/expression codegen units across 273 queries — at 100
-      // the cache thrashes end-to-end and every timed query re-runs
-      // janino on code the warm pass already compiled (measured: warm
-      // pass cut the single-pass total only 262 s -> 240 s while
-      // per-query repeats inside the cache window hit 143.9 s). Sized to
-      // hold the whole suite's units; memory cost is class metadata
-      // (~KBs per entry), not data. Scale note: a production driver
-      // running a 273-query workload needs the same setting for the same
-      // reason — this is workload-shape-derived, not local-mode tuning.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    // ERROR, not WARN: the driver tail-captures the log, and r1 lost the
-    // head of the JSON line to preamble noise — keep stdout/stderr minimal
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     // Round 17 (r16 directive #6): build EVERY once-per-JVM fixture
     // family outside the timed region via the packs' own warm hooks —
     // the hand-kept list below had drifted behind the fixture inventory

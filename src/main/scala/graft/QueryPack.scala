@@ -4,36 +4,33 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-/** A named bundle of driver-verifiable queries.
+/** Per-stream conf scoping: clone the session (conf + temp views +
+  * functions copied; SparkContext shared), set the stream's overrides on
+  * the CLONE, and transplant the analyzed plan onto it. The shared
+  * session's conf is never touched, so a concurrent batch query planned
+  * while a stream starts keeps its own settings — no lock, no set/restore
+  * window (round-4 advice #3).
   *
-  * Contract (see SparkEntry): `queries` maps name -> (session, sfDir) ->
-  * DataFrame; `oracles` maps the SAME name -> DuckDB SQL over the same
-  * parquet tables. Conventions that make the driver's hash compare
-  * deterministic:
-  *
-  *  - every query ends in a total ORDER BY (ties broken by a unique key),
-  *    mirrored in the oracle SQL;
-  *  - aggregate/computed columns aliased identically on both sides;
-  *  - money sums go through DECIMAL(12,2) (exact, order-insensitive) and
-  *    are cast back to DOUBLE at the end — bit-identical across engines
-  *    regardless of partial-aggregation merge order;
-  *  - integer-ish results cast to LONG (DuckDB returns BIGINT).
-  */
-/** Per-stream conf scoping for the state-store fan-out override: clone
-  * the session (conf + temp views + functions copied; SparkContext
-  * shared), set the override on the CLONE, and transplant the analyzed
-  * plan onto it. The shared session's conf is never touched, so a
-  * concurrent batch query planned while a stream starts keeps its own
-  * partition count — no lock, no set/restore window (round-4 advice #3). */
+  * The overrides: `statePartitions` as the shuffle/state fan-out, and the
+  * RocksDB state-store provider when the plan holds a transformWithState
+  * node, which Spark refuses to run on the HDFS-backed store. Any other
+  * stream keeps the session's provider. Structured Streaming fixes both
+  * per query when the query starts, so they belong on the query's own
+  * session. */
 private[graft] object ScopedStream {
   import org.apache.spark.sql.GraftPlanBridge
+  import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 
-  /** Rebind `df` to a cloned session carrying `statePartitions` as its
-    * shuffle/state fan-out; returns (clonedSession, reboundDf). */
+  /** Rebind `df` to a cloned session carrying the stream's overrides;
+    * returns (clonedSession, reboundDf). */
   def apply(df: DataFrame, statePartitions: Int): (SparkSession, DataFrame) = {
     val scoped = GraftPlanBridge.cloneSession(df.sparkSession)
     scoped.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    (scoped, GraftPlanBridge.ofRows(scoped, df.queryExecution.analyzed))
+    val plan = df.queryExecution.analyzed
+    if (plan.exists(_.isInstanceOf[TransformWithState]))
+      scoped.conf.set(graft.tracks.TrackStateOp.rocksdbConf._1,
+        graft.tracks.TrackStateOp.rocksdbConf._2)
+    (scoped, GraftPlanBridge.ofRows(scoped, plan))
   }
 
   /** Rebind a result built on the scoped clone back onto the outer
@@ -41,57 +38,6 @@ private[graft] object ScopedStream {
     * discarded). */
   def rebind(outer: SparkSession, df: DataFrame): DataFrame =
     GraftPlanBridge.ofRows(outer, df.queryExecution.analyzed)
-}
-
-/** Per-JVM cached DERIVED session with [[graft.GraftExtensions]]
-  * installed — the extension-injected SQL surface (TVFs, COMMIT ATOMIC,
-  * INSERT … REPLACE WHERE grammar) needs a parser the caller's session
-  * may lack. Three properties close the derived-session-vs-caller
-  * environment fork (round-15 advice: the fork was a live root-cause
-  * hypothesis for a driver-only gate failure):
-  *
-  *  1. the caller's MODIFIABLE runtime confs copy onto the derived
-  *     session at creation (session timezone, shuffle partitions, ANSI
-  *     flags — a fresh-default session would evaluate the same SQL under
-  *     different semantics than the main one);
-  *  2. ONE derived session per caller session per JVM — repeated gate
-  *     invocations (verify + bench warm-ups) stop accumulating leaked
-  *     session states;
-  *  3. the caller is restored as active AND default session after every
-  *     call — `builder().create()` flips both, and later main-session
-  *     work must not resolve thread-local state against the derived one.
-  */
-private[graft] object DerivedSessions {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  def withExtensions(s: SparkSession): SparkSession = {
-    val s2 = cache.computeIfAbsent(s, { _ =>
-      SparkSession.builder()
-        .master(s.sparkContext.master)
-        .withExtensions(new graft.GraftExtensions)
-        .create()
-    })
-    // (re-)sync the caller's confs on EVERY call, not just at creation:
-    // a semantics-bearing conf set on the main session after the cached
-    // derived session was born (ANSI flag, timezone, a spark.graft.*
-    // knob) must reach the next derived-session query — creation-only
-    // copying would reintroduce the very fork this mechanism closes.
-    // isModifiable is false for UNREGISTERED keys (catalog plugs,
-    // spark.graft.* engine knobs) even though set() accepts them — copy
-    // those unconditionally. Keys UNSET on the caller are not unset
-    // here (callers own site-local confs like their catalog roots).
-    s.conf.getAll.foreach { case (k, v) =>
-      val copyable = s2.conf.isModifiable(k) ||
-        k.startsWith("spark.graft.") || k.startsWith("spark.sql.catalog.")
-      if (copyable && !s2.conf.getOption(k).contains(v))
-        try s2.conf.set(k, v)
-        catch { case scala.util.control.NonFatal(_) => () }
-    }
-    SparkSession.setDefaultSession(s)
-    SparkSession.setActiveSession(s)
-    s2
-  }
 }
 
 /** Self-cleaning temp dirs for per-JVM fixture copies. */
@@ -109,6 +55,21 @@ object TempDirs {
   }
 }
 
+/** A named bundle of driver-verifiable queries.
+  *
+  * Contract (see SparkEntry): `queries` maps name -> (session, sfDir) ->
+  * DataFrame; `oracles` maps the SAME name -> DuckDB SQL over the same
+  * parquet tables. Conventions that make the driver's hash compare
+  * deterministic:
+  *
+  *  - every query ends in a total ORDER BY (ties broken by a unique key),
+  *    mirrored in the oracle SQL;
+  *  - aggregate/computed columns aliased identically on both sides;
+  *  - money sums go through DECIMAL(12,2) (exact, order-insensitive) and
+  *    are cast back to DOUBLE at the end — bit-identical across engines
+  *    regardless of partial-aggregation merge order;
+  *  - integer-ish results cast to LONG (DuckDB returns BIGINT).
+  */
 trait QueryPack {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracles: Map[String, String]
@@ -152,7 +113,7 @@ trait QueryPack {
     * stream-stream join opens 4 stores per partition, and each store
     * pays a fixed per-batch commit/snapshot cost — at 32 partitions the
     * stream-stream join spent 58s cumulative in state commits for 40k
-    * state rows vs 2.9s at 8, and the round-17 sweep (OptLab ssj,
+    * state rows vs 2.9s at 8, and the round-17 sweep (OPTIMIZATION_r17.md,
     * steady-state at sf0.1/cpus=32) found 4 another 25% faster than 8
     * (2.3 s vs 2.9 s; 2 and 1 regress — too little scan parallelism),
     * so 4 is the measured floor for these state sizes. Results are

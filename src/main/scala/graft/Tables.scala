@@ -32,7 +32,11 @@ object Tables {
     // Session-level (not static) confs: set lazily so the driver's own
     // SparkSession works too, whatever configs it was built with. UTC is
     // part of the oracle contract (BASELINE pins both engines to UTC) —
-    // a non-UTC session would shift every date-extraction result.
+    // a non-UTC session would shift every date-extraction result. One of
+    // the few writes graft makes to a session it is handed; the others are
+    // TrackStateOp.eventsStream (the same two confs), GraftDvScanRewrite's
+    // graft-scan rules and TopKPerKey.apply's strategy. On a GraftSession
+    // both values are already set.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val path = s"$dir/$name.parquet"

@@ -38,7 +38,10 @@ object GraftDvScanRewrite extends Rule[LogicalPlan] {
     * contains-then-append, so concurrent first-touches cannot append a
     * rule twice (`experimental.extraOptimizations` is session-global
     * mutable state; an unsynchronized check-and-set from two threads
-    * duplicates the rule). */
+    * duplicates the rule). Installing into the caller's session is
+    * allowed here, unlike for any other rule: these rules match only
+    * graft scans and graft row commands, so no other query plans
+    * differently. */
   private val installLock = new Object
 
   /** Install just the DV rewrite (bare path reads need only this). */

@@ -1,6 +1,5 @@
 package graft.flights
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Runnable analogue of the reference's main
@@ -14,13 +13,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   */
 object FlightReplayDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("flight-replay")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
     import spark.implicits._
 
     val input = MemoryStream[String](spark)

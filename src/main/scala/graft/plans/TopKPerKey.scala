@@ -32,7 +32,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * StreamWithStates.scala:170-199, is the streaming cousin: keep the
   * newest 10 per track id); here it is a batch Catalyst operator
   * installed via `spark.experimental.extraStrategies` (public API, no
-  * session-extension requirement) or `GraftExtensions`.
+  * session-extension requirement) or `GraftExtensions`; the window-idiom
+  * rewrite runs on a clone from [[TopKPerKey.rewriting]].
   */
 case class TopKPerKeyNode(
     groupKeys: Seq[Expression],
@@ -107,24 +108,30 @@ case class TopKPerKeyExec(
 }
 
 object TopKPerKey {
-  /** Install the strategy AND the window-idiom rewrite rule on a session
-    * created without GraftExtensions (idempotent; public experimental-
-    * methods hooks). After this, `row_number().over(...) <= k` queries
-    * that discard the rank column plan through TopKPerKeyExec. */
-  def installRewrite(session: org.apache.spark.sql.SparkSession): Unit = {
-    val strategies = session.experimental.extraStrategies
-    if (!strategies.contains(TopKPerKeyStrategy))
-      session.experimental.extraStrategies = strategies :+ TopKPerKeyStrategy
-    val opts = session.experimental.extraOptimizations
-    if (!opts.contains(RowNumberTopKRewrite))
-      session.experimental.extraOptimizations = opts :+ RowNumberTopKRewrite
-  }
+  /** A clone of `session` with the strategy AND the window-idiom rewrite
+    * rule installed: on it, `row_number().over(...) <= k` queries that
+    * discard the rank column plan through TopKPerKeyExec. The caller's
+    * session is left as it was — extra optimizer rules are
+    * session-global, so installing the rewrite there would change how
+    * every later window query on it plans. The clone keeps the caller's
+    * conf, temp views and query listeners. */
+  def rewriting(session: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    graft.GraftSession.cloneFor(session, "topk-rewrite") { clone =>
+      val x = clone.experimental
+      if (!x.extraStrategies.contains(TopKPerKeyStrategy))
+        x.extraStrategies = x.extraStrategies :+ TopKPerKeyStrategy
+      if (!x.extraOptimizations.contains(RowNumberTopKRewrite))
+        x.extraOptimizations = x.extraOptimizations :+ RowNumberTopKRewrite
+    }
 
   /** DataFrame API: k best rows per key under `order` (first-in-sort-
     * order wins; pass `$"x".desc` for largest-x). Include a unique
     * tiebreaker in `order` for deterministic results. Installs the
     * strategy on the session idempotently (public experimental-methods
-    * hook), so no spark.sql.extensions config is required. */
+    * hook), so no spark.sql.extensions config is required. This is the
+    * one rule a gate may add to the session it is handed: the strategy
+    * matches only TopKPerKeyNode, which only this method builds, so no
+    * other query on the session plans differently. */
   def apply(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame = {
     val session = df.sparkSession
     val strategies = session.experimental.extraStrategies

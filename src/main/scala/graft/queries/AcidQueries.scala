@@ -32,6 +32,21 @@ object AcidQueries extends QueryPack {
   private val fixtures =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String, String, String, String, String, String, String)]()
 
+  /** A clone of `s` carrying `confs`: gates and fixture builders that
+    * need the graft catalog or an acid knob set it here, never on the
+    * session they are handed. The clone keeps the caller's conf, temp
+    * views and listeners; tables it writes read back from any session
+    * through `GraftTable.load(s, root)`. */
+  private def cloneWith(s: SparkSession, confs: (String, String)*): SparkSession =
+    graft.GraftSession.cloneFor(s, confs.mkString(",")) { c =>
+      confs.foreach { case (k, v) => c.conf.set(k, v) }
+    }
+
+  /** [[cloneWith]] the `graft` catalog rooted at the fixture dir. */
+  private def withCatalog(s: SparkSession): SparkSession = cloneWith(s,
+    "spark.sql.catalog.graft" -> "graft.acid.GraftCatalog",
+    "spark.sql.catalog.graft.root" -> acidDir)
+
   private def events(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.events(s, d)
@@ -114,20 +129,19 @@ object AcidQueries extends QueryPack {
 
   private def sqlDmlTables(s: SparkSession, d: String): (GraftTable, GraftTable) = {
     val (u, m) = sqlDmlFixtures.computeIfAbsent(d, { _ =>
-      import s.implicits._
+      val c = withCatalog(s)
+      import c.implicits._
       val key = java.lang.Long.toHexString(
         java.util.UUID.nameUUIDFromBytes(("sqldml" + d).getBytes("UTF-8"))
           .getMostSignificantBits)
-      s.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft.root", acidDir)
-      val ev = events(s, d).withColumn("pid", pmod($"user_id", lit(8L)))
+      val ev = events(c, d).withColumn("pid", pmod($"user_id", lit(8L)))
       val uRoot = s"$acidDir/squpd_$key"
-      val ut = new GraftTable(s, uRoot, partitionCol = Some("pid"))
+      val ut = new GraftTable(c, uRoot, partitionCol = Some("pid"))
       ut.append(ev)
-      s.sql(s"UPDATE graft.`${new Path(uRoot).getName}` " +
+      c.sql(s"UPDATE graft.`${new Path(uRoot).getName}` " +
         "SET value = value * 2 WHERE pid = 3")
       val mRoot = s"$acidDir/sqmrg_$key"
-      val mt2 = new GraftTable(s, mRoot, partitionCol = Some("pid"))
+      val mt2 = new GraftTable(c, mRoot, partitionCol = Some("pid"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
       def latest(df: DataFrame) = df.withColumn("__rn", row_number().over(w))
@@ -135,7 +149,7 @@ object AcidQueries extends QueryPack {
       mt2.append(latest(ev.filter(pmod($"event_id", lit(3L)) === 0L)))
       latest(ev.filter(pmod($"event_id", lit(3L)) =!= 0L))
         .createOrReplaceTempView("graft_sql_merge_src")
-      s.sql(
+      c.sql(
         s"""MERGE INTO graft.`${new Path(mRoot).getName}` t
            |USING graft_sql_merge_src s
            |ON t.user_id = s.user_id AND t.pid = s.pid
@@ -375,9 +389,7 @@ object AcidQueries extends QueryPack {
           .getMostSignificantBits)
       val src = cdfTable(s, d)
       val mirRoot = s"$acidDir/sqlcdcagg_$key"
-      val s2 = graft.DerivedSessions.withExtensions(s)
-      s2.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s2.conf.set("spark.sql.catalog.graft.root", acidDir)
+      val s2 = withCatalog(graft.GraftSession.withExtensions(s))
       val srcName = new Path(src.root).getName
       val lv = src.latestVersion.getOrElse(
         throw new IllegalStateException(s"cdf fixture at ${src.root} empty"))
@@ -405,24 +417,24 @@ object AcidQueries extends QueryPack {
 
   private def cdfServedTable(s: SparkSession, d: String): GraftTable = {
     val root = cdfServedFixtures.computeIfAbsent(d, { _ =>
-      import s.implicits._
+      // appends write no change files, so the seed reads the same with
+      // the knob on
+      val c = cloneWith(s, "spark.graft.acid.writeChangeData" -> "true")
+      import c.implicits._
       val key = java.lang.Long.toHexString(
         java.util.UUID.nameUUIDFromBytes(("cdfserved" + d).getBytes("UTF-8"))
           .getMostSignificantBits)
       val r = s"$acidDir/cdfserved_$key"
-      val t = new GraftTable(s, r, statsCol = Some("user_id"))
-      val ev = events(s, d)
+      val t = new GraftTable(c, r, statsCol = Some("user_id"))
+      val ev = events(c, d)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
       val seed = ev.withColumn("__rn", row_number().over(w))
         .filter($"__rn" === 1).drop("__rn")
       t.append(seed.repartitionByRange(8, $"user_id"))            // v1
-      s.conf.set("spark.graft.acid.writeChangeData", "true")
-      try {
-        t.update($"user_id" < 8L,
-          Map("value" -> ($"value" + 1000.0)))                    // v2: DV
-        t.delete($"user_id" >= 8L && $"user_id" < 12L)            // v3: DV
-      } finally s.conf.unset("spark.graft.acid.writeChangeData")
+      t.update($"user_id" < 8L,
+        Map("value" -> ($"value" + 1000.0)))                      // v2: DV
+      t.delete($"user_id" >= 8L && $"user_id" < 12L)              // v3: DV
       r
     })
     GraftTable.load(s, root)
@@ -444,31 +456,31 @@ object AcidQueries extends QueryPack {
 
   private def cdfMergeTable(s: SparkSession, d: String): GraftTable = {
     val root = cdfMergeFixtures.computeIfAbsent(d, { _ =>
-      import s.implicits._
+      // appends write no change files, so the seed reads the same with
+      // the knob on
+      val c = cloneWith(s, "spark.graft.acid.writeChangeData" -> "true")
+      import c.implicits._
       val key = java.lang.Long.toHexString(
         java.util.UUID.nameUUIDFromBytes(("cdfmerge" + d).getBytes("UTF-8"))
           .getMostSignificantBits)
       val r = s"$acidDir/cdfmerge_$key"
-      val t = new GraftTable(s, r, statsCol = Some("user_id"))
-      val ev = events(s, d)
+      val t = new GraftTable(c, r, statsCol = Some("user_id"))
+      val ev = events(c, d)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
       val seed = ev.withColumn("__rn", row_number().over(w))
         .filter($"__rn" === 1).drop("__rn")
       t.append(seed.repartitionByRange(8, $"user_id"))            // v1
-      s.conf.set("spark.graft.acid.writeChangeData", "true")
-      try {
-        // same-ts/higher-event_id rows win the merge for the bumped
-        // band; the synthetic users (key-shifted far past the corpus)
-        // are pure inserts
-        val bumped = t.snapshot().filter($"user_id" < 16L)
-          .withColumn("event_id", $"event_id" + 10000000L)
-          .withColumn("value", $"value" + 1000.0)
-        val inserts = t.snapshot().filter($"user_id" < 4L)
-          .withColumn("user_id", $"user_id" + 1000000L)
-        t.merge(bumped.unionByName(inserts),
-          Seq("user_id"), Seq($"ts".desc, $"event_id".desc))      // v2
-      } finally s.conf.unset("spark.graft.acid.writeChangeData")
+      // same-ts/higher-event_id rows win the merge for the bumped band;
+      // the synthetic users (key-shifted far past the corpus) are pure
+      // inserts
+      val bumped = t.snapshot().filter($"user_id" < 16L)
+        .withColumn("event_id", $"event_id" + 10000000L)
+        .withColumn("value", $"value" + 1000.0)
+      val inserts = t.snapshot().filter($"user_id" < 4L)
+        .withColumn("user_id", $"user_id" + 1000000L)
+      t.merge(bumped.unionByName(inserts),
+        Seq("user_id"), Seq($"ts".desc, $"event_id".desc))        // v2
       r
     })
     GraftTable.load(s, root)
@@ -720,26 +732,22 @@ object AcidQueries extends QueryPack {
 
   private def sidecarCpTable(s: SparkSession, d: String): GraftTable = {
     val root = sidecarCpFixtures.computeIfAbsent(d, { _ =>
-      import s.implicits._
+      val c = cloneWith(s,
+        "spark.graft.acid.parquetCheckpointMinFiles" -> "1",
+        "spark.graft.acid.checkpointShards" -> "4")
+      import c.implicits._
       val key = java.lang.Long.toHexString(
         java.util.UUID.nameUUIDFromBytes(("sidecarcp" + d).getBytes("UTF-8"))
           .getMostSignificantBits)
       val r = s"$acidDir/sidecarcp_$key"
-      s.conf.set("spark.graft.acid.parquetCheckpointMinFiles", "1")
-      s.conf.set("spark.graft.acid.checkpointShards", "4")
-      try {
-        val t = new GraftTable(s, r, statsCol = Some("event_id"),
-          checkpointInterval = 1)
-        val ev = events(s, d)
-        (0L to 2L).foreach(v => t.append(
-          ev.filter(pmod($"event_id", lit(3L)) === v)
-            .repartitionByRange(4, $"event_id")))               // v1-v3
-        t.delete(pmod($"event_id", lit(101L)) === 0L)           // v4: DV
-        t.vacuum(retain = 1)
-      } finally {
-        s.conf.unset("spark.graft.acid.parquetCheckpointMinFiles")
-        s.conf.unset("spark.graft.acid.checkpointShards")
-      }
+      val t = new GraftTable(c, r, statsCol = Some("event_id"),
+        checkpointInterval = 1)
+      val ev = events(c, d)
+      (0L to 2L).foreach(v => t.append(
+        ev.filter(pmod($"event_id", lit(3L)) === v)
+          .repartitionByRange(4, $"event_id")))                 // v1-v3
+      t.delete(pmod($"event_id", lit(101L)) === 0L)             // v4: DV
+      t.vacuum(retain = 1)
       r
     })
     GraftTable.load(s, root)
@@ -918,12 +926,10 @@ object AcidQueries extends QueryPack {
           .withColumn("event_type", lit("rescored"))
           .withColumn("value", $"value" * 2.0))
       // SQL twin: INSERT INTO ... REPLACE WHERE is parser-injected
-      // grammar, so it builds on the shared DERIVED session (same
-      // SparkContext, own extensions, caller confs copied); the table
-      // on disk reads back from any session
-      val s2 = graft.DerivedSessions.withExtensions(s)
-      s2.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s2.conf.set("spark.sql.catalog.graft.root", acidDir)
+      // grammar, so it builds on a catalog clone of the shared DERIVED
+      // session (same SparkContext, own extensions, caller confs
+      // copied); the table on disk reads back from any session
+      val s2 = withCatalog(graft.GraftSession.withExtensions(s))
       val t2 = new GraftTable(s2, sqlRoot, statsCol = Some("user_id"))
       (0L to 2L).foreach(r => t2.append(events(s2, d).filter(
         pmod(col("event_id"), lit(3L)) === r)))
@@ -951,17 +957,15 @@ object AcidQueries extends QueryPack {
   private def sqlAtomicMergeTables(s: SparkSession, d: String): (GraftTable, GraftTable) = {
     val (rRaw, rMir) = sqlAtomicMergeFixtures.computeIfAbsent(d, { _ =>
       // COMMIT ATOMIC is parser-injected grammar: the driver's session
-      // has no GraftExtensions, so the fixture builds on the shared
-      // DERIVED session (same SparkContext, own extensions, caller
-      // confs copied) — the tables on disk then read back from any
-      // session
-      val s2 = graft.DerivedSessions.withExtensions(s)
+      // has no GraftExtensions, so the fixture builds on a catalog
+      // clone of the shared DERIVED session (same SparkContext, own
+      // extensions, caller confs copied) — the tables on disk then read
+      // back from any session
+      val s2 = withCatalog(graft.GraftSession.withExtensions(s))
       import s2.implicits._
       val key = java.lang.Long.toHexString(
         java.util.UUID.nameUUIDFromBytes(("sqlam" + d).getBytes("UTF-8"))
           .getMostSignificantBits)
-      s2.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s2.conf.set("spark.sql.catalog.graft.root", acidDir)
       val rawRoot = s"$acidDir/amraw_$key"
       val mirRoot = s"$acidDir/ammir_$key"
       val raw = new GraftTable(s2, rawRoot)
@@ -1215,7 +1219,7 @@ object AcidQueries extends QueryPack {
     // the only divergent surface).
     "q_acid_sql_table_changes" -> { (s, d) =>
       val t = tables(s, d)._1
-      val s2 = graft.DerivedSessions.withExtensions(s)
+      val s2 = graft.GraftSession.withExtensions(s)
       val out = s2.sql(
         s"""SELECT _change, event_type, count(*) AS n,
            |  CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
@@ -1236,7 +1240,7 @@ object AcidQueries extends QueryPack {
     // aggregation step on the derived session is the diverging layer.
     "q_acid_tvf_rows" -> { (s, d) =>
       val t = tables(s, d)._1
-      val s2 = graft.DerivedSessions.withExtensions(s)
+      val s2 = graft.GraftSession.withExtensions(s)
       val out = s2.sql(
         s"""SELECT event_id, user_id, ts, event_type, value, _change
            |FROM table_changes('${t.root}', 1, 3)
@@ -1394,11 +1398,10 @@ object AcidQueries extends QueryPack {
     "q_acid_sql" -> { (s, d) =>
       import s.implicits._
       val at = tables(s, d)._2
-      s.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft.root", acidDir)
+      val c = withCatalog(s)
       val name = new Path(at.root).getName
       (1 to 3).map { v =>
-        s.sql(
+        c.sql(
           s"""SELECT CAST($v AS BIGINT) AS version, count(*) AS n_rows,
              |  CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
              |FROM graft.`$name` VERSION AS OF $v""".stripMargin)
@@ -1785,7 +1788,7 @@ object AcidQueries extends QueryPack {
     // the middle txn. Must hash-match the API gate's oracle exactly.
     "q_acid_sql_txn_read" -> { (s, d) =>
       val (raw, st, txnId) = multiTables(s, d)
-      val s2 = graft.DerivedSessions.withExtensions(s)
+      val s2 = graft.GraftSession.withExtensions(s)
       val out = s2.sql(
         s"""SELECT r.event_type, count(*) AS n_raw, max(t.n_stats) AS n_stats
            |FROM snapshot_at_txn('${raw.root}', '$txnId') r
@@ -1867,10 +1870,8 @@ object AcidQueries extends QueryPack {
     "q_acid_sql_agg" -> { (s, d) =>
       import s.implicits._
       val st = tables(s, d)._5
-      s.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft.root", acidDir)
       val name = new Path(st.root).getName
-      s.sql(s"""SELECT min(user_id) AS min_user, max(user_id) AS max_user,
+      withCatalog(s).sql(s"""SELECT min(user_id) AS min_user, max(user_id) AS max_user,
                |       count(*) AS n_rows FROM graft.`$name`""".stripMargin)
     },
 
@@ -1881,10 +1882,8 @@ object AcidQueries extends QueryPack {
     // LocalTableScan plan; this row pins the VALUES against the oracle).
     "q_acid_sql_ts_agg" -> { (s, d) =>
       val tt = tsWindowTable(s, d)
-      s.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft.root", acidDir)
       val name = new Path(tt.root).getName
-      s.sql(s"""SELECT min(ts) AS ts_lo, max(ts) AS ts_hi,
+      withCatalog(s).sql(s"""SELECT min(ts) AS ts_lo, max(ts) AS ts_hi,
                |       count(*) AS n_rows FROM graft.`$name`""".stripMargin)
     },
 
@@ -1937,10 +1936,8 @@ object AcidQueries extends QueryPack {
     "q_acid_sql_dv" -> { (s, d) =>
       import s.implicits._
       val t = dvUpdateTable(s, d)
-      s.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft.root", acidDir)
       val name = new Path(t.root).getName
-      s.sql(
+      withCatalog(s).sql(
         s"""SELECT user_id, count(*) AS n_rows,
            |  CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
            |FROM graft.`$name` WHERE user_id <= 60
@@ -1970,14 +1967,13 @@ object AcidQueries extends QueryPack {
     "q_acid_sql_dpp" -> { (s, d) =>
       import s.implicits._
       val st = tables(s, d)._5
-      s.conf.set("spark.sql.catalog.graft", "graft.acid.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft.root", acidDir)
+      val c = withCatalog(s)
       val name = new Path(st.root).getName
-      events(s, d).select($"user_id").distinct()
+      events(c, d).select($"user_id").distinct()
         .withColumn("cat",
           when($"user_id".between(10L, 30L), "hot").otherwise("cold"))
         .createOrReplaceTempView("graft_dpp_dim")
-      s.sql(
+      c.sql(
         s"""SELECT f.user_id, count(*) AS n_rows,
            |  CAST(sum(CAST(f.value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
            |FROM graft.`$name` f JOIN graft_dpp_dim d ON f.user_id = d.user_id

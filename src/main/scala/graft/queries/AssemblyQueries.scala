@@ -214,7 +214,7 @@ object AssemblyQueries extends QueryPack {
       import s.implicits._
       // NOT checkpointed (r18, measured): materializing the
       // corpus-linear (doc, term, tf) frame is steady-neutral at best
-      // (OptLab `textagg`: none 0.85–1.16 s vs cpTf 0.84–1.08 s, same
+      // (OPTIMIZATION_r18.md, `textagg`: none 0.85–1.16 s vs cpTf 0.84–1.08 s, same
       // JVM) — the block write costs what the recompute saves; contrast
       // q_text_pmi/q_text_entropy, whose VOCAB-SIZED aggregates
       // checkpoint for a measured win.
@@ -262,7 +262,7 @@ object AssemblyQueries extends QueryPack {
         .select($"doc_id", $"p.a".as("a"), $"p.b".as("b"))
       // NOT checkpointed (r18, measured): materializing the
       // corpus-linear bgTf (or vocab-sized uni here) was neutral to
-      // slightly NEGATIVE in the same-JVM A/B (OptLab `textagg`:
+      // slightly NEGATIVE in the same-JVM A/B (OPTIMIZATION_r18.md, `textagg`:
       // none 1.06–1.35 s vs cpBgTf 1.12–1.37 s vs cpBoth 1.17–1.33 s) —
       // kept as-is; see q_text_pmi for the shape where the checkpoint
       // does pay.
@@ -313,8 +313,8 @@ object AssemblyQueries extends QueryPack {
       // corpus-sized) feeds the ca/cb/n BROADCAST builds AND the main
       // filter: four consumers, each previously re-running the bigram
       // formation + count over the corpus. One materialization —
-      // measured cold 7.8 s -> 1.3 s, steady 0.80 -> 0.67 s (OptLab
-      // `textagg`), results identical.
+      // measured cold 7.8 s -> 1.3 s, steady 0.80 -> 0.67 s
+      // (OPTIMIZATION_r18.md, `textagg`), results identical.
       val c2 = bg.groupBy($"a", $"b").agg(count(lit(1)).as("c2"))
         .localCheckpoint()
       val ca = c2.groupBy($"a").agg(sum($"c2").as("ca"))

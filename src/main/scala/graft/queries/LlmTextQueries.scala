@@ -108,7 +108,7 @@ object LlmTextQueries extends QueryPack {
     * with DISTINCT content, not raw corpus size: a crawl at K× density
     * (duplicate clusters K× wider — the scale_gen shape) pays the same
     * near-dup cost, not K² per cluster. */
-  private[graft] def minhashNearDupsFrom(s: SparkSession,
+  private[queries] def minhashNearDupsFrom(s: SparkSession,
                                          base: DataFrame): DataFrame = {
     import s.implicits._
     graft.functions.VectorExprs.register(s)

@@ -584,7 +584,7 @@ object LlmVectorQueries extends QueryPack {
         // every checkpointed frame's consumers live under the one final
         // action — eager cuts cost one scheduled job each (12+ per run)
         // for nothing; lazy still truncates lineage and caches on first
-        // materialization. Measured (OptLab mmr): 2.1-3.1 s -> 1.6-1.8 s
+        // materialization. Measured (OPTIMIZATION_r17.md, mmr): 2.1-3.1 s -> 1.6-1.8 s
         // steady, identical picks.
         .localCheckpoint(eager = false) // shortlist feeds pairs + every greedy round
       val withV = sl.join(corpus.select($"vec_id".as("b_id"), $"v", $"nrm"),

@@ -246,14 +246,15 @@ object RelationalQueries extends QueryPack {
     // lets the RowNumberTopKRewrite optimizer rule swap the whole
     // Window+Filter for the bounded-heap TopKPerKeyExec (TopKRewriteSpec
     // pins the plan). The oracle runs the ranking-window SQL, proving
-    // the rewrite preserves semantics on real data.
+    // the rewrite preserves semantics on real data. The rule lives on a
+    // clone of the caller's session, so no later query plans through it.
     "q_topk_rewrite" -> { (s, d) =>
-      import s.implicits._
+      val r = graft.plans.TopKPerKey.rewriting(s)
+      import r.implicits._
       import org.apache.spark.sql.expressions.Window
-      graft.plans.TopKPerKey.installRewrite(s)
       val w = Window.partitionBy($"o_custkey")
         .orderBy($"o_totalprice".desc, $"o_orderkey")
-      t(s, d, "orders")
+      t(r, d, "orders")
         .withColumn("rk", row_number().over(w))
         .filter($"rk" <= 3)
         .select($"o_custkey", $"o_orderkey", $"o_totalprice")

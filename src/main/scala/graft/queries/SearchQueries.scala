@@ -91,7 +91,7 @@ object SearchQueries extends QueryPack {
     // stage — under a lazy checkpoint those run as concurrent jobs that
     // each re-materialize the un-built checkpoint RDD (the driver log's
     // "Block rdd_* already exists" signature; measured cold 15.3 s vs
-    // 2.7 s eager, OptLab `search`). Eager serializes: one job builds
+    // 2.7 s eager, OPTIMIZATION_r18.md, `search`). Eager serializes: one job builds
     // the blocks, every consumer reads them.
     val tf = docs
       .select($"doc_id", explode(split($"text", " ")).as("term"))
@@ -113,7 +113,7 @@ object SearchQueries extends QueryPack {
     // so the whole tf->w->vectorize pipeline used to run once per
     // consumer. One eager checkpoint (doc-count rows of vocab-length
     // arrays — corpus-linear, narrow) halves that: steady 1.7 s -> 1.4 s
-    // (OptLab `search`, same JVM), results bit-identical.
+    // (OPTIMIZATION_r18.md, `search`, same JVM), results bit-identical.
     val vecs = w.join(broadcast(tids), "term")
       .groupBy($"doc_id")
       .agg(map_from_entries(collect_list(struct($"tid", $"w6"))).as("m"))

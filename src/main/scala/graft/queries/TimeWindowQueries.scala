@@ -118,21 +118,14 @@ object TimeWindowQueries extends QueryPack {
     // and equals the plain batch groupBy — the oracle.
     "q_stream_map_state" -> { (s, d) =>
       import s.implicits._
-      val prev = s.conf.getOption(TrackStateOp.rocksdbConf._1)
-      s.conf.set(TrackStateOp.rocksdbConf._1, TrackStateOp.rocksdbConf._2)
-      try {
-        val ev = TrackStateOp.eventsStream(s, d)
-          .select($"user_id", $"eventType".as("event_type"))
-          .as[graft.streaming.TypeEv]
-        val out = graft.streaming.MapStateCounts.typeCounts(ev)
-        runToMemory(out.toDF(), "update")
-          .groupBy($"user_id", $"event_type")
-          .agg(asLong(max($"n")).as("n"))
-          .orderBy($"user_id", $"event_type")
-      } finally prev match {
-        case Some(v) => s.conf.set(TrackStateOp.rocksdbConf._1, v)
-        case None    => s.conf.unset(TrackStateOp.rocksdbConf._1)
-      }
+      val ev = TrackStateOp.eventsStream(s, d)
+        .select($"user_id", $"eventType".as("event_type"))
+        .as[graft.streaming.TypeEv]
+      val out = graft.streaming.MapStateCounts.typeCounts(ev)
+      runToMemory(out.toDF(), "update")
+        .groupBy($"user_id", $"event_type")
+        .agg(asLong(max($"n")).as("n"))
+        .orderBy($"user_id", $"event_type")
     },
 
     // ---- per-key LIST STATE rolling buffer (transformWithState) ----
@@ -144,26 +137,19 @@ object TimeWindowQueries extends QueryPack {
     // emission equals the batch top-10 window query — the oracle.
     "q_stream_list_state" -> { (s, d) =>
       import s.implicits._
-      val prev = s.conf.getOption(TrackStateOp.rocksdbConf._1)
-      s.conf.set(TrackStateOp.rocksdbConf._1, TrackStateOp.rocksdbConf._2)
-      try {
-        val ev = TrackStateOp.eventsStream(s, d)
-          .select($"user_id", $"tsMicros".as("tsUs"), $"event_id",
-            $"eventType".as("event_type"))
-          .as[graft.streaming.RecentEv]
-        val out = graft.streaming.RecentEventsList.recent(ev)
-        val snap = runToMemory(out.toDF(), "update")
-        snap
-          .withColumn("mx", max($"seen").over(
-            org.apache.spark.sql.expressions.Window.partitionBy($"user_id")))
-          .filter($"seen" === $"mx")
-          .select($"user_id", timestamp_micros($"tsUs").as("ts"),
-            $"event_id", $"event_type")
-          .orderBy($"user_id", $"ts".desc, $"event_id".desc)
-      } finally prev match {
-        case Some(v) => s.conf.set(TrackStateOp.rocksdbConf._1, v)
-        case None    => s.conf.unset(TrackStateOp.rocksdbConf._1)
-      }
+      val ev = TrackStateOp.eventsStream(s, d)
+        .select($"user_id", $"tsMicros".as("tsUs"), $"event_id",
+          $"eventType".as("event_type"))
+        .as[graft.streaming.RecentEv]
+      val out = graft.streaming.RecentEventsList.recent(ev)
+      val snap = runToMemory(out.toDF(), "update")
+      snap
+        .withColumn("mx", max($"seen").over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"user_id")))
+        .filter($"seen" === $"mx")
+        .select($"user_id", timestamp_micros($"tsUs").as("ts"),
+          $"event_id", $"event_type")
+        .orderBy($"user_id", $"ts".desc, $"event_id".desc)
     },
 
     // ---- WARM START: initial state bootstrap (transformWithState) ----
@@ -178,46 +164,39 @@ object TimeWindowQueries extends QueryPack {
     // Oracle: the same batch top-10 window query over ALL events.
     "q_stream_warm_start" -> { (s, d) =>
       import s.implicits._
-      val prev = s.conf.getOption(TrackStateOp.rocksdbConf._1)
-      s.conf.set(TrackStateOp.rocksdbConf._1, TrackStateOp.rocksdbConf._2)
-      try {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
-        val ranked = Tables.events(s, d)
-          .select($"user_id", unix_micros($"ts").as("tsUs"),
-            $"event_id", $"event_type", $"ts")
-          .withColumn("rk", row_number().over(w))
-          .withColumn("half", (count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy($"user_id"))
-            / 2).cast("int"))
-        // snapshot: each user's newest floor(n/2) events, pre-trimmed to
-        // the buffer cap (a snapshot holds at most cap rows per key)
-        val snap = ranked.filter($"rk" <= least($"half", lit(10)))
-          .groupBy($"user_id")
-          .agg(collect_list(struct($"user_id", $"tsUs", $"event_id",
-            $"event_type")).as("events"))
-          .as[graft.streaming.RecentSnapshot]
-        // backfill stream: everything NOT in the snapshot half, admitted
-        // via a stream-static anti join on event_id
-        val initIds = ranked.filter($"rk" <= $"half").select($"event_id")
-        val streamEv = TrackStateOp.eventsStream(s, d)
-          .select($"user_id", $"tsMicros".as("tsUs"), $"event_id",
-            $"eventType".as("event_type"))
-          .join(initIds, Seq("event_id"), "left_anti")
-          .as[graft.streaming.RecentEv]
-        val out = graft.streaming.RecentEventsList.warmStart(streamEv, snap)
-        val sink = runToMemory(out.toDF(), "update")
-        sink
-          .withColumn("mx", max($"seen").over(
-            org.apache.spark.sql.expressions.Window.partitionBy($"user_id")))
-          .filter($"seen" === $"mx")
-          .select($"user_id", timestamp_micros($"tsUs").as("ts"),
-            $"event_id", $"event_type")
-          .orderBy($"user_id", $"ts".desc, $"event_id".desc)
-      } finally prev match {
-        case Some(v) => s.conf.set(TrackStateOp.rocksdbConf._1, v)
-        case None    => s.conf.unset(TrackStateOp.rocksdbConf._1)
-      }
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
+      val ranked = Tables.events(s, d)
+        .select($"user_id", unix_micros($"ts").as("tsUs"),
+          $"event_id", $"event_type", $"ts")
+        .withColumn("rk", row_number().over(w))
+        .withColumn("half", (count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"user_id"))
+          / 2).cast("int"))
+      // snapshot: each user's newest floor(n/2) events, pre-trimmed to
+      // the buffer cap (a snapshot holds at most cap rows per key)
+      val snap = ranked.filter($"rk" <= least($"half", lit(10)))
+        .groupBy($"user_id")
+        .agg(collect_list(struct($"user_id", $"tsUs", $"event_id",
+          $"event_type")).as("events"))
+        .as[graft.streaming.RecentSnapshot]
+      // backfill stream: everything NOT in the snapshot half, admitted
+      // via a stream-static anti join on event_id
+      val initIds = ranked.filter($"rk" <= $"half").select($"event_id")
+      val streamEv = TrackStateOp.eventsStream(s, d)
+        .select($"user_id", $"tsMicros".as("tsUs"), $"event_id",
+          $"eventType".as("event_type"))
+        .join(initIds, Seq("event_id"), "left_anti")
+        .as[graft.streaming.RecentEv]
+      val out = graft.streaming.RecentEventsList.warmStart(streamEv, snap)
+      val sink = runToMemory(out.toDF(), "update")
+      sink
+        .withColumn("mx", max($"seen").over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"user_id")))
+        .filter($"seen" === $"mx")
+        .select($"user_id", timestamp_micros($"tsUs").as("ts"),
+          $"event_id", $"event_type")
+        .orderBy($"user_id", $"ts".desc, $"event_id".desc)
     },
 
     // ---- gap sessions via transformWithState EVENT-TIME TIMERS ----
@@ -230,27 +209,20 @@ object TimeWindowQueries extends QueryPack {
     // ms-truncated timer-vs-watermark comparison.
     "q_stream_session_timers" -> { (s, d) =>
       import s.implicits._
-      val prev = s.conf.getOption(TrackStateOp.rocksdbConf._1)
-      s.conf.set(TrackStateOp.rocksdbConf._1, TrackStateOp.rocksdbConf._2)
-      try {
-        val ev = TrackStateOp.eventsStream(s, d)
-          .select($"user_id", $"tsMicros".as("tsUs"),
-            ($"value".cast("decimal(12,2)") * 100).cast("long").as("cents"),
-            $"event_id",
-            timestamp_micros($"tsMicros").as("ts"))
-          .withWatermark("ts", "10 minutes")
-          .as[graft.streaming.SEv]
-        val sessions = graft.streaming.SessionTimers.sessions(ev, 3600000000L)
-        runToMemory(sessions.toDF(), "append")
-          .select($"user_id",
-            timestamp_micros($"session_start_us").as("session_start"),
-            timestamp_micros($"session_end_us").as("session_end"),
-            $"n_events", ($"sum_cents" / lit(100.0)).as("sum_value"))
-          .orderBy($"user_id", $"session_start")
-      } finally prev match {
-        case Some(v) => s.conf.set(TrackStateOp.rocksdbConf._1, v)
-        case None    => s.conf.unset(TrackStateOp.rocksdbConf._1)
-      }
+      val ev = TrackStateOp.eventsStream(s, d)
+        .select($"user_id", $"tsMicros".as("tsUs"),
+          ($"value".cast("decimal(12,2)") * 100).cast("long").as("cents"),
+          $"event_id",
+          timestamp_micros($"tsMicros").as("ts"))
+        .withWatermark("ts", "10 minutes")
+        .as[graft.streaming.SEv]
+      val sessions = graft.streaming.SessionTimers.sessions(ev, 3600000000L)
+      runToMemory(sessions.toDF(), "append")
+        .select($"user_id",
+          timestamp_micros($"session_start_us").as("session_start"),
+          timestamp_micros($"session_end_us").as("session_end"),
+          $"n_events", ($"sum_cents" / lit(100.0)).as("sum_value"))
+        .orderBy($"user_id", $"session_start")
     },
 
     // ---- REAL streaming dedup with watermark ----

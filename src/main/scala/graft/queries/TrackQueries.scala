@@ -37,18 +37,11 @@ object TrackQueries extends QueryPack {
     },
 
     // ---- same pipeline on Spark 4's transformWithState (RocksDB state) ----
+    // (runToMemory starts it on RocksDB: transformWithState needs it)
     "q_stream_track_tws" -> { (s, d) =>
-      val prev = s.conf.getOption(graft.tracks.TrackStateOp.rocksdbConf._1)
-      s.conf.set(graft.tracks.TrackStateOp.rocksdbConf._1,
-                 graft.tracks.TrackStateOp.rocksdbConf._2)
-      try {
-        val snaps = graft.tracks.TrackStateTws.trackSnapshots(TrackStateOp.eventsStream(s, d))
-        TrackStateOp.latestSnapshot(runToMemory(snaps.toDF(), "update"))
-          .orderBy(col("user_id"), col("ts"))
-      } finally prev match {
-        case Some(v) => s.conf.set(graft.tracks.TrackStateOp.rocksdbConf._1, v)
-        case None    => s.conf.unset(graft.tracks.TrackStateOp.rocksdbConf._1)
-      }
+      val snaps = graft.tracks.TrackStateTws.trackSnapshots(TrackStateOp.eventsStream(s, d))
+      TrackStateOp.latestSnapshot(runToMemory(snaps.toDF(), "update"))
+        .orderBy(col("user_id"), col("ts"))
     },
 
     // ---- same semantics as a typed Aggregator UDAF + custom generator ----

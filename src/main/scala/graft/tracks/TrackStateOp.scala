@@ -26,11 +26,11 @@ case class SnapRow(user_id: Long, tsMicros: Long, event_id: Long,
   *
   * Scale stance: state is a flat Vector of <= cap primitive-ish rows per
   * key (no object graphs), keyed state partitions by hash(user_id) across
-  * the cluster, and the RocksDB state-store provider (configured by
-  * callers via `rocksdbConf`) keeps large key spaces off-heap — the 100 TB
-  * design the reference's Java-serialized DStream checkpoints could not
-  * reach (its README-documented restart crash is inverted in our
-  * TrackRestartSpec).
+  * the cluster, and the RocksDB state-store provider (`rocksdbConf`) keeps
+  * large key spaces off-heap — the 100 TB design the reference's
+  * Java-serialized DStream checkpoints could not reach (its
+  * README-documented restart crash is inverted in TrackStreamingSpec
+  * "restart with two stateful queries survives").
   *
   * NoTimeout mirrors the reference (its "30 minute" comment was never
   * implemented — K4); pass `ttl` to enable event-time-ish expiry for
@@ -111,9 +111,11 @@ object TrackStateOp {
   def eventsStream(spark: SparkSession, dir: String): Dataset[EventRaw] = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     import spark.implicits._
+    // Written to the caller's session on purpose, as in graft.Tables.table:
+    // UTC and nanosAsLong are the oracle contract, whatever session the
+    // caller built. UTC also makes the NTZ->instant reinterpretation below
+    // exact.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // UTC is the oracle contract (see graft.Tables.table) and also makes the
-    // NTZ->instant reinterpretation below exact.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val schema = schemaCache.computeIfAbsent(dir,
       d => spark.read.parquet(s"$d/events.parquet").schema)

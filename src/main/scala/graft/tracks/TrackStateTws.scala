@@ -12,7 +12,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * so buffers, timers, and TTLs scale independently.
   *
   * transformWithState REQUIRES the RocksDB state-store provider
-  * (TrackStateOp.rocksdbConf) on the session.
+  * (TrackStateOp.rocksdbConf). `runToMemory` picks it on the stream's own
+  * session clone when the plan holds a transformWithState node; a caller
+  * starting the stream itself sets it on that stream's session.
   */
 class TrackProcessor(cap: Int) extends StatefulProcessor[Long, EventRaw, SnapRow] {
   @transient private var track: ValueState[TrackState] = _

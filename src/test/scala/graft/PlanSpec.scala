@@ -392,10 +392,17 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.gstat", "graft.acid.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gstat.root", wh)
     val fact = new acid.GraftTable(spark, s"$wh/fact", statsCol = Some("k"))
-    // three clustered commits -> three disjoint key bands of files
-    (0 to 2).foreach(b => fact.append(
-      (b * 10000 until (b + 1) * 10000).map(i => (i.toLong, i % 97))
-        .toDF("k", "dim_id").repartitionByRange(2, $"k")))
+    // three clustered commits -> three disjoint key bands of files, each
+    // band split into two files at the fixed key b*10000 + 2500, so both
+    // band-0 files overlap the pruned range below whatever ran earlier in
+    // this JVM (a sampled repartitionByRange split depends on the RDD
+    // counter, and a split at 5000 would leave one band-0 file in range)
+    (0 to 2).foreach { b =>
+      val (lo, hi) = (b * 10000 until (b + 1) * 10000)
+        .map(i => (i.toLong, i % 97)).partition(_._1 < b * 10000 + 2500)
+      fact.append(lo.toDF("k", "dim_id").coalesce(1)
+        .union(hi.toDF("k", "dim_id").coalesce(1)))
+    }
     val dim = new acid.GraftTable(spark, s"$wh/dim")
     dim.append((0 until 97).map(i => (i, s"name$i")).toDF("id", "name"))
 

@@ -9,17 +9,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // keep the warehouse + derby metastore out of the repo working dir
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    System.setProperty("derby.system.home", wh)
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  lazy val session: SparkSession = GraftSession.create(cores = 4)
 }

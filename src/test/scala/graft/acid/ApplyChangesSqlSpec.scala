@@ -14,7 +14,7 @@ class ApplyChangesSqlSpec extends SparkSpec {
 
   private lazy val warehouse = graft.TempDirs.create("graft_applysql")
   private lazy val s2 = {
-    val s = graft.DerivedSessions.withExtensions(spark)
+    val s = graft.GraftSession.withExtensions(spark)
     s.conf.set("spark.sql.catalog.gapply", "graft.acid.GraftCatalog")
     s.conf.set("spark.sql.catalog.gapply.root", warehouse)
     s

@@ -57,7 +57,7 @@ class CdcTimestampSpec extends SparkSpec {
   test("the table_changes TVFs accept string timestamp bounds") {
     val t = threeCommitTable("graft_cdcts_tvf")
     val ts = t.history().map(c => c.version -> c.commitMs).toMap
-    val s2 = graft.DerivedSessions.withExtensions(spark)
+    val s2 = graft.GraftSession.withExtensions(spark)
     // epoch-millis string form, attributed TVF: (1, 3] as wall-clock
     val attributed = s2.sql(
       s"""SELECT _commit_version, k, _change
@@ -83,7 +83,7 @@ class CdcTimestampSpec extends SparkSpec {
 
   test("DESCRIBE CHANGES accepts timestamp bounds (dual with versions)") {
     val wh = graft.TempDirs.create("graft_cdcts_wh")
-    val s2 = graft.DerivedSessions.withExtensions(spark)
+    val s2 = graft.GraftSession.withExtensions(spark)
     s2.conf.set("spark.sql.catalog.gcdcts", "graft.acid.GraftCatalog")
     s2.conf.set("spark.sql.catalog.gcdcts.root", wh)
     val t = new GraftTable(spark, s"$wh/ev", statsCol = Some("k"))

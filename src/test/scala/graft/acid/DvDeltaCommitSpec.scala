@@ -149,7 +149,7 @@ class DvDeltaCommitSpec extends SparkSpec {
       assert(GraftTable.load(spark, t.root).snapshot().count() == 398L)
       // the SQL face drives the same op (derived session owns the
       // parser); a DV-free table no-ops metadata-only
-      val s2 = graft.DerivedSessions.withExtensions(spark)
+      val s2 = graft.GraftSession.withExtensions(spark)
       val wh = graft.TempDirs.create("graft_reorgdvs_wh")
       s2.conf.set("spark.sql.catalog.grdvs", "graft.acid.GraftCatalog")
       s2.conf.set("spark.sql.catalog.grdvs.root", wh)

@@ -170,7 +170,7 @@ class MergeEvolutionSpec extends SparkSpec {
     // session's default parser exercises the inference fallback, which
     // the explicit-assignment test above pins).
     val warehouse = graft.TempDirs.create("graft_mev_ident_wh")
-    val s2 = graft.DerivedSessions.withExtensions(spark)
+    val s2 = graft.GraftSession.withExtensions(spark)
     s2.conf.set("spark.sql.catalog.gmevi", "graft.acid.GraftCatalog")
     s2.conf.set("spark.sql.catalog.gmevi.root", warehouse)
     val t = new GraftTable(spark, s"$warehouse/mevi")

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 /** The RowNumberTopKRewrite optimizer rule: the window idiom plans
   * through TopKPerKeyExec when (and only when) the rewrite guards hold. */
 class TopKRewriteSpec extends SparkSpec {
-  import spark.implicits._
-
-  TopKPerKey.installRewrite(spark)
+  // a clone carries the rewrite: the shared session, which later suites
+  // plan on, never gets it
+  private val rewriting = TopKPerKey.rewriting(spark)
+  import rewriting.implicits._
 
   private val data = {
     val rows = for (i <- 0L until 2000L) yield

@@ -9,18 +9,15 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val n = args.head.toInt
+    val named = SparkEntry.lookup(args.tail.toSeq)
     val spark = GraftSession.create()
-    args.tail.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"$name: no such query")
-        case Some(fn) =>
-          val times = (1 to n).map { _ =>
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"$name%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
+    named.foreach { case (name, fn) =>
+      val times = (1 to n).map { _ =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
       }
+      println(f"$name%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
     }
     spark.stop()
   }

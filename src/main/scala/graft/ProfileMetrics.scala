@@ -33,6 +33,7 @@ object ProfileMetrics {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val named = SparkEntry.lookup(args.toSeq)
     val spark = GraftSession.create()
     val acc = new Acc
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -56,25 +57,21 @@ object ProfileMetrics {
     })
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
     println(f"${"query"}%-30s wall_s jobs stg tasks tasktime_s gc_s fetchw_s shr_MB shw_MB spill_MB in_MB")
-    args.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"$name: no such query")
-        case Some(fn) =>
-          // warm pass: fixtures + JIT outside the measured window
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable => println(s"$name warm failed: ${e.getMessage}") }
-          acc.reset()
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val wall = (System.nanoTime() - t0) / 1e9
-            // listener bus is async; let the tail drain before reading
-            Thread.sleep(300)
-            println(f"$name%-30s $wall%6.2f ${acc.jobs.get}%4d ${acc.stages.get}%3d ${acc.tasks.get}%5d " +
-              f"${acc.taskTimeMs.get / 1e3}%9.2f ${acc.gcMs.get / 1e3}%4.2f ${acc.fetchWaitMs.get / 1e3}%7.2f " +
-              f"${mb(acc.shufReadB.get)}%6s ${mb(acc.shufWriteB.get)}%6s ${mb(acc.spillB.get)}%8s ${mb(acc.inputB.get)}%5s")
-          } catch { case e: Throwable => println(s"$name failed: ${e.getMessage}") }
-      }
+    named.foreach { case (name, fn) =>
+      // warm pass: fixtures + JIT outside the measured window
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => println(s"$name warm failed: ${e.getMessage}") }
+      acc.reset()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0) / 1e9
+        // listener bus is async; let the tail drain before reading
+        Thread.sleep(300)
+        println(f"$name%-30s $wall%6.2f ${acc.jobs.get}%4d ${acc.stages.get}%3d ${acc.tasks.get}%5d " +
+          f"${acc.taskTimeMs.get / 1e3}%9.2f ${acc.gcMs.get / 1e3}%4.2f ${acc.fetchWaitMs.get / 1e3}%7.2f " +
+          f"${mb(acc.shufReadB.get)}%6s ${mb(acc.shufWriteB.get)}%6s ${mb(acc.spillB.get)}%8s ${mb(acc.inputB.get)}%5s")
+      } catch { case e: Throwable => println(s"$name failed: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -62,6 +62,14 @@ object SparkEntry {
     all.toMap
   }
 
+  /** The named queries, in the given order. An unknown name throws, so a
+    * mistyped name never silently shrinks a tool's run. */
+  def lookup(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"no such query: ${unknown.mkString(", ")}")
+    names.map(n => n -> queries(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   val oracleSql: Map[String, String] = {

@@ -7,15 +7,15 @@ object Verify {
     // args: <sfDir> <outDir> [queryName ...] — the optional tail restricts
     // the dump (local iteration); the driver always passes exactly two.
     val (Array(sfDir, outDir), only) = args.splitAt(2)
+    val selected =
+      if (only.isEmpty) SparkEntry.queries.toSeq else SparkEntry.lookup(only.toSeq)
     val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // Failure-loud: collect per-query errors and dump them as an artifact
     // (verify_errors.json) so a vanished CORRECTNESS row is impossible to
     // miss — in r5, 17 silently-skipped queries shrank the gate unnoticed.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

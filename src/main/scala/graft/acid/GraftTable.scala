@@ -82,7 +82,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     extends org.apache.spark.internal.Logging {
 
   private[acid] def partitionColName: Option[String] = partitionCol
-  import GraftTable.{BloomBits, BloomK, FileEntry}
+  import GraftTable.{BloomBits, BloomK, FileEntry, Restate, Staged}
 
   /** A write violated a table constraint; nothing was committed. */
   final class ConstraintViolationException(msg: String)
@@ -216,20 +216,16 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * return WRONG DATA (resurrected rows), not degraded performance.
     * Enforced per log artifact (each manifest/checkpoint gates its own
     * body), so a resolution chain is checked exactly where it parses. */
-  private def checkRequiredFeatures(ls: List[String], what: String): Unit =
-    ls.headOption.filter(_.startsWith("#")).foreach { h =>
-      h.drop(1).trim.split("\\s+").foreach(_.split("=", 2) match {
-        case Array("require", vals) =>
-          val unknown = vals.split(',').filter(_.nonEmpty)
-            .filterNot(GraftTable.SupportedFeatures)
-          if (unknown.nonEmpty) throw new IllegalStateException(
-            s"$what at $root requires table feature(s) " +
-              s"${unknown.mkString(", ")} this reader does not support " +
-              s"(supported: ${GraftTable.SupportedFeatures.toSeq.sorted
-                .mkString(", ")}); upgrade the engine to read this table")
-        case _ => ()
-      })
-    }
+  private def checkRequiredFeatures(ls: List[String], what: String): Unit = {
+    val unknown = headerKv(ls.headOption).get("require").toSeq
+      .flatMap(_.split(',')).filter(_.nonEmpty)
+      .filterNot(GraftTable.SupportedFeatures)
+    if (unknown.nonEmpty) throw new IllegalStateException(
+      s"$what at $root requires table feature(s) " +
+        s"${unknown.mkString(", ")} this reader does not support " +
+        s"(supported: ${GraftTable.SupportedFeatures.toSeq.sorted
+          .mkString(", ")}); upgrade the engine to read this table")
+  }
 
   /** The gated features `files`' manifest lines use — what the commit
     * header's `require=` token must name. */
@@ -280,18 +276,17 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   private def bloomSidecarPath(v: Long) = new Path(logDir, f"v$v%020d.blooms")
   private def dvSidecarPath(v: Long) = new Path(logDir, f"v$v%020d.dvs")
   private def ndvSidecarPath(v: Long) = new Path(logDir, f"v$v%020d.nvs")
-  // PARQUET checkpoint twin: a directory of part files (distributed
+  // PARQUET checkpoint: shard directories of part files (distributed
   // write AND read) plus a tiny text `.pcp` meta whose single atomic
   // write is the completeness marker — Spark's job-commit protocol
   // leaves no half-visible state a reader could trust without it
-  private def pcpDirPath(v: Long) = new Path(logDir, f"v$v%020d.checkpoint.parquet")
   private def pcpMetaPath(v: Long) = new Path(logDir, f"v$v%020d.pcp")
-  // SIDECAR checkpoint shards live under uuid-unique roots, shared
-  // across checkpoints (an incremental write re-references the prior
-  // checkpoint's untouched shard dirs verbatim)
+  // the shards live under uuid-unique roots, shared across checkpoints
+  // (an extending write re-references the prior checkpoint's untouched
+  // shard dirs verbatim)
   private def sidecarsRoot = new Path(logDir, "sidecars")
 
-  /** Shard refs of version `v`'s SIDECAR-form parquet checkpoint,
+  /** Shard refs of version `v`'s parquet checkpoint,
     * parsed from its `.pcp` meta (`s\t<shard>\t<relpath>` lines), plus
     * a well-formed flag: false = a complete-but-corrupted meta (an
     * `s\t` line of the wrong arity or a non-numeric shard). The parse
@@ -312,47 +307,39 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     }
 
   /** [[pcpShardRefsRaw]] validated: None = corrupted refs (damaged
-    * checkpoint), Some(Nil) = no shard lines (classic form, or an
-    * empty sidecar write). */
+    * checkpoint), Some(Nil) = no shard lines (an empty checkpoint). */
   private def pcpShardRefs(v: Long): Option[Seq[(Int, String)]] =
     pcpShardRefsRaw(v) match {
       case (refs, true) => Some(refs)
       case _            => None
     }
 
+  /** The `key=value` fields of a `# ...` header line (empty when the
+    * line is absent or not a header). */
+  private def headerKv(line: Option[String]): Map[String, String] =
+    line.filter(_.startsWith("#")).map { h =>
+      h.drop(1).trim.split("\\s+").flatMap(_.split("=", 2) match {
+        case Array(k, value) => Some(k -> value)
+        case _               => None
+      }).toMap
+    }.getOrElse(Map.empty)
+
   /** Parsed `# key=value` header of version `v`'s `.pcp` meta. */
   private def pcpMetaKv(v: Long): Map[String, String] =
-    (if (fs.exists(pcpMetaPath(v))) readLines(pcpMetaPath(v)).getOrElse(Nil)
-     else Nil).headOption
-      .filter(_.startsWith("#")).map { h =>
-        h.drop(1).trim.split("\\s+").flatMap(_.split("=", 2) match {
-          case Array(k, value) => Some(k -> value)
-          case _               => None
-        }).toMap
-      }.getOrElse(Map.empty)
+    headerKv(if (fs.exists(pcpMetaPath(v)))
+      readLines(pcpMetaPath(v)).flatMap(_.headOption) else None)
 
-  /** Data paths behind version `v`'s parquet checkpoint — the classic
-    * part directory, or the sidecar shard dirs (each possibly reused
-    * from an earlier checkpoint's write). Some(Nil) = a legitimate
-    * EMPTY sidecar checkpoint (nf=0 writes no shard lines — a
+  /** Data paths behind version `v`'s parquet checkpoint — its shard dirs,
+    * each possibly reused from an earlier checkpoint's write. Some(Nil) =
+    * a legitimate EMPTY checkpoint (nf=0 writes no shard lines — a
     * delete-all table still checkpoints); None = damaged (corrupted
-    * refs, a missing shard dir, or a shardless sidecar meta claiming
-    * nf>0), treated exactly like the nf-mismatch case
-    * (warn-and-fall-back to the manifest chain), never a thrown read
-    * of a path that is not there. The `ns=` header key distinguishes
-    * the sidecar form — a shardless meta WITHOUT it is the classic
-    * single-directory form. */
+    * refs, a missing shard dir, or no shard lines under nf>0), treated
+    * exactly like the nf-mismatch case (warn-and-fall-back to the
+    * manifest chain), never a thrown read of a path that is not there. */
   private def pcpDataPaths(v: Long): Option[Seq[Path]] =
-    pcpShardRefs(v).flatMap { refs =>
-      val shards = refs.map { case (_, rel) => new Path(logDir, rel) }
-      if (refs.isEmpty) {
-        if (pcpMetaKv(v).contains("ns"))
-          if (pcpMetaNf(v).contains(0L)) Some(Nil) else None
-        else Some(Seq(pcpDirPath(v)))
-      }
-      else if (shards.forall(fs.exists)) Some(shards)
-      else None
-    }
+    pcpShardRefs(v).map(_.map { case (_, rel) => new Path(logDir, rel) })
+      .filter(ps => if (ps.isEmpty) pcpMetaNf(v).contains(0L)
+                    else ps.forall(fs.exists))
 
   /** Active-file count past which [[writeCheckpoint]] switches from the
     * text checkpoint to the parquet (columnar, distributed) form. The
@@ -479,22 +466,23 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * iff the meta is complete (terminator marker present) and every
     * required feature is one this reader serves. The feature gate stays
     * LOUD (an old reader must refuse a post-vacuum table it cannot
-    * parse, never shrink it); a torn meta is simply "no checkpoint". */
+    * parse, never shrink it); a torn meta is simply "no checkpoint". A
+    * meta without `ns=` is the retired single-directory form, refused:
+    * vacuum may already have trimmed the chain a fallback would need. */
   private def pcpMetaNf(v: Long): Option[Long] = {
     val meta = readLines(pcpMetaPath(v)).getOrElse(Nil)
     if (!meta.lastOption.contains(CommitMarker)) None // crash mid-write
     else {
       checkRequiredFeatures(meta, s"checkpoint v$v (parquet)")
-      meta.headOption.toSeq.flatMap(_.drop(1).trim.split("\\s+"))
-        .flatMap(_.split("=", 2) match {
-          case Array("nf", n) => n.toLongOption
-          case _              => None
-        }).headOption
+      val kv = headerKv(meta.headOption)
+      if (!kv.contains("ns")) throw retiredFormat(
+        s"parquet checkpoint v$v", "has no ns= shard count")
+      kv.get("nf").flatMap(_.toLongOption)
     }
   }
 
   /** Resolve a PARQUET checkpoint: a distributed columnar scan of the
-    * part files — at ~10⁶ entries the parse runs across the cluster
+    * shard dirs' part files — at ~10⁶ entries the parse runs across the cluster
     * instead of single-threaded on the driver (the cold-start
     * bottleneck the text form hits), and the collect is the same
     * bounded file-METADATA list every resolution materializes. The
@@ -511,11 +499,10 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         case Some(ps) => ps
         case None =>
           logWarning(s"parquet checkpoint v$v at $root is damaged: a " +
-            "sidecar shard dir is missing; falling back to the manifest " +
-            "chain")
+            "shard dir is missing; falling back to the manifest chain")
           return None
       }
-      // Nil = a valid EMPTY sidecar checkpoint (nf=0): zero entries,
+      // Nil = a valid EMPTY checkpoint (nf=0): zero entries,
       // no parquet scan of a nonexistent path
       val rows =
         if (paths.isEmpty) Array.empty[GraftTable.CpRow]
@@ -537,9 +524,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * sketches or blooms (ParquetCheckpointSpec pins the pruned
     * ReadSchema). Validates through the same meta gate as full
     * resolution, so a consumer can never serve from an incomplete or
-    * feature-ungated checkpoint; the part directory itself appears
-    * atomically (temp-dir + rename in [[writeParquetCheckpoint]]), so a
-    * complete meta implies a complete directory. */
+    * feature-ungated checkpoint; the meta is published only after its
+    * shard dirs are written ([[writeShardedCheckpoint]]). */
   private[graft] def checkpointDF(v: Long): Option[DataFrame] =
     pcpMetaNf(v).flatMap(_ => pcpDataPaths(v)).map(paths =>
       if (paths.isEmpty)
@@ -558,15 +544,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * pre-header manifests) — commit provenance plus the table's physical
     * config ([[GraftTable.load]] recovers stats/partition/bloom columns
     * and CHECK constraints from here). */
-  private[acid] def headerMeta(v: Long): Map[String, String] = {
-    val first = manifestLines(v).find(_.nonEmpty)
-    first.filter(_.startsWith("#")).map { h =>
-      h.drop(1).trim.split("\\s+").flatMap(_.split("=", 2) match {
-        case Array(k, value) => Some(k -> value)
-        case _ => None
-      }).toMap
-    }.getOrElse(Map.empty)
-  }
+  private[acid] def headerMeta(v: Long): Map[String, String] =
+    headerKv(manifestLines(v).find(_.nonEmpty))
 
   /** The table's commit history, oldest first — the DESCRIBE HISTORY
     * surface: which operation produced each version and when. O(versions)
@@ -849,31 +828,25 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * distributed scan plus a broadcast hash anti-join (no shuffle).
     * Entries without DVs take the plain vectorized-scan path untouched. */
   /** The raw parquet frame over exactly `es` — LOG-SERVED (r16 directive
-    * #4) when a read schema is known and every entry carries its `fz=`
-    * byte length: the scan relation builds straight from the survivor
+    * #4) from each entry's `fz=` byte length: the scan relation builds straight from the survivor
     * list with FileStatus served from the log ([[GraftLogFileIndex]]),
     * ZERO per-file filesystem stats at plan time (the explicit-paths
     * reader re-stats every path on the driver — at 10⁸ files that is
-    * 10⁸ namenode RPCs for facts the manifest already states).
-    * Entries predating the size tag, and schema-less reads (which must
-    * infer from footers), keep the listing reader. Both forms resolve
-    * `_metadata` and match parquet columns by name identically. */
+    * 10⁸ namenode RPCs for facts the manifest already states). Every
+    * writer records `fz=`, so an entry without it is refused. */
   private def rawScan(es: Seq[FileEntry],
-                      readSchema: Option[StructType]): DataFrame =
-    if (es.forall(_.bytes.isDefined)) {
-      // schema-less tables (no `schema=` header) infer from ONE footer —
-      // the same single-file inference the listing reader performs with
-      // schema merging off (the repo contract: evolution-on-read needs a
-      // declared schema, so a schema-less table's files are uniform) —
-      // one stat + one footer instead of a stat per file
-      val s = readSchema.getOrElse(
-        spark.read.parquet(new Path(rootPath, es.head.path).toString).schema)
-      GraftLogFileIndex.scan(spark, rootPath,
-        es.map(e => e.path -> e.bytes.get), s)
-    } else {
-      val reader = readSchema.fold(spark.read)(spark.read.schema)
-      reader.parquet(es.map(e => new Path(rootPath, e.path).toString): _*)
-    }
+                      readSchema: Option[StructType]): DataFrame = {
+    es.find(_.bytes.isEmpty).foreach(e =>
+      throw retiredFormat(s"entry ${e.path}", "has no fz= byte length"))
+    // schema-less tables (no `schema=` header) infer from ONE footer,
+    // schema merging off (the repo contract: evolution-on-read needs a
+    // declared schema, so a schema-less table's files are uniform) —
+    // one stat + one footer instead of a stat per file
+    val s = readSchema.getOrElse(
+      spark.read.parquet(new Path(rootPath, es.head.path).toString).schema)
+    GraftLogFileIndex.scan(spark, rootPath,
+      es.map(e => e.path -> e.bytes.get), s)
+  }
 
   private def readWithDv(es: Seq[FileEntry], schema: Option[StructType],
                          like: => DataFrame,
@@ -1256,13 +1229,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     }
 
   private def writeSidecar(p: Path, payload: Seq[(String, Array[Long])],
-                           header: Seq[String] = Nil): Unit = {
-    val out = fs.create(p, false)
-    try out.write((header ++ payload.map { case (path, words) =>
-      s"$path\t${GraftTable.encodeBloom(words)}" } :+ CommitMarker)
-      .mkString("\n").getBytes(UTF_8))
-    finally out.close()
-  }
+                           header: Seq[String] = Nil): Unit =
+    writeTerminated(p, header ++ payload.map { case (path, words) =>
+      s"$path\t${GraftTable.encodeBloom(words)}" })
 
   private def sidecarPayload(lines: List[String]): Map[String, Array[Long]] =
     lines.filter(l => l.nonEmpty && !l.startsWith("#"))
@@ -1276,14 +1245,10 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * HLL payloads off the resident entry list: entries carry an `nvf=`
     * ref and [[ndvOf]] loads per use. */
   private def writeNdvSidecar(p: Path,
-      payload: Seq[(String, Map[String, Array[Byte]])]): Unit = {
-    val out = fs.create(p, false)
-    try out.write((payload.map { case (path, nv) =>
+      payload: Seq[(String, Map[String, Array[Byte]])]): Unit =
+    writeTerminated(p, payload.map { case (path, nv) =>
       (path +: nv.toSeq.sortBy(_._1).map { case (c, sk) =>
-        s"nv:$c=${GraftTable.b64bytes(sk)}" }).mkString("\t")
-    } :+ CommitMarker).mkString("\n").getBytes(UTF_8))
-    finally out.close()
-  }
+        s"nv:$c=${GraftTable.b64bytes(sk)}" }).mkString("\t") })
 
   private val ndvSidecars = bounded[Map[String, Map[String, Array[Byte]]]]()
   private def ndvSidecarMap(v: Long): Map[String, Map[String, Array[Byte]]] = {
@@ -1336,41 +1301,111 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         nvRef = if (e.ndv.nonEmpty) Some(v) else e.nvRef))
   }
 
-  /** Publish `files` as version `v` via exclusive manifest create — the
-    * ONE atomicity point in the format. The header line records the
-    * operation, wall-clock commit time, and the active file/row counts
-    * (`nf=`/`nr=` — what [[history]] describes a delta commit from).
-    *
-    * INCREMENTAL LOG: the manifest body is the add/remove DELTA against
-    * version v-1 (`kind=delta`) — O(changed files) bytes per commit —
-    * unless the delta would be larger than the full list (overwrite,
-    * compact), in which case a `kind=full` manifest is written. Every
-    * [[checkpointInterval]] commits a `.checkpoint` sidecar additionally
-    * materializes the full entry list so resolution replays a bounded
-    * chain. Fresh per-file blooms move to a `.blooms` sidecar (entries
-    * carry `bf=<v>` references), keeping manifest lines KB-free; `dvs`
-    * carries this commit's deletion vectors the same way. */
+  /** Publish `files` — the table's whole entry list at version `v` —
+    * through [[publish]]. Inside the owned window the list is diffed
+    * against v-1: the manifest states the adds and removes
+    * (`kind=delta`, O(changed files) bytes) unless that delta is longer
+    * than the list itself (overwrite, compact), which publishes
+    * `kind=full`. Every header count is stated exactly from the list,
+    * and the list is cached as v's resolution. `dvs` = this commit's
+    * deletion vectors; the entries at those paths re-reference v's dv
+    * sidecar (full merged position set per file). */
   private[graft] def commit(v: Long, files: Seq[FileEntry],
                             op: String = "commit",
                             txn: Option[(String, Long)] = None,
                             schema: Option[StructType] = None,
                             dvs: Map[String, Array[Long]] = Map.empty,
                             extraMeta: Seq[String] = Nil,
-                            // Some(b64(markerPath)) = a MULTI-TABLE txn
-                            // participant: the manifest publishes in
-                            // PENDING state and readers resolve it
-                            // through the shared marker (see
-                            // [[GraftTable.appendAtomic]])
                             pending: Option[String] = None,
-                            // column-mapping override (rename/drop/add
-                            // commits); None carries the prior version's
-                            // mapping + tombstones forward like the schema
                             cmapOverride: Option[Map[String, String]] = None,
                             cmdropOverride: Option[Set[String]] = None,
-                            // row-id high watermark: an id-assigning
-                            // append passes its advanced value; None
-                            // carries the prior version's forward
-                            rwm: Option[Long] = None): Long = {
+                            rwm: Option[Long] = None): Long =
+    publish(v, op, txn, schema, extraMeta, rwm, dvs, cmapOverride,
+        cmdropOverride, pending) {
+      // fresh payloads move to v's sidecars BEFORE the diff, so it
+      // compares the lines the manifest will state
+      val finalFiles = moveToSidecars(v, files).map(e =>
+        dvs.get(e.path).fold(e)(pos =>
+          e.copy(dvRef = Some(v), dvCount = pos.length.toLong)))
+      val prev = entries(v - 1)
+      val prevLines = prev.map(e => e.path -> e.line).toMap
+      val newLines = finalFiles.map(e => e.path -> e.line).toMap
+      val removed = prev.filter(e => !newLines.get(e.path).contains(e.line))
+      val added = finalFiles.filter(e =>
+        !prevLines.get(e.path).contains(e.line))
+      Staged(added, removed,
+        Some(Restate(finalFiles.flatMap(_.dvRef).distinct.sorted,
+          finalFiles.map(_.dvCount).sum, Some(finalFiles.size.toLong),
+          if (finalFiles.forall(_.rows.isDefined))
+            Some(finalFiles.map(e => e.rows.get - e.dvCount).sum)
+          else None)),
+        held = Some(finalFiles),
+        full = removed.size + added.size > finalFiles.size)
+    }
+
+  /** DELTA-FIRST commit (the 100 TB ingest path): publish version `v`
+    * as `adds` + `removes` WITHOUT ever materializing the previous
+    * version's entry list on the driver — [[publish]] derives every
+    * header count by O(1) arithmetic over the parent header (`nf=`
+    * prev±counts, `nr=` prev±row sums; carried schema/txns/rwm are
+    * already single-header reads). A 10⁶-file table's append then
+    * touches O(batch) driver state, and its periodic checkpoint extends
+    * the previous one through O(touched shards).
+    *
+    * Scope: plain adds/removes commits (appends, scoped rewrites),
+    * metadata-only DDL, multi-table PARTICIPANTS (`pending`), and
+    * merge-on-read DV commits: a re-masked entry is a remove+add pair
+    * over the SAME path (the delta grammar's "replaced entry" form),
+    * its new `dv=` ref pointing at THIS commit's sidecar — the caller
+    * tags the `adds`, `dvs` carries the sidecar payload. A mask-merge
+    * that re-tags EVERY dv-carrying entry to one fresh sidecar knows
+    * the exact post-state and passes it as `restate`; without it the
+    * sidecar bound would never reset delta-first. [[commit]] remains
+    * for the commits whose statement is the whole table. */
+  private[graft] def commitDelta(v: Long, adds: Seq[FileEntry],
+                                 removes: Seq[FileEntry],
+                                 op: String = "commit",
+                                 txn: Option[(String, Long)] = None,
+                                 schema: Option[StructType] = None,
+                                 extraMeta: Seq[String] = Nil,
+                                 rwm: Option[Long] = None,
+                                 dvs: Map[String, Array[Long]] = Map.empty,
+                                 cmapOverride: Option[Map[String, String]] = None,
+                                 cmdropOverride: Option[Set[String]] = None,
+                                 pending: Option[String] = None,
+                                 restate: Option[Restate] = None): Long =
+    publish(v, op, txn, schema, extraMeta, rwm, dvs, cmapOverride,
+      cmdropOverride, pending)(Staged(adds, removes, restate))
+
+  /** THE publisher: every version of the table is written here, by
+    * exclusive manifest create — the ONE atomicity point in the format.
+    * `stage` runs inside the owned window (v's sidecars are exclusively
+    * ours there) and yields the body. Fresh blooms and NDV sketches move
+    * to v's sidecars, `dvs` lands in v's dv sidecar, and the header
+    * records the operation, the monotone commit time, the entry/row
+    * counts (`nf=`/`nr=` — what [[history]] describes a delta commit
+    * from), the live-mask bookkeeping and the table's physical config.
+    * Every [[checkpointInterval]] commits a checkpoint follows once the
+    * manifest has closed, then the `_latest` pointer advances. */
+  private def publish(v: Long, op: String, txn: Option[(String, Long)],
+                      schema: Option[StructType], extraMeta: Seq[String],
+                      // row-id high watermark: an id-assigning append
+                      // passes its advanced value; None carries the
+                      // prior version's forward
+                      rwm: Option[Long],
+                      // this commit's deletion-vector sidecar payload
+                      // (path -> merged positions)
+                      dvs: Map[String, Array[Long]],
+                      // column-mapping override (rename/drop/add
+                      // commits); None carries the prior version's
+                      // mapping + tombstones forward like the schema
+                      cmapOverride: Option[Map[String, String]],
+                      cmdropOverride: Option[Set[String]],
+                      // Some(b64(markerPath)) = a MULTI-TABLE txn
+                      // participant: the manifest publishes in PENDING
+                      // state and readers resolve it through the shared
+                      // marker (see [[GraftTable.appendAtomic]])
+                      pending: Option[String])(stage: => Staged): Long = {
     fs.mkdirs(logDir)
     // a commit that doesn't change the schema CARRIES the declared schema
     // forward (a delete doesn't un-evolve the table); schema-changing
@@ -1389,6 +1424,20 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         declared.forall(_.fields.exists(_.name.equalsIgnoreCase(l))) }
     val cmdropFinal = cmdropOverride.orElse(latestVersion.map(droppedPhysOf))
       .getOrElse(Set.empty)
+    // nf/nr arithmetic anchors on the last EFFECTIVE parent: an ABORTED
+    // multi-table participant's header states counts that never landed —
+    // inheriting them would inflate nf (and poison the next checkpoint
+    // meta's completeness gate into a permanent fallback). The ts
+    // monotone clamp still reads the raw parent (aborted commits carry
+    // valid monotone stamps).
+    val (prevMeta, prevDvn) = {
+      var b = v - 1
+      while (b >= 1L && pendingAborted(b)) b -= 1
+      if (b < 1L) (Map.empty[String, String], 0L)
+      else { val m = headerMeta(b); (m, statedDvn(b, m)) }
+    }
+    val prevTsMeta =
+      if (v > 1L) headerMeta(v - 1) else Map.empty[String, String]
     val p = manifestPath(v)
     // Exclusive create is the atomicity point. On HDFS/object stores the
     // create (conditional put) is atomic by itself; Hadoop's LOCAL
@@ -1410,64 +1459,62 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // From here we OWN version v (the create won): the v-numbered
     // sidecars are exclusively ours, and the manifest reads as in-flight
     // until the terminator lands in the single content write below.
-    try {
-      // 1. blooms and NDV sketches built THIS commit move to sidecars
-      val moved = moveToSidecars(v, files)
-      // 2. this commit's deletion vectors go to the dv sidecar; touched
-      // entries re-reference it (full merged position set per file)
-      val finalFiles =
-        if (dvs.isEmpty) moved
-        else {
-          writeSidecar(dvSidecarPath(v), dvs.toSeq.sortBy(_._1))
-          moved.map(e => dvs.get(e.path).fold(e)(pos =>
-            e.copy(dvRef = Some(v), dvCount = pos.length.toLong)))
-        }
-      // 3. delta vs full body
-      val prev = entries(v - 1)
-      val prevLines = prev.map(e => e.path -> e.line).toMap
-      val newLines = finalFiles.map(e => e.path -> e.line).toMap
-      val removed = prev.filter(e => !newLines.get(e.path).contains(e.line))
-        .map(e => s"-\t${e.path}")
-      val addedEntries = finalFiles.filter(e =>
-        !prevLines.get(e.path).contains(e.line))
-      val added = addedEntries.map(e => s"+\t${e.line}")
-      val asDelta = removed ++ added
-      val full = asDelta.length > finalFiles.length
-      val kind = if (full) "full" else "delta"
-      val body = if (full) finalFiles.map(_.line) else asDelta
+    val (nf, held) = try {
+      val s = stage
+      val adds = moveToSidecars(v, s.adds)
+      if (dvs.nonEmpty)
+        writeSidecar(dvSidecarPath(v), dvs.toSeq.sortBy(_._1))
+      val body =
+        if (s.full) s.held.get.map(_.line)
+        else s.removes.map(e => s"-\t${e.path}") ++ adds.map(e => s"+\t${e.line}")
       // feature gate over THIS manifest's body (a delta gates only what
       // it states; the chain's older artifacts gate their own) — see
-      // [[checkRequiredFeatures]]
-      // cm is a HEADER-level feature: a non-identity column mapping makes
-      // logical-name projection wrong for any reader that ignores it
-      val req = (requiredFeatures(if (full) finalFiles else addedEntries) ++
+      // [[checkRequiredFeatures]]. cm is a HEADER-level feature: a
+      // non-identity column mapping makes logical-name projection wrong
+      // for any reader that ignores it
+      val req = (requiredFeatures(if (s.full) s.held.get else adds) ++
         (if (cmapFinal.nonEmpty) Seq("cm") else Nil)).distinct.sorted
-      val nr = if (finalFiles.forall(_.rows.isDefined))
-        Seq(s"nr=${finalFiles.map(e => e.rows.get - e.dvCount).sum}") else Nil
+      // nf/nr by arithmetic over the parent header unless restated (a
+      // modified path appears on both sides and nets to 0); nr only
+      // carries while the chain can state it exactly
+      val (nf, nr) = s.restate.flatMap(r => r.nf.map(_ -> r.nr)).getOrElse {
+        val prevNf = prevMeta.get("nf").flatMap(_.toLongOption).getOrElse(0L)
+        (prevNf - s.removes.size + adds.size,
+          prevMeta.get("nr").flatMap(_.toLongOption)
+            .orElse(if (v <= 1L) Some(0L) else None)
+            .filter(_ => (adds ++ s.removes).forall(_.rows.isDefined))
+            .map(prevNr => prevNr +
+              adds.map(e => e.rows.get - e.dvCount).sum -
+              s.removes.map(e => e.rows.get - e.dvCount).sum))
+      }
+      // live-mask bookkeeping (the delta-first DV path's decision inputs
+      // — see [[deleteViaDv]]): `dvsv=` the distinct dv sidecar versions
+      // the active set MAY reference (by arithmetic an over-
+      // approximation — a removed last-referencing entry keeps its ref
+      // listed until a restatement; only ever causes an earlier
+      // coalescing fallback, never a wrong read), `dvn=` the exact total
+      // masked rows. dvn= is stated even at 0, so the auto-purge
+      // decision and the delta arithmetic stay header reads.
+      val dvsv = s.restate.map(_.dvsv.distinct.sorted).getOrElse(
+        (prevMeta.get("dvsv").toSeq.flatMap(_.split(","))
+          .flatMap(_.toLongOption) ++ adds.flatMap(_.dvRef))
+          .distinct.sorted)
+      val dvn = s.restate.map(_.dvn).getOrElse(prevDvn +
+        adds.map(_.dvCount).sum - s.removes.map(_.dvCount).sum)
+      // cumulative (writer -> newest epoch) map CARRIED FORWARD like the
+      // schema (the Delta checkpoint setTxn pattern): [[lastTxn]] then
+      // answers from the LATEST header alone — O(1) per streaming batch
+      val txnsAll = txnsAsOf(v - 1) ++ txn
       // The header ALSO carries the table's physical config (the Delta
       // metaData-action pattern): a fresh handle on the same root —
       // the SQL catalog, the streaming source, another session — recovers
       // clustering/scoping/validation via GraftTable.load instead of
       // silently degrading to an unconfigured table. Constraints are
       // base64-coded (they contain spaces; header fields split on them).
-      // cumulative (writer -> newest epoch) map CARRIED FORWARD like the
-      // schema (the Delta checkpoint setTxn pattern): [[lastTxn]] then
-      // answers from the LATEST header alone — O(1) per streaming batch
-      // instead of walking every version's header. O(distinct writers)
-      // bytes, typically a handful of streaming sinks.
-      // live-mask bookkeeping, stated EXACTLY (this path holds the full
-      // list): `dvsv=` distinct live dv sidecar versions, `dvn=` total
-      // masked rows — the delta-first DV path ([[deleteViaDv]]) and the
-      // auto-purge decision read these instead of materializing entries
-      val dvsvFinal = finalFiles.flatMap(_.dvRef).distinct.sorted
-      val dvnFinal = finalFiles.map(_.dvCount).sum
-      val txnsAll = txnsAsOf(v - 1) ++ txn
-      // dvn= is stated even at 0: every header states it, so the
-      // auto-purge decision and the delta arithmetic stay header reads
-      val cfg = (Seq(s"kind=$kind", s"nf=${finalFiles.size}") ++ nr ++
-        (if (dvsvFinal.isEmpty) Nil
-         else Seq(s"dvsv=${dvsvFinal.mkString(",")}")) ++
-        Seq(s"dvn=$dvnFinal") ++
+      val cfg = (Seq(s"kind=${if (s.full) "full" else "delta"}", s"nf=$nf") ++
+        nr.map(n => s"nr=$n").toSeq ++
+        (if (dvsv.isEmpty) Nil else Seq(s"dvsv=${dvsv.mkString(",")}")) ++
+        Seq(s"dvn=$dvn") ++
         pending.map(p => s"pending=$p").toSeq ++
         (if (req.isEmpty) Nil else Seq(s"require=${req.mkString(",")}")) ++
         txn.map { case (id, e) => s"txn=$id:$e" }.toSeq ++
@@ -1477,8 +1524,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         declared.map(s => "schema=" + java.util.Base64.getUrlEncoder
           .withoutPadding.encodeToString(s.toDDL.getBytes(UTF_8))).toSeq ++
         (if (cmapFinal.isEmpty) Nil
-         else Seq("cmap=" + cmapFinal.toSeq.sortBy(_._1).map { case (l, p) =>
-           s"${GraftTable.b64(l)}:${GraftTable.b64(p)}" }.mkString(","))) ++
+         else Seq("cmap=" + cmapFinal.toSeq.sortBy(_._1).map { case (l, ph) =>
+           s"${GraftTable.b64(l)}:${GraftTable.b64(ph)}" }.mkString(","))) ++
         (if (cmdropFinal.isEmpty) Nil
          else Seq("cmdrop=" + cmdropFinal.toSeq.sorted
            .map(GraftTable.b64).mkString(","))) ++
@@ -1508,229 +1555,57 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       val tsMono =
         if (v <= 1L) System.currentTimeMillis()
         else math.max(System.currentTimeMillis(),
-          headerMeta(v - 1).get("ts").flatMap(_.toLongOption)
-            .getOrElse(0L) + 1L)
-      val header = s"# op=$op ts=$tsMono $cfg"
+          prevTsMeta.get("ts").flatMap(_.toLongOption).getOrElse(0L) + 1L)
       // one write, terminator LAST: readers treat a manifest without the
       // final marker as in-flight (see manifestLines)
-      out.write(((header +: body) :+ CommitMarker)
+      out.write(((s"# op=$op ts=$tsMono $cfg" +: body) :+ CommitMarker)
         .mkString("\n").getBytes(UTF_8))
       // a PENDING commit's outcome is not known yet: never pre-cache its
       // entry list (an abort resolves it to v-1's) and never checkpoint
       // it (a checkpoint is an unconditional full statement)
-      if (pending.isEmpty) cachePut(entriesCache, v, finalFiles)
+      if (pending.isEmpty) s.held.foreach(cachePut(entriesCache, v, _))
       if (dvs.nonEmpty) cachePut(dvSidecars, v, dvs)
-      // 4. periodic checkpoint: a full materialization every N commits
-      // bounds every later resolution's replay chain. Failure-tolerant:
-      // the manifest chain alone is always sufficient.
-      if (pending.isEmpty && v % checkpointInterval == 0)
-        writeCheckpoint(v, finalFiles)
-      // 5. advance the latest-version accelerator (best-effort)
-      writeLatestPointer(v)
+      (nf, s.held)
     } finally out.close()
-    v
-    }
-  }
-
-  /** DELTA-FIRST commit (the 100 TB ingest path): publish version `v`
-    * as `adds` + `removes` WITHOUT ever materializing the previous
-    * version's entry list on the driver — every header field that
-    * [[commit]] derives from the full list comes from O(1) arithmetic
-    * over the parent header instead (`nf=` prev±counts, `nr=` prev±row
-    * sums, carried schema/txns/rwm are already single-header reads).
-    * A 10⁶-file table's append then touches O(batch) driver state: no
-    * resident `Seq[FileEntry]`, no full-list diff, and the periodic
-    * checkpoint rewrites O(touched shards) through
-    * [[writeSidecarCheckpointDelta]] (falling back to one full
-    * materialization only when the chain below has no sidecar
-    * checkpoint to extend). The manifest bytes are IDENTICAL to what
-    * [[commit]] would write for the same mutation — delta kind, same
-    * body lines, same gates — so readers cannot tell the paths apart.
-    *
-    * Scope: plain adds/removes commits (appends, scoped rewrites) AND —
-    * since round 16 — merge-on-read DV commits within the
-    * [[GraftTable.MaxDvSidecars]] bound: a re-masked entry is a
-    * remove+add pair over the SAME path (the delta grammar's existing
-    * "replaced entry" form), its new `dv=` ref pointing at THIS commit's
-    * sidecar (the `dvs` payload below). Since round 17 multi-table
-    * PARTICIPANTS are delta-first too — append/delete/update/scoped
-    * MERGE INTO all publish their own adds/removes through the
-    * `pending` marker below — leaving on [[commit]] only the commits
-    * whose statement is inherently the whole table: full-semantics
-    * rewrites (where the full manifest is already O(written)) and
-    * mapping changes. */
-  private[graft] def commitDelta(v: Long, adds: Seq[FileEntry],
-                                 removes: Seq[FileEntry],
-                                 op: String = "commit",
-                                 txn: Option[(String, Long)] = None,
-                                 schema: Option[StructType] = None,
-                                 extraMeta: Seq[String] = Nil,
-                                 rwm: Option[Long] = None,
-                                 // this commit's deletion-vector sidecar
-                                 // payload (path -> merged positions);
-                                 // the matching `adds` entries must
-                                 // already carry `dvRef = Some(v)` —
-                                 // the caller tags, this writes
-                                 dvs: Map[String, Array[Long]] = Map.empty,
-                                 // column-mapping overrides (metadata-only
-                                 // DDL: rename/drop/add); None carries the
-                                 // prior version's forward like [[commit]]
-                                 cmapOverride: Option[Map[String, String]] = None,
-                                 cmdropOverride: Option[Set[String]] = None,
-                                 // multi-table txn participant marker —
-                                 // publishes PENDING, resolved through the
-                                 // shared marker like [[commit]]'s
-                                 pending: Option[String] = None,
-                                 // EXACT (dvsv, dvn) restatement for the
-                                 // mask-merge paths: a caller that just
-                                 // re-tagged EVERY dv-carrying entry to
-                                 // one fresh sidecar knows the exact
-                                 // post-state, where the arithmetic
-                                 // below can only over-approximate dvsv
-                                 // (it never drops a dereferenced
-                                 // version) — without this the sidecar
-                                 // bound would never reset delta-first.
-                                 dvRestate: Option[(Seq[Long], Long)] = None)
-      : Long = {
-    fs.mkdirs(logDir)
-    val declared = schema.orElse(latestVersion.flatMap(schemaOf))
-    val cmapFinal = cmapOverride.orElse(latestVersion.map(cmapOf))
-      .getOrElse(Map.empty)
-      .filter { case (l, _) =>
-        declared.forall(_.fields.exists(_.name.equalsIgnoreCase(l))) }
-    val cmdropFinal = cmdropOverride.orElse(latestVersion.map(droppedPhysOf))
-      .getOrElse(Set.empty)
-    // nf/nr arithmetic anchors on the last EFFECTIVE parent: an ABORTED
-    // multi-table participant's header states counts that never landed —
-    // inheriting them would inflate nf (and poison the next checkpoint
-    // meta's completeness gate into a permanent fallback). The ts
-    // monotone clamp still reads the raw parent (aborted commits carry
-    // valid monotone stamps).
-    val (prevMeta, prevDvn) = {
-      var b = v - 1
-      while (b >= 1L && pendingAborted(b)) b -= 1
-      if (b < 1L) (Map.empty[String, String], 0L)
-      else { val m = headerMeta(b); (m, statedDvn(b, m)) }
-    }
-    val prevTsMeta =
-      if (v > 1L) headerMeta(v - 1) else Map.empty[String, String]
-    val p = manifestPath(v)
-    GraftTable.commitMonitor(root).synchronized {
-    if (fs.exists(p))
-      throw new ConcurrentCommitException(
-        s"version $v already committed at $root; rebase and retry")
-    val out =
-      try fs.create(p, false)
-      catch { case _: java.io.IOException =>
-        throw new ConcurrentCommitException(
-          s"lost the commit race for version $v at $root; rebase and retry")
-      }
-    try {
-      // fresh blooms / NDV sketches move to their v-numbered sidecars
-      // exactly like [[commit]] step 1 — only the ADDS can carry them
-      val finalAdds = moveToSidecars(v, adds)
-      // this commit's deletion vectors land in the v-numbered sidecar
-      // exactly like [[commit]] step 2 — the retagged adds already
-      // reference it
-      if (dvs.nonEmpty)
-        writeSidecar(dvSidecarPath(v), dvs.toSeq.sortBy(_._1))
-      val body = removes.map(e => s"-\t${e.path}") ++
-        finalAdds.map(e => s"+\t${e.line}")
-      val req = (requiredFeatures(finalAdds) ++
-        (if (cmapFinal.nonEmpty) Seq("cm") else Nil)).distinct.sorted
-      // nf/nr by arithmetic over the parent header (a modified path
-      // appears on both sides and nets to 0); nr only carries while the
-      // chain can state it exactly
-      val prevNf = prevMeta.get("nf").flatMap(_.toLongOption).getOrElse(0L)
-      val nf = prevNf - removes.size + finalAdds.size
-      val nr = prevMeta.get("nr").flatMap(_.toLongOption)
-        .orElse(if (v <= 1L) Some(0L) else None)
-        .filter(_ => (finalAdds ++ removes).forall(_.rows.isDefined))
-        .map(prevNr => prevNr +
-          finalAdds.map(e => e.rows.get - e.dvCount).sum -
-          removes.map(e => e.rows.get - e.dvCount).sum)
-        .map(n => s"nr=$n").toSeq
-      // live-mask bookkeeping by arithmetic (the delta-first DV path's
-      // decision inputs — see [[deleteViaDv]]): `dvsv=` the distinct dv
-      // sidecar versions the active set MAY reference (an over-
-      // approximation — a removed last-referencing entry keeps its ref
-      // listed until the next full [[commit]] restates it exactly; only
-      // ever causes an earlier coalescing fallback, never a wrong
-      // read), `dvn=` the exact total masked rows (adds minus removes).
-      val dvsvAll = dvRestate.map(_._1.distinct.sorted).getOrElse(
-        (prevMeta.get("dvsv").toSeq.flatMap(_.split(","))
-          .flatMap(_.toLongOption) ++ finalAdds.flatMap(_.dvRef))
-          .distinct.sorted)
-      val dvn = dvRestate.map(_._2).getOrElse(prevDvn +
-        finalAdds.map(_.dvCount).sum - removes.map(_.dvCount).sum)
-      val txnsAll = txnsAsOf(v - 1) ++ txn
-      val cfg = (Seq("kind=delta", s"nf=$nf") ++ nr ++
-        (if (dvsvAll.isEmpty) Nil
-         else Seq(s"dvsv=${dvsvAll.mkString(",")}")) ++
-        Seq(s"dvn=$dvn") ++
-        pending.map(p => s"pending=$p").toSeq ++
-        (if (req.isEmpty) Nil else Seq(s"require=${req.mkString(",")}")) ++
-        txn.map { case (id, e) => s"txn=$id:$e" }.toSeq ++
-        (if (txnsAll.isEmpty) Nil
-         else Seq("txns=" + txnsAll.toSeq.sortBy(_._1).map { case (id, e) =>
-           s"${GraftTable.b64(id)}:$e" }.mkString(","))) ++
-        declared.map(s => "schema=" + java.util.Base64.getUrlEncoder
-          .withoutPadding.encodeToString(s.toDDL.getBytes(UTF_8))).toSeq ++
-        (if (cmapFinal.isEmpty) Nil
-         else Seq("cmap=" + cmapFinal.toSeq.sortBy(_._1).map { case (l, ph) =>
-           s"${GraftTable.b64(l)}:${GraftTable.b64(ph)}" }.mkString(","))) ++
-        (if (cmdropFinal.isEmpty) Nil
-         else Seq("cmdrop=" + cmdropFinal.toSeq.sorted
-           .map(GraftTable.b64).mkString(","))) ++
-        statsCol.map(c => s"scol=$c").toSeq ++
-        partitionCol.map(c => s"pcol=$c").toSeq ++
-        bloomCol.map(c => s"bcol=$c").toSeq ++
-        (if (rowTracking) Seq("rt=1") else Nil) ++
-        { val rwmFinal = rwm.getOrElse(if (v > 1L) rwmAsOf(v - 1L) else 0L)
-          if (rwmFinal > 0L) Seq(s"rwm=$rwmFinal") else Nil } ++
-        (if (indexCols.isEmpty) Nil
-         else Seq(s"icols=${indexCols.mkString(",")}")) ++
-        (if (constraints.isEmpty) Nil
-         else Seq("checks=" + constraints.map(c =>
-           java.util.Base64.getUrlEncoder.withoutPadding
-             .encodeToString(c.getBytes(UTF_8))).mkString(","))) ++
-        extraMeta).mkString(" ")
-      val tsMono =
-        if (v <= 1L) System.currentTimeMillis()
-        else math.max(System.currentTimeMillis(),
-          prevTsMeta.get("ts").flatMap(_.toLongOption).getOrElse(0L) + 1L)
-      val header = s"# op=$op ts=$tsMono $cfg"
-      out.write(((header +: body) :+ CommitMarker)
-        .mkString("\n").getBytes(UTF_8))
-      if (dvs.nonEmpty) cachePut(dvSidecars, v, dvs)
-    } finally out.close()
-    // checkpoint cadence AFTER the manifest closes (the scoped writer
-    // replays the chain from disk; the classic fallback materializes
-    // entries(v) — which can now read v's own complete manifest).
-    // NOTE: deliberately NO cachePut — the whole point of this path is
-    // that the driver never holds version v's full entry list. A
-    // PENDING participant never checkpoints (its outcome is unknown;
-    // a checkpoint is an unconditional full statement) — same rule as
-    // [[commit]].
     if (pending.isEmpty && v % checkpointInterval == 0)
-      writeCheckpointDelta(v,
-        prevMeta.get("nf").flatMap(_.toLongOption).getOrElse(0L)
-          - removes.size + adds.size)
+      writeCheckpoint(v, nf, held.getOrElse(entries(v)))
+    // advance the latest-version accelerator (best-effort)
     writeLatestPointer(v)
     v
     }
   }
 
-  /** [[commitDelta]]'s checkpoint step: scoped sidecar write when the
-    * table is in sidecar mode and the chain supports it; otherwise one
-    * full materialization (exactly what [[commit]] pays every time). */
-  private def writeCheckpointDelta(v: Long, nfNow: Long): Unit =
+  /** Write `lines` and the terminator to `p` by exclusive create, in one
+    * write: a reader treats the file without its final marker as
+    * incomplete. */
+  private def writeTerminated(p: Path, lines: Seq[String]): Unit = {
+    val out = fs.create(p, false)
+    try out.write((lines :+ CommitMarker).mkString("\n").getBytes(UTF_8))
+    finally out.close()
+  }
+
+  /** Checkpoint version `v`: a full statement of its `nf` entries that
+    * bounds every later resolution's replay chain — the text form below
+    * [[pcpMinFiles]] entries, the sharded parquet form
+    * ([[writeShardedCheckpoint]]) from there on. `files` (v's entry list)
+    * resolves only when a writer needs it. Failure-tolerant, catching
+    * NonFatal and not just IOException: the parquet write is a
+    * distributed job, and an executor failure must not fail a commit
+    * whose manifest already landed — the manifest chain stays sufficient
+    * on its own, and [[vacuum]] verifies a checkpoint's completeness
+    * before it trims the chain below it. */
+  private def writeCheckpoint(v: Long, nf: Long,
+                              files: => Seq[FileEntry]): Unit =
     try {
-      val k = checkpointShards(
-        math.min(nfNow, Int.MaxValue.toLong).toInt)
-      if (nfNow >= pcpMinFiles && k > 0 &&
-          writeSidecarCheckpointDelta(v, nfNow, k)) ()
-      else writeCheckpoint(v, entries(v))
+      if (nf >= pcpMinFiles)
+        writeShardedCheckpoint(v, nf, checkpointShards(nf), files)
+      else {
+        val es = files
+        val req = requiredFeatures(es)
+        writeTerminated(checkpointPath(v), (s"# checkpoint v=$v" +
+          (if (req.isEmpty) "" else s" require=${req.mkString(",")}")) +:
+          es.map(_.line))
+      }
     } catch {
       case scala.util.control.NonFatal(e) =>
         logWarning(s"checkpoint v$v at $root not written " +
@@ -1738,354 +1613,135 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           "chain remains sufficient")
     }
 
-  private def writeCheckpoint(v: Long, files: Seq[FileEntry]): Unit =
-    if (files.size >= pcpMinFiles) writeParquetCheckpoint(v, files)
-    else try {
-      val req = requiredFeatures(files)
-      val header = s"# checkpoint v=$v" +
-        (if (req.isEmpty) "" else s" require=${req.mkString(",")}")
-      val out = fs.create(checkpointPath(v), false)
-      try out.write(((header +: files.map(_.line)) :+ CommitMarker)
-        .mkString("\n").getBytes(UTF_8))
-      finally out.close()
-    } catch { case _: java.io.IOException => () /* racer wrote it: same content */ }
-
-  /** Shard count for the SIDECAR (incremental) parquet checkpoint form;
-    * 0 (default) keeps the classic single-directory form below
-    * [[GraftTable.AutoShardMinFiles]] entries. Past that the sidecar
-    * form AUTO-ENGAGES at [[GraftTable.AutoShardCount]] shards: at that
-    * scale the periodic full checkpoint rewrite is itself the dominant
-    * commit cost, which is exactly what the incremental form removes. */
-  private def checkpointShards(nf: Int): Int =
+  /** Shard count of the parquet checkpoint form: the
+    * `spark.graft.acid.checkpointShards` setting when positive, else 1
+    * below [[GraftTable.AutoShardMinFiles]] entries (one directory,
+    * written by one job) and [[GraftTable.AutoShardCount]] from there:
+    * at that scale a checkpoint rewriting the whole table is itself the
+    * dominant commit cost, which sharded extension removes. */
+  private def checkpointShards(nf: Long): Int =
     spark.conf.getOption("spark.graft.acid.checkpointShards")
       .flatMap(_.toIntOption).filter(_ > 0)
       .getOrElse(if (nf >= GraftTable.AutoShardMinFiles)
-        GraftTable.AutoShardCount else 0)
-
-  private def writeParquetCheckpoint(v: Long, files: Seq[FileEntry]): Unit = {
-    val k = checkpointShards(files.size)
-    if (k > 0) writeSidecarCheckpoint(v, files, k)
-    else writeClassicParquetCheckpoint(v, files)
-  }
+        GraftTable.AutoShardCount else 1)
 
   /** Stable shard of an entry path (CRC32 of the UTF-8 bytes, mod k):
     * identical driver-side (java.util.zip.CRC32) and in-plan (the SQL
     * `crc32` function over the encoded string), so the partitioned
-    * sidecar write and the incremental dirty-set computation agree. */
+    * shard write and the dirty-set computation agree. */
   private def shardOf(path: String, k: Int): Int = {
     val crc = new java.util.zip.CRC32
     crc.update(path.getBytes(UTF_8))
     math.floorMod(crc.getValue, k.toLong).toInt
   }
 
-  /** The SIDECAR (incremental) parquet checkpoint — the public Delta v2
-    * checkpoint design: entries shard by [[shardOf]] into dirs under
+  /** The parquet checkpoint (the public Delta v2 checkpoint design):
+    * entries shard by [[shardOf]] into dirs under
     * `_log/sidecars/<uuid>/shard=<s>`, and the `.pcp` meta lists the
-    * shard dirs (`s\t<shard>\t<relpath>` lines) behind the same `nf=`
-    * completeness gate. INCREMENTAL: when the nearest lower checkpoint
-    * is sidecar-form with the same shard count and only delta manifests
-    * lie between, only the shards TOUCHED by those deltas rewrite — the
-    * untouched shards' dirs re-reference verbatim. A checkpoint on a
-    * 10⁶-file table then writes O(touched shards' entries) of metadata,
-    * not O(table): the metadata analogue of the data path's scoped
-    * rewrites, and the piece that keeps commit cost bounded once the
-    * full rewrite itself would dominate the cadence.
+    * shard dirs (`s\t<shard>\t<relpath>` lines) behind the `nf=`
+    * completeness gate. When the nearest checkpoint below `v` has the
+    * same shard count `k` and only delta manifests lie between, the
+    * write EXTENDS it: the shards those deltas touch rebuild from the
+    * prior checkpoint's own rows plus an ascending replay of the deltas
+    * (v's included — its manifest is complete on disk by now), and the
+    * untouched shards' dirs are re-referenced verbatim, so driver state
+    * is O(touched shards + chain), never O(table). Otherwise every shard
+    * is written from `files`.
     *
-    * Entry order stays deterministic ([[parquetCheckpointEntries]] sorts
-    * by `ord`): surviving entries keep their prior ord (their relative
-    * order is replay-invariant), re-added/new entries mint fresh ords
-    * above the prior checkpoint's `maxord=`, in commit-list order —
-    * exactly the delta-replay placement (changed entries re-append).
+    * Entry order is the delta-replay order: rows carry an `ord` column
+    * that resolution sorts by ([[cpOrdered]]); an extension keeps
+    * survivors' ords and mints fresh ones past the prior `maxord=` for
+    * every replayed add, so a replaced entry moves to the end exactly as
+    * the replay moves it. An extension's `require=` gate is the union of
+    * the prior gate and the replayed adds' features (carried shards can
+    * only state features the prior gate named — at worst conservative).
     *
     * Publish = the exclusive `.pcp` meta create; shard dirs are
-    * uuid-unique so no temp-dir/rename dance is needed, and any failure
-    * or lost race leaves unreferenced orphans for [[vacuum]]'s age-gated
-    * sidecar sweep. Feature-gated `pcps`: an older reader refuses loudly
-    * instead of resolving a directory that is not there. */
-  private def writeSidecarCheckpoint(v: Long, files: Seq[FileEntry],
-                                     k: Int): Unit = {
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val outRoot = new Path(sidecarsRoot, uuid)
-    try {
-      if (fs.exists(pcpMetaPath(v))) return
-      // ---- find the nearest lower SIDECAR checkpoint reachable through
-      // delta manifests only, collecting the touched paths on the way
-      // (v's own delta is computed from entries(v-1) vs `files`: at this
-      // point in the commit, v's manifest is not yet readable)
-      var touched = Set.empty[String]
-      var prevCp: Option[Long] = None
-      var incremental = true
-      locally {
-        val prevMap = entries(v - 1).map(e => e.path -> e.line).toMap
-        val curMap = files.map(e => e.path -> e.line).toMap
-        touched ++= prevMap.keysIterator.filterNot(curMap.contains)
-        touched ++= files.iterator
-          .filterNot(e => prevMap.get(e.path).contains(e.line)).map(_.path)
-      }
-      var base = v - 1
-      while (prevCp.isEmpty && incremental && base > 0L) {
-        if (fs.exists(checkpointPath(base))) incremental = false
-        else if (fs.exists(pcpMetaPath(base))) {
-          val kv = pcpMetaKv(base)
-          if (pcpShardRefs(base).exists(_.nonEmpty) &&
-              kv.get("ns").flatMap(_.toIntOption).contains(k) &&
-              kv.get("maxord").exists(_.toLongOption.isDefined) &&
-              pcpMetaNf(base).isDefined && pcpDataPaths(base).isDefined)
-            prevCp = Some(base)
-          else incremental = false // classic / foreign-k / damaged form
-        } else {
-          val lines = manifestLines(base)
-          if (pendingAborted(base)) {
-            // an aborted participant contributed nothing, but counting
-            // its +/- paths as touched is merely conservative
-            touched ++= lines.collect {
-              case l if l.startsWith("-\t") => l.drop(2)
-              case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)).path
-            }
-            base -= 1
-          } else if (lines.headOption.exists(_.contains(" kind=delta"))) {
-            touched ++= lines.collect {
-              case l if l.startsWith("-\t") => l.drop(2)
-              case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)).path
-            }
-            base -= 1
-          } else incremental = false // full manifest
-        }
-      }
-      import spark.implicits._
-      def writeRows(rows: Seq[GraftTable.CpRow]): Unit =
-        spark.createDataset(rows)
-          .withColumn("shard",
-            pmod(crc32(encode(col("path"), "UTF-8")), lit(k.toLong))
-              .cast("int"))
-          .write.mode("errorifexists").partitionBy("shard")
-          .parquet(outRoot.toString)
-      def presentShards(): Set[Int] =
-        if (!fs.exists(outRoot)) Set.empty
-        else fs.listStatus(outRoot).iterator.map(_.getPath.getName)
-          .filter(_.startsWith("shard=")).map(_.drop(6).toInt).toSet
-      val (refs, maxOrd) = prevCp.filter(_ => incremental) match {
-        case Some(pv) =>
-          val dirty = touched.map(shardOf(_, k))
-          val prevRefs = pcpShardRefs(pv).getOrElse(Nil).toMap
-          // prior ords of the dirty shards' survivors (a small read:
-          // O(dirty shards) of the prior checkpoint)
-          val dirtyPrevPaths = prevRefs.view.filterKeys(dirty)
-            .values.map(rel => new Path(logDir, rel).toString).toSeq
-          val prevOrd: Map[String, Long] =
-            if (dirtyPrevPaths.isEmpty) Map.empty
-            else spark.read.schema(GraftTable.cpSchema)
-              .parquet(dirtyPrevPaths: _*)
-              .select(col("path"), col("ord")).collect()
-              .map(r => r.getString(0) -> r.getLong(1)).toMap
-          var next = pcpMetaKv(pv)("maxord").toLong
-          val dirtyRows = files.iterator
-            .filter(e => dirty.contains(shardOf(e.path, k)))
-            .map { e =>
-              val o =
-                if (!touched.contains(e.path) && prevOrd.contains(e.path))
-                  prevOrd(e.path)
-                else { next += 1; next }
-              entryToCp(e, o)
-            }.toSeq
-          if (dirtyRows.nonEmpty) writeRows(dirtyRows)
-          val fresh = presentShards()
-          val all = (prevRefs -- dirty) ++ fresh.iterator.map(s =>
-            s -> s"sidecars/$uuid/shard=$s").toMap
-          (all, next)
-        case None =>
-          val rows = files.zipWithIndex.map { case (e, i) =>
-            entryToCp(e, i.toLong) }
-          if (rows.nonEmpty) writeRows(rows)
-          val all = presentShards().iterator.map(s =>
-            s -> s"sidecars/$uuid/shard=$s").toMap
-          (all, files.size.toLong - 1L)
-      }
-      val req = (requiredFeatures(files) ++ Seq("pcp", "pcps"))
-        .distinct.sorted
-      val header = s"# checkpoint v=$v kind=parquet nf=${files.size} " +
-        s"ns=$k maxord=$maxOrd require=${req.mkString(",")}"
-      val refLines = refs.toSeq.sortBy(_._1).map { case (s, rel) =>
-        s"s\t$s\t$rel" }
-      val out = fs.create(pcpMetaPath(v), false)
-      try out.write(((header +: refLines) :+ CommitMarker)
-        .mkString("\n").getBytes(UTF_8))
-      finally out.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        logWarning(s"sidecar checkpoint v$v at $root not written " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}); the manifest " +
-          "chain remains sufficient")
-        try fs.delete(outRoot, true)
-        catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** SHARD-SCOPED sidecar checkpoint for [[commitDelta]]: version `v`'s
-    * checkpoint WITHOUT the full entry list — the dirty shards'
-    * contents reconstruct from the nearest lower sidecar checkpoint's
-    * own parquet plus an ascending replay of the delta manifests above
-    * it (v's included; its manifest is complete on disk by the time
-    * this runs). Driver state is O(dirty shards' entries + chain
-    * deltas), never O(table): the piece that removes the last
-    * O(file-count) structure from the hot commit path. Returns false —
-    * caller falls back to the full write — when the chain below has no
-    * same-k sidecar checkpoint to extend (classic form, full manifest,
-    * foreign shard count, or damage).
-    *
-    * The checkpoint's `require=` gate is the UNION of the prior
-    * checkpoint's gate and the replayed adds' features: carried shards
-    * can only state features the prior gate already named, so the
-    * union is sufficient — at worst conservative (a feature whose last
-    * carrier was removed keeps its gate until the next full write). */
-  private def writeSidecarCheckpointDelta(v: Long, nf: Long,
-                                          k: Int): Boolean = {
-    if (fs.exists(pcpMetaPath(v))) return true
-    // ---- walk down collecting per-version delta ops (descending)
-    var chain: List[(Seq[String], Seq[String])] = Nil // (removes, addLines)
-    var prevCp: Option[Long] = None
-    var base = v
-    while (prevCp.isEmpty) {
-      if (base == 0L) return false // chain bottomed out: no sidecar base
-      if (base < v && fs.exists(checkpointPath(base))) return false
-      else if (base < v && fs.exists(pcpMetaPath(base))) {
-        val kv = pcpMetaKv(base)
-        if (pcpShardRefs(base).exists(_.nonEmpty) &&
-            kv.get("ns").flatMap(_.toIntOption).contains(k) &&
-            kv.get("maxord").exists(_.toLongOption.isDefined) &&
-            pcpMetaNf(base).isDefined && pcpDataPaths(base).isDefined)
-          prevCp = Some(base)
-        else return false
+    * uuid-unique, so a failure or a lost race leaves only unreferenced
+    * dirs for [[vacuum]]'s age-gated sidecar sweep. Feature-gated
+    * `pcps`: an older reader refuses loudly instead of resolving a
+    * directory that is not there. */
+  private def writeShardedCheckpoint(v: Long, nf: Long, k: Int,
+                                     files: => Seq[FileEntry]): Unit = {
+    if (fs.exists(pcpMetaPath(v))) return
+    // the checkpoint to extend, its maxord and the delta manifests above
+    // it (ascending, unparsed until a base is found): walk down from v
+    // through delta manifests only
+    @scala.annotation.tailrec
+    def extendable(b: Long, chain: List[List[String]])
+        : Option[(Long, Long, List[List[String]])] =
+      if (b == 0L || b < v && fs.exists(checkpointPath(b))) None
+      else if (b < v && fs.exists(pcpMetaPath(b))) {
+        val kv = pcpMetaKv(b)
+        kv.get("maxord").flatMap(_.toLongOption)
+          .filter(_ => kv.get("ns").contains(k.toString) &&
+            pcpMetaNf(b).isDefined && pcpShardRefs(b).exists(_.nonEmpty) &&
+            pcpDataPaths(b).isDefined)
+          .map(maxOrd => (b, maxOrd, chain))
       } else {
-        val lines = manifestLines(base)
-        if (pendingAborted(base)) {
-          // aborted participant: contributes NO ops, but counting its
-          // paths dirty is merely conservative — skip entirely (replay
-          // correctness requires excluding its ops)
-          base -= 1
-        } else if (lines.headOption.exists(_.contains(" kind=delta"))) {
-          chain = (lines.collect { case l if l.startsWith("-\t") => l.drop(2) },
-            lines.collect { case l if l.startsWith("+\t") => l.drop(2) }) :: chain
-          base -= 1
-        } else return false // full manifest: no incremental base
+        val lines = manifestLines(b)
+        // an aborted participant contributes nothing to the replay
+        if (pendingAborted(b)) extendable(b - 1, chain)
+        else if (!lines.headOption.exists(_.contains(" kind=delta"))) None
+        else extendable(b - 1, lines :: chain)
       }
+    import spark.implicits._
+    val (rows, kept, maxOrd, nfOut, req) = extendable(v, Nil) match {
+      case Some((pv, prevMax, manifests)) =>
+        val chain = manifests.map(lines => (
+          lines.collect { case l if l.startsWith("-\t") => l.drop(2) },
+          lines.collect { case l if l.startsWith("+\t") =>
+            FileEntry.parse(l.drop(2)) }))
+        val dirty = chain.iterator.flatMap { case (rm, adds) =>
+          rm.iterator ++ adds.iterator.map(_.path) }.map(shardOf(_, k)).toSet
+        val prevRefs = pcpShardRefs(pv).getOrElse(Nil).toMap
+        // the dirty shards' prior rows (a small read: O(dirty shards)),
+        // then the ascending replay: removes drop, adds mint fresh ords
+        val dirtyPrev = prevRefs.view.filterKeys(dirty).values
+          .map(rel => new Path(logDir, rel).toString).toSeq
+        val state =
+          new scala.collection.mutable.LinkedHashMap[String, GraftTable.CpRow]
+        if (dirtyPrev.nonEmpty)
+          spark.read.schema(GraftTable.cpSchema).parquet(dirtyPrev: _*)
+            .as[GraftTable.CpRow].collect().foreach(r => state.put(r.path, r))
+        var next = prevMax
+        chain.foreach { case (rm, adds) =>
+          rm.foreach(state.remove)
+          adds.foreach { e => next += 1; state.put(e.path, entryToCp(e, next)) }
+        }
+        (state.values.toSeq, prevRefs -- dirty, next, nf,
+          pcpMetaKv(pv).get("require").toSeq.flatMap(_.split(',')) ++
+            requiredFeatures(chain.flatMap(_._2)))
+      case None =>
+        val es = files
+        (es.zipWithIndex.map { case (e, i) => entryToCp(e, i.toLong) },
+          Map.empty[Int, String], es.size - 1L, es.size.toLong,
+          requiredFeatures(es))
     }
-    val pv = prevCp.get
-    val prevRefs = pcpShardRefs(pv).getOrElse(return false).toMap
-    // ---- dirty shards from every touched path in the chain
-    val dirty: Set[Int] = chain.iterator.flatMap { case (rm, addLines) =>
-      rm.iterator.map(shardOf(_, k)) ++
-        addLines.iterator.map(l => shardOf(FileEntry.parse(l).path, k))
-    }.toSet
     val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
     val outRoot = new Path(sidecarsRoot, uuid)
-    import spark.implicits._
-    // ---- prior dirty-shard rows (a small read: O(dirty shards))
-    val dirtyPrevPaths = prevRefs.view.filterKeys(dirty)
-      .values.map(rel => new Path(logDir, rel).toString).toSeq
-    val state = new scala.collection.mutable.LinkedHashMap[String, GraftTable.CpRow]
-    if (dirtyPrevPaths.nonEmpty)
-      spark.read.schema(GraftTable.cpSchema).parquet(dirtyPrevPaths: _*)
-        .as[GraftTable.CpRow].collect()
-        .sortBy(_.ord.get)
-        .foreach(r => state.put(r.path, r))
-    // ---- ascending replay: removes drop, adds mint fresh ords
-    var next = pcpMetaKv(pv)("maxord").toLong
-    chain.foreach { case (rm, addLines) =>
-      rm.foreach(state.remove)
-      addLines.foreach { l =>
-        val e = FileEntry.parse(l)
-        if (dirty.contains(shardOf(e.path, k))) {
-          next += 1
-          state.put(e.path, entryToCp(e, next))
-        }
-      }
-    }
-    def presentShards(): Set[Int] =
-      if (!fs.exists(outRoot)) Set.empty
-      else fs.listStatus(outRoot).iterator.map(_.getPath.getName)
-        .filter(_.startsWith("shard=")).map(_.drop(6).toInt).toSet
-    if (state.nonEmpty)
-      spark.createDataset(state.values.toSeq)
+    // one shard skips the partitioned write, whose sort by shard made
+    // it 1.4-2x slower than a plain write of the same rows
+    if (rows.nonEmpty && k == 1)
+      spark.createDataset(rows).write.mode("errorifexists")
+        .parquet(new Path(outRoot, "shard=0").toString)
+    else if (rows.nonEmpty)
+      spark.createDataset(rows)
         .withColumn("shard",
-          pmod(crc32(encode(col("path"), "UTF-8")), lit(k.toLong))
-            .cast("int"))
+          pmod(crc32(encode(col("path"), "UTF-8")), lit(k.toLong)).cast("int"))
         .write.mode("errorifexists").partitionBy("shard")
         .parquet(outRoot.toString)
-    val refs = (prevRefs -- dirty) ++ presentShards().iterator.map(s =>
-      s -> s"sidecars/$uuid/shard=$s").toMap
-    // require: union of the prior gate and the replayed adds' features
-    val addFeatures = requiredFeatures(chain.flatMap(_._2).map(FileEntry.parse))
-    val prevReq = pcpMetaKv(pv).get("require")
-      .map(_.split(',').toSeq).getOrElse(Nil)
-    val req = (prevReq ++ addFeatures ++ Seq("pcp", "pcps"))
-      .filter(_.nonEmpty).distinct.sorted
-    val header = s"# checkpoint v=$v kind=parquet nf=$nf " +
-      s"ns=$k maxord=$next require=${req.mkString(",")}"
-    val refLines = refs.toSeq.sortBy(_._1).map { case (s, rel) =>
-      s"s\t$s\t$rel" }
-    val out = fs.create(pcpMetaPath(v), false)
-    try out.write(((header +: refLines) :+ CommitMarker)
-      .mkString("\n").getBytes(UTF_8))
-    finally out.close()
-    true
-  }
-
-  /** The COLUMNAR checkpoint write: a distributed parquet job into a
-    * UNIQUE temp directory, an atomic rename into place, then the `.pcp`
-    * meta as the single-write completeness marker (exclusive create).
-    * Two racers at the same version each write their own temp dir and
-    * exactly one rename + one meta create wins — the loser's artifacts
-    * delete; a reader can never observe a half-written or racer-clobbered
-    * part directory behind a published meta (the r12 check-then-overwrite
-    * race). Failure-tolerant like the text form — catching NonFatal, not
-    * just IOException: the parquet job is DISTRIBUTED, and an executor
-    * failure (SparkException) must not fail a commit whose manifest
-    * already landed (the checkpoint is an accelerator; the manifest
-    * chain stays sufficient on its own). Any error leaves at worst an
-    * unreferenced temp/part directory, reclaimed by [[vacuum]]. */
-  private def writeClassicParquetCheckpoint(v: Long,
-                                            files: Seq[FileEntry]): Unit = {
-    val tmp = new Path(logDir, f"v$v%020d.checkpoint.parquet.tmp." +
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    try {
-      if (fs.exists(pcpMetaPath(v))) return
-      import spark.implicits._
-      spark.createDataset(files.zipWithIndex.map { case (e, i) =>
-        entryToCp(e, i.toLong) })
-        .write.mode("errorifexists").parquet(tmp.toString)
-      // rename is the publish point for the DIRECTORY: it either lands
-      // whole or (racer already renamed) fails — never a partial dir at
-      // the final path. HDFS-like filesystems add a wrinkle: rename(src,
-      // dst) with dst an EXISTING directory moves src INTO dst and
-      // returns true, so a loser racing past the meta check would nest
-      // its temp dir inside the winner's published dir (duplicating
-      // every entry for recursive readers). Re-check the destination
-      // immediately before the rename, and verify no nested temp child
-      // landed after it — a nested child means we lost the race.
-      if (fs.exists(pcpDirPath(v)) || !fs.rename(tmp, pcpDirPath(v))) {
-        fs.delete(tmp, true); return
-      }
-      val nested = fs.globStatus(
-        new Path(pcpDirPath(v), "*.checkpoint.parquet.tmp.*"))
-      if (nested != null && nested.nonEmpty) {
-        nested.foreach(st => fs.delete(st.getPath, true))
-        return // lost race: the winner's dir (now clean) is the publish
-      }
-      val req = (requiredFeatures(files) :+ "pcp").distinct.sorted
-      val header = s"# checkpoint v=$v kind=parquet nf=${files.size} " +
-        s"require=${req.mkString(",")}"
-      val out = fs.create(pcpMetaPath(v), false)
-      try out.write((header + "\n" + CommitMarker).getBytes(UTF_8))
-      finally out.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        logWarning(s"parquet checkpoint v$v at $root not written " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}); the manifest " +
-          "chain remains sufficient")
-        try fs.delete(tmp, true)
-        catch { case _: java.io.IOException => () }
-    }
+    val written =
+      if (!fs.exists(outRoot)) Nil
+      else fs.listStatus(outRoot).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith("shard="))
+        .map(n => n.drop(6).toInt -> s"sidecars/$uuid/$n")
+    val gate = (req ++ Seq("pcp", "pcps")).filter(_.nonEmpty).distinct.sorted
+    writeTerminated(pcpMetaPath(v),
+      (s"# checkpoint v=$v kind=parquet nf=$nfOut ns=$k maxord=$maxOrd " +
+        s"require=${gate.mkString(",")}") +:
+        (kept ++ written).toSeq.sortBy(_._1).map { case (s, rel) =>
+          s"s\t$s\t$rel" })
   }
 
   private[acid] def nextVersion: Long = latestVersion.getOrElse(0L) + 1
@@ -3819,12 +3475,12 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       case Some(ps) => ps
       case None =>
         logWarning(s"parquet checkpoint v$found at $root is damaged: a " +
-          "sidecar shard dir is missing; distributed planning falling " +
+          "shard dir is missing; distributed planning falling " +
           "back to the manifest chain")
         return None
     }
     val scan =
-      if (prunePaths.isEmpty) // valid EMPTY sidecar checkpoint (nf=0)
+      if (prunePaths.isEmpty) // valid EMPTY checkpoint (nf=0)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           GraftTable.cpSchema)
@@ -3874,7 +3530,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       FileEntry(r.getString(0),
         stats = None,
         dvRef = if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        bytes = if (r.isNullAt(3)) None else Some(r.getLong(3)))
+        bytes = Option(r.get(3)).map(_.asInstanceOf[Long]))
     }
     val out = base.filterNot(e =>
       removed.contains(e.path) || added.contains(e.path)).toSeq ++
@@ -4338,7 +3994,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       commitDelta(v, retagOwn ++ retagOthers ++ newFiles,
         touched ++ others, op = op, dvs = allPayload, extraMeta = extra,
         pending = pending,
-        dvRestate = Some((if (allPayload.nonEmpty) Seq(v) else Nil,
+        restate = Some(Restate(if (allPayload.nonEmpty) Seq(v) else Nil,
           dvnExact)))
     }
   }
@@ -4743,12 +4399,12 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     val v = lv + 1
     val dved = dvEntries(lv)
     if (dved.isEmpty)
-      commitDelta(v, Nil, Nil, op = "reorg", dvRestate = Some((Nil, 0L)))
+      commitDelta(v, Nil, Nil, op = "reorg", restate = Some(Restate(Nil, 0L)))
     else {
       val payload = dved.map(e => e.path -> dvPositions(e)).toMap
       val retagged = dved.map(e => e.copy(dvRef = Some(v)))
       commitDelta(v, retagged, dved, op = "reorg", dvs = payload,
-        dvRestate = Some((Seq(v), dved.map(_.dvCount).sum)))
+        restate = Some(Restate(Seq(v), dved.map(_.dvCount).sum)))
     }
   }
 
@@ -5224,7 +4880,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * selects (the Delta table_changes-by-timestamp contract): `fromTs`
     * picks the FIRST commit at or after it, `toTs` the LAST commit at
     * or before it — both inclusive. The in-commit MONOTONE `ts=` stamps
-    * (max(now, parent+1), [[commit]]) make the mapping exact even under
+    * (max(now, parent+1), [[publish]]) make the mapping exact even under
     * writer clock skew: timestamps are strictly increasing with
     * version, so a wall-clock window selects one contiguous version
     * range and never an inverted or split one. O(retained versions)
@@ -5615,8 +5271,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       if (!selfSufficient && !complete) {
         fs.delete(checkpointPath(oldest), false)
         fs.delete(pcpMetaPath(oldest), false)
-        fs.delete(pcpDirPath(oldest), true)
-        writeCheckpoint(oldest, keepEntries(oldest))
+        writeCheckpoint(oldest, keepEntries(oldest).size,
+          keepEntries(oldest))
         if (!complete)
           throw new IllegalStateException(
             s"vacuum on $root: could not materialize a complete " +
@@ -5638,21 +5294,12 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       fs.delete(manifestPath(v), false)
       fs.delete(checkpointPath(v), false)
       fs.delete(pcpMetaPath(v), false)
-      fs.delete(pcpDirPath(v), true)
       if (!liveSidecars.contains(v)) {
         fs.delete(bloomSidecarPath(v), false)
         fs.delete(dvSidecarPath(v), false)
         fs.delete(ndvSidecarPath(v), false)
       }
     }
-    // orphaned parquet-checkpoint TEMP dirs (a writer crashed between its
-    // distributed write and the rename): never referenced by any meta, so
-    // reclaim unconditionally. Racing a live writer is benign — its
-    // rename just fails and the manifest chain stays sufficient.
-    if (fs.exists(logDir))
-      fs.listStatus(logDir).iterator
-        .filter(_.getPath.getName.contains(".checkpoint.parquet.tmp."))
-        .foreach(st => fs.delete(st.getPath, true))
     // change-data dirs: keep those referenced by a RETAINED version;
     // a dropped version's dir is provably dead, and an UNREFERENCED dir
     // is reclaimed only past an age gate — a live writer may have
@@ -5667,8 +5314,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           now - st.getModificationTime > GraftTable.ChangeDirOrphanAgeMs)
         .foreach(st => fs.delete(st.getPath, true))
     }
-    // checkpoint SIDECAR roots: keep any uuid root a RETAINED version's
-    // .pcp meta references (incremental checkpoints SHARE shard dirs
+    // checkpoint shard roots: keep any uuid root a RETAINED version's
+    // .pcp meta references (extending checkpoints SHARE shard dirs
     // across versions, so a dropped meta's root may still be live);
     // everything else reclaims past the same age gate as change dirs —
     // a live writer may have finished its shard job but not yet
@@ -5743,13 +5390,32 @@ object GraftTable {
     * the referencing commit must not lose them to a racing vacuum. */
   private[acid] val ChangeDirOrphanAgeMs = 10L * 60L * 1000L
 
-  /** Entry count past which parquet checkpoints AUTO-switch to the
-    * sidecar (incremental) form, and the shard count they use then. At
-    * 100k+ entries a full checkpoint rewrite moves tens of MB of
-    * metadata per cadence tick; sharded, each tick rewrites only the
-    * delta-touched shards (~nf/64 entries each). A mixed history is
-    * fine — an incremental write only chains off a SAME-k sidecar
-    * predecessor and otherwise falls back to a full sharded write. */
+  /** Header counts a front end states EXACTLY, in place of the
+    * publisher's arithmetic over the parent header (which can only
+    * over-approximate `dvsv=` — it never drops a dereferenced sidecar
+    * version): `dvsv=` and `dvn=` always, and `nf=`/`nr=` too when the
+    * front end holds the whole list (`nf` defined; `nr` None then means
+    * not stated — some entry has no row count). */
+  private[acid] final case class Restate(dvsv: Seq[Long], dvn: Long,
+                                         nf: Option[Long] = None,
+                                         nr: Option[Long] = None)
+
+  /** One version's body for [[publish]]: the adds and removes against
+    * v-1, or — when `full` — the whole `held` list as a `kind=full`
+    * body. `held` = version v's whole entry list when the front end has
+    * it: cached as v's resolution and checkpointed without a re-read. */
+  private[acid] final case class Staged(adds: Seq[FileEntry],
+                                        removes: Seq[FileEntry],
+                                        restate: Option[Restate] = None,
+                                        held: Option[Seq[FileEntry]] = None,
+                                        full: Boolean = false)
+
+  /** Entry count past which parquet checkpoints AUTO-switch from one
+    * shard to this many. At 100k+ entries a full checkpoint rewrite
+    * moves tens of MB of metadata per cadence tick; at 64 shards each
+    * tick rewrites only the delta-touched shards (~nf/64 entries each).
+    * A mixed history is fine — a write only extends a SAME-k
+    * predecessor and otherwise writes every shard. */
   private[acid] val AutoShardMinFiles = 100000
   private[acid] val AutoShardCount = 64
 

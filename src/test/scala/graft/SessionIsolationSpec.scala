@@ -36,7 +36,7 @@ class SessionIsolationSpec extends SparkSpec {
     c.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     c.conf.set("spark.graft.acid.writeChangeData", "false")
     c.conf.set("spark.graft.acid.parquetCheckpointMinFiles", "10000")
-    c.conf.set("spark.graft.acid.checkpointShards", "0")
+    c.conf.set("spark.graft.acid.checkpointShards", "1")
     acid.GraftDvScanRewrite.installAll(c)
     c.experimental.extraStrategies =
       c.experimental.extraStrategies :+ plans.TopKPerKeyStrategy

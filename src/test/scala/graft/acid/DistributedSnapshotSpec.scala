@@ -86,39 +86,6 @@ class DistributedSnapshotSpec extends SparkSpec {
     }
   }
 
-  test("entries without a size tag fall back to the listing reader, same content") {
-    locally {
-      // default checkpoint cadence: v1 has ONLY its manifest, so the
-      // in-place fz strip below is the complete pre-r17 log shape
-      val root = graft.TempDirs.create("graft_distsnap_nofz")
-      val t = new GraftTable(spark, root, statsCol = Some("k"))
-      t.append((1L to 50L).map(i => (i, i * 1.0)).toDF("k", "v"))
-      // strip the fz= tags from the manifest IN PLACE (a pre-r17 log)
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val m = new org.apache.hadoop.fs.Path(root, f"_log/v${1L}%020d.manifest")
-      val lines = scala.io.Source.fromInputStream(fs.open(m)).getLines()
-        .map(_.split('\t').filterNot(_.startsWith("fz=")).mkString("\t"))
-        .toList
-      fs.delete(m, false)
-      val out = fs.create(m, true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-      val cold = new GraftTable(spark, root, statsCol = Some("k"))
-      val df = cold.snapshot()
-      val logServed = df.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if l.relation.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-            l.relation.asInstanceOf[
-              org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-              .location.isInstanceOf[GraftLogFileIndex] => l
-      }
-      assert(logServed.isEmpty,
-        "a size-less legacy manifest must use the listing reader")
-      assert(df.count() == 50L)
-    }
-  }
-
   test("the slim path and the driver path serve identical content") {
     withDistributed {
       val root = graft.TempDirs.create("graft_distsnap_eq")

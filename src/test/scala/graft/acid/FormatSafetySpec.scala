@@ -11,7 +11,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *  - every manifest ends in the `# ok` terminator, every bloom sidecar
   *    carries the `# scheme=long` header (integral columns pre-widened
   *    to long, matching the long-hashing probe), every manifest header
-  *    states `dvn=`;
+  *    states `dvn=`, every entry records `fz=` and every parquet
+  *    checkpoint meta states `ns=`;
   *  - a log artifact missing one of those is refused loudly, naming the
   *    table — read with today's meaning it could skip files that hold
   *    matching rows or understate the deletion-vector debt;
@@ -68,6 +69,35 @@ class FormatSafetySpec extends SparkSpec {
     try out.write(f(txt).getBytes(UTF_8)) finally out.close()
   }
 
+  /** Vacuum `root` to its latest version, which checkpoints it as parquet,
+    * then rewrite that checkpoint into the retired single-directory form:
+    * its one shard dir moves to `v<n>.checkpoint.parquet` and the meta
+    * loses `ns=`, `maxord=`, the `pcps` gate and its shard lines. */
+  private def classicCheckpoint(root: String): Unit = {
+    val cp = graft.GraftSession.cloneFor(spark, "format-safety-parquet-cp")(
+      _.conf.set("spark.graft.acid.parquetCheckpointMinFiles", "1"))
+    val t = GraftTable.load(cp, root)
+    t.vacuum(retain = 1)
+    val log = s"$root/_log/v${"%020d".format(t.latestVersion.get)}"
+    val f = fs(root)
+    val meta = new Path(s"$log.pcp")
+    val lines = {
+      val in = f.open(meta)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    }
+    lines.filter(_.startsWith("s\t")).foreach(l =>
+      f.rename(new Path(s"$root/_log/${l.split('\t')(2)}"),
+        new Path(s"$log.checkpoint.parquet")))
+    f.delete(meta, false)
+    val out = f.create(meta, false)
+    try out.write(lines.filterNot(_.startsWith("s\t")).map(l =>
+      if (!l.startsWith("# checkpoint")) l
+      else l.replaceAll(" (ns|maxord)=\\d+", "").replace(",pcps", ""))
+      .mkString("\n").getBytes(UTF_8))
+    finally out.close()
+  }
+
   test("log shapes no writer produces are refused loudly, naming the table") {
     // each case: build a table, rewrite one artifact into a retired
     // shape, then run the operation that would read it with today's
@@ -90,7 +120,16 @@ class FormatSafetySpec extends SparkSpec {
           if (l.startsWith("# op=")) l.replaceAll(" dvn=\\d+", "")
             .replaceAll(" dvsv=[\\d,]+", "")
           else l).mkString("\n")),
-        t => t.delete(col("id") === 7L)))
+        t => t.delete(col("id") === 7L)),
+      // the retired single-directory parquet checkpoint: a `.pcp` meta
+      // without ns= or shard lines over `v<n>.checkpoint.parquet`, with
+      // the chain below it vacuumed
+      ("classic parquet checkpoint", root => classicCheckpoint(root),
+        t => t.snapshot().count()),
+      // an entry line without its fz= byte length
+      ("entry without fz=", root => rewriteManifest(root, 1L)(
+        _.replaceAll("\tfz=\\d+", "")),
+        t => t.snapshot().count()))
     cases.foreach { case (shape, retire, op) =>
       val root = graft.TempDirs.create("graft_retired")
       val t = new GraftTable(spark, root, bloomCol = Some("id"))

@@ -21,18 +21,20 @@ class LogFuzzSpec extends SparkSpec {
 
   test("the same 60-commit model over PARQUET checkpoints (cold-handle parity)") {
     // force every checkpoint materialization (cadence + vacuum) into the
-    // columnar form — the fuzz's fresh-handle checks then resolve purely
-    // through parquet checkpoints + delta chains instead of text ones
+    // parquet form at its default single shard — the fuzz's fresh-handle
+    // checks then resolve purely through parquet checkpoints + delta
+    // chains instead of text ones
     spark.conf.set("spark.graft.acid.parquetCheckpointMinFiles", "1")
     try runFuzz()
     finally spark.conf.unset("spark.graft.acid.parquetCheckpointMinFiles")
   }
 
   test("the same 60-commit model over SIDECAR (incremental) checkpoints") {
-    // every checkpoint goes through the sharded sidecar form, most of
-    // them INCREMENTAL (reused shard dirs) — cold-handle parity then
-    // proves the dirty-shard bookkeeping reconstructs the exact entry
-    // set under every op mix, vacuum sweep and crashed-txn no-op
+    // every checkpoint goes through the parquet form at 4 shards, most
+    // of them EXTENDING the previous one (reused shard dirs) — cold-
+    // handle parity then proves the dirty-shard bookkeeping reconstructs
+    // the exact entry set under every op mix, vacuum sweep and
+    // crashed-txn no-op
     spark.conf.set("spark.graft.acid.parquetCheckpointMinFiles", "1")
     spark.conf.set("spark.graft.acid.checkpointShards", "4")
     try runFuzz()

@@ -235,10 +235,7 @@ class MergeChangeDataSpec extends SparkSpec {
     val t = new GraftTable(spark, root, statsCol = Some("id"))
     t.append((1L to 30L).map(i => (i, i * 1.0)).toDF("id", "v"))   // v1
     t.update(col("id") <= 5L, Map("v" -> (col("v") + 100.0)))      // v2
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master(spark.sparkContext.master)
-      .withExtensions(new graft.GraftExtensions)
-      .create()
+    val s2 = graft.GraftSession.withExtensions(spark)
     val viaTvf = s2.sql(
       s"SELECT id, v, _change FROM table_changes('$root', 1, 2)")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet

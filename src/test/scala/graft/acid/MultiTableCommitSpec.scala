@@ -472,10 +472,7 @@ class MultiTableCommitSpec extends SparkSpec {
     // later writes the pin must ignore
     ta.append(df(11 to 20)); tb.append(df(11 to 30))
     // TVF + DESCRIBE TXN are extension grammar — a derived session
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master(spark.sparkContext.master)
-      .withExtensions(new graft.GraftExtensions)
-      .create()
+    val s2 = graft.GraftSession.withExtensions(spark)
     val joined = s2.sql(
       s"""SELECT count(*) AS n FROM snapshot_at_txn('${ta.root}', '$txnId') a
          |JOIN snapshot_at_txn('${tb.root}', '$txnId') b ON a.k = b.k""".stripMargin)

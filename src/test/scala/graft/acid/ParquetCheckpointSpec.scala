@@ -7,12 +7,25 @@ import graft.SparkSpec
   * reads, feature gating, and vacuum integration. The text checkpoint
   * is a single driver-parsed file — fine at thousands of entries, the
   * cold-start bottleneck at ~10⁶ — so past a file-count threshold the
-  * materialization switches to a parquet directory read as an ordinary
-  * distributed, column-prunable scan (the public Delta
-  * parquet-checkpoint design). */
+  * materialization switches to sharded parquet directories (one shard
+  * below 100k entries) read as an ordinary distributed, column-prunable
+  * scan (the public Delta parquet-checkpoint design). */
 class ParquetCheckpointSpec extends SparkSpec {
 
   private val MinFilesKey = "spark.graft.acid.parquetCheckpointMinFiles"
+
+  private def fs = org.apache.hadoop.fs.FileSystem.get(
+    spark.sparkContext.hadoopConfiguration)
+
+  private def pcpMeta(root: String, v: Long) =
+    new org.apache.hadoop.fs.Path(s"$root/_log/v${"%020d".format(v)}.pcp")
+
+  /** The shard directories version `v`'s `.pcp` meta references. */
+  private def shardDirs(root: String, v: Long): Seq[org.apache.hadoop.fs.Path] =
+    scala.io.Source.fromInputStream(fs.open(pcpMeta(root, v))).getLines()
+      .filter(_.startsWith("s\t"))
+      .map(l => new org.apache.hadoop.fs.Path(s"$root/_log/${l.split('\t')(2)}"))
+      .toSeq
 
   /** A synthetic entry exercising EVERY tag family the manifest line
     * format carries — stats, partition window, sidecar bloom and ndv
@@ -92,7 +105,8 @@ class ParquetCheckpointSpec extends SparkSpec {
       // lean entries at this scale (stats + rows), the realistic shape
       val entries = (0 until 100000).map { i =>
         GraftTable.FileEntry(f"data/c1-fake/part-$i%06d.parquet",
-          stats = Some((i.toLong, i + 10L)), rows = Some(10L + (i % 5)))
+          stats = Some((i.toLong, i + 10L)), rows = Some(10L + (i % 5)),
+          bytes = Some(1000L + i))
       }
       t.commit(1L, entries, op = "append")
       val cold = new GraftTable(spark, root, checkpointInterval = 1)
@@ -171,15 +185,12 @@ class ParquetCheckpointSpec extends SparkSpec {
     try (1 to 3).foreach(i =>
       t.append(Seq((i.toLong, s"r$i")).toDF("id", "s")))
     finally spark.conf.unset(MinFilesKey)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(
-      s"$root/_log/v${"%020d".format(3)}.checkpoint.parquet")
-    assert(fs.exists(dir))
+    val dirs = shardDirs(root, 3L)
+    assert(dirs.nonEmpty && dirs.forall(fs.exists))
     // damage the PART FILES under a published meta (the torn shape a
     // crash or external interference leaves): resolution must fall back
     // to the delta-chain walk while it exists, not fail the table
-    fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-"))
+    dirs.flatMap(fs.listStatus(_)).filter(_.getPath.getName.startsWith("part-"))
       .foreach(st => fs.delete(st.getPath, false))
     val cold = new GraftTable(spark, root)
     assert(cold.entries(3L).size == 3,
@@ -257,11 +268,7 @@ class ParquetCheckpointSpec extends SparkSpec {
       // declares reachable. The distributed prune must detect the nf
       // mismatch and fall back to the manifest chain, NOT silently
       // return fewer survivors (= silently dropped rows).
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      val dir = new org.apache.hadoop.fs.Path(
-        s"$root/_log/v${"%020d".format(1)}.checkpoint.parquet")
-      val part = fs.listStatus(dir)
+      val part = shardDirs(root, 1L).flatMap(fs.listStatus(_))
         .filter(_.getPath.getName.startsWith("part-")).head.getPath
       fs.delete(part, false)
       val pred = col("k") >= 50L && col("k") <= 60L
@@ -309,32 +316,25 @@ class ParquetCheckpointSpec extends SparkSpec {
       val t = new GraftTable(spark, root, checkpointInterval = 1)
       import spark.implicits._
       (1 to 4).foreach(i => t.append(Seq((i.toLong, s"r$i")).toDF("id", "s")))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      def pcpMeta(v: Long) =
-        new org.apache.hadoop.fs.Path(s"$root/_log/v${"%020d".format(v)}.pcp")
-      def pcpDir(v: Long) = new org.apache.hadoop.fs.Path(
-        s"$root/_log/v${"%020d".format(v)}.checkpoint.parquet")
-      assert(fs.exists(pcpMeta(4L)) && fs.exists(pcpDir(4L)))
+      assert(fs.exists(pcpMeta(root, 4L)) && shardDirs(root, 4L).forall(fs.exists))
+      def rewriteMeta(text: String): Unit = {
+        fs.delete(pcpMeta(root, 4L), false)
+        val out = fs.create(pcpMeta(root, 4L), false)
+        try out.write(text.getBytes("UTF-8")) finally out.close()
+      }
+      val sane = scala.io.Source.fromInputStream(fs.open(pcpMeta(root, 4L))).mkString
       // doctor v4's meta to require a feature this reader lacks
-      fs.delete(pcpMeta(4L), false)
-      val out = fs.create(pcpMeta(4L), false)
-      out.write("# checkpoint v=4 kind=parquet nf=4 require=zzz\n# ok"
-        .getBytes("UTF-8"))
-      out.close()
+      rewriteMeta(sane.replaceFirst("require=\\S+", "require=zzz"))
       val e = intercept[IllegalStateException](
         new GraftTable(spark, root).entries(4L))
       assert(e.getMessage.contains("zzz"), e.getMessage)
-      // restore a sane meta, then vacuum: artifacts of dropped versions
-      // (meta + parquet dir) must be reclaimed
-      fs.delete(pcpMeta(4L), false)
-      val out2 = fs.create(pcpMeta(4L), false)
-      out2.write("# checkpoint v=4 kind=parquet nf=4 require=pcp\n# ok"
-        .getBytes("UTF-8"))
-      out2.close()
+      // restore the sane meta, then vacuum: the metas of dropped
+      // versions are reclaimed, the retained one's shards are kept
+      rewriteMeta(sane)
       t.vacuum(retain = 1)
-      assert(!fs.exists(pcpMeta(1L)) && !fs.exists(pcpDir(1L)),
+      assert(!fs.exists(pcpMeta(root, 1L)),
         "vacuum must reclaim dropped parquet checkpoints")
+      assert(shardDirs(root, 4L).forall(fs.exists))
       assert(new GraftTable(spark, root).snapshot().count() == 4L)
     } finally spark.conf.unset(MinFilesKey)
   }

@@ -1,7 +1,7 @@
 package graft.acid
 
 import graft.SparkSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Selective atomic overwrite ([[GraftTable.replaceWhere]], the public
@@ -141,12 +141,7 @@ class ReplaceWhereSpec extends SparkSpec {
   }
 
   test("SQL face: INSERT INTO ... REPLACE WHERE; plain INSERT still delegates") {
-    spark.sparkContext // force the shared context; create() reuses it
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .create()
+    val s2 = graft.GraftSession.withExtensions(spark)
     import s2.implicits._
     val wh = graft.TempDirs.create("graft_rw_sql_wh")
     s2.conf.set("spark.sql.catalog.grw", "graft.acid.GraftCatalog")

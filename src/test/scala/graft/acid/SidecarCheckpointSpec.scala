@@ -58,9 +58,6 @@ class SidecarCheckpointSpec extends SparkSpec {
       assert(refs.nonEmpty && refs.forall(_.startsWith("sidecars/")))
       refs.foreach(rel => assert(fs.exists(new Path(s"$root/_log/$rel")),
         s"referenced shard dir must exist: $rel"))
-      assert(!fs.exists(new Path(
-        s"$root/_log/v${"%020d".format(1)}.checkpoint.parquet")),
-        "the classic part dir must not be written in sidecar mode")
       val cold = new GraftTable(spark, root, checkpointInterval = 1)
       assert(cold.entries(1L).map(_.line).sorted == es.map(_.line).sorted,
         "cold sidecar resolution must be line-identical")

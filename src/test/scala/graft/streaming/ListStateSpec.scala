@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.tracks.TrackStateOp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Multi-batch ListState semantics the oracle's single-batch replay
@@ -16,29 +15,22 @@ class ListStateSpec extends SparkSpec {
     RecentEv(user, ts, id, s"t$id")
 
   private def run(cap: Int)(batches: Seq[RecentEv]*): Map[Long, Seq[(Long, Long)]] = {
-    val prev = spark.conf.getOption(TrackStateOp.rocksdbConf._1)
-    spark.conf.set(TrackStateOp.rocksdbConf._1, TrackStateOp.rocksdbConf._2)
+    val input = MemoryStream[RecentEv](rocksSpark)
+    val qn = "ls" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = RecentEventsList.recent(input.toDS(), cap).toDF()
+      .writeStream.format("memory").queryName(qn)
+      .outputMode("update").start()
     try {
-      val input = MemoryStream[RecentEv](spark)
-      val qn = "ls" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = RecentEventsList.recent(input.toDS(), cap).toDF()
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("update").start()
-      try {
-        batches.foreach { b => input.addData(b); q.processAllAvailable() }
-        val rows = spark.table(qn)
-          .as[RecentRow].collect().toSeq
-        // each key's answer = its max-seen emission, newest first
-        rows.groupBy(_.user_id).map { case (u, rs) =>
-          val mx = rs.map(_.seen).max
-          u -> rs.filter(_.seen == mx).map(r => (r.tsUs, r.event_id))
-            .sortBy { case (ts, id) => (-ts, -id) }
-        }
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(TrackStateOp.rocksdbConf._1, v)
-      case None    => spark.conf.unset(TrackStateOp.rocksdbConf._1)
-    }
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      val rows = rocksSpark.table(qn)
+        .as[RecentRow].collect().toSeq
+      // each key's answer = its max-seen emission, newest first
+      rows.groupBy(_.user_id).map { case (u, rs) =>
+        val mx = rs.map(_.seen).max
+        u -> rs.filter(_.seen == mx).map(r => (r.tsUs, r.event_id))
+          .sortBy { case (ts, id) => (-ts, -id) }
+      }
+    } finally q.stop()
   }
 
   test("appends accumulate across batches and evict the oldest past cap") {

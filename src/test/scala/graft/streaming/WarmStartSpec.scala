@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.tracks.TrackStateOp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** StatefulProcessorWithInitialState semantics: the snapshot must seed
@@ -16,27 +15,20 @@ class WarmStartSpec extends SparkSpec {
 
   private def run(cap: Int, init: Seq[RecentSnapshot])(
       batches: Seq[RecentEv]*): Map[Long, Seq[(Long, Long)]] = {
-    val prev = spark.conf.getOption(TrackStateOp.rocksdbConf._1)
-    spark.conf.set(TrackStateOp.rocksdbConf._1, TrackStateOp.rocksdbConf._2)
+    val input = MemoryStream[RecentEv](rocksSpark)
+    val qn = "ws" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = RecentEventsList.warmStart(input.toDS(), rocksSpark.createDataset(init), cap)
+      .toDF().writeStream.format("memory").queryName(qn)
+      .outputMode("update").start()
     try {
-      val input = MemoryStream[RecentEv](spark)
-      val qn = "ws" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = RecentEventsList.warmStart(input.toDS(), init.toDS(), cap)
-        .toDF().writeStream.format("memory").queryName(qn)
-        .outputMode("update").start()
-      try {
-        batches.foreach { b => input.addData(b); q.processAllAvailable() }
-        val rows = spark.table(qn).as[RecentRow].collect().toSeq
-        rows.groupBy(_.user_id).map { case (u, rs) =>
-          val mx = rs.map(_.seen).max
-          u -> rs.filter(_.seen == mx).map(r => (r.tsUs, r.event_id))
-            .sortBy { case (ts, id) => (-ts, -id) }
-        }
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(TrackStateOp.rocksdbConf._1, v)
-      case None    => spark.conf.unset(TrackStateOp.rocksdbConf._1)
-    }
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      val rows = rocksSpark.table(qn).as[RecentRow].collect().toSeq
+      rows.groupBy(_.user_id).map { case (u, rs) =>
+        val mx = rs.map(_.seen).max
+        u -> rs.filter(_.seen == mx).map(r => (r.tsUs, r.event_id))
+          .sortBy { case (ts, id) => (-ts, -id) }
+      }
+    } finally q.stop()
   }
 
   test("snapshot events newer than every stream event dominate the answer") {

@@ -1333,14 +1333,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       val removed = prev.filter(e => !newLines.get(e.path).contains(e.line))
       val added = finalFiles.filter(e =>
         !prevLines.get(e.path).contains(e.line))
-      Staged(added, removed,
-        Some(Restate(finalFiles.flatMap(_.dvRef).distinct.sorted,
-          finalFiles.map(_.dvCount).sum, Some(finalFiles.size.toLong),
-          if (finalFiles.forall(_.rows.isDefined))
-            Some(finalFiles.map(e => e.rows.get - e.dvCount).sum)
-          else None)),
-        held = Some(finalFiles),
-        full = removed.size + added.size > finalFiles.size)
+      Staged(added, removed, held = Some(finalFiles))
     }
 
   /** DELTA-FIRST commit (the 100 TB ingest path): publish version `v`
@@ -1464,43 +1457,54 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       val adds = moveToSidecars(v, s.adds)
       if (dvs.nonEmpty)
         writeSidecar(dvSidecarPath(v), dvs.toSeq.sortBy(_._1))
+      // a held list is stated whole (`kind=full`) when the delta is the
+      // longer statement (overwrite, compact)
+      val full = s.held.exists(h => s.removes.size + adds.size > h.size)
       val body =
-        if (s.full) s.held.get.map(_.line)
+        if (full) s.held.get.map(_.line)
         else s.removes.map(e => s"-\t${e.path}") ++ adds.map(e => s"+\t${e.line}")
       // feature gate over THIS manifest's body (a delta gates only what
       // it states; the chain's older artifacts gate their own) — see
       // [[checkRequiredFeatures]]. cm is a HEADER-level feature: a
       // non-identity column mapping makes logical-name projection wrong
       // for any reader that ignores it
-      val req = (requiredFeatures(if (s.full) s.held.get else adds) ++
+      val req = (requiredFeatures(if (full) s.held.get else adds) ++
         (if (cmapFinal.nonEmpty) Seq("cm") else Nil)).distinct.sorted
-      // nf/nr by arithmetic over the parent header unless restated (a
-      // modified path appears on both sides and nets to 0); nr only
-      // carries while the chain can state it exactly
-      val (nf, nr) = s.restate.flatMap(r => r.nf.map(_ -> r.nr)).getOrElse {
-        val prevNf = prevMeta.get("nf").flatMap(_.toLongOption).getOrElse(0L)
-        (prevNf - s.removes.size + adds.size,
-          prevMeta.get("nr").flatMap(_.toLongOption)
-            .orElse(if (v <= 1L) Some(0L) else None)
-            .filter(_ => (adds ++ s.removes).forall(_.rows.isDefined))
-            .map(prevNr => prevNr +
-              adds.map(e => e.rows.get - e.dvCount).sum -
-              s.removes.map(e => e.rows.get - e.dvCount).sum))
-      }
-      // live-mask bookkeeping (the delta-first DV path's decision inputs
-      // — see [[deleteViaDv]]): `dvsv=` the distinct dv sidecar versions
-      // the active set MAY reference (by arithmetic an over-
-      // approximation — a removed last-referencing entry keeps its ref
-      // listed until a restatement; only ever causes an earlier
+      // header counts: exact from a held list; otherwise nf/nr by
+      // arithmetic over the parent header (a modified path appears on
+      // both sides and nets to 0; nr only carries while the chain can
+      // state it exactly) and the live-mask bookkeeping (the delta-first
+      // DV path's decision inputs — see [[deleteViaDv]]) from a
+      // restatement or the same arithmetic: `dvsv=` the distinct dv
+      // sidecar versions the active set MAY reference (by arithmetic an
+      // over-approximation — a removed last-referencing entry keeps its
+      // ref listed until a restatement; only ever causes an earlier
       // coalescing fallback, never a wrong read), `dvn=` the exact total
       // masked rows. dvn= is stated even at 0, so the auto-purge
       // decision and the delta arithmetic stay header reads.
-      val dvsv = s.restate.map(_.dvsv.distinct.sorted).getOrElse(
-        (prevMeta.get("dvsv").toSeq.flatMap(_.split(","))
-          .flatMap(_.toLongOption) ++ adds.flatMap(_.dvRef))
-          .distinct.sorted)
-      val dvn = s.restate.map(_.dvn).getOrElse(prevDvn +
-        adds.map(_.dvCount).sum - s.removes.map(_.dvCount).sum)
+      val (nf, nr, dvsv, dvn) = s.held match {
+        case Some(h) =>
+          (h.size.toLong,
+            if (h.forall(_.rows.isDefined))
+              Some(h.map(e => e.rows.get - e.dvCount).sum)
+            else None,
+            h.flatMap(_.dvRef).distinct.sorted, h.map(_.dvCount).sum)
+        case None =>
+          val prevNf = prevMeta.get("nf").flatMap(_.toLongOption).getOrElse(0L)
+          (prevNf - s.removes.size + adds.size,
+            prevMeta.get("nr").flatMap(_.toLongOption)
+              .orElse(if (v <= 1L) Some(0L) else None)
+              .filter(_ => (adds ++ s.removes).forall(_.rows.isDefined))
+              .map(prevNr => prevNr +
+                adds.map(e => e.rows.get - e.dvCount).sum -
+                s.removes.map(e => e.rows.get - e.dvCount).sum),
+            s.restate.map(_.dvsv.distinct.sorted).getOrElse(
+              (prevMeta.get("dvsv").toSeq.flatMap(_.split(","))
+                .flatMap(_.toLongOption) ++ adds.flatMap(_.dvRef))
+                .distinct.sorted),
+            s.restate.map(_.dvn).getOrElse(prevDvn +
+              adds.map(_.dvCount).sum - s.removes.map(_.dvCount).sum))
+      }
       // cumulative (writer -> newest epoch) map CARRIED FORWARD like the
       // schema (the Delta checkpoint setTxn pattern): [[lastTxn]] then
       // answers from the LATEST header alone — O(1) per streaming batch
@@ -1511,7 +1515,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       // clustering/scoping/validation via GraftTable.load instead of
       // silently degrading to an unconfigured table. Constraints are
       // base64-coded (they contain spaces; header fields split on them).
-      val cfg = (Seq(s"kind=${if (s.full) "full" else "delta"}", s"nf=$nf") ++
+      val cfg = (Seq(s"kind=${if (full) "full" else "delta"}", s"nf=$nf") ++
         nr.map(n => s"nr=$n").toSeq ++
         (if (dvsv.isEmpty) Nil else Seq(s"dvsv=${dvsv.mkString(",")}")) ++
         Seq(s"dvn=$dvn") ++
@@ -1639,9 +1643,10 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * entries shard by [[shardOf]] into dirs under
     * `_log/sidecars/<uuid>/shard=<s>`, and the `.pcp` meta lists the
     * shard dirs (`s\t<shard>\t<relpath>` lines) behind the `nf=`
-    * completeness gate. When the nearest checkpoint below `v` has the
-    * same shard count `k` and only delta manifests lie between, the
-    * write EXTENDS it: the shards those deltas touch rebuild from the
+    * completeness gate. Extension exists to skip untouched shards, so
+    * with `k > 1`, when the nearest checkpoint below `v` has the same
+    * shard count and only delta manifests lie between, the write
+    * EXTENDS it: the shards those deltas touch rebuild from the
     * prior checkpoint's own rows plus an ascending replay of the deltas
     * (v's included — its manifest is complete on disk by now), and the
     * untouched shards' dirs are re-referenced verbatim, so driver state
@@ -1686,7 +1691,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         else extendable(b - 1, lines :: chain)
       }
     import spark.implicits._
-    val (rows, kept, maxOrd, nfOut, req) = extendable(v, Nil) match {
+    val base = if (k > 1) extendable(v, Nil) else None
+    val (rows, kept, maxOrd, nfOut, req) = base match {
       case Some((pv, prevMax, manifests)) =>
         val chain = manifests.map(lines => (
           lines.collect { case l if l.startsWith("-\t") => l.drop(2) },
@@ -1720,12 +1726,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     }
     val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
     val outRoot = new Path(sidecarsRoot, uuid)
-    // one shard skips the partitioned write, whose sort by shard made
-    // it 1.4-2x slower than a plain write of the same rows
-    if (rows.nonEmpty && k == 1)
-      spark.createDataset(rows).write.mode("errorifexists")
-        .parquet(new Path(outRoot, "shard=0").toString)
-    else if (rows.nonEmpty)
+    if (rows.nonEmpty)
       spark.createDataset(rows)
         .withColumn("shard",
           pmod(crc32(encode(col("path"), "UTF-8")), lit(k.toLong)).cast("int"))
@@ -5290,6 +5291,18 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     val liveCdc = keepVs.flatMap(v => headerMeta(v).get("cdc")).toSet
     val droppedCdc = vs.dropRight(retain)
       .flatMap(v => headerMeta(v).get("cdc")).toSet -- liveCdc
+    // checkpoint shard roots the same way, from the .pcp metas: keep any
+    // uuid root a RETAINED meta references (extending checkpoints SHARE
+    // shard dirs across versions, so a dropped meta's root may still be
+    // live); a root only dropped metas reference is provably dead. The
+    // parse is best-effort: even a corrupted meta's VALID lines keep
+    // their roots alive (deleting one shared with a healthy checkpoint
+    // would damage that one too)
+    def shardRoots(v: Long): Seq[String] =
+      pcpShardRefsRaw(v)._1.flatMap(_._2.split('/').lift(1))
+    val liveUuids = keepVs.flatMap(shardRoots).toSet
+    val droppedUuids = vs.dropRight(retain).flatMap(shardRoots).toSet --
+      liveUuids
     vs.dropRight(retain).foreach { v =>
       fs.delete(manifestPath(v), false)
       fs.delete(checkpointPath(v), false)
@@ -5314,22 +5327,15 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           now - st.getModificationTime > GraftTable.ChangeDirOrphanAgeMs)
         .foreach(st => fs.delete(st.getPath, true))
     }
-    // checkpoint shard roots: keep any uuid root a RETAINED version's
-    // .pcp meta references (extending checkpoints SHARE shard dirs
-    // across versions, so a dropped meta's root may still be live);
-    // everything else reclaims past the same age gate as change dirs —
+    // checkpoint shard roots: a dropped checkpoint's roots go now; an
+    // UNREFERENCED root reclaims past the same age gate as change dirs —
     // a live writer may have finished its shard job but not yet
     // published the referencing meta.
     if (fs.exists(sidecarsRoot)) {
-      // best-effort parse: even a corrupted meta's VALID lines keep
-      // their shard roots alive (deleting one shared with a healthy
-      // checkpoint would damage that one too)
-      val liveUuids = keepVs.flatMap(v => pcpShardRefsRaw(v)._1.map(_._2))
-        .flatMap(_.split('/').lift(1)).toSet
       val now = System.currentTimeMillis()
       fs.listStatus(sidecarsRoot).iterator
         .filterNot(st => liveUuids.contains(st.getPath.getName))
-        .filter(st =>
+        .filter(st => droppedUuids.contains(st.getPath.getName) ||
           now - st.getModificationTime > GraftTable.ChangeDirOrphanAgeMs)
         .foreach(st => fs.delete(st.getPath, true))
     }
@@ -5390,25 +5396,21 @@ object GraftTable {
     * the referencing commit must not lose them to a racing vacuum. */
   private[acid] val ChangeDirOrphanAgeMs = 10L * 60L * 1000L
 
-  /** Header counts a front end states EXACTLY, in place of the
-    * publisher's arithmetic over the parent header (which can only
-    * over-approximate `dvsv=` — it never drops a dereferenced sidecar
-    * version): `dvsv=` and `dvn=` always, and `nf=`/`nr=` too when the
-    * front end holds the whole list (`nf` defined; `nr` None then means
-    * not stated — some entry has no row count). */
-  private[acid] final case class Restate(dvsv: Seq[Long], dvn: Long,
-                                         nf: Option[Long] = None,
-                                         nr: Option[Long] = None)
+  /** Live-mask counts (`dvsv=`, `dvn=`) a mask-merge states EXACTLY, in
+    * place of the publisher's arithmetic over the parent header (which
+    * can only over-approximate `dvsv=` — it never drops a dereferenced
+    * sidecar version). */
+  private[acid] final case class Restate(dvsv: Seq[Long], dvn: Long)
 
   /** One version's body for [[publish]]: the adds and removes against
-    * v-1, or — when `full` — the whole `held` list as a `kind=full`
-    * body. `held` = version v's whole entry list when the front end has
-    * it: cached as v's resolution and checkpointed without a re-read. */
+    * v-1. `held` = version v's whole entry list when the front end has
+    * it: every header count is stated from it, the body is the whole
+    * list (`kind=full`) when that is shorter than the delta, and it is
+    * cached as v's resolution and checkpointed without a re-read. */
   private[acid] final case class Staged(adds: Seq[FileEntry],
                                         removes: Seq[FileEntry],
                                         restate: Option[Restate] = None,
-                                        held: Option[Seq[FileEntry]] = None,
-                                        full: Boolean = false)
+                                        held: Option[Seq[FileEntry]] = None)
 
   /** Entry count past which parquet checkpoints AUTO-switch from one
     * shard to this many. At 100k+ entries a full checkpoint rewrite

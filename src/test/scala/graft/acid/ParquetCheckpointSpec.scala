@@ -328,11 +328,14 @@ class ParquetCheckpointSpec extends SparkSpec {
       val e = intercept[IllegalStateException](
         new GraftTable(spark, root).entries(4L))
       assert(e.getMessage.contains("zzz"), e.getMessage)
-      // restore the sane meta, then vacuum: the metas of dropped
-      // versions are reclaimed, the retained one's shards are kept
+      // restore the sane meta, then vacuum: artifacts of dropped
+      // versions (meta + shard dirs) must be reclaimed, the retained
+      // one's shards kept
       rewriteMeta(sane)
+      val dropped = (1L to 3L).flatMap(shardDirs(root, _))
+      assert(dropped.nonEmpty && dropped.forall(fs.exists))
       t.vacuum(retain = 1)
-      assert(!fs.exists(pcpMeta(root, 1L)),
+      assert(!fs.exists(pcpMeta(root, 1L)) && !dropped.exists(fs.exists),
         "vacuum must reclaim dropped parquet checkpoints")
       assert(shardDirs(root, 4L).forall(fs.exists))
       assert(new GraftTable(spark, root).snapshot().count() == 4L)

@@ -159,23 +159,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       try out.write(v.toString.getBytes(UTF_8)) finally out.close()
     } catch { case _: java.io.IOException => () /* accelerator only */ }
 
-  /** Active file entries (path + optional stats) of version `v`.
-    * Version 0 is the empty pre-first-commit state — no manifest, no
-    * files — so `changeFeed(0, v)` (and the streaming source's first
-    * batch) reads "everything since the table began" without a special
-    * case. Header lines (`# key=value ...`) carry commit metadata, not
-    * files. */
-  /** All lines of version `v`'s manifest, retrying until the terminator
-    * line proves the commit COMPLETE. The exclusive create is the
-    * atomicity point for WHO wins a version, but on a filesystem the
-    * bytes land after the create — a concurrent reader (another writer's
-    * rebase, a snapshot resolving mid-commit) can otherwise observe a
-    * partial manifest (or a local-FS checksum tear) and silently parse a
-    * truncated file list. Writers put `# ok` as the LAST line in the
-    * same single write; readers spin briefly (the write is a few KB —
-    * milliseconds) and then fail LOUDLY: an in-flight commit resolves,
-    * a torn one (crash between create and write) surfaces as an error,
-    * never as a silently-smaller table. */
+  /** The lines of `p`, trimmed; None on a local-FS checksum tear. */
   private def readLines(p: Path): Option[List[String]] =
     try {
       val in = fs.open(p)
@@ -184,17 +168,50 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       finally in.close()
     } catch { case _: org.apache.hadoop.fs.ChecksumException => None }
 
-  private def manifestLines(v: Long): List[String] = {
-    manifestCache.get(v) match {
-      case null =>
-      case ls   => return ls
-    }
+  /** A manifest, parsed once: its `# key=value` header and its body. A
+    * delta states the paths it removes (`-\t<path>`) and the entries it
+    * adds (`+\t<entry>`); a full manifest states its whole entry list,
+    * held here as adds over nothing. Every writer states `kind=`, `nf=`
+    * and `ts=`, so a header without one is a retired shape, refused
+    * naming the table; the `require=` gate is checked first. */
+  private final class Manifest(v: Long, lines: List[String]) {
+    val meta: Map[String, String] = headerKv(lines.headOption)
+    checkRequiredFeatures(meta, s"manifest v$v")
+    private def field(k: String): String = meta.get(k).filter(_.nonEmpty)
+      .getOrElse(throw retiredFormat(s"manifest v$v", s"states no $k= header field"))
+    private def count(k: String): Long = field(k).toLongOption
+      .getOrElse(throw retiredFormat(s"manifest v$v", s"states a malformed $k="))
+    val delta: Boolean = field("kind") == "delta"
+    val nf: Long = count("nf")
+    val ts: Long = count("ts")
+    lazy val removes: Seq[String] =
+      if (!delta) Nil
+      else lines.collect { case l if l.startsWith("-\t") => l.drop(2) }
+    lazy val adds: Seq[FileEntry] =
+      if (delta) lines.collect { case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
+      else lines.filter(l => l.nonEmpty && !l.startsWith("#")).map(FileEntry.parse)
+  }
+
+  /** Version `v`'s manifest, read once per handle, retrying until the
+    * terminator line proves the commit COMPLETE. The exclusive create is
+    * the atomicity point for WHO wins a version, but on a filesystem the
+    * bytes land after the create — a concurrent reader (another writer's
+    * rebase, a snapshot resolving mid-commit) can otherwise observe a
+    * partial manifest (or a local-FS checksum tear) and silently parse a
+    * truncated file list. Writers put `# ok` as the LAST line in the
+    * same single write; readers spin briefly (the write is a few KB —
+    * milliseconds) and then fail LOUDLY: an in-flight commit resolves,
+    * a torn one (crash between create and write) surfaces as an error,
+    * never as a silently-smaller table. */
+  private def manifest(v: Long): Manifest = {
+    val hit = manifestCache.get(v)
+    if (hit != null) return hit
     var attempt = 0
     while (true) {
       readLines(manifestPath(v)) match {
         case Some(ls) if ls.lastOption.contains(CommitMarker) =>
-          checkRequiredFeatures(ls, s"manifest v$v")
-          cachePut(manifestCache, v, ls); return ls
+          val m = new Manifest(v, ls)
+          cachePut(manifestCache, v, m); return m
         case _ =>
           attempt += 1
           if (attempt >= 200) throw new IllegalStateException(
@@ -203,7 +220,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           Thread.sleep(5)
       }
     }
-    Nil // unreachable
+    throw new IllegalStateException("unreachable")
   }
 
   private val CommitMarker = "# ok"
@@ -216,8 +233,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * return WRONG DATA (resurrected rows), not degraded performance.
     * Enforced per log artifact (each manifest/checkpoint gates its own
     * body), so a resolution chain is checked exactly where it parses. */
-  private def checkRequiredFeatures(ls: List[String], what: String): Unit = {
-    val unknown = headerKv(ls.headOption).get("require").toSeq
+  private def checkRequiredFeatures(header: Map[String, String],
+                                    what: String): Unit = {
+    val unknown = header.get("require").toSeq
       .flatMap(_.split(',')).filter(_.nonEmpty)
       .filterNot(GraftTable.SupportedFeatures)
     if (unknown.nonEmpty) throw new IllegalStateException(
@@ -247,7 +265,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         override def removeEldestEntry(e: java.util.Map.Entry[Long, V]) =
           size() > 16
       })
-  private val manifestCache = bounded[List[String]]()
+  private val manifestCache = bounded[Manifest]()
   private val entriesCache = bounded[Seq[FileEntry]]()
   // slim (path, dvRef)-only plan inputs of [[distributedSnapshotSlim]]:
   // immutable per version like entriesCache, far smaller — memoized so
@@ -286,34 +304,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   // shard dirs verbatim)
   private def sidecarsRoot = new Path(logDir, "sidecars")
 
-  /** Shard refs of version `v`'s parquet checkpoint,
-    * parsed from its `.pcp` meta (`s\t<shard>\t<relpath>` lines), plus
-    * a well-formed flag: false = a complete-but-corrupted meta (an
-    * `s\t` line of the wrong arity or a non-numeric shard). The parse
-    * is TOTAL — a damaged line degrades to the manifest-chain fallback
-    * like every other damage mode, never a MatchError on a read path;
-    * the valid refs still return so [[vacuum]] can keep any shard root
-    * a parseable line references. */
-  private def pcpShardRefsRaw(v: Long): (Seq[(Int, String)], Boolean) =
-    if (!fs.exists(pcpMetaPath(v))) (Nil, true)
-    else {
-      val parsed = readLines(pcpMetaPath(v)).getOrElse(Nil)
-        .filter(_.startsWith("s\t"))
-        .map(_.split('\t') match {
-          case Array(_, s, rel) => s.toIntOption.map(_ -> rel)
-          case _                => None
-        })
-      (parsed.flatten, parsed.forall(_.isDefined))
-    }
-
-  /** [[pcpShardRefsRaw]] validated: None = corrupted refs (damaged
-    * checkpoint), Some(Nil) = no shard lines (an empty checkpoint). */
-  private def pcpShardRefs(v: Long): Option[Seq[(Int, String)]] =
-    pcpShardRefsRaw(v) match {
-      case (refs, true) => Some(refs)
-      case _            => None
-    }
-
   /** The `key=value` fields of a `# ...` header line (empty when the
     * line is absent or not a header). */
   private def headerKv(line: Option[String]): Map[String, String] =
@@ -324,22 +314,56 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       }).toMap
     }.getOrElse(Map.empty)
 
-  /** Parsed `# key=value` header of version `v`'s `.pcp` meta. */
-  private def pcpMetaKv(v: Long): Map[String, String] =
-    headerKv(if (fs.exists(pcpMetaPath(v)))
-      readLines(pcpMetaPath(v)).flatMap(_.headOption) else None)
+  /** A `.pcp` meta, parsed once: its header fields and its shard refs
+    * (`s\t<shard>\t<relpath>` lines), with a well-formed flag — false =
+    * an `s\t` line of the wrong arity or a non-numeric shard. The parse
+    * is TOTAL: a damaged line degrades to the manifest-chain fallback
+    * like every other damage mode, never a MatchError on a read path,
+    * and the valid refs still return so [[vacuum]] keeps any shard root
+    * a parseable line references. */
+  private final class PcpMeta(val v: Long, lines: List[String]) {
+    private val kv = headerKv(lines.headOption)
+    val ns: Option[String] = kv.get("ns")
+    val maxOrd: Option[Long] = kv.get("maxord").flatMap(_.toLongOption)
+    val require: Seq[String] = kv.get("require").toSeq.flatMap(_.split(','))
+    val (refs, wellFormed): (Seq[(Int, String)], Boolean) = {
+      val parsed = lines.filter(_.startsWith("s\t")).map(_.split('\t') match {
+        case Array(_, s, rel) => s.toIntOption.map(_ -> rel)
+        case _                => None
+      })
+      (parsed.flatten, parsed.forall(_.isDefined))
+    }
 
-  /** Data paths behind version `v`'s parquet checkpoint — its shard dirs,
-    * each possibly reused from an earlier checkpoint's write. Some(Nil) =
-    * a legitimate EMPTY checkpoint (nf=0 writes no shard lines — a
-    * delete-all table still checkpoints); None = damaged (corrupted
-    * refs, a missing shard dir, or no shard lines under nf>0), treated
-    * exactly like the nf-mismatch case (warn-and-fall-back to the
-    * manifest chain), never a thrown read of a path that is not there. */
-  private def pcpDataPaths(v: Long): Option[Seq[Path]] =
-    pcpShardRefs(v).map(_.map { case (_, rel) => new Path(logDir, rel) })
-      .filter(ps => if (ps.isEmpty) pcpMetaNf(v).contains(0L)
-                    else ps.forall(fs.exists))
+    /** The declared entry count iff the meta is COMPLETE (terminator
+      * present) — a torn meta is simply "no checkpoint". A complete meta
+      * passes the feature gate LOUDLY (an old reader must refuse a
+      * post-vacuum table it cannot parse, never shrink it), and one
+      * without `ns=` is the retired single-directory form, refused:
+      * vacuum may already have trimmed the chain a fallback would need. */
+    lazy val nf: Option[Long] =
+      if (!lines.lastOption.contains(CommitMarker)) None
+      else {
+        checkRequiredFeatures(kv, s"checkpoint v$v (parquet)")
+        if (ns.isEmpty) throw retiredFormat(
+          s"parquet checkpoint v$v", "has no ns= shard count")
+        kv.get("nf").flatMap(_.toLongOption)
+      }
+
+    /** The shard dirs, each possibly reused from an earlier checkpoint's
+      * write. Some(Nil) = a legitimate EMPTY checkpoint (nf=0 writes no
+      * shard lines — a delete-all table still checkpoints); None =
+      * damaged (corrupted refs, a missing shard dir, or no shard lines
+      * under nf>0). */
+    def dataPaths: Option[Seq[Path]] =
+      Some(refs.map { case (_, rel) => new Path(logDir, rel) })
+        .filter(ps => wellFormed &&
+          (if (ps.isEmpty) nf.contains(0L) else ps.forall(fs.exists)))
+  }
+
+  /** Version `v`'s `.pcp` meta (None = it has none). */
+  private def pcpMeta(v: Long): Option[PcpMeta] =
+    if (!fs.exists(pcpMetaPath(v))) None
+    else Some(new PcpMeta(v, readLines(pcpMetaPath(v)).getOrElse(Nil)))
 
   /** Active-file count past which [[writeCheckpoint]] switches from the
     * text checkpoint to the parquet (columnar, distributed) form. The
@@ -350,81 +374,95 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     spark.conf.getOption("spark.graft.acid.parquetCheckpointMinFiles")
       .flatMap(_.toIntOption).getOrElse(10000)
 
-  /** Resolve version `v`'s ACTIVE entry list. Incremental-log resolution
-    * (the Delta/Iceberg checkpoint pattern): a version materializes from
-    * the nearest FULL statement of the table at or below it — a
-    * `.checkpoint` sidecar (written every [[checkpointInterval]] commits
-    * and by [[vacuum]]) or a `kind=full` manifest — plus the replay of
-    * the delta manifests above it. Commit cost is therefore O(changed
-    * files), not O(active files), and the walk is bounded by the
-    * checkpoint cadence. */
+  /** Active file entries (path + optional stats) of version `v`.
+    * Version 0 is the empty pre-first-commit state — no manifest, no
+    * files — so `changeFeed(0, v)` (and the streaming source's first
+    * batch) reads "everything since the table began" without a special
+    * case. Incremental-log resolution (the Delta/Iceberg checkpoint
+    * pattern): a version materializes from the nearest FULL statement of
+    * the table at or below it — a resident list, a complete checkpoint
+    * (written every [[checkpointInterval]] commits and by [[vacuum]]; an
+    * incomplete one — crash mid-write — is ignored, the manifest chain
+    * is always sufficient on its own) or a `kind=full` manifest — plus
+    * the [[Overlay]] of the delta manifests above it. Commit cost is
+    * therefore O(changed files), not O(active files), and the walk is
+    * bounded by the checkpoint cadence. */
   private[graft] def entries(v: Long): Seq[FileEntry] = {
     if (v == 0L) return Nil
-    entriesCache.get(v) match {
-      case null =>
-      case es   => return es
-    }
-    // walk down to the nearest full statement, collecting deltas to replay
-    var base = v
-    var deltas: List[List[String]] = Nil
-    var baseEntries: Seq[FileEntry] = Nil
-    var resolved = false
-    while (!resolved) {
-      if (base == 0L) { baseEntries = Nil; resolved = true }
-      else entriesCache.get(base) match {
-        case es if es != null => baseEntries = es; resolved = true
-        case _ =>
-          val cp =
-            if (fs.exists(checkpointPath(base))) checkpointEntries(base)
-            else if (fs.exists(pcpMetaPath(base))) parquetCheckpointEntries(base)
-            else None
-          if (cp.isDefined) {
-            // a checkpoint short-circuits the walk (an incomplete one —
-            // crash mid-write — is ignored; the manifest chain is always
-            // sufficient on its own)
-            baseEntries = cp.get; resolved = true
-          } else {
-            val lines = manifestLines(base)
-            // a multi-table-txn participant resolves through its shared
-            // marker: aborted = a NO-OP version (contributes nothing to
-            // the chain), committed = an ordinary delta/full manifest
-            if (pendingAborted(base)) base -= 1
-            else {
-              val isDelta = lines.headOption.exists(_.contains(" kind=delta"))
-              if (isDelta) {
-                deltas = lines :: deltas
-                base -= 1
-              } else {
-                baseEntries = lines
-                  .filter(l => l.nonEmpty && !l.startsWith("#"))
-                  .map(FileEntry.parse)
-                resolved = true
-              }
-            }
-          }
-      }
-    }
-    // replay the deltas upward: `-\t<path>` drops, `+\t<entry>` appends
-    // (a replaced entry — new stats/DV on the same path — is a drop+add)
-    var acc = baseEntries
-    deltas.foreach { lines =>
-      val removes = lines.collect { case l if l.startsWith("-\t") => l.drop(2) }.toSet
-      val adds = lines.collect { case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
-      acc = acc.filterNot(e => removes.contains(e.path)) ++ adds
-    }
+    val hit = entriesCache.get(v)
+    if (hit != null) return hit
+    val (base, deltas) = walkChain(v) { b =>
+      if (b == 0L) Some(Some(Nil))
+      else Option(entriesCache.get(b)).orElse(checkpointEntries(b)).map(Some(_))
+    }(m => Some(m.adds)).get
+    val es = new Overlay(deltas).over(base)
     fullResolutions.incrementAndGet()
-    cachePut(entriesCache, v, acc)
-    acc
+    cachePut(entriesCache, v, es)
+    es
   }
 
-  private def checkpointEntries(v: Long): Option[Seq[FileEntry]] = {
-    val lines = readLines(checkpointPath(v)).getOrElse(Nil)
-    if (!lines.lastOption.contains(CommitMarker)) None // crash mid-write
-    else {
-      checkRequiredFeatures(lines, s"checkpoint v$v")
-      Some(lines.filter(l => l.nonEmpty && !l.startsWith("#")).map(FileEntry.parse))
-    }
+  /** THE chain walk every resolution shares: from `v` down, skipping
+    * aborted multi-table participants (their shared marker says the txn
+    * never happened: a NO-OP version) and collecting the delta
+    * manifests, until the caller's stop rule `base` answers for a
+    * version — Some(Some(b)): b is the base the collected deltas
+    * overlay; Some(None): no base this walk accepts — or a full manifest
+    * ends it (`full` makes it the base, or declines). The deltas return
+    * ascending, ready for [[Overlay]]. */
+  private def walkChain[B](v: Long)(base: Long => Option[Option[B]])(
+      full: Manifest => Option[B]): Option[(B, List[Manifest])] = {
+    @scala.annotation.tailrec
+    def walk(b: Long, deltas: List[Manifest]): Option[(B, List[Manifest])] =
+      base(b) match {
+        case Some(stop) => stop.map(_ -> deltas)
+        case None =>
+          val m = manifest(b)
+          if (pendingAborted(b)) walk(b - 1, deltas)
+          else if (m.delta) walk(b - 1, m :: deltas)
+          else full(m).map(_ -> deltas)
+      }
+    walk(v, Nil)
   }
+
+  /** THE delta overlay: the net effect of ascending delta manifests on
+    * their base — the base paths they drop, and the entries they add in
+    * replay order. Within a manifest removes apply before adds, so a
+    * replaced entry (new stats or DV on the same path) moves to the end,
+    * exactly as a one-at-a-time replay moves it. Each add keeps its
+    * 1-based sequence number among all the chain's `adds`: an extending
+    * checkpoint mints its fresh `ord`s from it. */
+  private final class Overlay(deltas: Seq[Manifest]) {
+    private val removed = scala.collection.mutable.HashSet.empty[String]
+    val added =
+      scala.collection.mutable.LinkedHashMap.empty[String, (FileEntry, Long)]
+    private var n = 0L
+    deltas.foreach { m =>
+      m.removes.foreach(p => if (added.remove(p).isEmpty) removed += p)
+      m.adds.foreach { e => n += 1; added(e.path) = e -> n }
+    }
+    def adds: Long = n
+    /** Does the overlay drop or replace the base entry at `path`? */
+    def drops(path: String): Boolean = removed(path) || added.contains(path)
+    def over(base: IterableOnce[FileEntry]): Seq[FileEntry] =
+      (base.iterator.filterNot(e => drops(e.path)) ++
+        added.valuesIterator.map(_._1)).toVector
+  }
+
+  /** Version `v`'s complete checkpoint, in either form: the text one,
+    * else the parquet one through [[checkpointDF]]. None = no checkpoint,
+    * a torn one (crash mid-write) or a damaged one. */
+  private def checkpointEntries(v: Long): Option[Seq[FileEntry]] =
+    if (fs.exists(checkpointPath(v))) {
+      val lines = readLines(checkpointPath(v)).getOrElse(Nil)
+      if (!lines.lastOption.contains(CommitMarker)) None
+      else {
+        checkRequiredFeatures(headerKv(lines.headOption), s"checkpoint v$v")
+        Some(lines.filter(l => l.nonEmpty && !l.startsWith("#")).map(FileEntry.parse))
+      }
+    } else {
+      import spark.implicits._
+      checkpointDF(v).map(df => cpOrdered(df.as[GraftTable.CpRow].collect(), v))
+    }
 
   private def entryToCp(e: FileEntry, ord: Long): GraftTable.CpRow =
     GraftTable.CpRow(e.path,
@@ -462,97 +500,59 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     new IllegalStateException(s"$what at $root $why: a retired log " +
       "format this engine no longer reads")
 
-  /** The `.pcp` meta of version `v`, VALIDATED: the declared entry count
-    * iff the meta is complete (terminator marker present) and every
-    * required feature is one this reader serves. The feature gate stays
-    * LOUD (an old reader must refuse a post-vacuum table it cannot
-    * parse, never shrink it); a torn meta is simply "no checkpoint". A
-    * meta without `ns=` is the retired single-directory form, refused:
-    * vacuum may already have trimmed the chain a fallback would need. */
-  private def pcpMetaNf(v: Long): Option[Long] = {
-    val meta = readLines(pcpMetaPath(v)).getOrElse(Nil)
-    if (!meta.lastOption.contains(CommitMarker)) None // crash mid-write
-    else {
-      checkRequiredFeatures(meta, s"checkpoint v$v (parquet)")
-      val kv = headerKv(meta.headOption)
-      if (!kv.contains("ns")) throw retiredFormat(
-        s"parquet checkpoint v$v", "has no ns= shard count")
-      kv.get("nf").flatMap(_.toLongOption)
+  /** THE parquet checkpoint opener: version `v`'s checkpoint as a RAW,
+    * VALIDATED DataFrame — the column-prunable, distributed face every
+    * parquet read goes through (projecting e.g. `path`/`n`/`dn` answers
+    * a cold COUNT without materializing windows, sketches or blooms;
+    * ParquetCheckpointSpec pins the pruned ReadSchema). None when `v` has
+    * no checkpoint or a torn meta. A DAMAGED one — a shard dir missing,
+    * or a scan whose row count differs from the meta's `nf=` (torn or
+    * missing part files; the count is metadata-only, parquet footer row
+    * counts) — WARNS and returns None too, so the caller falls back to
+    * the manifest chain (sufficient until [[vacuum]] trims it, and
+    * vacuum itself verifies completeness before trimming) instead of
+    * failing a healthy table on a damaged accelerator artifact, or
+    * silently serving fewer entries. An EMPTY checkpoint (nf=0) opens
+    * as an empty frame. */
+  private[graft] def checkpointDF(v: Long): Option[DataFrame] =
+    pcpMeta(v).flatMap(checkpointDF)
+
+  private def checkpointDF(m: PcpMeta): Option[DataFrame] = m.nf.flatMap { nf =>
+    def damaged(why: String): Option[DataFrame] = {
+      logWarning(s"parquet checkpoint v${m.v} at $root is damaged: $why; " +
+        "falling back to the manifest chain")
+      None
+    }
+    m.dataPaths match {
+      case None => damaged("a shard ref is corrupted or a shard dir is missing")
+      case Some(Nil) => Some(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        GraftTable.cpSchema))
+      case Some(paths) =>
+        val scan = spark.read.schema(GraftTable.cpSchema)
+          .parquet(paths.map(_.toString): _*)
+        val found = scan.count()
+        if (found == nf) Some(scan)
+        else damaged(s"meta says $nf entries, scan found $found")
     }
   }
 
-  /** Resolve a PARQUET checkpoint: a distributed columnar scan of the
-    * shard dirs' part files — at ~10⁶ entries the parse runs across the cluster
-    * instead of single-threaded on the driver (the cold-start
-    * bottleneck the text form hits), and the collect is the same
-    * bounded file-METADATA list every resolution materializes. The
-    * `.pcp` meta gates features and carries the expected entry count
-    * (`nf=`): a count mismatch means torn/missing part files — the
-    * resolution WARNS and falls back to the manifest-chain walk (which
-    * stays sufficient until [[vacuum]] trims it, and vacuum itself
-    * verifies checkpoint completeness before trimming) instead of
-    * failing a healthy table on a damaged accelerator artifact. */
-  private def parquetCheckpointEntries(v: Long): Option[Seq[FileEntry]] =
-    pcpMetaNf(v).flatMap { nf =>
-      import spark.implicits._
-      val paths = pcpDataPaths(v) match {
-        case Some(ps) => ps
-        case None =>
-          logWarning(s"parquet checkpoint v$v at $root is damaged: a " +
-            "shard dir is missing; falling back to the manifest chain")
-          return None
-      }
-      // Nil = a valid EMPTY checkpoint (nf=0): zero entries,
-      // no parquet scan of a nonexistent path
-      val rows =
-        if (paths.isEmpty) Array.empty[GraftTable.CpRow]
-        else spark.read.schema(GraftTable.cpSchema)
-          .parquet(paths.map(_.toString): _*)
-          .as[GraftTable.CpRow].collect()
-      if (nf != rows.length) {
-        logWarning(s"parquet checkpoint v$v at $root is damaged: meta " +
-          s"says $nf entries, scan found ${rows.length}; falling back " +
-          "to the manifest chain")
-        None
-      } else Some(cpOrdered(rows, v))
-    }
-
-  /** The parquet checkpoint of version `v` as a RAW DataFrame (None when
-    * `v` has none or its meta is torn/ungated) — the column-prunable,
-    * distributed face for metadata-only consumers: projecting e.g.
-    * `path`/`n`/`dn` answers a cold COUNT without materializing windows,
-    * sketches or blooms (ParquetCheckpointSpec pins the pruned
-    * ReadSchema). Validates through the same meta gate as full
-    * resolution, so a consumer can never serve from an incomplete or
-    * feature-ungated checkpoint; the meta is published only after its
-    * shard dirs are written ([[writeShardedCheckpoint]]). */
-  private[graft] def checkpointDF(v: Long): Option[DataFrame] =
-    pcpMetaNf(v).flatMap(_ => pcpDataPaths(v)).map(paths =>
-      if (paths.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          GraftTable.cpSchema)
-      else spark.read.schema(GraftTable.cpSchema)
-        .parquet(paths.map(_.toString): _*))
-
   /** One commit's provenance: version, operation, wall-clock commit time
-    * (epoch millis; 0 for pre-header manifests), active file count. */
+    * (epoch millis), active file count. */
   final case class CommitInfo(version: Long, op: String, commitMs: Long,
                               nFiles: Int)
 
-  /** Parsed `# key=value ...` header of version `v`'s manifest (empty for
-    * pre-header manifests) — commit provenance plus the table's physical
-    * config ([[GraftTable.load]] recovers stats/partition/bloom columns
-    * and CHECK constraints from here). */
-  private[acid] def headerMeta(v: Long): Map[String, String] =
-    headerKv(manifestLines(v).find(_.nonEmpty))
+  /** Parsed `# key=value ...` header of version `v`'s manifest — commit
+    * provenance plus the table's physical config ([[GraftTable.load]]
+    * recovers stats/partition/bloom columns and CHECK constraints from
+    * here). */
+  private[acid] def headerMeta(v: Long): Map[String, String] = manifest(v).meta
 
   /** The table's commit history, oldest first — the DESCRIBE HISTORY
     * surface: which operation produced each version and when. O(versions)
     * manifest header reads, no data I/O: the active file count is
     * recorded in the header at commit time (`nf=`), so a delta manifest
-    * never needs its chain resolved just to describe itself (legacy full
-    * manifests fall back to counting their own lines). */
+    * never needs its chain resolved just to describe itself. */
   def history(): Seq[CommitInfo] = versions.map(commitInfo)
 
   /** Newest-first BOUNDED history — how DESCRIBE HISTORY is actually
@@ -564,11 +564,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   }
 
   private def commitInfo(v: Long): CommitInfo = {
-    val meta = headerMeta(v)
-    val nf = meta.get("nf").flatMap(_.toIntOption).getOrElse(
-      manifestLines(v).count(l => l.nonEmpty && !l.startsWith("#")))
-    CommitInfo(v, meta.getOrElse("op", "unknown"),
-      meta.get("ts").flatMap(_.toLongOption).getOrElse(0L), nf)
+    val m = manifest(v)
+    CommitInfo(v, m.meta.getOrElse("op", "unknown"), m.ts, m.nf.toInt)
   }
 
   /** The DECLARED schema of version `v` (None for manifests predating
@@ -1423,14 +1420,13 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // meta's completeness gate into a permanent fallback). The ts
     // monotone clamp still reads the raw parent (aborted commits carry
     // valid monotone stamps).
-    val (prevMeta, prevDvn) = {
+    val (prevNf, prevMeta, prevDvn) = {
       var b = v - 1
       while (b >= 1L && pendingAborted(b)) b -= 1
-      if (b < 1L) (Map.empty[String, String], 0L)
-      else { val m = headerMeta(b); (m, statedDvn(b, m)) }
+      if (b < 1L) (0L, Map.empty[String, String], 0L)
+      else { val m = manifest(b); (m.nf, m.meta, statedDvn(b, m.meta)) }
     }
-    val prevTsMeta =
-      if (v > 1L) headerMeta(v - 1) else Map.empty[String, String]
+    val prevTs = if (v > 1L) manifest(v - 1).ts else 0L
     val p = manifestPath(v)
     // Exclusive create is the atomicity point. On HDFS/object stores the
     // create (conditional put) is atomic by itself; Hadoop's LOCAL
@@ -1490,7 +1486,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
             else None,
             h.flatMap(_.dvRef).distinct.sorted, h.map(_.dvCount).sum)
         case None =>
-          val prevNf = prevMeta.get("nf").flatMap(_.toLongOption).getOrElse(0L)
           (prevNf - s.removes.size + adds.size,
             prevMeta.get("nr").flatMap(_.toLongOption)
               .orElse(if (v <= 1L) Some(0L) else None)
@@ -1558,10 +1553,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       // counts on the same monotonicity for its retention cut.
       val tsMono =
         if (v <= 1L) System.currentTimeMillis()
-        else math.max(System.currentTimeMillis(),
-          prevTsMeta.get("ts").flatMap(_.toLongOption).getOrElse(0L) + 1L)
+        else math.max(System.currentTimeMillis(), prevTs + 1L)
       // one write, terminator LAST: readers treat a manifest without the
-      // final marker as in-flight (see manifestLines)
+      // final marker as in-flight (see [[manifest]])
       out.write(((s"# op=$op ts=$tsMono $cfg" +: body) :+ CommitMarker)
         .mkString("\n").getBytes(UTF_8))
       // a PENDING commit's outcome is not known yet: never pre-cache its
@@ -1647,17 +1641,17 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * with `k > 1`, when the nearest checkpoint below `v` has the same
     * shard count and only delta manifests lie between, the write
     * EXTENDS it: the shards those deltas touch rebuild from the
-    * prior checkpoint's own rows plus an ascending replay of the deltas
-    * (v's included — its manifest is complete on disk by now), and the
+    * prior checkpoint's own rows under the deltas' [[Overlay]] (v's
+    * included — its manifest is complete on disk by now), and the
     * untouched shards' dirs are re-referenced verbatim, so driver state
     * is O(touched shards + chain), never O(table). Otherwise every shard
     * is written from `files`.
     *
     * Entry order is the delta-replay order: rows carry an `ord` column
     * that resolution sorts by ([[cpOrdered]]); an extension keeps
-    * survivors' ords and mints fresh ones past the prior `maxord=` for
-    * every replayed add, so a replaced entry moves to the end exactly as
-    * the replay moves it. An extension's `require=` gate is the union of
+    * survivors' ords and mints fresh ones past the prior `maxord=` from
+    * each add's sequence number in the chain, so a replaced entry moves
+    * to the end exactly as the overlay moves it. An extension's `require=` gate is the union of
     * the prior gate and the replayed adds' features (carried shards can
     * only state features the prior gate named — at worst conservative).
     *
@@ -1669,55 +1663,39 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   private def writeShardedCheckpoint(v: Long, nf: Long, k: Int,
                                      files: => Seq[FileEntry]): Unit = {
     if (fs.exists(pcpMetaPath(v))) return
-    // the checkpoint to extend, its maxord and the delta manifests above
-    // it (ascending, unparsed until a base is found): walk down from v
-    // through delta manifests only
-    @scala.annotation.tailrec
-    def extendable(b: Long, chain: List[List[String]])
-        : Option[(Long, Long, List[List[String]])] =
-      if (b == 0L || b < v && fs.exists(checkpointPath(b))) None
-      else if (b < v && fs.exists(pcpMetaPath(b))) {
-        val kv = pcpMetaKv(b)
-        kv.get("maxord").flatMap(_.toLongOption)
-          .filter(_ => kv.get("ns").contains(k.toString) &&
-            pcpMetaNf(b).isDefined && pcpShardRefs(b).exists(_.nonEmpty) &&
-            pcpDataPaths(b).isDefined)
-          .map(maxOrd => (b, maxOrd, chain))
-      } else {
-        val lines = manifestLines(b)
-        // an aborted participant contributes nothing to the replay
-        if (pendingAborted(b)) extendable(b - 1, chain)
-        else if (!lines.headOption.exists(_.contains(" kind=delta"))) None
-        else extendable(b - 1, lines :: chain)
-      }
+    // the checkpoint to extend and the delta manifests above it: the
+    // nearest checkpoint below v, reached through delta manifests only,
+    // extends when it has the same shard count
+    val base = if (k <= 1) None else walkChain(v) { b =>
+      if (b == 0L) Some(None)
+      else if (b == v) None
+      else if (fs.exists(checkpointPath(b))) Some(None)
+      else pcpMeta(b).map(m => Some(m).filter(m => m.maxOrd.isDefined &&
+        m.ns.contains(k.toString) && m.nf.isDefined && m.refs.nonEmpty &&
+        m.dataPaths.isDefined))
+    }(_ => None)
     import spark.implicits._
-    val base = if (k > 1) extendable(v, Nil) else None
     val (rows, kept, maxOrd, nfOut, req) = base match {
-      case Some((pv, prevMax, manifests)) =>
-        val chain = manifests.map(lines => (
-          lines.collect { case l if l.startsWith("-\t") => l.drop(2) },
-          lines.collect { case l if l.startsWith("+\t") =>
-            FileEntry.parse(l.drop(2)) }))
-        val dirty = chain.iterator.flatMap { case (rm, adds) =>
-          rm.iterator ++ adds.iterator.map(_.path) }.map(shardOf(_, k)).toSet
-        val prevRefs = pcpShardRefs(pv).getOrElse(Nil).toMap
-        // the dirty shards' prior rows (a small read: O(dirty shards)),
-        // then the ascending replay: removes drop, adds mint fresh ords
+      case Some((prev, deltas)) =>
+        val overlay = new Overlay(deltas)
+        val prevMax = prev.maxOrd.get
+        // every shard a delta touches rebuilds, even where the chain nets out
+        val dirty = deltas.iterator.flatMap(m =>
+          m.removes.iterator ++ m.adds.iterator.map(_.path))
+          .map(shardOf(_, k)).toSet
+        val prevRefs = prev.refs.toMap
+        // the dirty shards' prior rows (a small read: O(dirty shards))
+        // under the overlay; its adds mint fresh ords past the prior max
         val dirtyPrev = prevRefs.view.filterKeys(dirty).values
           .map(rel => new Path(logDir, rel).toString).toSeq
-        val state =
-          new scala.collection.mutable.LinkedHashMap[String, GraftTable.CpRow]
-        if (dirtyPrev.nonEmpty)
-          spark.read.schema(GraftTable.cpSchema).parquet(dirtyPrev: _*)
-            .as[GraftTable.CpRow].collect().foreach(r => state.put(r.path, r))
-        var next = prevMax
-        chain.foreach { case (rm, adds) =>
-          rm.foreach(state.remove)
-          adds.foreach { e => next += 1; state.put(e.path, entryToCp(e, next)) }
-        }
-        (state.values.toSeq, prevRefs -- dirty, next, nf,
-          pcpMetaKv(pv).get("require").toSeq.flatMap(_.split(',')) ++
-            requiredFeatures(chain.flatMap(_._2)))
+        val prior =
+          if (dirtyPrev.isEmpty) Seq.empty[GraftTable.CpRow]
+          else spark.read.schema(GraftTable.cpSchema).parquet(dirtyPrev: _*)
+            .as[GraftTable.CpRow].collect().toSeq
+        (prior.filterNot(r => overlay.drops(r.path)) ++
+          overlay.added.values.map { case (e, i) => entryToCp(e, prevMax + i) },
+          prevRefs -- dirty, prevMax + overlay.adds, nf,
+          prev.require ++ requiredFeatures(deltas.flatMap(_.adds)))
       case None =>
         val es = files
         (es.zipWithIndex.map { case (e, i) => entryToCp(e, i.toLong) },
@@ -2311,7 +2289,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   /** Is version `v` an ABORTED multi-table-txn participant? Resolves the
     * shared marker ([[decidePending]]); false for ordinary commits. */
   private def pendingAborted(v: Long): Boolean =
-    headerMeta(v).get("pending").exists(decidePending(_) == 'a')
+    manifest(v).meta.get("pending").exists(decidePending(_) == 'a')
 
   /** Row-id high watermark as of version `v` (0 = no ids assigned yet) —
     * the next id-assigning append starts here. One header read. */
@@ -2477,22 +2455,16 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         var fullSeen = false
         while (iv < v && !fullSeen) {
           if (!pendingAborted(iv)) {
-            val lines = manifestLines(iv)
-            if (lines.headOption.exists(_.contains(" kind=delta"))) {
-              lines.foreach { l =>
-                if (l.startsWith("-\t")) {
-                  if (consumedPaths.contains(l.drop(2)))
-                    throw new ConcurrentCommitException(
-                      s"scoped $op at $root: a concurrent commit rewrote " +
-                        "consumed files; rebase and retry")
-                } else if (l.startsWith("+\t")) {
-                  val e = FileEntry.parse(l.drop(2))
-                  if (!prevLines.contains(e.line) && affected(e))
-                    throw new ConcurrentCommitException(
-                      s"scoped $op at $root: a concurrent commit added rows " +
-                        "in the touched scope; rebase and retry")
-                }
-              }
+            val m = manifest(iv)
+            if (m.delta) {
+              if (m.removes.exists(consumedPaths))
+                throw new ConcurrentCommitException(
+                  s"scoped $op at $root: a concurrent commit rewrote " +
+                    "consumed files; rebase and retry")
+              if (m.adds.exists(e => !prevLines.contains(e.line) && affected(e)))
+                throw new ConcurrentCommitException(
+                  s"scoped $op at $root: a concurrent commit added rows " +
+                    "in the touched scope; rebase and retry")
             } else fullSeen = true
           }
           iv += 1
@@ -3387,18 +3359,15 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     chainSurvivors(v, boundsToCheckpointFilter(bounds))
 
   /** Version `v`'s entries whose parquet-checkpoint row passes `cond`
-    * (collected survivors-only), overlaid with the delta chain above
-    * the checkpoint — net removes drop, net adds append unfiltered (the
-    * caller's driver pass re-tests them). Deterministic entry order,
-    * matching [[parquetCheckpointEntries]]: checkpoint rows in `ord`
-    * order, then the delta adds in replay order. None = no distributed
-    * base ([[checkpointChainScan]]). */
+    * (collected survivors-only), under the [[Overlay]] of the delta chain
+    * above the checkpoint — its adds append unfiltered (the caller's
+    * driver pass re-tests them). The entry order is [[entries]]':
+    * checkpoint rows in `ord` order, then the delta adds in replay order.
+    * None = no distributed base ([[checkpointChainScan]]). */
   private def chainSurvivors(v: Long, cond: Column): Option[Seq[FileEntry]] =
-    checkpointChainScan(v).map { case (scan, cpV, removed, added) =>
+    checkpointChainScan(v).map { case (scan, cpV, overlay) =>
       import spark.implicits._
-      cpOrdered(scan.filter(cond).as[GraftTable.CpRow].collect(), cpV)
-        .filterNot(e => removed.contains(e.path) || added.contains(e.path)) ++
-        added.values.toSeq
+      overlay.over(cpOrdered(scan.filter(cond).as[GraftTable.CpRow].collect(), cpV))
     }
 
   /** Scoped-rewrite candidates for partition cover `vals`: every entry
@@ -3430,78 +3399,22 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       .filter(_.dvRef.isDefined)
   }
 
-  /** The shared base of the distributed planning paths: resolve version
+  /** The shared base of the distributed planning paths: walk version
     * `v` down to a PARQUET checkpoint past [[distributedPruneMinFiles]]
-    * (any cheaper resolution — cached list, text checkpoint, full
+    * (any cheaper resolution — resident list, text checkpoint, full
     * manifest — returns None and the caller takes the ordinary driver
-    * path), validate its completeness (declared `nf=` vs the footer row
-    * count — metadata-only), and return the validated checkpoint SCAN
-    * plus the delta-chain overlay above it (net removes / net adds,
-    * bounded by the checkpoint cadence). */
-  private def checkpointChainScan(v: Long)
-      : Option[(DataFrame, Long, Set[String],
-                scala.collection.immutable.ListMap[String, FileEntry])] = {
-    var base = v
-    var deltas: List[List[String]] = Nil
-    var found = -1L
-    while (found < 0) {
-      if (base == 0L) return None
-      if (entriesCache.get(base) != null) return None // already resident
-      if (fs.exists(checkpointPath(base))) return None // text form
-      if (fs.exists(pcpMetaPath(base)) && pcpMetaNf(base).isDefined) {
-        if (pcpMetaNf(base).exists(_ < distributedPruneMinFiles)) return None
-        found = base
-      } else {
-        val lines = manifestLines(base)
-        if (pendingAborted(base)) base -= 1
-        else if (lines.headOption.exists(_.contains(" kind=delta"))) {
-          deltas = lines :: deltas
-          base -= 1
-        } else return None // full manifest: driver path is O(this commit)
-      }
+    * path) and return its validated scan ([[checkpointDF]]) plus the
+    * [[Overlay]] of the delta chain above it (bounded by the checkpoint
+    * cadence). */
+  private def checkpointChainScan(v: Long): Option[(DataFrame, Long, Overlay)] =
+    walkChain(v) { b =>
+      if (b == 0L || entriesCache.get(b) != null ||
+          fs.exists(checkpointPath(b))) Some(None)
+      else pcpMeta(b).filter(_.nf.isDefined).map(m =>
+        Some(m).filter(_.nf.exists(_ >= distributedPruneMinFiles)))
+    }(_ => None).flatMap { case (cp, deltas) =>
+      checkpointDF(cp).map(scan => (scan, cp.v, new Overlay(deltas)))
     }
-    // the delta overlay, replayed in order: net removes against the
-    // checkpoint base, net adds (a re-added path supersedes its base
-    // entry). Bounded by the checkpoint cadence — always small.
-    var removed = Set.empty[String]
-    var added = scala.collection.immutable.ListMap.empty[String, FileEntry]
-    deltas.foreach { lines =>
-      lines.collect { case l if l.startsWith("-\t") => l.drop(2) }.foreach { p =>
-        if (added.contains(p)) added -= p else removed += p
-      }
-      lines.collect { case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
-        .foreach(e => added += e.path -> e)
-    }
-    val prunePaths = pcpDataPaths(found) match {
-      case Some(ps) => ps
-      case None =>
-        logWarning(s"parquet checkpoint v$found at $root is damaged: a " +
-          "shard dir is missing; distributed planning falling " +
-          "back to the manifest chain")
-        return None
-    }
-    val scan =
-      if (prunePaths.isEmpty) // valid EMPTY checkpoint (nf=0)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          GraftTable.cpSchema)
-      else spark.read.schema(GraftTable.cpSchema)
-        .parquet(prunePaths.map(_.toString): _*)
-    // completeness gate BEFORE filtering (the same nf= validation
-    // [[parquetCheckpointEntries]] enforces): a damaged checkpoint —
-    // complete .pcp meta, missing part files — must fall back to the
-    // manifest chain, never silently return fewer survivors (= silently
-    // dropped rows). The unfiltered count() is metadata-only (parquet
-    // footer row counts), no data scan.
-    val nfDeclared = pcpMetaNf(found).getOrElse(return None)
-    if (scan.count() != nfDeclared) {
-      logWarning(s"parquet checkpoint v$found at $root is damaged: meta " +
-        s"says $nfDeclared entries; distributed planning falling back " +
-        "to the manifest chain")
-      return None
-    }
-    Some((scan, found, removed, added))
-  }
 
   /** UNPREDICATED distributed snapshot planning (round 16, r15 stretch
     * directive #8 — read-path entry streaming): plan a FULL-table scan
@@ -3515,12 +3428,12 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * columns — the same survivors-only contract as
     * [[distributedPruneCandidates]], for the no-predicate read. Same
     * gating and damage fallbacks. */
-  private def distributedSnapshotSlim(v: Long): Option[Seq[FileEntry]] = {
+  private[graft] def distributedSnapshotSlim(v: Long): Option[Seq[FileEntry]] = {
     slimPlanCache.get(v) match {
       case hit if hit != null => return Some(hit)
       case _ => ()
     }
-    val (scan, cpV, removed, added) = checkpointChainScan(v).getOrElse(return None)
+    val (scan, cpV, overlay) = checkpointChainScan(v).getOrElse(return None)
     val slim =
       scan.select(col("path"), col("dv"), col("ord"), col("fz")).collect()
     val ordered = slim.sortBy(r =>
@@ -3533,9 +3446,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         dvRef = if (r.isNullAt(1)) None else Some(r.getLong(1)),
         bytes = Option(r.get(3)).map(_.asInstanceOf[Long]))
     }
-    val out = base.filterNot(e =>
-      removed.contains(e.path) || added.contains(e.path)).toSeq ++
-      added.values.toSeq
+    val out = overlay.over(base)
     cachePut(slimPlanCache, v, out)
     Some(out)
   }
@@ -4575,11 +4486,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       case None =>
         // blind-add commit: a delta manifest with ONLY `+` lines and no
         // masks — its inserts are exactly the added files' rows
-        val lines = manifestLines(v)
-        if (!lines.headOption.exists(_.contains(" kind=delta"))) return None
-        if (lines.exists(_.startsWith("-\t"))) return None
-        val adds = lines.collect {
-          case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
+        val m = manifest(v)
+        if (!m.delta || m.removes.nonEmpty) return None
+        val adds = m.adds
         if (adds.exists(e => e.dvRef.isDefined || e.dvCount > 0L)) return None
         if (adds.isEmpty) Some(empty)
         else Some(readEntriesAs(adds, target, Some(cmapOf(v)))
@@ -4832,11 +4741,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     var v = fromV + 1
     while (v <= toV) {
       if (!pendingAborted(v)) {
-        val lines = manifestLines(v)
-        if (!lines.headOption.exists(_.contains(" kind=delta"))) return None
-        if (lines.exists(_.startsWith("-\t"))) return None
-        out ++= lines.collect {
-          case l if l.startsWith("+\t") => FileEntry.parse(l.drop(2)) }
+        val m = manifest(v)
+        if (!m.delta || m.removes.nonEmpty) return None
+        out ++= m.adds
       }
       v += 1
     }
@@ -4870,7 +4777,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     require(vs.nonEmpty,
       s"changeFeedByVersion: no versions in ($fromV, $toV] at $root")
     vs.map { v =>
-      val ts = headerMeta(v).get("ts").flatMap(_.toLongOption).getOrElse(0L)
+      val ts = manifest(v).ts
       changeFeed(v - 1, v)
         .withColumn("_commit_version", lit(v))
         .withColumn("_commit_timestamp", timestamp_millis(lit(ts)))
@@ -5258,16 +5165,12 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // swallow errors by design — on the COMMIT path the chain is always
     // still sufficient) vacuum refuses LOUDLY rather than cut the chain.
     keepVs.headOption.foreach { oldest =>
-      def complete: Boolean =
-        (fs.exists(checkpointPath(oldest)) &&
-          checkpointEntries(oldest).isDefined) ||
-        (fs.exists(pcpMetaPath(oldest)) &&
-          parquetCheckpointEntries(oldest).isDefined)
+      def complete: Boolean = checkpointEntries(oldest).isDefined
       // a full (non-delta, non-pending) manifest is its own full
       // statement — no checkpoint needed to resolve past the cut
       val selfSufficient = {
-        val meta = headerMeta(oldest)
-        !meta.get("kind").contains("delta") && !meta.contains("pending")
+        val m = manifest(oldest)
+        !m.delta && !m.meta.contains("pending")
       }
       if (!selfSufficient && !complete) {
         fs.delete(checkpointPath(oldest), false)
@@ -5299,7 +5202,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // their roots alive (deleting one shared with a healthy checkpoint
     // would damage that one too)
     def shardRoots(v: Long): Seq[String] =
-      pcpShardRefsRaw(v)._1.flatMap(_._2.split('/').lift(1))
+      pcpMeta(v).toSeq.flatMap(_.refs).flatMap(_._2.split('/').lift(1))
     val liveUuids = keepVs.flatMap(shardRoots).toSet
     val droppedUuids = vs.dropRight(retain).flatMap(shardRoots).toSet --
       liveUuids

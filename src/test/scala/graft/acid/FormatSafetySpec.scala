@@ -11,8 +11,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *  - every manifest ends in the `# ok` terminator, every bloom sidecar
   *    carries the `# scheme=long` header (integral columns pre-widened
   *    to long, matching the long-hashing probe), every manifest header
-  *    states `dvn=`, every entry records `fz=` and every parquet
-  *    checkpoint meta states `ns=`;
+  *    states `kind=`, `nf=`, `ts=` and `dvn=`, every entry records `fz=`
+  *    and every parquet checkpoint meta states `ns=`;
   *  - a log artifact missing one of those is refused loudly, naming the
   *    table — read with today's meaning it could skip files that hold
   *    matching rows or understate the deletion-vector debt;
@@ -121,6 +121,14 @@ class FormatSafetySpec extends SparkSpec {
             .replaceAll(" dvsv=[\\d,]+", "")
           else l).mkString("\n")),
         t => t.delete(col("id") === 7L)),
+      // a manifest header without nf=: the delta-first count arithmetic
+      // would seed the next commit's nf= at 0 and poison the next
+      // checkpoint's completeness gate
+      ("nf-less header", root => rewriteManifest(root, 2L)(txt =>
+        txt.linesIterator.map(l =>
+          if (l.startsWith("# op=")) l.replaceAll(" nf=\\d+", "") else l)
+          .mkString("\n")),
+        t => t.snapshot().count()),
       // the retired single-directory parquet checkpoint: a `.pcp` meta
       // without ns= or shard lines over `v<n>.checkpoint.parquet`, with
       // the chain below it vacuumed

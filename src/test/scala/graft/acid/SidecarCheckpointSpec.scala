@@ -185,6 +185,7 @@ class SidecarCheckpointSpec extends SparkSpec {
       val t = new GraftTable(spark, root, checkpointInterval = 1)
       val es = (0 until 200).map(mkEntry(t, _))
       t.commit(1L, es, op = "append")
+      val roots1 = shardRefs(root, 1L).map(_.split('/')(1)).toSet
       // corrupt one s-line to the wrong arity, keeping the terminator
       // marker (a COMPLETE but damaged meta — the dangerous shape)
       val p = new Path(s"$root/_log/v${"%020d".format(1)}.pcp")
@@ -199,6 +200,25 @@ class SidecarCheckpointSpec extends SparkSpec {
         "corrupted shard refs must fall back to the manifest chain")
       assert(cold.checkpointDF(1L).isEmpty,
         "the metadata face must refuse corrupted shard refs")
+      // the distributed prune falls back to the driver entry list
+      val PruneKey = "spark.graft.acid.distributedPruneMinFiles"
+      spark.conf.set(PruneKey, "1")
+      try {
+        val pruned = new GraftTable(spark, root, checkpointInterval = 1)
+        val before = pruned.fullResolutions.get()
+        assert(pruned.touchedEntries(1L, Seq(0L)).map(_.line).sorted ==
+          es.map(_.line).sorted)
+        assert(pruned.fullResolutions.get() == before + 1,
+          "the distributed prune must fall back to the driver entry list")
+      } finally spark.conf.unset(PruneKey)
+      // the next checkpoint is written whole instead of extending it
+      val es2 = es :+ mkEntry(t, 9001)
+      t.commit(2L, es2, op = "append")
+      val roots2 = shardRefs(root, 2L).map(_.split('/')(1)).toSet
+      assert(roots2.size == 1 && (roots2 & roots1).isEmpty,
+        s"a corrupted checkpoint must not be extended: $roots1 -> $roots2")
+      assert(new GraftTable(spark, root, checkpointInterval = 1).entries(2L)
+        .map(_.line).sorted == es2.map(_.line).sorted)
     }
   }
 

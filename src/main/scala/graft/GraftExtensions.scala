@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension installer: makes every graft native function
   * available to pure-SQL users via standard Spark plugin config —
@@ -11,70 +11,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * or programmatically `SparkSession.builder.withExtensions(new
   * GraftExtensions)`. This is the packaging surface a library consumer
-  * (spark-sql shell, Thrift server, notebook) actually uses; the
-  * per-query `register(...)` calls remain for sessions created without
-  * the extension.
+  * (spark-sql shell, Thrift server, notebook) actually uses; sessions
+  * created without the extension install the same function table with
+  * [[graft.functions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  // ExpressionInfo's 3-arg constructor is (className, db, functionName) —
-  // passing usage as the 3rd arg garbles DESCRIBE FUNCTION output (the
-  // usage string showed up as the function name). The extended constructor
-  // enforces doc-format rules on usage text, so the class carries the doc
-  // and the identifier stays correct.
-  private def fn(name: String, usage: String)(builder: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo(s"graft.functions ($usage)", null, name),
-      builder)
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(fn("web_mercator",
-      "web_mercator(lon, lat) - WGS84 -> EPSG:3857 struct<x,y>") { exprs =>
-      functions.WebMercator(
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs.head,
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(1),
-          org.apache.spark.sql.types.DoubleType))
-    })
-    e.injectFunction(fn("kgram_hashes",
-      "kgram_hashes(str, k) - rolling polynomial hash per k-gram") { exprs =>
-      functions.KGramHashes(exprs.head,
-        functions.FunctionBuilders.constInt(exprs(1), "kgram_hashes", "k"))
-    })
-    e.injectFunction(fn("dot_product",
-      "dot_product(array<double>, array<double>) - sequential-fold dot") { exprs =>
-      functions.DotProduct(exprs.head, exprs(1))
-    })
-    e.injectFunction(fn("sorted_jaccard",
-      "sorted_jaccard(array<bigint>, array<bigint>) - merge-walk jaccard") { exprs =>
-      functions.SortedJaccard(exprs.head, exprs(1))
-    })
-    e.injectFunction(fn("simhash64",
-      "simhash64(array<bigint>) - 64-bit simhash of token hashes") { exprs =>
-      functions.SimHash64(exprs.head)
-    })
-    e.injectFunction(fn("minhash_signature",
-      "minhash_signature(array<bigint>, k) - k-permutation minhash") { exprs =>
-      functions.MinHashSignature(exprs.head,
-        functions.FunctionBuilders.constInt(exprs(1), "minhash_signature", "k"))
-    })
-    e.injectFunction(fn("zorder64",
-      "zorder64(a, b) - 2-D Morton interleave of the low 32 bits") { exprs =>
-      functions.ZOrder64(exprs.head, exprs(1))
-    })
-    e.injectFunction(fn("shingle_hashes",
-      "shingle_hashes(str, n) - sorted distinct xxhash64 of n-word shingles") { exprs =>
-      functions.ShingleHashes(exprs.head,
-        functions.FunctionBuilders.constInt(exprs(1), "shingle_hashes", "n"))
-    })
-    e.injectFunction(fn("word_hashes",
-      "word_hashes(str) - polynomial hash per word, in order") { exprs =>
-      functions.WordHashes(exprs.head)
-    })
-    e.injectFunction(fn("explode_track",
-      "explode_track(array<struct>) - flatten a track to rows") { exprs =>
-      functions.ExplodeTrack(exprs.head)
-    })
+    // ExpressionInfo's 3-arg constructor is (className, db, functionName)
+    // — passing usage as the 3rd arg garbles DESCRIBE FUNCTION output (the
+    // usage string showed up as the function name). The extended
+    // constructor enforces doc-format rules on usage text, so the class
+    // carries the doc and the identifier stays correct.
+    functions.sqlFunctions.foreach { case (name, usage, builder) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(s"graft.functions ($usage)", null, name), builder))
+    }
     // whole-operator plan node: plans graft.plans.TopKPerKeyNode into
     // the bounded-heap TopKPerKeyExec (the DataFrame API also installs
     // this per-session via experimental.extraStrategies for sessions

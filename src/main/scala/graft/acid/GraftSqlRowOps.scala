@@ -181,10 +181,9 @@ object GraftSqlRowOps extends Rule[LogicalPlan] {
     * participant: the staged-merge op publishes under the txn's shared
     * decision marker instead of committing standalone. */
   private[acid] def convertMergeAtomic(m: MergeIntoTable): Option[GraftTable.AtomicMergeInto] =
-    // the atomic participant stages through mergeAssemble directly and
-    // has no evolution machinery — an evolving merge must not silently
-    // drop the new columns there; refuse the conversion (loud upstream
-    // error) instead
+    // the atomic participant plans without the evolution columns — an
+    // evolving merge must not silently drop the new columns there;
+    // refuse the conversion (loud upstream error) instead
     convertMergeParts(m).filterNot(_.evolve).map { cm =>
       GraftTable.AtomicMergeInto(cm.v2.underlying, cm.sourceDf, cm.cond,
         cm.matched, cm.inserts, cm.nmbs, cm.scopeSrcCol)

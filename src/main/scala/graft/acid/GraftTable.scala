@@ -82,7 +82,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     extends org.apache.spark.internal.Logging {
 
   private[acid] def partitionColName: Option[String] = partitionCol
-  import GraftTable.{BloomBits, BloomK, FileEntry, Restate, Staged}
+  import GraftTable.{BloomBits, BloomK, FileEntry, Restate, Staged, WritePlan}
 
   /** A write violated a table constraint; nothing was committed. */
   final class ConstraintViolationException(msg: String)
@@ -1470,7 +1470,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       // arithmetic over the parent header (a modified path appears on
       // both sides and nets to 0; nr only carries while the chain can
       // state it exactly) and the live-mask bookkeeping (the delta-first
-      // DV path's decision inputs — see [[deleteViaDv]]) from a
+      // DV path's decision inputs — see [[commitDvMasks]]) from a
       // restatement or the same arithmetic: `dvsv=` the distinct dv
       // sidecar versions the active set MAY reference (by arithmetic an
       // over-approximation — a removed last-referencing entry keeps its
@@ -2246,27 +2246,17 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
 
   /** Replace the table content with `df` (CHECK-validated at write). */
   def overwrite(df: DataFrame, txn: Option[(String, Long)] = None): Long =
-    replaceWith(df, "overwrite", txn)
+    replaceWith(df, "overwrite", nextVersion, txn)
 
-  private def replaceWith(df: DataFrame, op: String,
-                          txn: Option[(String, Long)] = None,
-                          cdf: Boolean = false): Long = {
-    val v = nextVersion
-    // on a schema-tracking table the replacement's schema becomes the
-    // declared schema (an overwrite may legitimately reshape the table;
-    // delete/update/merge pass frames derived from the declared snapshot,
-    // so for them this is the identity)
+  /** Publish `df` as the whole content of version `v`. On a schema-
+    * tracking table the replacement's schema becomes the declared schema
+    * (an overwrite may legitimately reshape the table). No change files:
+    * the net change ~ the whole before+after content, so the compute
+    * path's endpoint read is already the cheapest serve. */
+  private def replaceWith(df: DataFrame, op: String, v: Long,
+                          txn: Option[(String, Long)] = None): Long = {
     val evolved = if (tableSchema.isDefined) Some(df.schema) else None
-    val written = writeData(clusterByPartition(df), v)
-    // cdf: full-rewrite merge/delete/update commits persist their net
-    // change too ([[rewriteChangeMeta]]). NOT routed for `overwrite`:
-    // there the net change ~ the whole before+after content — the
-    // compute path's endpoint read is already the cheapest serve.
-    val extra =
-      if (cdf && latestVersion.isDefined)
-        rewriteChangeMeta(entries(v - 1), written, v - 1)
-      else Nil
-    commit(v, written, op, txn, schema = evolved, extraMeta = extra)
+    commit(v, writeData(clusterByPartition(df), v), op, txn, schema = evolved)
   }
 
   /** Cumulative (writerId -> newest committed epoch) map as of version
@@ -2419,32 +2409,34 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
 
   /** Commit a SCOPED mutation with LOGICAL CONFLICT DETECTION (the Delta
     * write-serializability rebase): the mutation consumed `consumed`
-    * (read+rewritten entries of `prev`) within `touched` partition
-    * values and produced `written`. Losing the version race does NOT
-    * force a recompute — as long as (a) every consumed entry is still
-    * active unchanged (nobody rewrote or re-masked our inputs) and
-    * (b) no interleaved commit added files intersecting our touched
-    * partitions (rows our mutation should have seen), the already-
-    * written files re-commit on top of the NEW base: concurrent writers
-    * on disjoint partitions all land, each paying one data write. A
-    * real conflict throws [[ConcurrentCommitException]] — the caller's
-    * [[commitWithRetry]] recompute loop remains the fallback. */
-  private def commitScopedWithRebase(firstV: Long, prev: Seq[FileEntry],
-      consumed: Seq[FileEntry], written: Seq[FileEntry],
-      touched: Seq[Long], op: String,
-      affects: Option[FileEntry => Boolean] = None,
+    * (read+rewritten entries of base version `lv`) and produced
+    * `written`; `affected` tells whether an entry falls inside its
+    * touched scope. Losing the version race does NOT force a recompute —
+    * as long as (a) every consumed entry is still active unchanged
+    * (nobody rewrote or re-masked our inputs) and (b) no interleaved
+    * commit added an affected file (rows our mutation should have seen),
+    * the already-written files re-commit on top of the NEW base:
+    * concurrent writers on disjoint partitions all land, each paying one
+    * data write. A real conflict throws [[ConcurrentCommitException]] —
+    * the caller's [[commitWithRetry]] recompute loop remains the
+    * fallback. */
+  private def commitScopedWithRebase(lv: Long, consumed: Seq[FileEntry],
+      written: Seq[FileEntry], affected: FileEntry => Boolean, op: String,
       extraMeta: Seq[String] = Nil,
       schemaOverride: Option[StructType] = None): Long = {
-    val affected = affects.getOrElse((e: FileEntry) => touches(e, touched))
+    val firstV = lv + 1
     val consumedLines = consumed.map(_.line).toSet
     val consumedPaths = consumed.map(_.path).toSet
-    val prevLines = prev.map(_.line).toSet
+    // the base's lines, resolved only when a lost race has an affected
+    // interleaved add to test against them
+    lazy val prevLines =
+      if (lv < 1L) Set.empty[String] else entries(lv).map(_.line).toSet
     var v = firstV
     var attempt = 0
     while (true) {
       // DELTA-FIRST rebase validation: the first attempt needs NO check
       // beyond the exclusive create (winning version firstV proves
-      // nothing changed since `prev`); a lost race validates the
+      // nothing changed since the base); a lost race validates the
       // INTERLEAVED manifests' deltas instead of re-materializing the
       // whole base — a removed/re-tagged consumed path or a new
       // in-scope entry conflicts exactly as the full-list compare did.
@@ -2461,7 +2453,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
                 throw new ConcurrentCommitException(
                   s"scoped $op at $root: a concurrent commit rewrote " +
                     "consumed files; rebase and retry")
-              if (m.adds.exists(e => !prevLines.contains(e.line) && affected(e)))
+              if (m.adds.exists(e => affected(e) && !prevLines.contains(e.line)))
                 throw new ConcurrentCommitException(
                   s"scoped $op at $root: a concurrent commit added rows " +
                     "in the touched scope; rebase and retry")
@@ -2476,7 +2468,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
               s"scoped $op at $root: a concurrent commit rewrote consumed " +
                 "files; rebase and retry")
           if (entries(v - 1).exists(e =>
-              !prevLines.contains(e.line) && affected(e)))
+              affected(e) && !prevLines.contains(e.line)))
             throw new ConcurrentCommitException(
               s"scoped $op at $root: a concurrent commit added rows in the " +
                 "touched scope; rebase and retry")
@@ -2503,17 +2495,22 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * Reads the old (immutable) files while writing the new ones, so the
     * rewrite needs no lock; the swap is the manifest commit.
     *
-    * On a `partitionCol` table the rewrite is PARTITION-SCOPED: only the
-    * files whose partition window intersects the updates' partition values
-    * are read+rewritten; every other file entry carries over verbatim
-    * (same immutable file, zero I/O). Requires the partition value to be
-    * functionally determined by the merge key — see the class docs. */
-  private def mergeWinners(keyCols: Seq[String], winnerOrder: Seq[Column])
-      (df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(winnerOrder: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
+    * The rewrite scope AUTO-ROUTES ([[planMerge]]): on a `partitionCol`
+    * table only the files whose partition window intersects the updates'
+    * partition values read+rewrite (documented FD contract — see the
+    * class docs); without one, through any windowed MERGE-KEY column
+    * (statsCol or an indexCols member that is one of `keyCols`). Key-
+    * column scoping needs NO functional-dependency assumption: rows
+    * whose `c` lies outside the updates' `c` values differ from every
+    * update in the `c` key component, so they can never be matched or
+    * displaced — on an un-partitioned z-ordered table a day-keyed upsert
+    * rewrites O(touched days' files) automatically. Every other file
+    * entry carries over verbatim (same immutable file, zero I/O).
+    * Non-key windowed columns scope through the explicit
+    * [[mergeScopedOn]] (caller asserts the FD contract there). */
+  def merge(updates: DataFrame, keyCols: Seq[String],
+            winnerOrder: Seq[Column]): Long =
+    commitPlan(planMerge(updates, keyCols, winnerOrder))
 
   /** [[merge]] scoped on ANY windowed column `c` (the partition column,
     * statsCol, or an indexCols member): only the files whose recorded
@@ -2523,70 +2520,61 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * determined by the merge key (a key's live row never sits outside
     * the updates' `c` values) — now available on SECONDARY clustering
     * columns (a z-ordered day column, a bucketed tenant id) without a
-    * declared partitionCol. Falls back to the full merge when any
+    * declared partitionCol. Falls back to the unscoped merge when any
     * update's `c` is null or no window can prune. */
   def mergeScopedOn(c: String, updates: DataFrame, keyCols: Seq[String],
-                    winnerOrder: Seq[Column]): Long = {
-    val vals = updates.select(col(c).cast("long")).distinct().collect()
-    if (vals.isEmpty || vals.exists(_.isNullAt(0)))
-      return mergeUnscoped(updates, keyCols, winnerOrder)
-    val touched = vals.map(_.getLong(0)).sorted.toSeq
-    def affected(e: FileEntry): Boolean =
-      windowOf(e, c).forall { case (lo, hi) =>
-        touched.exists(x => x >= lo && x <= hi) }
-    val v = nextVersion
-    val prev = latestVersion.map(entries).getOrElse(Nil)
-    val (rewrite, keep) = prev.partition(affected)
-    if (keep.isEmpty) return mergeUnscoped(updates, keyCols, winnerOrder)
-    val base = readEntries(rewrite, updates)
-    val merged = mergeWinners(keyCols, winnerOrder)(base.unionByName(updates))
-    val written = writeData(clusterByPartition(merged, Some(touched.size)), v)
-    commitScopedWithRebase(v, prev, rewrite, written, touched, op = "merge",
-      affects = Some(affected),
-      extraMeta = rewriteChangeMeta(rewrite, written, v - 1))
+                    winnerOrder: Seq[Column]): Long =
+    commitPlan(planMerge(updates, keyCols, winnerOrder, Some(c)))
+
+  private def mergeWinners(keyCols: Seq[String], winnerOrder: Seq[Column])
+      (df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(winnerOrder: _*)
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** [[merge]] AUTO-ROUTES its rewrite scope: the partition-scoped path
-    * when the table has a `partitionCol` (documented FD contract), else
-    * — NEW — through any windowed MERGE-KEY column (statsCol or an
-    * indexCols member that is one of `keyCols`). Key-column scoping
-    * needs NO functional-dependency assumption: rows whose `c` lies
-    * outside the updates' `c` values differ from every update in the
-    * `c` key component, so they can never be matched or displaced — on
-    * an un-partitioned z-ordered table a day-keyed upsert rewrites
-    * O(touched days' files) automatically. Non-key windowed columns
-    * still scope through the explicit [[mergeScopedOn]] (caller asserts
-    * the FD contract there). */
-  def merge(updates: DataFrame, keyCols: Seq[String],
-            winnerOrder: Seq[Column]): Long = {
-    val autoKeyCol =
+  /** MERGE's planner ([[merge]], [[mergeScopedOn]],
+    * [[GraftTable.AtomicMerge]]): scoped on `scopeCol`'s windows (default:
+    * the windowed merge-key column of an un-partitioned table) when every
+    * update carries a value and some file falls outside them, else on the
+    * partition column's values, else the whole table rewrites. A scoped
+    * plan rebases on its scope. An un-committed partitioned table merges
+    * as its first version. */
+  private[acid] def planMerge(updates: DataFrame, keyCols: Seq[String],
+      winnerOrder: Seq[Column], scopeCol: Option[String] = None): WritePlan = {
+    val lv = latestVersion.getOrElse(0L)
+    val prev = if (lv < 1L) Nil else entries(lv)
+    val keyCol = scopeCol.orElse(
       if (partitionCol.nonEmpty) None
       else keyCols.find(k => statsCol.exists(_.equalsIgnoreCase(k)) ||
-        indexCols.exists(_.equalsIgnoreCase(k)))
-    autoKeyCol match {
-      case Some(c) => mergeScopedOn(c, updates, keyCols, winnerOrder)
-      case None => mergeUnscoped(updates, keyCols, winnerOrder)
+        indexCols.exists(_.equalsIgnoreCase(k))))
+    val byKey = keyCol.flatMap { c =>
+      val vals = updates.select(col(c).cast("long")).distinct().collect()
+      if (vals.isEmpty || vals.exists(_.isNullAt(0))) None
+      else {
+        val touched = vals.map(_.getLong(0)).sorted.toSeq
+        val affected = (e: FileEntry) => windowOf(e, c).forall { case (lo, hi) =>
+          touched.exists(x => x >= lo && x <= hi) }
+        if (prev.forall(affected)) None
+        else Some(WritePlan.Rebase(touched, affected))
+      }
     }
-  }
-
-  private def mergeUnscoped(updates: DataFrame, keyCols: Seq[String],
-                            winnerOrder: Seq[Column]): Long = {
-    def winners(df: DataFrame): DataFrame =
-      mergeWinners(keyCols, winnerOrder)(df)
-    val scoped = partitionCol.flatMap(_ => touchedPartitions(updates))
-    scoped match {
+    val scope = byKey.orElse(partitionCol.flatMap(_ => touchedPartitions(updates))
+      .map(t => WritePlan.Rebase(t, touches(_, t))))
+    val winners = mergeWinners(keyCols, winnerOrder) _
+    scope match {
+      case Some(s) =>
+        val rewrite = prev.filter(s.affects)
+        val merged = winners(readEntries(rewrite, updates).unionByName(updates))
+        val written = writeData(clusterByPartition(merged, Some(s.touched.size)),
+          lv + 1)
+        WritePlan(lv, "merge", WritePlan.Rewrite(rewrite, written),
+          rewriteChangeMeta(rewrite, written, lv), Some(s))
       case None =>
-        replaceWith(winners(snapshot().unionByName(updates)), "merge",
-          cdf = true)
-      case Some(touched) =>
-        val v = nextVersion
-        val prev = latestVersion.map(entries).getOrElse(Nil)
-        val (rewrite, _) = prev.partition(touches(_, touched))
-        val base = readEntries(rewrite, updates)
-        val merged = winners(base.unionByName(updates))
-        val written = writeData(clusterByPartition(merged, Some(touched.size)), v)
-        commitScopedWithRebase(v, prev, rewrite, written, touched, op = "merge",
-          extraMeta = rewriteChangeMeta(rewrite, written, v - 1))
+        if (lv < 1L)
+          throw new IllegalStateException(s"no commits in table at $root")
+        fullRewrite(lv, "merge", winners(snapshot(Some(lv)).unionByName(updates)),
+          prev)
     }
   }
 
@@ -2667,32 +2655,49 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           wanted.map(k => k -> probe.schema(k).dataType)
         }
       }
-    val base0 = snapshot()
-    val base = newCols.foldLeft(base0) { case (df, (n, dt)) =>
-      df.withColumn(n, lit(null).cast(dt)) }
-    val evolved =
-      if (newCols.isEmpty) None
-      else Some(StructType(tableSchema.get.fields ++ newCols.map { case (n, dt) =>
-        StructField(n, dt, nullable = true) }))
+    commitPlan(planMergeInto(source, condition, matched, notMatched,
+      notMatchedBySource, scopedTouched, newCols))
+  }
 
+  /** MERGE INTO's planner ([[mergeIntoGeneral]],
+    * [[GraftTable.AtomicMergeInto]]): with a partition cover
+    * `scopedTouched` (evaluated only when it can apply: a `partitionCol`
+    * table, no not-matched-by-source actions) the candidates resolve
+    * through [[touchedEntries]] — the distributed partition prune past
+    * the threshold, survivors-only driver memory — and the plan rebases
+    * on the cover; otherwise the whole table rewrites. `newCols` = the
+    * schema-evolution columns, NULL in every row no action assigns. */
+  private[acid] def planMergeInto(source: DataFrame, condition: Column,
+      matched: Seq[(Option[Column], Option[Map[String, Column]])],
+      notMatched: Seq[(Option[Column], Map[String, Column])],
+      notMatchedBySource: Seq[(Option[Column], Option[Map[String, Column]])],
+      scopedTouched: => Option[Seq[Long]],
+      newCols: Seq[(String, DataType)] = Nil): WritePlan = {
+    val lv = baseVersion
     def assemble(b: DataFrame): DataFrame =
-      mergeAssemble(b, source, condition, matched, notMatched,
-        notMatchedBySource)
-
-    scopedTouched.filter(_ => notMatchedBySource.isEmpty && partitionCol.nonEmpty) match {
-      case Some(vals) =>
-        val v = nextVersion
-        val prev = latestVersion.map(entries).getOrElse(Nil)
-        val (rewrite, _) = prev.partition(touches(_, vals.sorted))
-        val readBase = readEntries(rewrite, base)
-        val result = assemble(newCols.foldLeft(readBase) { case (df, (n, dt)) =>
+      mergeAssemble(newCols.foldLeft(b) { case (df, (n, dt)) =>
           if (df.columns.exists(_.equalsIgnoreCase(n))) df
-          else df.withColumn(n, lit(null).cast(dt)) })
-        val written = writeData(clusterByPartition(result, Some(vals.size)), v)
-        commitScopedWithRebase(v, prev, rewrite, written, vals.sorted,
-          op = "merge", extraMeta = rewriteChangeMeta(rewrite, written, v - 1),
-          schemaOverride = evolved)
-      case None => replaceWith(assemble(base), "merge", cdf = true)
+          else df.withColumn(n, lit(null).cast(dt)) },
+        source, condition, matched, notMatched, notMatchedBySource)
+    val scope =
+      if (notMatchedBySource.nonEmpty || partitionCol.isEmpty) None
+      else scopedTouched
+    scope match {
+      case Some(vals) =>
+        val touched = vals.sorted
+        val rewrite = touchedEntries(lv, touched)
+        val written = writeData(clusterByPartition(
+          assemble(readEntries(rewrite, snapshot(Some(lv)))), Some(vals.size)),
+          lv + 1)
+        val evolved =
+          if (newCols.isEmpty) None
+          else schemaOf(lv).map(s => StructType(s.fields ++ newCols.map {
+            case (n, dt) => StructField(n, dt, nullable = true) }))
+        WritePlan(lv, "merge", WritePlan.Rewrite(rewrite, written, schema = evolved),
+          rewriteChangeMeta(rewrite, written, lv),
+          Some(WritePlan.Rebase(touched, touches(_, touched))))
+      case None =>
+        fullRewrite(lv, "merge", assemble(snapshot(Some(lv))), entries(lv))
     }
   }
 
@@ -2708,12 +2713,11 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       .join(ren(source, "__s_", "__s_present"), condition, "full_outer")
   }
 
-  /** [[mergeIntoGeneral]]'s evaluation core, shared with the atomic
-    * participant ([[GraftTable.AtomicMergeInto]]): full-outer-join `base`
+  /** [[planMergeInto]]'s evaluation core: full-outer-join `base`
     * with `source` on the merge condition over the `__t_`/`__s_`
     * disambiguated frame, pick each row's branch and first applicable
     * action, emit the surviving rows in `base`'s schema. */
-  private[acid] def mergeAssemble(base: DataFrame, source: DataFrame,
+  private def mergeAssemble(base: DataFrame, source: DataFrame,
       condition: Column,
       matched: Seq[(Option[Column], Option[Map[String, Column]])],
       notMatched: Seq[(Option[Column], Map[String, Column])],
@@ -2852,7 +2856,8 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       op: String, sig: String): Long = {
     require(cols.size >= 2 && cols.size <= 8,
       s"$op takes 2..8 columns, got ${cols.size}")
-    val snap = snapshot()
+    val lv = baseVersion
+    val snap = snapshot(Some(lv))
     val bridge = org.apache.spark.sql.GraftPlanBridge
     // STRING dimensions enter the grid through their ORDER-PRESERVING
     // 8-byte prefix code ([[graft.functions.StringPrefix64]]): unlike a
@@ -2889,7 +2894,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       .repartitionByRange(targetFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-    val v = nextVersion
+    val v = lv + 1
     // stamp the layout tag: [[compactZOrderIncremental]]'s witness that
     // these files are already in this (cols) layout — curve-specific, so
     // Morton and Hilbert layouts never mistake each other's files
@@ -2939,8 +2944,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         indexCols.exists(_.equalsIgnoreCase(c)),
       s"incremental $op needs every dimension windowed; $c is not in " +
         s"statsCol/partitionCol/indexCols"))
-    val lv = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no commits in table at $root"))
+    val lv = baseVersion
     val prev = entries(lv)
     val schema = snapshot(Some(lv)).schema
     def isString(c: String): Boolean = schema.fields
@@ -2963,7 +2967,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       val ws = prev.flatMap(numWindow(_, c))
       if (ws.isEmpty) None else Some(c -> (ws.map(_._1).min, ws.map(_._2).max))
     }.toMap
-    val v = nextVersion
+    val v = lv + 1
     val untagged = prev.filterNot(_.zTag.contains(sig))
     if (untagged.isEmpty) return commit(v, prev, op = op)
     val totalRowsAll = prev.flatMap(_.liveRows).sum.max(1L)
@@ -3668,81 +3672,230 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     readWithDv(hit, schemaOf(v), snapshot(Some(v)), cmapOf(v)).filter(col(c) === value)
   }
 
-  /** Partition values `pred` pins through top-level AND-conjuncts of the
-    * form `partitionCol = literal`, `literal = partitionCol`, or
-    * `partitionCol IN (literals)` — the shapes where the predicate
-    * PROVABLY implies a partition membership, so [[delete]] can route to
-    * the partition-scoped rewrite without the caller knowing
-    * [[deleteInPartitions]]. Anything else (OR at the top, ranges,
-    * expressions over the column) returns None: correctness over scoping. */
-  private def pinnedPartitions(pred: Column): Option[Seq[Long]] =
-    partitionCol.flatMap { pc =>
-      import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-      import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, In, Literal}
-      // a Column converts to UNRESOLVED function nodes ('and, '=, 'in) in
-      // Spark 4; match both those and the resolved catalyst forms
-      object Fn {
-        def unapply(e: Expression): Option[(String, Seq[Expression])] = e match {
-          case f: UnresolvedFunction =>
-            Some((f.nameParts.last.toLowerCase, f.arguments))
-          case _ => None
-        }
-      }
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r)           => conjuncts(l) ++ conjuncts(r)
-        case Fn("and", args)     => args.flatMap(conjuncts)
-        case o                   => Seq(o)
-      }
-      def isPc(e: Expression): Boolean = e match {
-        case a: UnresolvedAttribute => a.nameParts.last.equalsIgnoreCase(pc)
-        case a: AttributeReference  => a.name.equalsIgnoreCase(pc)
-        case _                      => false
-      }
-      def litLong(e: Expression): Option[Long] = e match {
-        case Literal(v, org.apache.spark.sql.types.ByteType |
-                        org.apache.spark.sql.types.ShortType |
-                        org.apache.spark.sql.types.IntegerType |
-                        org.apache.spark.sql.types.LongType) =>
-          Some(v.toString.toLong)
-        case _ => None
-      }
-      def pinned(e: Expression): Option[Seq[Long]] = e match {
-        case EqualTo(a, l) if isPc(a)      => litLong(l).map(Seq(_))
-        case EqualTo(l, a) if isPc(a)      => litLong(l).map(Seq(_))
-        case Fn("=" | "==", Seq(a, l)) if isPc(a) => litLong(l).map(Seq(_))
-        case Fn("=" | "==", Seq(l, a)) if isPc(a) => litLong(l).map(Seq(_))
-        case In(a, vs) if isPc(a) =>
-          val ls = vs.map(litLong)
-          if (ls.nonEmpty && ls.forall(_.isDefined)) Some(ls.flatten.distinct)
-          else None
-        case Fn("in", a +: vs) if isPc(a) && vs.nonEmpty =>
-          val ls = vs.map(litLong)
-          if (ls.forall(_.isDefined)) Some(ls.flatten.distinct) else None
-        case _ => None
-      }
-      val predExpr = org.apache.spark.sql.GraftPlanBridge.expr(spark, pred)
-      conjuncts(predExpr).iterator.map(pinned)
-        .collectFirst { case Some(vals) => vals }
-    }
-
   /** Row-level DELETE: publish a new version without the rows matching
     * `predicate` — the compliance path (right-to-be-forgotten) a raw
     * parquet directory cannot offer. SQL DELETE semantics: a row is
     * removed only when the predicate is TRUE (a NULL predicate keeps the
-    * row). When the predicate pins the partition column (e.g.
-    * `delete($"day" === 5)` on a day-partitioned table) the rewrite
-    * auto-routes to the partition-scoped path and touches only the
-    * matching files; otherwise it is one distributed filter job over the
-    * active set. Deleted rows leave the LOG when the prior versions are
-    * vacuumed (physical erasure = delete + vacuum, same two-step contract
-    * as the production lakehouse formats). */
+    * row). Deletion vectors mask the rows while few match; past that the
+    * pruned candidate files rewrite ([[planDelete]]). Deleted rows leave
+    * the LOG when the prior versions are vacuumed (physical erasure =
+    * delete + vacuum, same two-step contract as the production lakehouse
+    * formats). */
   def delete(predicate: Column, useDv: Boolean = true): Long =
-    (if (useDv) deleteViaDv(predicate).map(maybeAutoPurge) else None).getOrElse(
-      pinnedPartitions(predicate) match {
-        case Some(vals) => deleteInPartitions(predicate, vals)
-        case None => windowScopedRewrite(predicate, "delete",
-          df => df.filter(!coalesce(predicate, lit(false))))
-      })
+    commitPlan(planDelete(predicate, useDv))
+
+  /** Partition-scoped row DELETE: erase rows matching `predicate` within
+    * the given partition values — `delete(predicate && partitionCol IN
+    * partitions)` as a copy-on-write, rewriting ONLY the files whose
+    * partition window intersects `partitions`; every other file entry
+    * carries over verbatim. */
+  def deleteInPartitions(predicate: Column, partitions: Seq[Long]): Long =
+    delete(inPartitions(predicate, partitions, "deleteInPartitions"),
+      useDv = false)
+
+  /** Row-level UPDATE: publish a new version where rows matching
+    * `predicate` have the `set` assignments applied. SQL UPDATE
+    * semantics: every right-hand side evaluates against the OLD row
+    * (single-select application, so `SET a = b, b = a` swaps), and a
+    * NULL predicate leaves the row untouched. Routed like [[delete]]
+    * ([[planUpdate]]). */
+  def update(predicate: Column, set: Map[String, Column],
+             useDv: Boolean = true): Long =
+    commitPlan(planUpdate(predicate, set, useDv))
+
+  /** Partition-scoped row UPDATE: apply `set` to rows matching
+    * `predicate` within the given partition values, rewriting ONLY the
+    * intersecting files ([[deleteInPartitions]]' shape for updates). */
+  def updateInPartitions(predicate: Column, set: Map[String, Column],
+                         partitions: Seq[Long]): Long =
+    update(inPartitions(predicate, partitions, "updateInPartitions"), set,
+      useDv = false)
+
+  private def inPartitions(predicate: Column, partitions: Seq[Long],
+                           op: String): Column = {
+    val pc = partitionCol.getOrElse(throw new IllegalStateException(
+      s"$op needs a partitionCol-enabled table"))
+    predicate && col(pc).isin(partitions.map(Long.box): _*)
+  }
+
+  /** The version every row-level write plans against. */
+  private def baseVersion: Long = latestVersion.getOrElse(
+    throw new IllegalStateException(s"no commits in table at $root"))
+
+  /** The STANDALONE publisher of a [[GraftTable.WritePlan]]: a plan with
+    * a rebase scope commits through [[commitScopedWithRebase]] (a lost
+    * race re-commits the written files on the new base when the scope
+    * allows), everything else lands at the pinned `lv + 1` — a commit
+    * racing the plan collides loudly on the manifest create instead of
+    * being silently dropped from the table. A mask commit then bounds
+    * the accumulated DV debt ([[maybeAutoPurge]]). */
+  private[acid] def commitPlan(p: WritePlan): Long = (p.body, p.rebase) match {
+    case (r: WritePlan.Rewrite, Some(s)) =>
+      commitScopedWithRebase(p.lv, r.consumed, r.written, s.affects, p.op,
+        p.extra, r.schema)
+    case (_: WritePlan.Mask, _) => maybeAutoPurge(publishAt(p, None))
+    case _ => publishAt(p, None)
+  }
+
+  /** The multi-table PARTICIPANT publisher of a [[GraftTable.WritePlan]]
+    * ([[GraftTable.commitAtomic]]): the plan publishes PENDING under the
+    * txn's marker at `lv + 1`, and refuses — the txn re-stages — if any
+    * commit landed on the table since the plan's base. */
+  private[acid] def participant(p: WritePlan): String => Long = marker => {
+    if (latestVersion.getOrElse(0L) != p.lv)
+      throw new ConcurrentCommitException(
+        s"atomic ${p.op} on $root: base moved past v${p.lv}; restage")
+    publishAt(p, Some(marker))
+  }
+
+  /** Version `lv + 1` of a plan: a mask through [[commitDvMasks]], a
+    * rewrite as the whole list when its route listed the base (`keep`),
+    * else as the delta of its consumed and written entries. */
+  private def publishAt(p: WritePlan, pending: Option[String]): Long =
+    p.body match {
+      case m: WritePlan.Mask => commitDvMasks(p.lv, m, p.op, p.extra, pending)
+      case WritePlan.Rewrite(_, written, Some(keep), schema) =>
+        commit(p.lv + 1, keep ++ written, op = p.op, schema = schema,
+          extraMeta = p.extra, pending = pending)
+      case WritePlan.Rewrite(consumed, written, None, schema) =>
+        commitDelta(p.lv + 1, written, consumed, op = p.op, schema = schema,
+          extraMeta = p.extra, pending = pending)
+    }
+
+  /** DELETE's planner ([[delete]], [[GraftTable.AtomicDelete]]): the
+    * candidates prune through every manifest index, then deletion-vector
+    * masks while at most [[dvMaxRows]] rows match ([[planMask]]), else
+    * the copy-on-write of the candidates ([[planCow]]). */
+  private[acid] def planDelete(predicate: Column,
+                               useDv: Boolean = true): WritePlan = {
+    val lv = baseVersion
+    val cands = entriesForPredicate(predicate, lv)
+    (if (useDv) planMask(lv, "delete", predicate, cands, None) else None)
+      .getOrElse(planCow(lv, "delete", predicate, cands, pinOk = true,
+        _.filter(!coalesce(predicate, lit(false)))))
+  }
+
+  /** UPDATE's planner ([[update]], [[GraftTable.AtomicUpdate]]): routed
+    * like [[planDelete]]; the mask route re-inserts the updated copies.
+    * Assigning TO the partition column disables the partition rebase
+    * (rows could migrate out of the pinned partitions). Window scoping
+    * stays sound whatever SET assigns: carried-over files provably hold
+    * no matching rows, and rewritten files get fresh windows from
+    * writeData — even an update TO an indexed column stays indexed. */
+  private[acid] def planUpdate(predicate: Column, set: Map[String, Column],
+                               useDv: Boolean = true): WritePlan = {
+    val lv = baseVersion
+    val cands = entriesForPredicate(predicate, lv)
+    (if (useDv)
+       planMask(lv, "update", predicate, cands,
+         Some(applyAssignments(_, lit(true), set)))
+     else None)
+      .getOrElse(planCow(lv, "update", predicate, cands,
+        pinOk = !partitionCol.exists(pc => set.keySet.exists(_.equalsIgnoreCase(pc))),
+        applyAssignments(_, predicate, set)))
+  }
+
+  /** The MERGE-ON-READ route: collect the matching rows' (file, position)
+    * pairs from the pruned candidates and merge them into the
+    * candidates' deletion vectors — ZERO base files written: a one-row
+    * delete on a 100 TB table costs one pruned scan plus a KB-scale
+    * sidecar, with the anti-filter applied at read ([[readWithDv]]) and
+    * physically materialized at the next [[compact]]/COW rewrite.
+    * `update` maps the matched rows to the copies that re-enter as fresh
+    * files (None = a delete). None when more than [[dvMaxRows]] rows
+    * match — a bulk write wants the rewrite. With change data on, the
+    * pre-images are the matched rows and the post-images the re-inserted
+    * copies. */
+  private def planMask(lv: Long, op: String, predicate: Column,
+                       cands: Seq[FileEntry],
+                       update: Option[DataFrame => DataFrame]): Option[WritePlan] = {
+    val empty = WritePlan(lv, op, WritePlan.Mask(Nil, Map.empty, Set.empty, Nil))
+    // pruned-to-nothing predicate: an EMPTY delta carries the table —
+    // no entry-list materialization for the common miss
+    if (cands.isEmpty) return Some(empty)
+    val cdf = cdfWriteEnabled
+    // when the matched rows outlive the position scan (updated copies,
+    // change files) the read is DV-FILTERED — an already-masked row must
+    // neither resurrect as an updated copy nor re-surface in the feed —
+    // and materialized ONCE, so the masked positions and the rows come
+    // from the same evaluation even under a non-deterministic predicate.
+    // Otherwise the raw read (existing DVs NOT applied) stays one
+    // vectorized scan: re-masking a masked position is a set-union no-op.
+    val keepRows = update.isDefined || cdf
+    val scan0 = readWithPos(cands, schemaOf(lv), applyDv = keepRows, cmapOf(lv))
+      .filter(coalesce(predicate, lit(false)))
+      .limit(dvMaxRows + 1)
+    val scan = if (keepRows) scan0.localCheckpoint() else scan0
+    val hits = scan.select(col("__mor_f"), col("__mor_p")).collect()
+    if (hits.length > dvMaxRows) None
+    else if (hits.isEmpty) Some(empty)
+    else {
+      val (payload, dead) = mergedDvs(cands, hits)
+      val matched = scan.drop("__mor_f", "__mor_p")
+      val copies = update.map(_(matched))
+      val newFiles = copies.fold(Seq.empty[FileEntry])(u =>
+        writeData(clusterByPartition(u), lv + 1))
+      val extra =
+        if (!cdf) Nil
+        else writeChangeData((matched.withColumn("_change", lit("delete")) +:
+          copies.map(_.withColumn("_change", lit("insert"))).toSeq)
+          .reduce(_ unionByName _))
+      Some(WritePlan(lv, op, WritePlan.Mask(cands, payload, dead, newFiles),
+        extra))
+    }
+  }
+
+  /** The INDEX-scoped COPY-ON-WRITE route: rewrite only the pruned
+    * candidates `cands` (the same pruning as [[snapshotWhere]]) through
+    * `transform`, carry every other entry over verbatim. Sound with NO
+    * functional-dependency assumption: a file the indexes prove free of
+    * matching rows is by definition untouched by the mutation — `DELETE
+    * WHERE day = 5` on a z-ordered or secondary-indexed table rewrites
+    * O(matching files) even without a partitionCol. When the prune keeps
+    * every file the whole table rewrites. A predicate that pins the
+    * partition column to literals (`day = 5`, `day IN (..)` — the prune
+    * then keeps only those partitions' files) rebases on those values
+    * unless `pinOk` is false. */
+  private def planCow(lv: Long, op: String, predicate: Column,
+                      cands: Seq[FileEntry], pinOk: Boolean,
+                      transform: DataFrame => DataFrame): WritePlan = {
+    val prev = entries(lv)
+    if (cands.size >= prev.size)
+      return fullRewrite(lv, op, transform(snapshot(Some(lv))), prev)
+    val pinned = partitionCol.filter(_ => pinOk).flatMap(pc =>
+      predicateBounds(predicate).collectFirst {
+        case b if b.col.equalsIgnoreCase(pc) && b.points.isDefined =>
+          b.points.get.sorted })
+    val candPaths = cands.map(_.path).toSet
+    val (rewrite, keep) = prev.partition(e => candPaths.contains(e.path))
+    val (written, extra) =
+      if (rewrite.isEmpty) (Nil, Nil)
+      else {
+        val out = transform(readWithDv(rewrite, schemaOf(lv),
+          snapshot(Some(lv)), cmapOf(lv)))
+        val w = writeData(clusterByPartition(out, pinned.map(_.size)), lv + 1)
+        (w, rewriteChangeMeta(rewrite, w, lv))
+      }
+    pinned match {
+      case Some(touched) =>
+        WritePlan(lv, op, WritePlan.Rewrite(rewrite, written), extra,
+          Some(WritePlan.Rebase(touched, touches(_, touched))))
+      case None =>
+        WritePlan(lv, op, WritePlan.Rewrite(rewrite, written, Some(keep)), extra)
+    }
+  }
+
+  /** A row-level write replacing the whole table at base `lv` (`prev` =
+    * its entries) with `df`: on a schema-tracking table `df`'s schema
+    * becomes the declared one (the identity for frames derived from the
+    * declared snapshot; a merge's evolved columns otherwise). */
+  private def fullRewrite(lv: Long, op: String, df: DataFrame,
+                          prev: Seq[FileEntry]): WritePlan = {
+    val written = writeData(clusterByPartition(df), lv + 1)
+    WritePlan(lv, op, WritePlan.Rewrite(prev, written, keep = Some(Nil),
+        schema = schemaOf(lv).map(_ => df.schema)),
+      rewriteChangeMeta(prev, written, lv))
+  }
 
   /** The exact masked-row total `dvn=` that every manifest header
     * states (the delta-first DV path's and the auto-purge decision's
@@ -3767,36 +3920,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // the debt bound) resolves the list anyway.
     if (statedDvn(v, headerMeta(v)) <= dvPurgeRows) v
     else try reorg() catch { case _: ConcurrentCommitException => v }
-  }
-
-  /** INDEX-scoped copy-on-write: rewrite only the files whose manifest
-    * windows/blooms can contain predicate-matching rows (the same pruning
-    * as [[snapshotWhere]]), carry every other entry over verbatim. Sound
-    * for DELETE/UPDATE with NO functional-dependency assumption: a file
-    * the indexes prove free of matching rows is by definition untouched
-    * by the mutation. Generalizes partition scoping to ANY indexed
-    * column — `DELETE WHERE day = 5` on a z-ordered or secondary-indexed
-    * table rewrites O(matching files) even without a partitionCol. Falls
-    * back to the full rewrite when pruning buys nothing. */
-  private def windowScopedRewrite(predicate: Column, op: String,
-                                  transform: DataFrame => DataFrame): Long = {
-    val lv = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no commits in table at $root"))
-    val prev = entries(lv)
-    val rewriteSet = entriesForPredicate(predicate, lv).map(_.path).toSet
-    if (rewriteSet.size >= prev.size)
-      replaceWith(transform(snapshot()), op, cdf = true)
-    else {
-      val (rewrite, keep) = prev.partition(e => rewriteSet.contains(e.path))
-      val v = nextVersion
-      if (rewrite.isEmpty) commit(v, keep, op = op)
-      else {
-        val out = transform(readWithDv(rewrite, schemaOf(lv), snapshot(Some(lv)), cmapOf(lv)))
-        val written = writeData(clusterByPartition(out), v)
-        commit(v, keep ++ written, op = op,
-          extraMeta = rewriteChangeMeta(rewrite, written, lv))
-      }
-    }
   }
 
   /** Candidate files read WITH parquet row positions (`__mor_f` file
@@ -3851,25 +3974,25 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     (payload, dead)
   }
 
-  /** The delta-first DV commit decision + shared tail for
-    * [[deleteViaDv]] / [[updateViaDv]]: while the live dv-sidecar ref
-    * set (header `dvsv=`, over-approximate) stays within
-    * [[GraftTable.MaxDvSidecars]] after adding this commit's, publish
-    * O(touched files) through [[commitDelta]] — dead entries remove,
-    * re-masked entries re-tag as remove+add over the same path — with
-    * NO entry-list materialization (the 100 TB merge-on-read DML
+  /** The delta-first DV commit of a mask plan at `lv + 1`: while the
+    * live dv-sidecar ref set (header `dvsv=`, over-approximate) stays
+    * within [[GraftTable.MaxDvSidecars]] after adding this commit's,
+    * publish O(touched files) through [[commitDelta]] — dead entries
+    * remove, re-masked entries re-tag as remove+add over the same path —
+    * with NO entry-list materialization (the 100 TB merge-on-read DML
     * path: the hottest mutation commits O(matched files), r15 verdict
     * item #2). Past the bound, still delta-first: every still-referenced
     * mask folds into THIS commit's sidecar and the header restates
-    * (`dvsv=`, `dvn=`) exactly, resetting the bound. */
-  private def commitDvMasks(v: Long, lv: Long, cands: Seq[FileEntry],
-                            payload: Map[String, Array[Long]],
-                            dead: Set[String], newFiles: Seq[FileEntry],
-                            op: String, extra: Seq[String],
-                            // multi-table txn participant marker — the
-                            // atomic DV ops publish PENDING through the
-                            // same delta path ([[AtomicDelete]])
-                            pending: Option[String] = None): Long = {
+    * (`dvsv=`, `dvn=`) exactly, resetting the bound. A mask that matched
+    * nothing publishes an empty delta. */
+  private def commitDvMasks(lv: Long, mask: WritePlan.Mask, op: String,
+                            extra: Seq[String],
+                            pending: Option[String]): Long = {
+    val v = lv + 1
+    val WritePlan.Mask(cands, payload, dead, newFiles) = mask
+    if (payload.isEmpty && newFiles.isEmpty)
+      return commitDelta(v, Nil, Nil, op = op, extraMeta = extra,
+        pending = pending)
     val parentMeta = headerMeta(lv)
     val priorRefs = parentMeta.get("dvsv").toSeq
       .flatMap(_.split(",")).flatMap(_.toLongOption)
@@ -3911,55 +4034,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     }
   }
 
-  /** DELETE as a DELETION-VECTOR commit (merge-on-read): collect the
-    * matching rows' (file, position) pairs — candidate files pre-pruned
-    * through every manifest index — and publish a commit whose only
-    * change is new `dv=` references. ZERO data files written: a one-row
-    * delete on a 100 TB table costs one pruned scan plus a KB-scale
-    * sidecar, with the anti-filter applied at read ([[readWithDv]]) and
-    * physically materialized at the next [[compact]]/COW rewrite.
-    * Returns None — caller falls back to copy-on-write — when more than
-    * [[dvMaxRows]] rows match (a bulk delete WANTS the rewrite). */
-  private def deleteViaDv(predicate: Column): Option[Long] = {
-    val lv = latestVersion.getOrElse(return None)
-    // PIN the commit version to the snapshot the scan runs against: a
-    // commit landing during the distributed scan would otherwise bump
-    // latestVersion and this commit's delta-vs-entries(v-1) would emit
-    // `-` lines silently dropping the interleaved commit's files. Pinned,
-    // the racer collides on the manifest create and the loser gets a loud
-    // ConcurrentCommitException — same contract as every other mutation.
-    val v = lv + 1
-    val cands = entriesForPredicate(predicate, lv)
-    // pruned-to-nothing predicate: an EMPTY delta carries the table —
-    // no entry-list materialization for the common miss
-    if (cands.isEmpty) return Some(commitDelta(v, Nil, Nil, op = "delete"))
-    val cdf = cdfWriteEnabled
-    // without change files: raw read (existing DVs NOT applied) —
-    // re-deleting an already-deleted position is a set-union no-op, and
-    // skipping the anti-join keeps this one vectorized scan. WITH change
-    // files the read must be DV-FILTERED (an already-masked row must not
-    // re-surface in the feed as a new delete) and materialized ONCE, so
-    // the masked positions and the persisted rows come from the same
-    // evaluation even under a non-deterministic predicate.
-    val scan0 = readWithPos(cands, schemaOf(lv), applyDv = cdf, cmapOf(lv))
-      .filter(coalesce(predicate, lit(false)))
-      .limit(dvMaxRows + 1)
-    val scan = if (cdf) scan0.localCheckpoint() else scan0
-    val hits = scan.select(col("__mor_f"), col("__mor_p")).collect()
-    if (hits.length > dvMaxRows) None
-    else if (hits.isEmpty) Some(commitDelta(v, Nil, Nil, op = "delete"))
-    else {
-      val (payload, dead) = mergedDvs(cands, hits)
-      val extra =
-        if (cdf)
-          writeChangeData(scan.drop("__mor_f", "__mor_p")
-            .withColumn("_change", lit("delete")))
-        else Nil
-      Some(commitDvMasks(v, lv, cands, payload, dead, Nil,
-        op = "delete", extra = extra))
-    }
-  }
-
   /** Bound the number of live `.dvs` sidecars a snapshot references: when
     * this commit's masks would leave the active set pointing at MORE than
     * [[GraftTable.MaxDvSidecars]] distinct sidecar versions, fold every
@@ -3980,103 +4054,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     else payload ++ untouched.map(e => e.path -> dvPositions(e))
   }
 
-  /** Partition-scoped row DELETE: erase rows matching `predicate` within
-    * the given partition values, rewriting ONLY the files whose partition
-    * window intersects `partitions` — every other file entry carries over
-    * verbatim. Semantically `delete(predicate && partitionCol IN
-    * partitions)` at O(impacted files) rewrite cost. */
-  def deleteInPartitions(predicate: Column, partitions: Seq[Long]): Long = {
-    val pc = partitionCol.getOrElse(throw new IllegalStateException(
-      "deleteInPartitions needs a partitionCol-enabled table"))
-    val v = nextVersion
-    val prev = latestVersion.map(entries).getOrElse(Nil)
-    val touched = partitions.sorted
-    val (rewrite, keep) = prev.partition(touches(_, touched))
-    if (rewrite.isEmpty) commit(v, keep, op = "delete")
-    else {
-      val scoped = predicate && col(pc).isin(partitions.map(Long.box): _*)
-      val kept = readEntries(rewrite, snapshot()).filter(!coalesce(scoped, lit(false)))
-      val written = writeData(clusterByPartition(kept, Some(partitions.size)), v)
-      commitScopedWithRebase(v, prev, rewrite, written, touched, op = "delete",
-        extraMeta = rewriteChangeMeta(rewrite, written, v - 1))
-    }
-  }
-
-  /** Row-level UPDATE: publish a new version where rows matching
-    * `predicate` have the `set` assignments applied. SQL UPDATE
-    * semantics: every right-hand side evaluates against the OLD row
-    * (single-select application, so `SET a = b, b = a` swaps), and a
-    * NULL predicate leaves the row untouched. A partition-pinned
-    * predicate auto-routes to the scoped rewrite exactly like
-    * [[delete]]; assigning TO the partition column disables scoping
-    * (rows could migrate out of the pinned partitions). */
-  def update(predicate: Column, set: Map[String, Column],
-             useDv: Boolean = true): Long = {
-    (if (useDv) updateViaDv(predicate, set).map(maybeAutoPurge)
-     else None).getOrElse {
-      val scoped = pinnedPartitions(predicate)
-        .filter(_ => !partitionCol.exists(set.keySet.map(_.toLowerCase)
-          .contains(_)))
-      scoped match {
-        case Some(vals) => updateInPartitions(predicate, set, vals)
-        // window scoping is sound whatever SET assigns: carried-over
-        // files provably hold no matching rows (their bytes and windows
-        // are untouched), and rewritten files get fresh windows from
-        // writeData — even an update TO an indexed column stays indexed
-        case None =>
-          windowScopedRewrite(predicate, "update",
-            df => applyAssignments(df, predicate, set))
-      }
-    }
-  }
-
-  /** UPDATE as DV-delete + append (merge-on-read): the matched rows'
-    * positions join the files' deletion vectors and their UPDATED copies
-    * re-enter as a fresh appended file set — one small write instead of
-    * rewriting every intersecting file. The matched set materializes
-    * ONCE (bounded localCheckpoint), so the deleted positions and the
-    * re-inserted rows come from the same evaluation even under a
-    * non-deterministic predicate. None → caller falls back to COW. */
-  private def updateViaDv(predicate: Column,
-                          set: Map[String, Column]): Option[Long] = {
-    val lv = latestVersion.getOrElse(return None)
-    // version pinned BEFORE the distributed work — see [[deleteViaDv]]:
-    // a racer collides loudly instead of being silently un-committed
-    val v = lv + 1
-    val cands = entriesForPredicate(predicate, lv)
-    // pruned-to-nothing predicate: an EMPTY delta carries the table —
-    // no entry-list materialization for the common miss
-    if (cands.isEmpty)
-      return Some(commitDelta(v, Nil, Nil, op = "update"))
-    // DV-FILTERED read: an already-deleted row must not resurrect as an
-    // updated copy
-    val mat = readWithPos(cands, schemaOf(lv), applyDv = true, cmapOf(lv))
-      .filter(coalesce(predicate, lit(false)))
-      .limit(dvMaxRows + 1)
-      .localCheckpoint()
-    val n = mat.count()
-    if (n > dvMaxRows) None
-    else if (n == 0L) Some(commitDelta(v, Nil, Nil, op = "update"))
-    else {
-      val hits = mat.select(col("__mor_f"), col("__mor_p")).collect()
-      val (payload, dead) = mergedDvs(cands, hits)
-      val updatedRows = applyAssignments(
-        mat.drop("__mor_f", "__mor_p"), lit(true), set)
-      val newFiles = writeData(clusterByPartition(updatedRows), v)
-      // change files: the pre-images are exactly the matched live rows
-      // (mat is materialized — same evaluation the DV positions came
-      // from), the post-images exactly the rows appended above
-      val extra =
-        if (cdfWriteEnabled)
-          writeChangeData(mat.drop("__mor_f", "__mor_p")
-            .withColumn("_change", lit("delete"))
-            .unionByName(updatedRows.withColumn("_change", lit("insert"))))
-        else Nil
-      Some(commitDvMasks(v, lv, cands, payload, dead, newFiles,
-        op = "update", extra = extra))
-    }
-  }
-
   /** `df` with `set` applied to rows matching `predicate` — one SELECT,
     * so all assignments see the pre-update row. Values cast back to the
     * column's declared type (the analyzer does this for SQL; API callers
@@ -4093,28 +4070,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           .cast(df.schema(c).dataType).as(c))
         .getOrElse(col(c))
     }: _*)
-  }
-
-  /** Partition-scoped row UPDATE: apply `set` to rows matching
-    * `predicate` within the given partition values, rewriting ONLY the
-    * intersecting files — every other file entry carries over verbatim
-    * ([[deleteInPartitions]]' shape for updates). */
-  def updateInPartitions(predicate: Column, set: Map[String, Column],
-                         partitions: Seq[Long]): Long = {
-    val pc = partitionCol.getOrElse(throw new IllegalStateException(
-      "updateInPartitions needs a partitionCol-enabled table"))
-    val v = nextVersion
-    val prev = latestVersion.map(entries).getOrElse(Nil)
-    val touched = partitions.sorted
-    val (rewrite, keep) = prev.partition(touches(_, touched))
-    if (rewrite.isEmpty) commit(v, keep, op = "update")
-    else {
-      val scoped = predicate && col(pc).isin(partitions.map(Long.box): _*)
-      val updated = applyAssignments(readEntries(rewrite, snapshot()), scoped, set)
-      val written = writeData(clusterByPartition(updated, Some(partitions.size)), v)
-      commitScopedWithRebase(v, prev, rewrite, written, touched, op = "update",
-        extraMeta = rewriteChangeMeta(rewrite, written, v - 1))
-    }
   }
 
   /** SELECTIVE ATOMIC OVERWRITE (the public `replaceWhere` contract —
@@ -4191,7 +4146,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * [[dvMaxRows]]). */
   private def replaceWhereViaDv(predicate: Column, df: DataFrame,
                                 lv: Long): Option[Long] = {
-    // version pinned BEFORE the distributed work — see [[deleteViaDv]]:
+    // version pinned BEFORE the distributed work — see [[commitPlan]]:
     // a racer collides loudly instead of being silently un-committed
     val v = lv + 1
     val prev = entries(lv)
@@ -4240,7 +4195,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
   /** [[replaceWhere]]'s index-scoped copy-on-write: rewrite ONLY the
     * candidate files without their matching rows, union the replacement
     * in, carry every other entry over verbatim —
-    * [[windowScopedRewrite]]'s shape plus the appended rows, in the same
+    * [[planCow]]'s shape plus the appended rows, in the same
     * commit. With [[cdfWriteEnabled]] the net change persists like every
     * other rewrite ([[rewriteChangeMeta]]). */
   private def replaceWhereCow(predicate: Column, df: DataFrame,
@@ -4260,19 +4215,6 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       extraMeta = rewriteChangeMeta(rewrite, written, lv))
   }
 
-  /** OPTIMIZE: rewrite the active set into `targetFiles` files as a new
-    * version — the small-file compaction an append-heavy table needs
-    * (every append adds files; scan cost grows with file count, not
-    * data). Content-lossless by construction: the rewrite is one
-    * distributed repartition of the snapshot, and old versions remain
-    * time-travelable until vacuumed.
-    *
-    * With `clusterBy`, the rewrite RANGE-partitions on those columns
-    * (OPTIMIZE ... ZORDER's one-dimension analogue; compose with
-    * [[graft.functions]]' ZOrder64 key for multi-dim): each output file
-    * covers a narrow value range, so the manifest stats turn
-    * [[snapshotRange]] into an O(matching files) read even when ingest
-    * order scattered the column. */
   /** REORG ... APPLY (PURGE): materialize the deletion vectors — rewrite
     * ONLY the DV-carrying files without their deleted rows, carry every
     * clean file over verbatim. This is the compliance step between a
@@ -4281,11 +4223,10 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * (drop the prior versions' files). A table with no DVs commits a
     * metadata-only no-op version. */
   def reorg(): Long = {
-    val lv = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no commits in table at $root"))
+    val lv = baseVersion
     val prev = entries(lv)
     val (dved, clean) = prev.partition(_.dvRef.isDefined)
-    val v = nextVersion
+    val v = lv + 1
     if (dved.isEmpty) commit(v, prev, op = "reorg")
     else {
       val survivors = readWithDv(dved, schemaOf(lv), snapshot(Some(lv)), cmapOf(lv))
@@ -4304,8 +4245,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * working set resolves survivors-only ([[dvEntries]]); the commit is
     * a delta. A table with no DVs commits a metadata-only no-op. */
   def reorgCompactDvs(): Long = {
-    val lv = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no commits in table at $root"))
+    val lv = baseVersion
     // pinned to the probed snapshot: a concurrent commit's manifest
     // collides on the exclusive create and surfaces loudly
     val v = lv + 1
@@ -4329,8 +4269,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * At 100 TB this is "compact yesterday's ingest", not the table:
     * O(matching files) read+write, decided driver-side from metadata. */
   def compactWhere(predicate: Column, targetFiles: Int): Long = {
-    val lv = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no commits in table at $root"))
+    val lv = baseVersion
     // DELTA-FIRST: only the candidates resolve (distributed past
     // distributedPruneMinFiles), the commit publishes the scoped delta,
     // untouched entries carry implicitly; version PINNED to the probed
@@ -4346,15 +4285,34 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     }
   }
 
-  def compact(targetFiles: Int, clusterBy: Seq[String] = Nil): Long = {
-    val snap = snapshot()
+  /** OPTIMIZE: rewrite the active set into `targetFiles` files as a new
+    * version — the small-file compaction an append-heavy table needs
+    * (every append adds files; scan cost grows with file count, not
+    * data). Content-lossless by construction: the rewrite is one
+    * distributed repartition of the snapshot, and old versions remain
+    * time-travelable until vacuumed.
+    *
+    * With `clusterBy`, the rewrite RANGE-partitions on those columns
+    * (OPTIMIZE ... ZORDER's one-dimension analogue; compose with
+    * [[graft.functions]]' ZOrder64 key for multi-dim): each output file
+    * covers a narrow value range, so the manifest stats turn
+    * [[snapshotRange]] into an O(matching files) read even when ingest
+    * order scattered the column. */
+  def compact(targetFiles: Int, clusterBy: Seq[String] = Nil): Long =
+    commitPlan(planCompact(targetFiles, clusterBy))
+
+  /** COMPACT's planner ([[compact]], [[GraftTable.AtomicCompact]]). The
+    * rewrite bypasses partition clustering: compact's caller owns the
+    * layout (targetFiles / clusterBy) explicitly. */
+  private[acid] def planCompact(targetFiles: Int,
+                                clusterBy: Seq[String] = Nil): WritePlan = {
+    val lv = baseVersion
+    val snap = snapshot(Some(lv))
     val laid =
       if (clusterBy.isEmpty) snap.repartition(targetFiles)
       else snap.repartitionByRange(targetFiles, clusterBy.map(col): _*)
-    // bypass overwrite's partition clustering: compact's caller owns the
-    // layout (targetFiles / clusterBy) explicitly
-    val v = nextVersion
-    commit(v, writeData(laid, v), op = "compact")
+    WritePlan(lv, "compact", WritePlan.Rewrite(entries(lv),
+      writeData(laid, lv + 1), keep = Some(Nil)))
   }
 
 
@@ -4635,21 +4593,22 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     val del = feed.filter(col("_change").isin("delete", "update_preimage"))
       .drop("_change")
     val scoped = partitionCol.flatMap(_ => touchedPartitions(feed.drop("_change")))
+    val lv = latestVersion
     scoped match {
       case None =>
         // a never-committed mirror bootstraps from its first feed
-        val base = latestVersion.map(_ => snapshot())
+        val base = lv.map(v => snapshot(Some(v)))
           .getOrElse(ins.limit(0).filter(lit(false)))
-        replaceWith(base.exceptAll(del).unionByName(ins), "apply_changes")
+        replaceWith(base.exceptAll(del).unionByName(ins), "apply_changes",
+          lv.getOrElse(0L) + 1)
       case Some(touched) =>
-        val v = nextVersion
-        val prev = latestVersion.map(entries).getOrElse(Nil)
-        val (rewrite, _) = prev.partition(touches(_, touched))
+        val rewrite = lv.map(entries).getOrElse(Nil).filter(touches(_, touched))
         val base = readEntries(rewrite, ins)
         val applied = base.exceptAll(del).unionByName(ins)
-        val written = writeData(clusterByPartition(applied, Some(touched.size)), v)
-        commitScopedWithRebase(v, prev, rewrite, written, touched,
-          op = "apply_changes")
+        val written = writeData(clusterByPartition(applied, Some(touched.size)),
+          lv.getOrElse(0L) + 1)
+        commitScopedWithRebase(lv.getOrElse(0L), rewrite, written,
+          touches(_, touched), op = "apply_changes")
     }
   }
 
@@ -5315,6 +5274,41 @@ object GraftTable {
                                         restate: Option[Restate] = None,
                                         held: Option[Seq[FileEntry]] = None)
 
+  /** One row-level write (delete, update, merge, merge into, compact)
+    * planned against the pinned base version `lv`: what it consumed and
+    * produced (`body`), the change-data meta (`extra`) and the rebase
+    * scope. Each operation has ONE planner; the standalone call
+    * ([[GraftTable.commitPlan]]) and the multi-table participant
+    * ([[GraftTable.participant]]) differ only in how they publish. */
+  private[acid] final case class WritePlan(lv: Long, op: String,
+                                           body: WritePlan.Body,
+                                           extra: Seq[String] = Nil,
+                                           rebase: Option[WritePlan.Rebase] = None)
+
+  private[acid] object WritePlan {
+    sealed trait Body
+
+    /** `consumed` entries of the base replaced by `written`. `keep` = the
+      * rest of the base's list when the route listed it (the version then
+      * publishes whole); `schema` = a declared schema the write restates. */
+    final case class Rewrite(consumed: Seq[FileEntry], written: Seq[FileEntry],
+                             keep: Option[Seq[FileEntry]] = None,
+                             schema: Option[StructType] = None) extends Body
+
+    /** Deletion-vector masks over the candidates `cands`: merged position
+      * sets per path (`payload`), the paths left with no live row
+      * (`dead`) and re-inserted rows (`newFiles`). Empty = matched
+      * nothing. */
+    final case class Mask(cands: Seq[FileEntry],
+                          payload: Map[String, Array[Long]],
+                          dead: Set[String],
+                          newFiles: Seq[FileEntry]) extends Body
+
+    /** A scoped rewrite's rebase scope: the touched values and the test
+      * for an entry falling inside them ([[GraftTable.commitScopedWithRebase]]). */
+    final case class Rebase(touched: Seq[Long], affects: FileEntry => Boolean)
+  }
+
   /** Entry count past which parquet checkpoints AUTO-switch from one
     * shard to this many. At 100k+ entries a full checkpoint rewrite
     * moves tens of MB of metadata per cadence tick; at 64 shards each
@@ -5587,10 +5581,12 @@ object GraftTable {
     * snapshot — outside every lock — and returns the publish closure the
     * commit phase invokes under the per-table monitors. stage() is
     * re-invoked after a lost commit race: appends memoize their one
-    * (expensive, base-independent) data write; base-dependent ops
-    * (delete/merge/compact) recompute against the new base, with their
-    * publish closures throwing [[ConcurrentCommitException]] if the base
-    * moved between staging and publishing. */
+    * (expensive, base-independent) data write; the row-level ops
+    * (delete/update/merge/merge into/compact) plan with the SAME planner
+    * as their standalone call ([[WritePlan]]) against a pinned base and
+    * publish through the table's participant publisher, which throws
+    * [[ConcurrentCommitException]] if the base moved between staging and
+    * publishing. */
   sealed trait AtomicOp {
     def table: GraftTable
     private[acid] def stage(): String => Long
@@ -5624,175 +5620,30 @@ object GraftTable {
     }
   }
 
-  /** Atomic row-level DELETE: stages the same merge-on-read plan as
-    * [[GraftTable.delete]] — per-file deletion-vector positions when few
-    * rows match, a pruned copy-on-write rewrite otherwise — against a
-    * PINNED base version; the publish closure refuses (and the txn
-    * re-stages) if any commit landed on the table in between, so the
-    * staged positions/rewrites are always consistent with the base they
-    * publish onto. */
+  /** Atomic row-level DELETE: [[GraftTable.delete]]'s plan, published as
+    * a participant. */
   final case class AtomicDelete(table: GraftTable, predicate: Column)
       extends AtomicOp {
-    private[acid] def stage(): String => Long = {
-      val lv = table.latestVersion.getOrElse(throw new IllegalStateException(
-        s"atomic delete on ${table.root}: the table has no commits yet"))
-      def guard(): Unit =
-        if (!table.latestVersion.contains(lv))
-          throw new ConcurrentCommitException(
-            s"atomic delete on ${table.root}: base moved past v$lv; restage")
-      val cands = table.entriesForPredicate(predicate, lv)
-      // DELTA-FIRST like the standalone [[GraftTable.delete]] (round 16):
-      // every branch publishes O(touched files) — pruned-miss and
-      // no-hit carry the table as an empty delta, the COW rewrite
-      // removes only its consumed candidates, the DV branch retags
-      // through [[commitDvMasks]] — the previous entry list never
-      // materializes for a participant either.
-      if (cands.isEmpty)
-        return (m: String) => {
-          guard()
-          table.commitDelta(lv + 1, Nil, Nil, op = "delete",
-            pending = Some(m))
-        }
-      // change-data contract mirrors [[GraftTable.deleteViaDv]]: with
-      // persisted change files the scan must be DV-filtered (an
-      // already-masked row must not re-surface in the feed) and
-      // materialized once; without, the raw un-filtered scan stays one
-      // vectorized pass (re-masking a masked position is a no-op)
-      val cdf = table.cdfWriteEnabled
-      val scan0 = table.readWithPos(cands, table.schemaOf(lv),
-          applyDv = cdf, table.cmapOf(lv))
-        .filter(coalesce(predicate, lit(false)))
-        .limit(table.dvMaxRows + 1)
-      val scan = if (cdf) scan0.localCheckpoint() else scan0
-      val hits = scan.select(col("__mor_f"), col("__mor_p")).collect()
-      if (hits.length > table.dvMaxRows) {
-        // copy-on-write: rewrite only the pruned candidate files
-        val out = table.readWithDv(cands, table.schemaOf(lv),
-            table.snapshot(Some(lv)), table.cmapOf(lv))
-          .filter(!coalesce(predicate, lit(false)))
-        val written = table.writeData(table.clusterByPartition(out), lv + 1)
-        val extra = table.rewriteChangeMeta(cands, written, lv)
-        (m: String) => {
-          guard()
-          table.commitDelta(lv + 1, written, cands, op = "delete",
-            pending = Some(m), extraMeta = extra)
-        }
-      } else if (hits.isEmpty) {
-        (m: String) => {
-          guard()
-          table.commitDelta(lv + 1, Nil, Nil, op = "delete",
-            pending = Some(m))
-        }
-      } else {
-        val (payload, dead) = table.mergedDvs(cands, hits)
-        val extra =
-          if (cdf)
-            table.writeChangeData(scan.drop("__mor_f", "__mor_p")
-              .withColumn("_change", lit("delete")))
-          else Nil
-        (m: String) => {
-          guard()
-          table.commitDvMasks(lv + 1, lv, cands, payload, dead, Nil,
-            op = "delete", extra = extra, pending = Some(m))
-        }
-      }
-    }
+    private[acid] def stage(): String => Long =
+      table.participant(table.planDelete(predicate))
   }
 
-  /** Atomic row-level UPDATE: stages the same merge-on-read plan as
-    * [[GraftTable.update]] — DV-mask the old rows + append the updated
-    * copies when few match, a pruned copy-on-write rewrite otherwise —
-    * against a pinned base; publish refuses (and the txn re-stages) on a
-    * moved base, like [[AtomicDelete]]. */
+  /** Atomic row-level UPDATE: [[GraftTable.update]]'s plan, published as
+    * a participant. */
   final case class AtomicUpdate(table: GraftTable, predicate: Column,
                                 set: Map[String, Column]) extends AtomicOp {
-    private[acid] def stage(): String => Long = {
-      val lv = table.latestVersion.getOrElse(throw new IllegalStateException(
-        s"atomic update on ${table.root}: the table has no commits yet"))
-      def guard(): Unit =
-        if (!table.latestVersion.contains(lv))
-          throw new ConcurrentCommitException(
-            s"atomic update on ${table.root}: base moved past v$lv; restage")
-      val cands = table.entriesForPredicate(predicate, lv)
-      // DELTA-FIRST across all branches, mirroring [[AtomicDelete]]
-      if (cands.isEmpty)
-        return (m: String) => {
-          guard()
-          table.commitDelta(lv + 1, Nil, Nil, op = "update",
-            pending = Some(m))
-        }
-      val mat = table.readWithPos(cands, table.schemaOf(lv),
-          applyDv = true, table.cmapOf(lv))
-        .filter(coalesce(predicate, lit(false)))
-        .limit(table.dvMaxRows + 1)
-        .localCheckpoint()
-      val n = mat.count()
-      if (n > table.dvMaxRows) {
-        // copy-on-write: rewrite only the pruned candidate files
-        val out = table.applyAssignments(
-          table.readWithDv(cands, table.schemaOf(lv),
-            table.snapshot(Some(lv)), table.cmapOf(lv)),
-          predicate, set)
-        val written = table.writeData(table.clusterByPartition(out), lv + 1)
-        val extra = table.rewriteChangeMeta(cands, written, lv)
-        (m: String) => {
-          guard()
-          table.commitDelta(lv + 1, written, cands, op = "update",
-            pending = Some(m), extraMeta = extra)
-        }
-      } else if (n == 0L) {
-        (m: String) => {
-          guard()
-          table.commitDelta(lv + 1, Nil, Nil, op = "update",
-            pending = Some(m))
-        }
-      } else {
-        val hits = mat.select(col("__mor_f"), col("__mor_p")).collect()
-        val (payload, dead) = table.mergedDvs(cands, hits)
-        val updatedRows = table.applyAssignments(
-          mat.drop("__mor_f", "__mor_p"), lit(true), set)
-        val written = table.writeData(
-          table.clusterByPartition(updatedRows), lv + 1)
-        // pre-images = the matched live rows (mat is materialized, same
-        // evaluation the DV positions came from); post-images = the
-        // appended updated copies — [[GraftTable.updateViaDv]]'s contract
-        val extra =
-          if (table.cdfWriteEnabled)
-            table.writeChangeData(mat.drop("__mor_f", "__mor_p")
-              .withColumn("_change", lit("delete"))
-              .unionByName(updatedRows.withColumn("_change", lit("insert"))))
-          else Nil
-        (m: String) => {
-          guard()
-          table.commitDvMasks(lv + 1, lv, cands, payload, dead, written,
-            op = "update", extra = extra, pending = Some(m))
-        }
-      }
-    }
+    private[acid] def stage(): String => Long =
+      table.participant(table.planUpdate(predicate, set))
   }
 
-  /** Atomic MERGE (upsert): keep the winner per `keyCols` between the
-    * pinned base snapshot and `updates`. Stages the full merge compute +
-    * data write; publish refuses on a moved base (the merged content
-    * embeds the base). */
+  /** Atomic MERGE (upsert): [[GraftTable.merge]]'s plan — scoped on the
+    * key column's windows or the partition column exactly like the
+    * standalone call — published as a participant. */
   final case class AtomicMerge(table: GraftTable, updates: DataFrame,
                                keyCols: Seq[String],
                                winnerOrder: Seq[Column]) extends AtomicOp {
-    private[acid] def stage(): String => Long = {
-      val lv = table.latestVersion.getOrElse(throw new IllegalStateException(
-        s"atomic merge on ${table.root}: the table has no commits yet"))
-      val merged = table.mergeWinners(keyCols, winnerOrder)(
-        table.snapshot(Some(lv)).unionByName(updates))
-      val written = table.writeData(table.clusterByPartition(merged), lv + 1)
-      val extra = table.rewriteChangeMeta(table.entries(lv), written, lv)
-      (m: String) => {
-        if (!table.latestVersion.contains(lv))
-          throw new ConcurrentCommitException(
-            s"atomic merge on ${table.root}: base moved past v$lv; restage")
-        table.commit(lv + 1, written, op = "merge", pending = Some(m),
-          extraMeta = extra)
-      }
-    }
+    private[acid] def stage(): String => Long =
+      table.participant(table.planMerge(updates, keyCols, winnerOrder))
   }
 
   /** Atomic MERGE INTO with FULL SQL semantics — the
@@ -5800,72 +5651,23 @@ object GraftTable {
     * update/delete, WHEN NOT MATCHED insert, WHEN NOT MATCHED BY SOURCE,
     * each optionally conditioned, first-applicable-wins) as a
     * [[commitAtomic]] participant; the SQL `COMMIT ATOMIC ( MERGE INTO
-    * ... )` surface plans here. Stages the full merge compute + data
-    * write against a PINNED base; publish refuses (and the txn
-    * re-stages) on a moved base. With `scopeSrcCol` (the canonical-
+    * ... )` surface plans here. With `scopeSrcCol` (the canonical-
     * upsert shape detection from [[GraftSqlRowOps]]: ON pins the
     * partition column to this source column and every insert assigns it
-    * from the same) and no not-matched-by-source actions, only the
-    * impacted partitions' files rewrite — the O(delta) MERGE shape. */
+    * from the same) the source's distinct values are the partition
+    * cover, and only the impacted partitions' files rewrite — the
+    * O(delta) MERGE shape. */
   final case class AtomicMergeInto(table: GraftTable, source: DataFrame,
       condition: Column,
       matched: Seq[(Option[Column], Option[Map[String, Column]])],
       notMatched: Seq[(Option[Column], Map[String, Column])],
       notMatchedBySource: Seq[(Option[Column], Option[Map[String, Column]])],
       scopeSrcCol: Option[String] = None) extends AtomicOp {
-    private[acid] def stage(): String => Long = {
-      val lv = table.latestVersion.getOrElse(throw new IllegalStateException(
-        s"atomic merge into on ${table.root}: the table has no commits yet"))
-      def guard(): Unit =
-        if (!table.latestVersion.contains(lv))
-          throw new ConcurrentCommitException(
-            s"atomic merge into on ${table.root}: base moved past v$lv; restage")
-      val scoped: Option[Seq[Long]] =
-        if (notMatchedBySource.nonEmpty || table.partitionColName.isEmpty) None
-        else scopeSrcCol.map { sc =>
-          source.select(col(sc).cast("long")).distinct()
-            .collect().toSeq.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
-        }
-      scoped match {
-        case Some(vals) if vals.nonEmpty =>
-          // DELTA-FIRST (r16 directive #5): candidates resolve through
-          // [[touchedEntries]] (distributed coarse prune past the
-          // threshold — survivors-only driver memory, no resident base
-          // list) and the participant's manifest states only its own
-          // consumed+written entries; untouched entries are never
-          // re-listed. The publish guard pins the base, so the delta is
-          // exact against lv — the same contract as the standalone
-          // scoped merge's rebase-validated [[commitDelta]].
-          val rewrite = table.touchedEntries(lv, vals)
-          val result = table.mergeAssemble(
-            table.readEntries(rewrite, table.snapshot(Some(lv))), source,
-            condition, matched, notMatched, notMatchedBySource)
-          val written = table.writeData(
-            table.clusterByPartition(result, Some(vals.size)), lv + 1)
-          val extra = table.rewriteChangeMeta(rewrite, written, lv)
-          (m: String) => {
-            guard()
-            table.commitDelta(lv + 1, written, rewrite, op = "merge",
-              pending = Some(m), extraMeta = extra)
-          }
-        case _ =>
-          // full-semantics rewrite: the new content IS the whole table,
-          // so the full manifest is already O(written) — nothing to gain
-          // from a delta (and a full statement resets readers' replay
-          // chains)
-          val prev = table.entries(lv)
-          val result = table.mergeAssemble(table.snapshot(Some(lv)), source,
-            condition, matched, notMatched, notMatchedBySource)
-          val written = table.writeData(
-            table.clusterByPartition(result), lv + 1)
-          val extra = table.rewriteChangeMeta(prev, written, lv)
-          (m: String) => {
-            guard()
-            table.commit(lv + 1, written, op = "merge", pending = Some(m),
-              extraMeta = extra)
-          }
-      }
-    }
+    private[acid] def stage(): String => Long =
+      table.participant(table.planMergeInto(source, condition, matched,
+        notMatched, notMatchedBySource,
+        scopeSrcCol.map(sc => source.select(col(sc).cast("long")).distinct()
+          .collect().toSeq.filterNot(_.isNullAt(0)).map(_.getLong(0)))))
   }
 
   /** Atomic COMPACT: layout-only participant (a maintenance op riding a
@@ -5873,18 +5675,8 @@ object GraftTable {
     * step). */
   final case class AtomicCompact(table: GraftTable, targetFiles: Int)
       extends AtomicOp {
-    private[acid] def stage(): String => Long = {
-      val lv = table.latestVersion.getOrElse(throw new IllegalStateException(
-        s"atomic compact on ${table.root}: the table has no commits yet"))
-      val written = table.writeData(
-        table.snapshot(Some(lv)).repartition(targetFiles), lv + 1)
-      (m: String) => {
-        if (!table.latestVersion.contains(lv))
-          throw new ConcurrentCommitException(
-            s"atomic compact on ${table.root}: base moved past v$lv; restage")
-        table.commit(lv + 1, written, op = "compact", pending = Some(m))
-      }
-    }
+    private[acid] def stage(): String => Long =
+      table.participant(table.planCompact(targetFiles))
   }
 
   /** MULTI-TABLE ATOMIC TRANSACTION over arbitrary staged ops — the

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -45,12 +44,4 @@ case class ExplodeTrack(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): ExplodeTrack =
     copy(child = newChild)
-}
-
-object ExplodeTrack {
-  /** Register as a SQL-callable function on the session; usable from the
-    * DataFrame API via `expr("explode_track(col)")`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "explode_track", exprs => ExplodeTrack(exprs.head), "scala_udf")
 }

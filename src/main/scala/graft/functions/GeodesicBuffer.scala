@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -189,14 +189,8 @@ object GeodesicBuffer {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "geodesic_ngon",
-      exprs => GeodesicNgon(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
-
-  /** Callers must `register(spark)` on the analyzing session first
-    * (the WebMercator/VectorExprs convention). */
+  /** Callers must `graft.functions.register(spark)` on the analyzing
+    * session first. */
   def buffer(lon: Column, lat: Column, radius: Column, n: Column): Column =
     call_function("geodesic_ngon", lon, lat, radius, n)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -76,14 +75,4 @@ case class KGramHashes(child: Expression, k: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): KGramHashes =
     copy(child = newChild)
-}
-
-object KGramHashes {
-  /** Register `kgram_hashes(str, k)` for SQL / expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kgram_hashes",
-      exprs => KGramHashes(exprs.head,
-        FunctionBuilders.constInt(exprs(1), "kgram_hashes", "k")),
-      "scala_udf")
 }

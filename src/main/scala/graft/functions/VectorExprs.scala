@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -120,41 +120,6 @@ case class SortedJaccard(left: Expression, right: Expression) extends BinaryExpr
 }
 
 object VectorExprs {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_jaccard", exprs => SortedJaccard(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignature(exprs.head,
-        FunctionBuilders.constInt(exprs(1), "minhash_signature", "k")),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder64", exprs => ZOrder64(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs.head,
-        FunctionBuilders.constInt(exprs(1), "shingle_hashes", "n")),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_hashes", exprs => WordHashes(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_hashes",
-      exprs => SpanHashes(exprs.head,
-        FunctionBuilders.constInt(exprs(1), "span_hashes", "w")),
-      "scala_udf")
-    // aggregate: the analyzer wraps a bare AggregateFunction from the
-    // registry in an AggregateExpression, same as Spark's own builders
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk",
-      exprs => MisraGriesTopK(exprs.head,
-        FunctionBuilders.constInt(exprs(1), "mg_topk", "k")),
-      "scala_udf")
-  }
-
   /** Plain-Scala twin of SortedJaccard.nullSafeEval for block-local
     * (flatMapGroups) exact all-pairs — same arithmetic, same bits. */
   def sortedJaccardValue(a: Array[Long], b: Array[Long]): Double = {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -54,12 +53,4 @@ object WebMercator {
   val outType: StructType = StructType(Seq(
     StructField("x", DoubleType, nullable = false),
     StructField("y", DoubleType, nullable = false)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "web_mercator",
-      exprs => WebMercator(
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs.head, DoubleType),
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), DoubleType)),
-      "scala_udf")
 }

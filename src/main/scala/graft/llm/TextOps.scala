@@ -69,7 +69,7 @@ object TextOps {
     * kernel (graft.functions.ShingleHashes): no shingle-string
     * materialization, no interpreted HOFs. ~20x faster at sf0.1; the hot
     * path for every shingle-based dedup. Callers must
-    * graft.functions.VectorExprs.register(spark) first. */
+    * graft.functions.register(spark) first. */
   def fastShingleHashes(text: Column, n: Int = 3): Column =
     call_function("shingle_hashes", text, lit(n))
 
@@ -78,7 +78,7 @@ object TextOps {
     * in native codegen kernels (WordHashes + SimHash64); the polynomial
     * word hash (vs xxhash64) is what lets the DuckDB oracle replay the
     * whole signature in SQL. Callers must
-    * graft.functions.VectorExprs.register(spark) first. */
+    * graft.functions.register(spark) first. */
   def simhash(text: Column): Column =
     call_function("simhash64", call_function("word_hashes", text))
 

@@ -15,7 +15,7 @@ object VectorOps {
   def asDoubles(c: Column): Column = c.cast("array<double>")
 
   /** Native codegen kernel (graft.functions.DotProduct); requires
-    * VectorExprs.register(spark) on the session. Same sequential fold
+    * graft.functions.register(spark) on the session. Same sequential fold
     * order as the interpreted HOF version it replaced — identical bits,
     * ~3x faster on the quadratic queries. */
   def dot(a: Column, b: Column): Column =

@@ -37,7 +37,7 @@ case class ProjectorTool(lonCol: String, latCol: String) extends Tool {
       nullable = in(lonCol).nullable || in(latCol).nullable)
 
   override def apply(df: DataFrame): DataFrame = {
-    graft.functions.WebMercator.register(df.sparkSession)
+    graft.functions.register(df.sparkSession)
     df.withColumn("mercator", expr(s"web_mercator($lonCol, $latCol)"))
   }
 }
@@ -58,7 +58,7 @@ case class BufferTool(lonCol: String, latCol: String, radiusMeters: Double,
       nullable = in(lonCol).nullable || in(latCol).nullable)
 
   override def apply(df: DataFrame): DataFrame = {
-    graft.functions.GeodesicBuffer.register(df.sparkSession)
+    graft.functions.register(df.sparkSession)
     df.withColumn("buffer", graft.functions.GeodesicBuffer.buffer(
       col(lonCol), col(latCol), lit(radiusMeters), lit(vertices)))
   }

@@ -352,7 +352,7 @@ object AssemblyQueries extends QueryPack {
     // (merge-order-insensitive), the surprisal-query precedent.
     "q_select_dsir" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val NB = 1024
       val feats = Tables.documents(s, d)
         .withColumn("wh", call_function("word_hashes", $"text"))

@@ -179,7 +179,7 @@ object CurationQueries extends QueryPack {
     "q_dedup_incremental" -> { (s, d) =>
       import s.implicits._
       import graft.llm.TextOps
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val sh = Tables.documents(s, d)
         .select($"doc_id", sha2($"text", 256).as("h"),
           TextOps.fastShingleHashes($"text").as("sh"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryPack, Tables}
-import graft.functions.{GeodesicBuffer, WebMercator}
+import graft.functions.GeodesicBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,7 +22,7 @@ object GeoQueries extends QueryPack {
     // ---- G2: WebMercator projection as a codegen'd native expression ----
     "q_geo_project" -> { (s, d) =>
       import s.implicits._
-      WebMercator.register(s)
+      graft.functions.register(s)
       Tables.events(s, d)
         .select(
           $"event_id",
@@ -156,7 +156,7 @@ object GeoQueries extends QueryPack {
     // ---- G3: geodesic buffer polygon (UDF; validated in GeoSpec) ----
     "q_geo_buffer" -> { (s, d) =>
       import s.implicits._
-      GeodesicBuffer.register(s)
+      graft.functions.register(s)
       Tables.events(s, d)
         .filter($"event_id" < 100)
         .select(

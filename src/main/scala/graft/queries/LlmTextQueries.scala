@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QueryPack, Tables}
-import graft.functions.KGramHashes
 import graft.llm.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -111,7 +110,7 @@ object LlmTextQueries extends QueryPack {
   private[queries] def minhashNearDupsFrom(s: SparkSession,
                                          base: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExprs.register(s)
+    graft.functions.register(s)
     // cache() the shared intermediates: the band self-join and the two
     // verify joins would otherwise recompute the shingle+signature
     // pipeline once PER REFERENCE (narrow plans have no shuffle for
@@ -304,7 +303,7 @@ object LlmTextQueries extends QueryPack {
     // ---- SimHash near-dup (hamming <= 3) via 16-bit block LSH ----
     "q_dedup_simhash" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val sigs = Tables.documents(s, d)
         .select($"doc_id", TextOps.simhash($"text").as("sig"))
       val blocks = sigs.select($"doc_id", $"sig", explode(TextOps.simhashBlocks($"sig")).as("b"))
@@ -340,7 +339,7 @@ object LlmTextQueries extends QueryPack {
     // profile. Output: doc pairs + how many distinct shared spans.
     "q_dedup_substring" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val spanDocs = Tables.documents(s, d)
         .select($"doc_id",
           explode(call_function("span_hashes",
@@ -362,7 +361,7 @@ object LlmTextQueries extends QueryPack {
     // ---- blocked exact n-gram Jaccard (same-source blocking, tiled) ----
     "q_dedup_ngram_blocked" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val docs = Tables.documents(s, d)
         .select($"doc_id", $"source", TextOps.fastShingleHashes($"text").as("sh"))
         .filter(size($"sh") > 0)
@@ -391,7 +390,7 @@ object LlmTextQueries extends QueryPack {
     // argument.
     "q_pipeline_training_set" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val base = Tables.documents(s, d)
       // dedup on the 32-byte digest, NOT the raw text: grouping by `text`
       // would shuffle the whole corpus by multi-KB keys at 100 TB.
@@ -423,7 +422,7 @@ object LlmTextQueries extends QueryPack {
     // the per-batch counts and break the compare.
     "q_pipeline_provenance" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val t = provenanceTable(s, d)
       // ingest attribution strictly via _row_id (commit v = batch v)
       val byv = t.changeFeedByVersion(0L, 3L)
@@ -456,7 +455,7 @@ object LlmTextQueries extends QueryPack {
     // the doc_id%3==v-1 slice), same oracle.
     "q_pipeline_provenance_dedup" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val t = provenanceDedupTable(s, d)
       val byv = t.changeFeedByVersion(0L, 3L)
         .filter($"_change" === "insert")
@@ -511,7 +510,7 @@ object LlmTextQueries extends QueryPack {
     // collision odds per pair).
     "q_contamination" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val docs = Tables.documents(s, d)
         .select($"doc_id", TextOps.fastShingleHashes($"text").as("sh"))
         .filter(size($"sh") > 0)
@@ -642,7 +641,7 @@ object LlmTextQueries extends QueryPack {
     // ---- rolling-hash fingerprint (custom codegen expression) ----
     "q_text_fingerprint" -> { (s, d) =>
       import s.implicits._
-      KGramHashes.register(s)
+      graft.functions.register(s)
       Tables.documents(s, d)
         .select($"doc_id", expr("kgram_hashes(text, 8)").as("kh"))
         .select(

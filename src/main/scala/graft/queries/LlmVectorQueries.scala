@@ -67,7 +67,7 @@ object LlmVectorQueries extends QueryPack {
     * `sqrt(na)*sqrt(nb)` is exactly the op sequence DuckDB applies, the
     * precomputation changes cost, not bits. */
   private def emb(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
+    graft.functions.register(s)
     Tables.embeddings(s, d).select(
       col("vec_id"),
       asDoubles(col("embedding")).as("v"),
@@ -274,7 +274,7 @@ object LlmVectorQueries extends QueryPack {
     // 64-term dot product is evaluated.
     "q_mine_hard_negatives" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val base = Tables.embeddings(s, d).select(
         $"vec_id", asDoubles($"embedding").as("v"),
         sqrt(norm2(asDoubles($"embedding"))).as("nrm"), $"label")

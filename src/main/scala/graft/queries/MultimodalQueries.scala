@@ -113,7 +113,7 @@ object MultimodalQueries extends QueryPack {
         .filter($"keep").select($"vec_id".as("doc_id"))
       val emb = {
         import graft.llm.VectorOps.{asDoubles, norm2}
-        graft.functions.VectorExprs.register(s)
+        graft.functions.register(s)
         graft.Tables.embeddings(s, d).select($"vec_id".as("doc_id"),
           round(sqrt(norm2(asDoubles($"embedding"))), 6).as("embed_norm"))
       }

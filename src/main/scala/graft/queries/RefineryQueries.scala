@@ -344,7 +344,7 @@ object RefineryQueries extends QueryPack {
     // constant, bad serialization) breaks them.
     "q_sketch_mg" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val k = 16
       // token = word LENGTH: a small skewed alphabet, so provably-heavy
       // tokens EXIST at every scale factor (raw words at sf0.01 are too

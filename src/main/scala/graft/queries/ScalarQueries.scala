@@ -96,7 +96,7 @@ object ScalarQueries extends QueryPack {
     // ---- Z-order clustering key (multi-dim file-skipping layout) ----
     "q_zorder_key" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       t(s, d, "events").select(
         $"event_id",
         $"user_id",

@@ -103,7 +103,7 @@ object SearchQueries extends QueryPack {
       .select($"doc_id", $"term",
         ($"tf" * round(log($"n_docs".cast("double") / $"df") * 1e6)
           .cast("long")).as("w6"))
-    graft.functions.VectorExprs.register(s)
+    graft.functions.register(s)
     import graft.llm.VectorOps.dot
     val tids = dfv.select($"term",
       row_number().over(Window.orderBy($"term")).as("tid"))
@@ -476,7 +476,7 @@ object SearchQueries extends QueryPack {
     // exact terms with exact and CMS counts side by side.
     "q_sketch_cms" -> { (s, d) =>
       import s.implicits._
-      graft.functions.VectorExprs.register(s)
+      graft.functions.register(s)
       val W = 1024
       def bucket(h: org.apache.spark.sql.Column, i: Int) =
         (pmod(h, lit(2147483648L)) * lit(2654435761L) + lit(i * 1000003L)) %

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QueryPack, Tables}
-import graft.functions.ExplodeTrack
 import graft.tracks.{BoundedTrackAgg, EventRaw, TrackStateOp}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -58,7 +57,7 @@ object TrackQueries extends QueryPack {
       val tracks = ev.groupByKey(_.user_id)
         .agg(BoundedTrackAgg().toColumn.name("track"))
         .toDF("user_id", "track")
-      ExplodeTrack.register(s)
+      graft.functions.register(s)
       tracks.select($"user_id", expr("explode_track(track)"))
         .select(
           $"user_id",

@@ -31,7 +31,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
           |  simhash64(array(CAST(7 AS BIGINT))) AS sh,
           |  size(minhash_signature(array(CAST(7 AS BIGINT)), 8)) AS nm,
           |  size(shingle_hashes('a b c d', 3)) AS ns,
-          |  size(word_hashes('a b c')) AS nw
+          |  size(word_hashes('a b c')) AS nw,
+          |  zorder64(CAST(3 AS BIGINT), CAST(0 AS BIGINT)) AS z,
+          |  size(span_hashes(array(CAST(1 AS BIGINT), CAST(2 AS BIGINT),
+          |                         CAST(3 AS BIGINT)), 2)) AS nsp,
+          |  size(geodesic_ngon(CAST(-79.5857 AS DOUBLE), CAST(34.2655 AS DOUBLE),
+          |                     CAST(100.0 AS DOUBLE), 8)) AS ng
           |""".stripMargin).head()
     assert(row.getDouble(0) == functions.WebMercator.R * -79.5857 * math.Pi / 180.0)
     assert(row.getInt(1) == 4)
@@ -41,6 +46,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(row.getInt(5) == 8)
     assert(row.getInt(6) == 2)
     assert(row.getInt(7) == 3)
+    assert(row.getLong(8) == functions.ZOrder64.interleave(3L, 0L))
+    assert(row.getInt(9) == 2)
+    assert(row.getInt(10) == 8)
+    // the aggregate through pure SQL
+    val top = s2.sql("SELECT mg_topk(w, 2) FROM VALUES ('a'), ('a'), ('b') AS t(w)")
+      .head().getMap[String, Long](0)
+    assert(top.get("a").contains(2L))
     // generator through pure SQL too
     val n = s2.sql(
       "SELECT explode_track(array(named_struct('a', 1), named_struct('a', 2)))").count()

@@ -147,7 +147,7 @@ class PlanSpec extends SparkSpec {
   test("IVF assignment is a pure map: zero Exchange on the corpus (streamed) side") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.VectorExprs.register(spark)
+    graft.functions.register(spark)
     // shape-only fixtures: the guard is structural, values don't matter
     val corpus = spark.range(100).select($"id".as("vec_id"),
       transform(sequence(lit(1), lit(4)), i => ($"id" % 7 + i).cast("double")).as("v"))

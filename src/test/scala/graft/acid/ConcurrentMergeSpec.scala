@@ -185,4 +185,25 @@ class ConcurrentMergeSpec extends SparkSpec {
     assert(snap.filter($"name".isin("one", "two")).count() == 2,
       "both conflicting merges must eventually land")
   }
+
+  test("a plan that lists its base publishes at that base + 1: a racing commit is never dropped") {
+    // plan a window-scoped copy-on-write delete and a compact, land an
+    // append in between, then publish: the plan either rebases (the
+    // racer's rows survive) or collides loudly — it must never publish
+    // a list that silently drops the racer's files
+    val t = new GraftTable(spark, graft.TempDirs.create("graft_cmerge_pin"),
+      statsCol = Some("id"))
+    (0 until 4).foreach(b =>
+      t.append(events(40).filter($"id" >= b * 10 && $"id" < b * 10 + 10)))
+    val plans = Seq(t.planDelete($"id" < 10L, useDv = false),
+      t.planCompact(targetFiles = 2))
+    plans.zipWithIndex.foreach { case (plan, i) =>
+      val racer = Seq((9000L + i, 1L, "racer", 0L)).toDF("id", "pid", "name", "seq")
+      t.append(racer)
+      try t.commitPlan(plan)
+      catch { case _: ConcurrentCommitException => () }
+      assert(t.snapshot().filter($"name" === "racer").count() == i + 1L,
+        s"${plan.op}: the racing append's rows must survive")
+    }
+  }
 }

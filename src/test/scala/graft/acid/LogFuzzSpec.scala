@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Model-based fuzz of the incremental commit log: a SEEDED random
   * sequence of mixed operations (append / appendUnique / DV-delete /
   * bulk COW delete / update / merge / replaceWhere / compact / zorder /
-  * reorg / restore / vacuum) runs against both the table and a plain
+  * reorg / restore / vacuum / multi-table txns whose sibling participant
+  * deletes, updates or merges) runs against both the table and a plain
   * in-memory
   * model; after every operation the snapshot must equal the model, and
   * periodically a FRESH handle (empty caches, resolution purely from the
@@ -92,11 +93,12 @@ class LogFuzzSpec extends SparkSpec {
     def df(rows: Seq[(Long, Long)]) = rows.toDF("id", "v")
 
     // SIBLING table for the mixed-op multi-table txn op (case 11):
-    // append-to-t + DV-delete-in-sib must land atomically, and the
+    // append-to-t + a row-level op in sib must land atomically, and the
     // sibling's own model must hold at every step like the main one
     val sib = new GraftTable(spark, graft.TempDirs.create("graft_logfuzz_sib"),
       dvMaxRows = 40, dvPurgeRows = 10L)
     val sibModel = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
+    var nextSibId = 10000040L
     locally {
       val rows = (1L to 40L).map(i => (10000000L + i, i))
       rows.foreach { case (k, v) => sibModel(k) = v }
@@ -204,20 +206,35 @@ class LogFuzzSpec extends SparkSpec {
           val w = t.writeData(df(rows), t.nextVersion)
           t.commit(t.nextVersion, t.entries(t.latestVersion.get) ++ w,
             op = "append", pending = Some(GraftTable.b64(marker)))
-        case 11 => // MIXED-OP multi-table txn: append HERE + DV-delete in
-          // the SIBLING, one atomic commit — both land or neither, and
-          // both models must hold after the step
+        case 11 => // MIXED-OP multi-table txn: append HERE + a row-level
+          // participant in the SIBLING (delete, update or merge, drawn),
+          // one atomic commit — both land or neither, and both models
+          // must hold after the step
           val rows = (0 until 1 + rnd.nextInt(5)).map { _ =>
             nextId += 1; (nextId, rnd.nextLong(1000)) }
           val victims = rnd.shuffle(sibModel.keys.toSeq).take(rnd.nextInt(3))
           val pred =
             if (victims.isEmpty) lit(false)
             else col("id").isin(victims.map(Long.box): _*)
-          GraftTable.commitAtomic(Seq(
-            GraftTable.AtomicAppend(t, df(rows)),
-            GraftTable.AtomicDelete(sib, pred)))
+          val (sibOp, sibLanded) = rnd.nextInt(3) match {
+            case 0 =>
+              (GraftTable.AtomicDelete(sib, pred),
+                () => victims.foreach(sibModel.remove))
+            case 1 =>
+              (GraftTable.AtomicUpdate(sib, pred,
+                Map("v" -> (col("v") + 1000000L))),
+                () => victims.foreach(k => sibModel(k) = sibModel(k) + 1000000L))
+            case _ => // upsert, LARGEST v wins (the merge case above)
+              val ups = victims.map(k => (k, rnd.nextLong(1000) + 2000000L)) ++
+                (0 until 2).map { _ => nextSibId += 1; (nextSibId, rnd.nextLong(1000)) }
+              (GraftTable.AtomicMerge(sib, df(ups), Seq("id"),
+                Seq(col("v").desc_nulls_last)),
+                () => ups.foreach { case (k, v) =>
+                  sibModel(k) = math.max(sibModel.getOrElse(k, Long.MinValue), v) })
+          }
+          GraftTable.commitAtomic(Seq(GraftTable.AtomicAppend(t, df(rows)), sibOp))
           rows.foreach { case (k, v) => model(k) = v }
-          victims.foreach(sibModel.remove)
+          sibLanded()
         case 12 => // selective atomic overwrite (replaceWhere): EVERY row
           // in a random id band leaves, a fresh in-band batch lands, one
           // commit — alternating the DV-mask and COW paths

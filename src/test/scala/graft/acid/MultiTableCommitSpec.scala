@@ -695,4 +695,80 @@ class MultiTableCommitSpec extends SparkSpec {
       spark.conf.unset("spark.graft.acid.distributedPruneMinFiles")
     }
   }
+
+  test("a standalone op and its participant write the same table (one planner, two publishers)") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // each op runs standalone on one clone of a seed table and as a
+    // one-op commitAtomic on a second clone: both clones list the seed's
+    // files by the same absolute paths, so consumed files and masks
+    // compare path for path; change data is on, so the persisted feeds
+    // compare too
+    final case class Case(name: String, partitioned: Boolean, dvMaxRows: Int,
+                          standalone: GraftTable => Unit,
+                          participant: GraftTable => GraftTable.AtomicOp)
+    val set = Map("v" -> lit("u"))
+    def upserts = Seq((3L, 3L, "m3"), (45L, 1L, "m45")).toDF("k", "p", "v")
+    val cond = col("__t_p") === col("__s_p") && col("__t_k") === col("__s_k")
+    val matched = Seq((None, Some(Map("v" -> col("__s_v")))))
+    val inserts = Seq((None, Map("k" -> col("__s_k"), "p" -> col("__s_p"),
+      "v" -> col("__s_v"))))
+    val cases = Seq(
+      Case("DV delete", false, 100000,
+        _.delete(col("k") === 5L), GraftTable.AtomicDelete(_, col("k") === 5L)),
+      Case("COW delete", false, 2,
+        _.delete(col("k").between(3L, 12L)),
+        GraftTable.AtomicDelete(_, col("k").between(3L, 12L))),
+      Case("DV update", false, 100000,
+        _.update(col("k") === 7L, set), GraftTable.AtomicUpdate(_, col("k") === 7L, set)),
+      Case("COW update", false, 2,
+        _.update(col("k") <= 15L, set), GraftTable.AtomicUpdate(_, col("k") <= 15L, set)),
+      Case("key-scoped merge", false, 100000,
+        _.merge(upserts, Seq("k"), Seq(col("v"))),
+        GraftTable.AtomicMerge(_, upserts, Seq("k"), Seq(col("v")))),
+      Case("scoped merge into", true, 100000,
+        _.mergeIntoGeneral(upserts, cond, matched, inserts, Nil,
+          scopedTouched = Some(Seq(1L, 3L))),
+        GraftTable.AtomicMergeInto(_, upserts, cond, matched, inserts, Nil,
+          scopeSrcCol = Some("p"))),
+      Case("full merge into", false, 100000,
+        _.mergeIntoGeneral(upserts, cond, matched, inserts, Nil),
+        GraftTable.AtomicMergeInto(_, upserts, cond, matched, inserts, Nil)),
+      Case("compact", false, 100000,
+        _.compact(targetFiles = 2), GraftTable.AtomicCompact(_, targetFiles = 2)))
+    spark.conf.set("spark.graft.acid.writeChangeData", "true")
+    try cases.foreach { c =>
+      def handle(root: String) =
+        if (c.partitioned) new GraftTable(spark, root, partitionCol = Some("p"),
+          dvMaxRows = c.dvMaxRows)
+        else new GraftTable(spark, root, statsCol = Some("k"),
+          dvMaxRows = c.dvMaxRows)
+      val seed = handle(graft.TempDirs.create("graft_mt_twin_seed"))
+      // four appends with disjoint key bands: the windows prune
+      (0 until 4).foreach(b => seed.append((b * 10 + 1 to b * 10 + 10)
+        .map(i => (i.toLong, (i % 4).toLong, s"v$i")).toDF("k", "p", "v")))
+      val Seq(solo, txn) = Seq("solo", "txn").map { n =>
+        val root = graft.TempDirs.create(s"graft_mt_twin_$n")
+        seed.cloneTo(root)
+        handle(root)
+      }
+      c.standalone(solo)
+      GraftTable.commitAtomic(Seq(c.participant(txn)))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      // the clone's own files (path -> masked rows) still listed after
+      // the op: what it consumed is what is missing
+      def carried(t: GraftTable) = {
+        val base = t.entries(1L).map(_.path).toSet
+        t.entries(2L).filter(e => base(e.path)).map(e => (e.path, e.dvCount))
+          .sorted
+      }
+      assert(carried(solo) != solo.entries(1L).map(e => (e.path, e.dvCount)).sorted,
+        s"${c.name}: the op must mask or consume seed files")
+      assert(rows(solo.snapshot()) == rows(txn.snapshot()), s"${c.name}: snapshot")
+      assert(carried(solo) == carried(txn), s"${c.name}: consumed files and masks")
+      assert(solo.history().last.op == txn.history().last.op, c.name)
+      assert(rows(solo.changeFeed(1L, 2L)) == rows(txn.changeFeed(1L, 2L)),
+        s"${c.name}: change feed")
+    } finally spark.conf.unset("spark.graft.acid.writeChangeData")
+  }
 }

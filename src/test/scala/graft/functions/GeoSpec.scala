@@ -9,7 +9,7 @@ class GeoSpec extends SparkSpec {
   import spark.implicits._
 
   test("WebMercator: known values and codegen/interpreted parity") {
-    WebMercator.register(spark)
+    graft.functions.register(spark)
     val df = Seq((0.0, 0.0), (180.0, 0.0), (-79.5857, 34.2655)).toDF("lon", "lat")
       .withColumn("m", expr("web_mercator(lon, lat)"))
       .select($"lon", $"lat", $"m.x", $"m.y")
@@ -51,7 +51,7 @@ class GeoSpec extends SparkSpec {
   }
 
   test("GeodesicNgon: codegen'd pipeline == driver-side ngon kernel") {
-    GeodesicBuffer.register(spark)
+    graft.functions.register(spark)
     val (lon, lat) = (144.42486788888888, -37.95103341666667)
     val viaPipeline = Seq((lon, lat)).toDF("lon", "lat")
       .select(GeodesicBuffer.buffer($"lon", $"lat", lit(250.0), lit(8)))

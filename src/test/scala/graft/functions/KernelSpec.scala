@@ -27,7 +27,7 @@ class KernelSpec extends SparkSpec {
   }
 
   test("ShingleHashes kernel == HOF shingles+xxhash64 path (parity + edges)") {
-    VectorExprs.register(spark)
+    graft.functions.register(spark)
     import graft.llm.TextOps
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
@@ -95,7 +95,7 @@ class KernelSpec extends SparkSpec {
   }
 
   test("WordHashes: known polynomial values, order + multiplicity, empty words") {
-    VectorExprs.register(spark)
+    graft.functions.register(spark)
     val B = 1000003L
     def ph(s: String): Long = s.getBytes("UTF-8").foldLeft(0L)((h, b) => h * B + (b & 0xFF))
     val got = Seq((1L, "ab ab c"), (2L, ""), (3L, "x  y "))
@@ -127,7 +127,7 @@ class KernelSpec extends SparkSpec {
   }
 
   test("SpanHashes: interpreted == codegen'd pipeline") {
-    VectorExprs.register(spark)
+    graft.functions.register(spark)
     val xs = Array(0x123456789ABCDEFL, -42L, 7L, Long.MaxValue, Long.MinValue)
     val viaPipeline = Seq(Tuple1(xs)).toDF("h")
       .select(call_function("span_hashes", $"h", lit(3))).as[Seq[Long]].head()
@@ -140,7 +140,7 @@ class KernelSpec extends SparkSpec {
   }
 
   test("DotProduct pipeline == driver-side sequential fold") {
-    VectorExprs.register(spark)
+    graft.functions.register(spark)
     val a = Array(1.5, -2.25, 3.125, 0.0625)
     val b = Array(-0.5, 4.75, 2.5, -8.0)
     val got = Seq((a, b)).toDF("a", "b")
@@ -151,7 +151,7 @@ class KernelSpec extends SparkSpec {
   }
 
   test("SimHash64: interpreted == codegen'd pipeline") {
-    VectorExprs.register(spark)
+    graft.functions.register(spark)
     val hs = Array(0x123456789ABCDEFL, -42L, 7L)
     val viaPipeline = Seq(Tuple1(hs)).toDF("h")
       .select(call_function("simhash64", $"h")).as[Long].head()
@@ -175,7 +175,7 @@ class KernelSpec extends SparkSpec {
   }
 
   test("MinHashSignature: interpreted == codegen'd, monotone under union") {
-    VectorExprs.register(spark)
+    graft.functions.register(spark)
     val xs = Array(10L, 20L, 30L, 40L)
     val viaPipeline = Seq(Tuple1(xs)).toDF("h")
       .select(call_function("minhash_signature", $"h", lit(16)))

@@ -15,7 +15,7 @@ class MisraGriesSpec extends SparkSpec {
   import spark.implicits._
 
   private def mgFromSpark(tokens: Seq[String], k: Int, parts: Int): Map[String, Long] = {
-    VectorExprs.register(spark)
+    graft.functions.register(spark)
     val df = tokens.toDF("tok").repartition(parts)
     df.agg(call_function("mg_topk", $"tok", lit(k)).as("sk"))
       .as[Map[String, Long]].head()

@@ -44,7 +44,7 @@ class LlmSpec extends SparkSpec {
     val df = Seq((1L, "the quick brown fox jumps"), (2L, "the quick brown fox jumps"),
                  (3L, "completely different words here entirely"))
       .toDF("doc_id", "text")
-    graft.functions.VectorExprs.register(spark)
+    graft.functions.register(spark)
     val sigs = df.select($"doc_id", TextOps.simhash($"text").as("sig"))
       .as[(Long, Long)].collect().toMap
     assert(sigs(1L) == sigs(2L))
@@ -52,7 +52,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("kgram_hashes: known values, short strings, codegen parity") {
-    KGramHashes.register(spark)
+    graft.functions.register(spark)
     val df = Seq((1L, "abcd"), (2L, "a"), (3L, "")).toDF("id", "s")
     val got = df.select($"id", expr("kgram_hashes(s, 2)")).as[(Long, Seq[Long])]
       .collect().toMap

@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.{GraftLocalFileSystem, GraftLocalFs, LocalFs}
 import org.apache.spark.sql.SparkSession
 
 /** The one place graft builds a SparkSession. Every main (Bench, Verify
@@ -13,11 +14,18 @@ import org.apache.spark.sql.SparkSession
   *    the tail of its log, and r1 lost its head to preamble noise);
   *  - a per-JVM temp warehouse and derby home, deleted on exit, so no run
   *    leaves `spark-warehouse/` or `derby.log` in the working dir;
-  *  - a 5,000-entry codegen cache (below).
+  *  - a 5,000-entry codegen cache (below);
+  *  - graft's fork-free local filesystem ([[graft.io.LocalFs]]) for
+  *    `file:` through both Hadoop APIs, so the `FileSystem` cache holds
+  *    its instance from the start.
   *
   * A gate that needs a different conf or rule takes a clone of the
   * session it is handed ([[cloneFor]], or `runToMemory`'s per-stream
-  * clone) and never writes to the caller's session. */
+  * clone) and never writes to the caller's session. The named
+  * exceptions are the oracle contract's UTC and `nanosAsLong`
+  * ([[Tables.table]]), and [[graft.io.LocalFs.install]], which each
+  * stream builder applies to the handed session's Hadoop conf so its
+  * checkpoint and state files go through graft's local filesystem. */
 object GraftSession {
   def cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
@@ -44,6 +52,10 @@ object GraftSession {
       // workload needs the same setting for the same reason — it follows
       // from the workload's shape, not from local mode.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.hadoop." + LocalFs.FileSystemKey,
+        classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop." + LocalFs.AbstractFileSystemKey,
+        classOf[GraftLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark

@@ -9,7 +9,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * the CLONE, and transplant the analyzed plan onto it. The shared
   * session's conf is never touched, so a concurrent batch query planned
   * while a stream starts keeps its own settings — no lock, no set/restore
-  * window (round-4 advice #3).
+  * window (round-4 advice #3). The one write is to the shared Hadoop
+  * conf: [[graft.io.LocalFs.install]], so the stream's checkpoint and
+  * state files go through graft's fork-free local filesystem.
   *
   * The overrides: `statePartitions` as the shuffle/state fan-out, and the
   * RocksDB state-store provider when the plan holds a transformWithState
@@ -24,6 +26,7 @@ private[graft] object ScopedStream {
   /** Rebind `df` to a cloned session carrying the stream's overrides;
     * returns (clonedSession, reboundDf). */
   def apply(df: DataFrame, statePartitions: Int): (SparkSession, DataFrame) = {
+    graft.io.LocalFs.install(df.sparkSession.sparkContext.hadoopConfiguration)
     val scoped = GraftPlanBridge.cloneSession(df.sparkSession)
     scoped.conf.set("spark.sql.shuffle.partitions", statePartitions)
     val plan = df.queryExecution.analyzed

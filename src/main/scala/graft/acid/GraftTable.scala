@@ -117,7 +117,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
 
   private val rootPath = new Path(root)
   private def fs: FileSystem =
-    rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.io.LocalFs.fileSystem(rootPath, spark.sparkContext.hadoopConfiguration)
   private def logDir = new Path(rootPath, "_log")
   private def manifestPath(v: Long) = new Path(logDir, f"v$v%020d.manifest")
 
@@ -2020,6 +2020,18 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         (out, Some(merged))
     }
 
+  /** The base every ALTER plans against: the pinned latest version `lv`
+    * and its declared (else effective) schema. The ALTER publishes at
+    * `lv + 1`, so a commit landing after the schema read — another ALTER
+    * from a second handle, say — collides on the manifest create instead
+    * of having its change dropped by this header's whole-schema
+    * statement. */
+  private def alterBase(what: String): (Long, StructType) = {
+    val lv = latestVersion.getOrElse(throw new IllegalStateException(
+      s"$what on $root: the table has no commits yet"))
+    (lv, schemaOf(lv).getOrElse(snapshot(Some(lv)).schema))
+  }
+
   /** ALTER TABLE ADD COLUMNS as a METADATA-ONLY commit: the file entries
     * carry over verbatim (zero data I/O — the 100 TB property of schema
     * evolution), only the declared schema in the new manifest grows.
@@ -2028,22 +2040,19 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * schema. Added columns are forced nullable (existing rows have no
     * value for them). */
   def addColumns(cols: Seq[StructField]): Long = {
-    val base = tableSchema.orElse(latestVersion.map(v => snapshot(Some(v)).schema))
-      .getOrElse(throw new IllegalStateException(
-        s"addColumns on $root: the table has no commits yet"))
+    val (lv, base) = alterBase("addColumns")
     val lowerNew = cols.map(_.name.toLowerCase)
     require(lowerNew.distinct.size == lowerNew.size,
       s"addColumns: duplicate column names among ${cols.map(_.name).mkString(", ")}")
     val clash = lowerNew.intersect(base.fieldNames.map(_.toLowerCase).toSeq)
     require(clash.isEmpty, s"addColumns: ${clash.mkString(", ")} already exist")
-    val v = nextVersion
+    val v = lv + 1
     // a re-added name whose PHYSICAL namesake was dropped (or is held by
     // a renamed column) maps to a FRESH physical column — old file
     // values for the dead physical name must never resurrect into the
     // new logical column
-    val lv = latestVersion
-    val cm = lv.map(cmapOf).getOrElse(Map.empty)
-    val dropped = lv.map(droppedPhysOf).getOrElse(Set.empty)
+    val cm = cmapOf(lv)
+    val dropped = droppedPhysOf(lv)
     val physInUse = base.fields.map(f =>
       cm.getOrElse(f.name.toLowerCase, f.name).toLowerCase).toSet
     // names the generated physical name must not collide with: live
@@ -2104,9 +2113,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * indexed column. */
   def widenColumn(name: String, newType: DataType): Long = {
     import org.apache.spark.sql.types._
-    val base = tableSchema.orElse(latestVersion.map(v => snapshot(Some(v)).schema))
-      .getOrElse(throw new IllegalStateException(
-        s"widenColumn on $root: the table has no commits yet"))
+    val (lv, base) = alterBase("widenColumn")
     val f = base.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(s"widenColumn on $root: no column $name"))
     val rank = Map[DataType, Int](ByteType -> 1, ShortType -> 2,
@@ -2130,8 +2137,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       "float -> double, decimal(p,s) -> decimal(p+k,s), and " +
       "integral -> sufficiently wide decimal only)")
     if (decimalFamily) requireNotPhysicalConfig(name, "widen (to decimal)")
-    val v = nextVersion
-    commitDelta(v, Nil, Nil, op = "widen_column",
+    commitDelta(lv + 1, Nil, Nil, op = "widen_column",
       schema = Some(StructType(base.fields.map(x =>
         if (x.name.equalsIgnoreCase(name)) x.copy(dataType = newType) else x))))
   }
@@ -2153,24 +2159,21 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * PHYSICAL file column names, and a mapped logical name would record
     * nothing. */
   def alterClusterKeys(cols: Seq[String]): Long = {
-    val base = tableSchema.orElse(latestVersion.map(v => snapshot(Some(v)).schema))
-      .getOrElse(throw new IllegalStateException(
-        s"alterClusterKeys on $root: the table has no commits yet"))
+    val (lv, base) = alterBase("alterClusterKeys")
     val missing = cols.filterNot(c =>
       base.fieldNames.exists(_.equalsIgnoreCase(c)))
     require(missing.isEmpty,
       s"alterClusterKeys on $root: no column(s) ${missing.mkString(", ")}")
-    val cm = latestVersion.map(cmapOf).getOrElse(Map.empty)
+    val cm = cmapOf(lv)
     val mapped = cols.filter(c => cm.get(c.toLowerCase)
       .exists(!_.equalsIgnoreCase(c)))
     require(mapped.isEmpty,
       s"alterClusterKeys on $root: ${mapped.mkString(", ")} carry a " +
         "column mapping (renamed / re-added) — per-file windows key " +
         "physical names; cluster on identity-mapped columns or rebuild")
-    val v = nextVersion
     val old = indexCols
     indexCols = cols
-    try commitDelta(v, Nil, Nil, op = "cluster_keys")
+    try commitDelta(lv + 1, Nil, Nil, op = "cluster_keys")
     catch { case e: Throwable => indexCols = old; throw e }
   }
 
@@ -2198,20 +2201,17 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * commit stamps `require=cm`, so a pre-mapping reader refuses loudly
     * instead of projecting an all-NULL column. */
   def renameColumn(oldName: String, newName: String): Long = {
-    val base = tableSchema.orElse(latestVersion.map(v => snapshot(Some(v)).schema))
-      .getOrElse(throw new IllegalStateException(
-        s"renameColumn on $root: the table has no commits yet"))
+    val (lv, base) = alterBase("renameColumn")
     val f = base.fields.find(_.name.equalsIgnoreCase(oldName)).getOrElse(
       throw new IllegalArgumentException(
         s"renameColumn on $root: no column $oldName"))
     require(!base.fields.exists(_.name.equalsIgnoreCase(newName)),
       s"renameColumn on $root: $newName already exists")
     requireNotPhysicalConfig(oldName, "rename")
-    val v = nextVersion
-    val cm = latestVersion.map(cmapOf).getOrElse(Map.empty)
+    val cm = cmapOf(lv)
     val physName = cm.getOrElse(f.name.toLowerCase, f.name)
     val cm2 = (cm - f.name.toLowerCase) + (newName.toLowerCase -> physName)
-    commitDelta(v, Nil, Nil, op = "rename_column",
+    commitDelta(lv + 1, Nil, Nil, op = "rename_column",
       schema = Some(StructType(base.fields.map(x =>
         if (x.name.equalsIgnoreCase(oldName)) x.copy(name = newName) else x))),
       cmapOverride = Some(cm2))
@@ -2224,24 +2224,19 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * tombstone set so a later re-ADD of the same name maps to a fresh
     * physical column instead of resurrecting the dropped values. */
   def dropColumn(name: String): Long = {
-    val base = tableSchema.orElse(latestVersion.map(v => snapshot(Some(v)).schema))
-      .getOrElse(throw new IllegalStateException(
-        s"dropColumn on $root: the table has no commits yet"))
+    val (lv, base) = alterBase("dropColumn")
     val f = base.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(s"dropColumn on $root: no column $name"))
     require(base.fields.length > 1,
       s"dropColumn on $root: cannot drop the only column")
     requireNotPhysicalConfig(name, "drop")
-    val v = nextVersion
-    val lv = latestVersion
-    val cm = lv.map(cmapOf).getOrElse(Map.empty)
+    val cm = cmapOf(lv)
     val physName = cm.getOrElse(f.name.toLowerCase, f.name)
-    commitDelta(v, Nil, Nil, op = "drop_column",
+    commitDelta(lv + 1, Nil, Nil, op = "drop_column",
       schema = Some(StructType(base.fields.filterNot(
         _.name.equalsIgnoreCase(name)))),
       cmapOverride = Some(cm - f.name.toLowerCase),
-      cmdropOverride = Some(lv.map(droppedPhysOf).getOrElse(Set.empty) +
-        physName.toLowerCase))
+      cmdropOverride = Some(droppedPhysOf(lv) + physName.toLowerCase))
   }
 
   /** Replace the table content with `df` (CHECK-validated at write). */
@@ -3755,11 +3750,11 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     p.body match {
       case m: WritePlan.Mask => commitDvMasks(p.lv, m, p.op, p.extra, pending)
       case WritePlan.Rewrite(_, written, Some(keep), schema) =>
-        commit(p.lv + 1, keep ++ written, op = p.op, schema = schema,
-          extraMeta = p.extra, pending = pending)
+        commit(p.lv + 1, keep ++ written, op = p.op, txn = p.txn,
+          schema = schema, extraMeta = p.extra, pending = pending)
       case WritePlan.Rewrite(consumed, written, None, schema) =>
-        commitDelta(p.lv + 1, written, consumed, op = p.op, schema = schema,
-          extraMeta = p.extra, pending = pending)
+        commitDelta(p.lv + 1, written, consumed, op = p.op, txn = p.txn,
+          schema = schema, extraMeta = p.extra, pending = pending)
     }
 
   /** DELETE's planner ([[delete]], [[GraftTable.AtomicDelete]]): the
@@ -4632,18 +4627,29 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * and inserts land) — so the apply is idempotent per batch replay as
     * long as the mirror holds one live row per key, which a keyed feed
     * guarantees. */
-  def applyChangesKeyed(feed: DataFrame, keyCol: String): Long = {
+  def applyChangesKeyed(feed: DataFrame, keyCol: String): Long =
+    latestVersion match {
+      // a never-committed mirror bootstraps
+      case None => append(feed.filter(col("_change").isin("insert",
+        "update_postimage")).drop("_change"))
+      case Some(lv) => commitPlan(planApplyKeyed(lv, feed, keyCol))
+    }
+
+  /** [[applyChangesKeyed]]'s planner against the pinned base `lv`: the
+    * touched-key candidates it consumes and the files it writes, which
+    * publish at `lv + 1` — a commit landing in between (one that wrote
+    * rows for the same keys, say) collides on the manifest create
+    * instead of keeping a second live row per key. */
+  private[acid] def planApplyKeyed(lv: Long, feed: DataFrame,
+                                   keyCol: String): WritePlan = {
     val ups = feed.filter(col("_change").isin("insert", "update_postimage"))
       .drop("_change")
     val touchedKeys = feed.select(col(keyCol)).na.drop()
       .distinct().limit(1025).collect().map(_.get(0))
-    val lv = latestVersion.getOrElse(
-      return append(ups)) // a never-committed mirror bootstraps
     if (touchedKeys.isEmpty) {
       // a keyed feed guarantees non-null keys: rows with NO surviving key
-      // would otherwise be SILENTLY dropped by the early no-op return
-      // below (the post-images never land) — fail loudly instead of
-      // losing data
+      // would otherwise be SILENTLY dropped by the no-op plan below (the
+      // post-images never land) — fail loudly instead of losing data
       require(ups.isEmpty,
         s"applyChangesKeyed: the feed has insert/post-image rows but no " +
           s"non-null '$keyCol' keys — a keyed feed must carry a key on " +
@@ -4651,7 +4657,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       // nothing keyed changed: publish a no-op version (keeps the
       // batch → version bookkeeping monotone for downstream consumers)
       // — an empty delta, no entry-list materialization
-      return commitDelta(nextVersion, Nil, Nil, op = "apply_changes")
+      return WritePlan(lv, "apply_changes", WritePlan.Rewrite(Nil, Nil))
     }
     val pred =
       if (touchedKeys.length <= 1024)
@@ -4672,19 +4678,18 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     // checkpoint scan; the untouched entries are never materialized
     // ([[commitDelta]] carries them implicitly)
     val rewrite = entriesForPredicate(pred, lv)
-    val v = nextVersion
     val keyFrame = feed.select(col(keyCol)).na.drop().distinct()
     val out =
       if (rewrite.isEmpty) ups
       else readWithDv(rewrite, schemaOf(lv), snapshot(Some(lv)), cmapOf(lv))
         .join(keyFrame, Seq(keyCol), "left_anti")
         .unionByName(ups)
-    val written = writeData(clusterByPartition(out), v)
+    val written = writeData(clusterByPartition(out), lv + 1)
     // the mirror's OWN commits persist change data too ([[cdfWriteEnabled]]):
     // a downstream consumer of the mirror (CDC fan-out chains) then serves
     // from KB-scale files instead of re-netting the mirror's rewrites
-    commitDelta(v, written, rewrite, op = "apply_changes",
-      extraMeta = rewriteChangeMeta(rewrite, written, lv))
+    WritePlan(lv, "apply_changes", WritePlan.Rewrite(rewrite, written),
+      rewriteChangeMeta(rewrite, written, lv))
   }
 
   /** APPEND-ONLY fast path for streaming batch diffs: when every
@@ -4830,17 +4835,35 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
           throw new IllegalStateException(
             s"applyChangesAgg: txn $w@$epoch recorded but no version at $root"))
     }
-    val dec = "decimal(28,6)"
+    latestVersion match {
+      // bootstrap: the first batch's positive groups ARE the mirror
+      case None => append(aggDelta(feed, keyCol, valCols)
+        .filter(col("n") =!= 0L), txn = txn)
+      case Some(lv) =>
+        commitPlan(planApplyAgg(lv, feed, keyCol, valCols, txn))
+    }
+  }
+
+  /** The feed folded to one ±delta row per group: `n` and an exact
+    * DECIMAL(28,6) `sum_<c>` per value column. */
+  private def aggDelta(feed: DataFrame, keyCol: String,
+                       valCols: Seq[String]): DataFrame = {
     val sgn = when(col("_change").isin("insert", "update_postimage"), 1L)
       .otherwise(lit(-1L))
-    val delta = feed.withColumn("__sgn", sgn).groupBy(col(keyCol))
+    feed.withColumn("__sgn", sgn).groupBy(col(keyCol))
       .agg(sum(col("__sgn")).as("n"),
-        valCols.map(c => sum(col(c).cast(dec) * col("__sgn"))
-          .cast(dec).as(s"sum_$c")): _*)
-    val lv = latestVersion.getOrElse {
-      // bootstrap: the first batch's positive groups ARE the mirror
-      return append(delta.filter(col("n") =!= 0L), txn = txn)
-    }
+        valCols.map(c => sum(col(c).cast(AggDec) * col("__sgn"))
+          .cast(AggDec).as(s"sum_$c")): _*)
+  }
+
+  private val AggDec = "decimal(28,6)"
+
+  /** [[applyChangesAgg]]'s planner against the pinned base `lv`; the fold
+    * publishes at `lv + 1` like [[planApplyKeyed]]'s, recording `txn`. */
+  private[acid] def planApplyAgg(lv: Long, feed: DataFrame, keyCol: String,
+                                 valCols: Seq[String],
+                                 txn: Option[(String, Long)] = None): WritePlan = {
+    val delta = aggDelta(feed, keyCol, valCols)
     // delta is one row per group already — keep a null-group row (na.drop
     // here would turn an all-null-key batch into a silent no-op that
     // drops its deltas).
@@ -4857,7 +4880,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     val sampled = delta.select(col(keyCol))
       .limit(1025).collect().map(_.get(0))
     if (sampled.isEmpty)
-      return commitDelta(nextVersion, Nil, Nil, op = "apply_changes",
+      return WritePlan(lv, "apply_changes", WritePlan.Rewrite(Nil, Nil),
         txn = txn)
     val pred =
       if (sampled.length < 1025) {
@@ -4880,10 +4903,9 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
         if (hasNullKey) base || col(keyCol).isNull else base
       }
     // DELTA-FIRST: only the touched-group candidates resolve (see
-    // [[applyChangesKeyed]]); the untouched mirror entries carry
+    // [[planApplyKeyed]]); the untouched mirror entries carry
     // implicitly through [[commitDelta]]
     val rewrite = entriesForPredicate(pred, lv)
-    val v = nextVersion
     val mirrorCols = keyCol +: "n" +: valCols.map(c => s"sum_$c")
     val old =
       if (rewrite.isEmpty) delta.limit(0).select(mirrorCols.map(col): _*)
@@ -4897,13 +4919,13 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
       (coalesce(old(keyCol), d(s"__d_$keyCol")).as(keyCol) +:
         (coalesce(old("n"), lit(0L)) + coalesce(d("__d_n"), lit(0L))).as("n") +:
         valCols.map(c =>
-          (coalesce(old(s"sum_$c"), lit(0).cast(dec)) +
-            coalesce(d(s"__d_sum_$c"), lit(0).cast(dec)))
-            .cast(dec).as(s"sum_$c"))): _*)
+          (coalesce(old(s"sum_$c"), lit(0).cast(AggDec)) +
+            coalesce(d(s"__d_sum_$c"), lit(0).cast(AggDec)))
+            .cast(AggDec).as(s"sum_$c"))): _*)
       .filter(col("n") =!= 0L)
-    val written = writeData(clusterByPartition(out), v)
-    commitDelta(v, written, rewrite, op = "apply_changes", txn = txn,
-      extraMeta = rewriteChangeMeta(rewrite, written, lv))
+    val written = writeData(clusterByPartition(out), lv + 1)
+    WritePlan(lv, "apply_changes", WritePlan.Rewrite(rewrite, written),
+      rewriteChangeMeta(rewrite, written, lv), txn = txn)
   }
 
   /** RESTORE TABLE ... TO VERSION AS OF `v` (the production lakehouse
@@ -5274,16 +5296,18 @@ object GraftTable {
                                         restate: Option[Restate] = None,
                                         held: Option[Seq[FileEntry]] = None)
 
-  /** One row-level write (delete, update, merge, merge into, compact)
-    * planned against the pinned base version `lv`: what it consumed and
-    * produced (`body`), the change-data meta (`extra`) and the rebase
-    * scope. Each operation has ONE planner; the standalone call
+  /** One row-level write (delete, update, merge, merge into, compact,
+    * keyed and aggregate change applies) planned against the pinned base
+    * version `lv`: what it consumed and produced (`body`), the change-data
+    * meta (`extra`), the rebase scope and the `(writerId, epoch)` txn a
+    * rewrite records. Each operation has ONE planner; the standalone call
     * ([[GraftTable.commitPlan]]) and the multi-table participant
     * ([[GraftTable.participant]]) differ only in how they publish. */
   private[acid] final case class WritePlan(lv: Long, op: String,
                                            body: WritePlan.Body,
                                            extra: Seq[String] = Nil,
-                                           rebase: Option[WritePlan.Rebase] = None)
+                                           rebase: Option[WritePlan.Rebase] = None,
+                                           txn: Option[(String, Long)] = None)
 
   private[acid] object WritePlan {
     sealed trait Body

@@ -102,6 +102,7 @@ object Flights {
   def trackSnapshots(flights: Dataset[FlightRec], cap: Int = TrackBuffer.DefaultCap): Dataset[FlightSnap] = {
     val spark = flights.sparkSession
     import spark.implicits._
+    graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     flights
       .groupByKey(_.trackId)
       .flatMapGroupsWithState[FlightTrackState, FlightSnap](

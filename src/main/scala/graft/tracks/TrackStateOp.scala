@@ -70,6 +70,7 @@ object TrackStateOp {
                      ttl: Option[String] = None): Dataset[SnapRow] = {
     val spark = events.sparkSession
     import spark.implicits._
+    graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
 
     val timeout =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout

@@ -41,6 +41,7 @@ object TrackStateTws {
                      cap: Int = TrackBuffer.DefaultCap): Dataset[SnapRow] = {
     val spark = events.sparkSession
     import spark.implicits._
+    graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     events
       .groupByKey(_.user_id)
       .transformWithState(new TrackProcessor(cap), TimeMode.None(), OutputMode.Update())

@@ -206,4 +206,59 @@ class ConcurrentMergeSpec extends SparkSpec {
         s"${plan.op}: the racing append's rows must survive")
     }
   }
+
+  test("a change apply publishes at its planned base + 1: a racing write to a touched key collides") {
+    // plan a keyed mirror apply and an aggregate fold, land a write for
+    // a key each touches in between, then publish: the apply must
+    // collide instead of leaving the racer's row live next to its own
+    // (two rows for one key) or folding over a group it never read
+    val t = new GraftTable(spark, graft.TempDirs.create("graft_cmerge_keyed"),
+      statsCol = Some("id"))
+    t.append(events(10))
+    val keyed = t.planApplyKeyed(t.latestVersion.get,
+      Seq((3L, 3L, "applied", 1L, "update_postimage")).toDF(
+        "id", "pid", "name", "seq", "_change"), "id")
+    t.append(Seq((3L, 3L, "racer", 2L)).toDF("id", "pid", "name", "seq"))
+    intercept[ConcurrentCommitException](t.commitPlan(keyed))
+    assert(t.snapshot().filter($"id" === 3L).as[(Long, Long, String, Long)]
+      .collect().map(_._3).sorted.toSeq == Seq("racer", "v3"),
+      "the racing append's row must survive the lost apply")
+
+    val m = new GraftTable(spark, graft.TempDirs.create("graft_cmerge_agg"))
+    def feed(g: String, v: Double) = Seq((g, v, "insert")).toDF("g", "v", "_change")
+    m.applyChangesAgg(feed("a", 1.0), "g", Seq("v"))
+    val fold = m.planApplyAgg(m.latestVersion.get, feed("a", 10.0), "g",
+      Seq("v"), txn = Some(("w", 1L)))
+    m.applyChangesAgg(feed("a", 100.0), "g", Seq("v"), txn = Some(("racer", 1L)))
+    intercept[ConcurrentCommitException](m.commitPlan(fold))
+    // the lost fold recorded nothing: its retry lands on the racer's sum
+    m.applyChangesAgg(feed("a", 10.0), "g", Seq("v"), txn = Some(("w", 1L)))
+    assert(m.snapshot().as[(String, Long, BigDecimal)].collect().toSeq
+      .map(r => (r._1, r._2, r._3.toDouble)) == Seq(("a", 3L, 111.0)))
+  }
+
+  test("two ALTERs from handles opened at the same version: the second fails or keeps the first's change") {
+    val root = graft.TempDirs.create("graft_cmerge_alter")
+    new GraftTable(spark, root).append(events(4))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (0 until 6).foreach { i =>
+      val handles = Seq(new GraftTable(spark, root), new GraftTable(spark, root))
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val cols = Seq(s"a$i", s"b$i")
+      val landed = handles.zip(cols).map { case (h, c) =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          override def call(): Boolean = {
+            barrier.await()
+            try { h.addColumn(c, org.apache.spark.sql.types.LongType); true }
+            catch { case _: ConcurrentCommitException => false }
+          }
+        })
+      }.map(_.get())
+      val schema = new GraftTable(spark, root).tableSchema.get.fieldNames.toSet
+      cols.zip(landed).foreach { case (c, ok) =>
+        assert(schema.contains(c) == ok,
+          s"round $i: $c landed=$ok but the latest schema is $schema")
+      }
+    } finally pool.shutdown()
+  }
 }

@@ -117,7 +117,7 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
 
   private val rootPath = new Path(root)
   private def fs: FileSystem =
-    graft.io.LocalFs.fileSystem(rootPath, spark.sparkContext.hadoopConfiguration)
+    rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def logDir = new Path(rootPath, "_log")
   private def manifestPath(v: Long) = new Path(logDir, f"v$v%020d.manifest")
 
@@ -4828,21 +4828,18 @@ final class GraftTable(private[acid] val spark: SparkSession, val root: String,
     * duplicating it or silently vanishing. */
   def applyChangesAgg(feed: DataFrame, keyCol: String,
                       valCols: Seq[String],
-                      txn: Option[(String, Long)] = None): Long = {
-    txn.foreach { case (w, epoch) =>
-      if (lastTxn(w).exists(_ >= epoch))
-        return latestVersion.getOrElse(
-          throw new IllegalStateException(
-            s"applyChangesAgg: txn $w@$epoch recorded but no version at $root"))
-    }
+                      txn: Option[(String, Long)] = None): Long =
     latestVersion match {
       // bootstrap: the first batch's positive groups ARE the mirror
       case None => append(aggDelta(feed, keyCol, valCols)
         .filter(col("n") =!= 0L), txn = txn)
+      // the replay check reads the pinned base, so a replay of the same
+      // txn that lands after it collides on the publish at lv + 1
+      case Some(lv) if txn.exists { case (w, epoch) =>
+          txnsAsOf(lv).get(w).exists(_ >= epoch) } => lv
       case Some(lv) =>
         commitPlan(planApplyAgg(lv, feed, keyCol, valCols, txn))
     }
-  }
 
   /** The feed folded to one ±delta row per group: `n` and an exact
     * DECIMAL(28,6) `sum_<c>` per value column. */

@@ -6,8 +6,7 @@ import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path,
-  RawLocalFileSystem}
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -87,24 +86,4 @@ object LocalFs {
   def install(conf: Configuration): Unit =
     if (conf.get(AbstractFileSystemKey) == StockAbstractFileSystem)
       conf.set(AbstractFileSystemKey, classOf[GraftLocalFs].getName)
-
-  @volatile private var shared: GraftLocalFileSystem = _
-
-  /** `p`'s `FileSystem`, with [[GraftLocalFileSystem]] in place of a stock
-    * `LocalFileSystem`: one instance per JVM, initialized from the first
-    * caller's conf as the `FileSystem` cache would be. Any other class the
-    * conf names for the scheme is returned as Hadoop resolves it. */
-  def fileSystem(p: Path, conf: Configuration): FileSystem =
-    p.getFileSystem(conf) match {
-      case stock if stock.getClass == classOf[LocalFileSystem] =>
-        if (shared == null) synchronized {
-          if (shared == null) {
-            val fs = new GraftLocalFileSystem
-            fs.initialize(FsConstants.LOCAL_FS_URI, conf)
-            shared = fs
-          }
-        }
-        shared
-      case fs => fs
-    }
 }

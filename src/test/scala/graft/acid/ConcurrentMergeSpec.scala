@@ -235,6 +235,19 @@ class ConcurrentMergeSpec extends SparkSpec {
     m.applyChangesAgg(feed("a", 10.0), "g", Seq("v"), txn = Some(("w", 1L)))
     assert(m.snapshot().as[(String, Long, BigDecimal)].collect().toSeq
       .map(r => (r._1, r._2, r._3.toDouble)) == Seq(("a", 3L, 111.0)))
+
+    // a replay of the SAME txn landing between plan and publish: the
+    // planned fold collides instead of applying the group's deltas a
+    // second time, and a later replay sees the txn at its pinned base
+    val again = m.planApplyAgg(m.latestVersion.get, feed("a", 1000.0), "g",
+      Seq("v"), txn = Some(("w", 2L)))
+    val landed = m.applyChangesAgg(feed("a", 1000.0), "g", Seq("v"),
+      txn = Some(("w", 2L)))
+    intercept[ConcurrentCommitException](m.commitPlan(again))
+    assert(m.applyChangesAgg(feed("a", 1000.0), "g", Seq("v"),
+      txn = Some(("w", 2L))) == landed, "a recorded txn must be a no-op")
+    assert(m.snapshot().as[(String, Long, BigDecimal)].collect().toSeq
+      .map(r => (r._1, r._2, r._3.toDouble)) == Seq(("a", 4L, 1111.0)))
   }
 
   test("two ALTERs from handles opened at the same version: the second fails or keeps the first's change") {
